@@ -29,8 +29,7 @@ object ScalingBench {
     val pages = spark.read.parquet(pagesPath).as[graft.spark.Page]
     val t0 = System.nanoTime()
     graft.spark.EncodeJob.run(spark, pages, outDir,
-      graft.spark.EncodeConfig(numPartitions = 512, saltFactor = 16,
-        mapSidePreEncode = !sys.env.get("GRAFT_PRE_ENCODE").contains("0")))
+      graft.spark.EncodeConfig(numPartitions = 512, saltFactor = 16))
     val sec = (System.nanoTime() - t0) / 1e9
     val bytes = spark.read.parquet(graft.spark.EncodeJob.lineagePath(outDir))
       .agg(org.apache.spark.sql.functions.sum("bytes_in")).first().getLong(0)

@@ -176,7 +176,8 @@ object SuffixArrays {
 
   /** SA of the reduced string of LMS-substring names. Web-text reduced
     * strings almost always have a tiny alphabet (measured avg 47 names
-    * from ~1.5k LMS at level 1, graft.tools.SaLevelStats), so when every
+    * from ~1.5k LMS at level 1, BENCH/BASELINE.md §Round-3 continued:
+    * recursion-structure probe and byte-level downcast), so when every
     * name fits a byte the recursion runs through the Short-packed byte
     * level instead of the generic int path (~1.9x per-element cost).
     * Correctness of the downcast: `saisBytes` appends its own sentinel,
@@ -185,7 +186,8 @@ object SuffixArrays {
     * suffixes is ordered strictly within s1 and appending the extra
     * sentinel changes nothing — SA(s1) = saisBytes(s1 as bytes) minus its
     * leading sentinel entry. (Cross-checked against the generic path by
-    * naive-sort tests and the DeepSweep tool.)
+    * naive-sort tests and graft.tools.DeepSweep; the A/B that measured
+    * it is in the same BENCH/BASELINE.md section.)
     */
   private def recurseOnNames(
       name: Array[Int],

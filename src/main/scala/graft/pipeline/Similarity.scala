@@ -140,9 +140,8 @@ object Similarity {
   }
 
   /** Hard ceiling for the exact near-dup tier. At the measured kernel rate
-    * (2.4e7 cosine evaluations/s/core on dim-16 floats —
-    * graft.tools.CosineRateProbe, committed in BENCH/BASELINE.md
-    * §exact-tier-crossover) 2^21 vectors is ~2.2e12 pair evaluations —
+    * (2.4e7 cosine evaluations/s/core on dim-16 floats — BENCH/BASELINE.md
+    * §Exact-tier crossover) 2^21 vectors is ~2.2e12 pair evaluations —
     * ~47 min on a 32-core node, the outer edge of "verification-scale".
     * Beyond it [[embeddingNearDupLsh]] (banded candidates + exact verify)
     * is the only viable path, so the exact tier refuses rather than

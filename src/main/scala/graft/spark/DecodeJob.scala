@@ -116,12 +116,6 @@ object DecodeJob {
     */
   private val LookupUrlsPerScan = 48
 
-  // test/probe seam: LookupAb A/Bs the batched shape against the former
-  // single-scan form (which trips the 64 KB codegen fallback) on one table
-  private[graft] var lookupUrlsPerScanForTest: Option[Int] = None
-  private def lookupUrlsPerScan: Int =
-    lookupUrlsPerScanForTest.getOrElse(LookupUrlsPerScan)
-
   /** Point lookup: the pages for exactly these urls (absent urls simply
     * yield no row). Two-level pruning:
     *  - part_id is a pure function of (url, stored EncodeMeta), so each
@@ -158,7 +152,7 @@ object DecodeJob {
     // each batch filters by ITS OWN url subset: a chunk whose range covers
     // urls from two batches is decoded by both scans, and a shared
     // full-set filter would then emit those pages twice
-    urls.distinct.grouped(lookupUrlsPerScan).map { batch =>
+    urls.distinct.grouped(LookupUrlsPerScan).map { batch =>
       val pred = batch.map { u =>
         val range = col("url_min") <= u && col("url_max") >= u
         pidByUrl.get(u) match {

@@ -77,6 +77,16 @@ final case class TableHealth(
     writer_lease_held: Boolean // a writer currently holds _writer.lock
 )
 
+/** Encode layout and codec policy. There is one encode path (see
+  * [[EncodeJob.encodeChunkStream]]): text/html are compressed per document
+  * before the single salted exchange and containerized per value (the
+  * BwtBin container), so the shuffle moves ~ratio x the bytes and the heavy
+  * compute runs in the skew-free narrow stage; a spillable sort then feeds
+  * the O(chunkRows)-memory streaming kernel. Tables written before the
+  * raw-row path was removed may hold chunk-level text codecs
+  * (Dict/Rle/Fsst/Raw) for text/html; the format is self-describing, so
+  * every reader and maintenance op still handles them.
+  */
 final case class EncodeConfig(
     numPartitions: Int = 32,
     // spreads each url-host over this many partitions. 16 (was 4): on
@@ -88,23 +98,7 @@ final case class EncodeConfig(
     // unaffected. Layout config, persisted in _meta like before.
     saltFactor: Int = 16,
     chunkRows: Int = 1024, // codec unit; bounds kernel memory at any scale
-    bwtBias: Double = 1.0, // text-codec policy: 1.0 size-optimal, <1 speed-biased
-    // compress text/html per document BEFORE the exchange (default): the
-    // shuffle moves ~ratio x the bytes (0.3x on web text) and the heavy
-    // compute runs in the skew-free narrow stage — this is what takes the
-    // measured N->4N scaling efficiency from ~0.7 to 0.85-0.91. Trade-off:
-    // text/html are containerized per-doc, giving up the chunk-level FSST
-    // option for those two columns (per-doc best-of still floors at raw,
-    // so the <=-reference size gate is untouched). Set false to shuffle
-    // raw rows and keep every chunk-level codec option.
-    mapSidePreEncode: Boolean = true,
-    // sort (part_id, url) with Catalyst's spillable Tungsten sort and
-    // stream the kernel over the sorted iterator (default): task memory is
-    // O(chunkRows), so a partition larger than executor memory still
-    // encodes — the property that matters when 100 TB / numPartitions
-    // stops fitting in heap. Set false for the round-1 in-kernel sort
-    // (buffers the whole partition; one less whole-stage pass).
-    spillSafeSort: Boolean = true
+    bwtBias: Double = 1.0 // text-codec policy: 1.0 size-optimal, <1 speed-biased
 )
 
 /** The north-rule batch encode: pages -> salted explicit hash partitioning
@@ -553,8 +547,8 @@ object EncodeJob {
     val acc = new org.apache.spark.util.CollectionAccumulator[LineageRecord]
     spark.sparkContext.register(acc, "graft_lineage")
 
-    // one shuffle; chunk layout determinism comes from the in-kernel sort
-    // (cheaper than a whole-stage Catalyst sort over the raw bytes)
+    // one shuffle; chunk layout determinism comes from the Catalyst
+    // (part_id, url) sort inside encodeChunkStream
     val chunks = encodeChunkStream(todo, cfg, r => acc.add(r))
 
     writeChunks(chunks.toDF(), chunksPath(outDir), SaveMode.Overwrite,
@@ -608,12 +602,12 @@ object EncodeJob {
     *    `reencode = true` forces the decode + re-encode path instead (use
     *    after changing `bwtBias`, to re-run the per-value codec policy).
     *    Caveat: body reuse applies to per-value (BwtBin-container)
-    *    payloads — the `mapSidePreEncode = true` default. A table built
-    *    with `mapSidePreEncode = false` whose chunk-level policy picked
-    *    Dict/Rle/Fsst for text/html falls back to decode + per-value
-    *    re-encode for those chunks, converting them to the per-value form
-    *    (full BWT cost for them, and the chunk-level codec choice is not
-    *    re-run — decode stays bit-identical, compressed size may differ);
+    *    payloads, which is all the current encoder writes. Tables written
+    *    before the raw-row path was removed may hold chunk-level
+    *    Dict/Rle/Fsst/Raw text/html payloads; those chunks fall back to
+    *    decode + per-value re-encode, converting them to the per-value
+    *    form (full BWT cost for them — decode stays bit-identical,
+    *    compressed size may differ);
     *  - the narrow spillable `sortWithinPartitions` + the streaming kernel
     *    keep task memory at O(chunkRows) even for an oversized partition.
     *
@@ -829,8 +823,9 @@ object EncodeJob {
     // silently degrade the join to nested-loop). The explicit split makes
     // the equi-key contract visible, spec-pinned, and independent of
     // nullability inference; the range-only form survives solely for
-    // pre-meta legacy tables (PresenceAb measured the two shapes at plan
-    // parity on meta tables, as expected for identical physical plans).
+    // pre-meta legacy tables (the two shapes measured at plan parity on
+    // meta tables, as expected for identical physical plans — BENCH/
+    // BASELINE.md §Presence-check equi-join A/B).
     val range = $"d_url" >= $"url_min" && $"d_url" <= $"url_max"
     val covering =
       if (homePids.isDefined)
@@ -974,7 +969,6 @@ object EncodeJob {
     // rewrite below can tell replacement rows from stored ones
     val fs = chunksFs(spark, outDir)
     val inAffected = deduped.join(homeDf, Seq("url"))
-      .select("url", "warc_ts", "html", "text", "lang", "part_id")
     val deltaTmp = chunksPath(outDir) + "_upsert_delta_tmp"
     val deltaTmpPath = new org.apache.hadoop.fs.Path(deltaTmp)
     if (fs.exists(deltaTmpPath)) fs.delete(deltaTmpPath, true) // stale crash junk
@@ -1050,13 +1044,6 @@ object EncodeJob {
       s"failed to commit swap marker at ${swapMarkerPath(outDir)}")
   }
 
-  /** The exchange-free compaction pipeline (separated so tests can assert
-    * on its plan): one coalesced single-task scan branch per partition
-    * directory — all of a part's chunks land in one task with NO exchange
-    * (a plain scan would split/merge tasks across part boundaries; a
-    * repartition would shuffle) — then the narrow extract + spillable
-    * in-partition sort + streaming kernel.
-    */
   /** Chunk ids at or above this mark a row as coming from an upsert's
     * DELTA temp table inside [[compactedChunkStream]] (its replacement
     * rows must survive the `dropUrls` filter that removes their stored
@@ -1066,6 +1053,13 @@ object EncodeJob {
     */
   private[graft] val UpsertDeltaChunkBase: Int = 1 << 28
 
+  /** The exchange-free compaction pipeline (separated so tests can assert
+    * on its plan): one coalesced single-task scan branch per partition
+    * directory — all of a part's chunks land in one task with NO exchange
+    * (a plain scan would split/merge tasks across part boundaries; a
+    * repartition would shuffle) — then the narrow extract + spillable
+    * in-partition sort + streaming kernel.
+    */
   private[graft] def compactedChunkStream(
       spark: SparkSession,
       outDir: String,
@@ -1439,9 +1433,9 @@ object EncodeJob {
     * streaming kernel consumes). text/html bodies are reused as stored
     * ([[ColumnCodec.extractBwtBodies]] + the O(1)-ish
     * [[graft.codec.Pipelines.rawLenOf]] header recovery) unless the stored
-    * codec is not per-value (chunk-level Dict/Rle/Fsst/Raw from a
-    * `mapSidePreEncode = false` table) or `reencode` forces the full
-    * decode + per-value re-encode.
+    * codec is not per-value (chunk-level Dict/Rle/Fsst/Raw, found only in
+    * tables written before the raw-row path was removed) or `reencode`
+    * forces the full decode + per-value re-encode.
     */
   private def compactPreRows(
       c: EncodedChunk,
@@ -1483,9 +1477,21 @@ object EncodeJob {
   private[graft] def encodeChunkStreamForPlan(pages: DataFrame, cfg: EncodeConfig): DataFrame =
     encodeChunkStream(pages.withColumn("part_id", partIdCol(cfg)), cfg, _ => ()).toDF()
 
-  /** The shared exchange + kernel pipeline of [[run]] and [[append]]:
-    * pages-with-part_id rows in, EncodedChunk stream out (chunk ids start
-    * at 0 per part; [[append]] shifts them afterwards).
+  /** The one encode pipeline, shared by [[run]], [[append]] and
+    * [[upsert]]: pages-with-part_id rows in, EncodedChunk stream out (chunk
+    * ids start at 0 per part; [[append]] shifts them afterwards).
+    *  - narrow pre-encode of the two heavy columns BEFORE the exchange:
+    *    each text/html value becomes varint(rawLen) ++ textEncode(bytes).
+    *    The scan hands the kernel RAW UTF-8 bytes and epoch-micros
+    *    (cast/unix_micros are codegen'd) — cast("binary") of a parquet
+    *    string column is exactly its UTF-8 bytes, so no value is decoded
+    *    to a String or Timestamp on the way;
+    *  - the single salted exchange on part_id;
+    *  - Catalyst's spillable (Tungsten) sort on (part_id, url) — BinaryType
+    *    sorts in unsigned UTF-8 byte order, which fixes the chunk layout;
+    *  - the streaming kernel [[encodePreEncodedSorted]], which holds one
+    *    chunk at a time, so task memory is O(chunkRows) even for a
+    *    partition larger than executor memory.
     */
   private def encodeChunkStream(
       todo: DataFrame,
@@ -1494,49 +1500,30 @@ object EncodeJob {
   ): Dataset[EncodedChunk] = {
     val spark = todo.sparkSession
     import spark.implicits._
-    if (!cfg.mapSidePreEncode) {
-      todo
-        .repartition(cfg.numPartitions, $"part_id")
-        .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int)]
-        .mapPartitions { it =>
-          encodePartitionImpl(it, cfg.chunkRows, onPart, cfg.bwtBias)
+    val bias = cfg.bwtBias
+    todo
+      .select(col("url").cast("binary"),
+        // url and warc_ts are the row identity: a null warc_ts fails here,
+        // in the codegen'd projection, with a named error — the primitive
+        // Long below would otherwise fail with an anonymous encoder error
+        coalesce(unix_micros(col("warc_ts")), raise_error(lit(NullWarcTsError))),
+        col("html"), col("text").cast("binary"), col("lang").cast("binary"),
+        col("part_id"))
+      .as[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte], Int)]
+      .mapPartitions { it =>
+        it.map { case (url, ts, html, text, lang, pid) =>
+          (url, ts, preEncodeValue(html, bias), preEncodeValue(text, bias),
+            lang, pid)
         }
-    } else {
-      // narrow pre-encode of the two heavy columns BEFORE the exchange;
-      // each value becomes varint(rawLen) ++ textEncode(bytes). The scan
-      // hands the kernel RAW UTF-8 bytes and epoch-micros (cast/
-      // unix_micros are codegen'd): the former String/Timestamp row shape
-      // paid a UTF-16 decode + re-encode per text/url/lang value and a
-      // Timestamp object per row, all garbage by the next operator —
-      // cast("binary") of a parquet string column is exactly its UTF-8
-      // bytes, so the kernel input (and every payload byte) is unchanged.
-      val bias = cfg.bwtBias
-      val pre = todo
-        .select(col("url").cast("binary"), unix_micros(col("warc_ts")),
-          col("html"), col("text").cast("binary"), col("lang").cast("binary"),
-          col("part_id"))
-        .as[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte], Int)]
-        .mapPartitions { it =>
-          it.map { case (url, ts, html, text, lang, pid) =>
-            (url, ts, preEncodeValue(html, bias), preEncodeValue(text, bias),
-              lang, pid)
-          }
-        }
-      val shuffled = pre.repartition(cfg.numPartitions, $"_6")
-      if (cfg.spillSafeSort)
-        // Catalyst (Tungsten) sort spills to disk when a partition exceeds
-        // task memory; the streaming kernel then holds only one chunk
-        shuffled
-          .sortWithinPartitions($"_6", $"_1")
-          .mapPartitions { it =>
-            encodePreEncodedSorted(it, cfg.chunkRows, onPart, cfg.bwtBias)
-          }
-      else
-        shuffled.mapPartitions { it =>
-          encodePreEncodedPartition(it, cfg.chunkRows, onPart, cfg.bwtBias)
-        }
-    }
+      }
+      .repartition(cfg.numPartitions, $"_6")
+      .sortWithinPartitions($"_6", $"_1")
+      .mapPartitions(it => encodePreEncodedSorted(it, cfg.chunkRows, onPart, bias))
   }
+
+  /** The error a page with a null `warc_ts` fails the encode with. */
+  private[spark] val NullWarcTsError =
+    "EncodeJob: null warc_ts in the input pages (url and warc_ts are the row identity)"
 
   /** Chunk-level incremental append: encode ONLY the delta's new urls into
     * NEW chunk files + lineage rows, leaving every existing chunk file
@@ -1608,7 +1595,6 @@ object EncodeJob {
     // --- dedupe against the stored table via per-chunk url ranges (nested
     // pruning: only the url payload leaf is read, never html/text)
     val newRows = if (!hasChunks) withPart.toDF()
-      .select("url", "warc_ts", "html", "text", "lang", "part_id")
     else {
       val urlChunks = spark.read.parquet(chunksPath(outDir))
         .select($"part_id", $"chunk_id", $"url_min", $"url_max", $"url.payload".as("payload"))
@@ -1621,8 +1607,6 @@ object EncodeJob {
         .flatMap(p => ColumnCodec.decodeBinary(p).iterator.map(new String(_, UTF_8)))
         .toDF("url")
       withPart.join(existingUrls, Seq("url"), "left_anti")
-        // join reorders columns (join key first); restore kernel column order
-        .select("url", "warc_ts", "html", "text", "lang", "part_id")
     }
 
     // --- chunk-id offsets: max existing chunk_id + 1 per part, from the
@@ -1765,7 +1749,7 @@ object EncodeJob {
       bwtBias: Double
   ): EncodedChunk = {
     val urls = chunk.map { r =>
-      require(r._1 != null, "null url/warc_ts")
+      require(r._1 != null, "EncodeJob: null url in the input pages")
       r._1
     }.toArray
     val tss = chunk.map(_._2).toArray
@@ -1788,51 +1772,12 @@ object EncodeJob {
       lang = bin(langs))
   }
 
-  /** Buffering kernel for the pre-encoded path (spillSafeSort = false):
-    * groups and sorts in the task heap — one less whole-stage pass, but
-    * task memory scales with the partition.
-    */
-  private[spark] def encodePreEncodedPartition(
-      it: Iterator[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte], Int)],
-      chunkRows: Int,
-      onPartDone: LineageRecord => Unit,
-      bwtBias: Double
-  ): Iterator[EncodedChunk] = {
-    val byPart = scala.collection.mutable.LinkedHashMap
-      .empty[Int, scala.collection.mutable.ArrayBuffer[PreRow]]
-    it.foreach { case (url, ts, html, text, lang, pid) =>
-      byPart.getOrElseUpdate(pid, scala.collection.mutable.ArrayBuffer.empty) +=
-        ((url, ts, html, text, lang))
-    }
-    byPart.iterator.flatMap { case (pid, rows0) =>
-      // urls are already UTF-8 bytes: unsigned byte order directly (the
-      // same order Catalyst's BinaryType sort gives the streaming kernel)
-      val rows = rows0.sortInPlaceWith((x, y) =>
-        java.util.Arrays.compareUnsigned(x._1, y._1) < 0)
-      val partChunks = rows.grouped(chunkRows).zipWithIndex.map { case (chunk, cid) =>
-        preEncodedChunkRow(pid, cid, chunk, bwtBias)
-      }.toVector
-      onPartDone(LineageRecord(
-        part_id = pid,
-        n_rows = rows.length.toLong,
-        n_chunks = partChunks.length.toLong,
-        bytes_in = partChunks.map(_.bytesIn).sum,
-        bytes_out = partChunks.map(_.bytesOut).sum,
-        codecs = partChunks.flatMap(_.columns.map { case (n, c) => s"$n=${c.codec}" })
-          .distinct.sorted.mkString(","),
-        payload_hash = partChunks.map(_.hashXor).foldLeft(0L)(_ ^ _),
-        status = "done"
-      ))
-      partChunks
-    }
-  }
-
-  /** Streaming kernel for the pre-encoded path (spillSafeSort = true, the
-    * default): rows arrive already sorted by (part_id, url) from
+  /** The chunk kernel: rows arrive already sorted by (part_id, url) from
     * Catalyst's spillable sort, so the kernel only ever holds one chunk
     * (chunkRows rows) plus O(1) lineage counters — a partition larger
-    * than executor memory still encodes. Chunk layout is identical to the
-    * buffering kernel (same sort key, same slicing).
+    * than executor memory still encodes. Each part's rows are sliced into
+    * chunks of exactly chunkRows rows (the last one ragged), numbered from
+    * 0, and the part's lineage record is emitted when its last chunk is.
     */
   private[spark] def encodePreEncodedSorted(
       it: Iterator[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte], Int)],
@@ -1876,10 +1821,11 @@ object EncodeJob {
     def hasNext: Boolean = it.hasNext || buf.nonEmpty || curPid != Int.MinValue
 
     def next(): Seq[EncodedChunk] = {
-      // a part-change append below can leave buf already full (chunkRows==1):
-      // flush it first so the fullness invariant (buf.length < chunkRows on
-      // entry to the append loop) holds and chunk layout matches the
-      // buffering kernel exactly
+      // guard for the append loop's invariant (buf.length < chunkRows on
+      // entry). A part change leaves one row in buf, and it can only occur
+      // with a partly filled buf, i.e. when chunkRows >= 2, so for any
+      // chunkRows >= 1 this never fires; it keeps a chunk from exceeding
+      // chunkRows should that ever change
       if (buf.length >= chunkRows && buf.nonEmpty) return flushChunk()
       while (it.hasNext) {
         val (url, ts, html, text, lang, pid) = it.next()
@@ -1905,22 +1851,6 @@ object EncodeJob {
     }
   }.flatten
 
-  /** Unsigned UTF-8 byte order for urls — the SAME order Catalyst's
-    * UTF8String binary comparison uses, so the buffering kernels and the
-    * `spillSafeSort` Tungsten-sorted kernel slice chunks identically even
-    * for urls containing supplementary (non-BMP) characters, where Java
-    * String UTF-16 order diverges from UTF-8 byte order.
-    */
-  private[spark] def sortByUrlUtf8[T](
-      rows: scala.collection.mutable.ArrayBuffer[T]
-  )(url: T => String): scala.collection.mutable.ArrayBuffer[T] = {
-    // schwartzian: encode each url to UTF-8 ONCE (sortBy would re-encode
-    // both sides on every comparison — O(n log n) transient allocations)
-    val keyed = rows.map(r => (url(r).getBytes(UTF_8), r))
-    keyed.sortInPlaceWith((x, y) => java.util.Arrays.compareUnsigned(x._1, y._1) < 0)
-    keyed.map(_._2)
-  }
-
   /** FNV-1a 64-bit (public domain) — deterministic payload fingerprint. */
   def fnv1a(bytes: Array[Byte]): Long = {
     var h = 0xCBF29CE484222325L
@@ -1932,74 +1862,4 @@ object EncodeJob {
     }
     h
   }
-
-  /** Partition-local kernel: group rows by part_id (a task can own several
-    * after the hash exchange), slice into chunkRows-sized chunks, encode
-    * each column independently. Task memory is bounded by the partition's
-    * row payload (the full group is buffered for the deterministic by-url
-    * sort before chunking), so `numPartitions` is the memory knob —
-    * chunkRows only bounds the per-chunk codec working set.
-    */
-  private[spark] def encodePartitionImpl(
-      it: Iterator[(String, java.sql.Timestamp, Array[Byte], String, String, Int)],
-      chunkRows: Int,
-      onPartDone: LineageRecord => Unit = _ => (),
-      bwtBias: Double = 1.0
-  ): Iterator[EncodedChunk] = {
-    val byPart = scala.collection.mutable.LinkedHashMap
-      .empty[Int, scala.collection.mutable.ArrayBuffer[(String, java.sql.Timestamp, Array[Byte], String, String)]]
-    it.foreach { case (url, ts, html, text, lang, pid) =>
-      byPart.getOrElseUpdate(pid, scala.collection.mutable.ArrayBuffer.empty) +=
-        ((url, ts, html, text, lang))
-    }
-    byPart.iterator.flatMap { case (pid, rows0) =>
-      val rows = sortByUrlUtf8(rows0)(_._1) // deterministic chunk layout (by url, UTF-8 byte order)
-      val partChunks = rows.grouped(chunkRows).zipWithIndex.map { case (chunk, cid) =>
-        // url and warc_ts are the row identity — must be non-null; the
-        // payload columns (html/text/lang) are nullable like real crawl data
-        val urls = chunk.map { r =>
-          require(r._1 != null && r._2 != null, "null url/warc_ts")
-          r._1.getBytes(UTF_8)
-        }.toArray
-        val tss = chunk.map { r =>
-          Math.floorDiv(r._2.getTime, 1000L) * 1000000L + r._2.getNanos / 1000L
-        }.toArray
-        def nb(s: String): Array[Byte] = if (s == null) null else s.getBytes(UTF_8)
-        def bin(values: Array[Array[Byte]]): ColChunk = {
-          val payload = ColumnCodec.encodeBinaryNullable(values, bwtBias)
-          ColChunk(ColumnCodec.codecName(payload),
-            values.map(v => if (v == null) 0L else v.length.toLong).sum,
-            payload.length.toLong, fnv1a(payload), payload)
-        }
-        val tsPayload = ColumnCodec.encodeLong(tss)
-        EncodedChunk(pid, cid, chunk.length, chunk.head._1, chunk.last._1,
-          url = bin(urls),
-          warc_ts = ColChunk(ColumnCodec.codecName(tsPayload), tss.length * 8L,
-            tsPayload.length.toLong, fnv1a(tsPayload), tsPayload),
-          html = bin(chunk.map(_._3).toArray),
-          text = bin(chunk.map(r => nb(r._4)).toArray),
-          lang = bin(chunk.map(r => nb(r._5)).toArray))
-      }.toVector
-      onPartDone(LineageRecord(
-        part_id = pid,
-        n_rows = rows.length.toLong,
-        n_chunks = partChunks.length.toLong,
-        bytes_in = partChunks.map(_.bytesIn).sum,
-        bytes_out = partChunks.map(_.bytesOut).sum,
-        codecs = partChunks.flatMap(_.columns.map { case (n, c) => s"$n=${c.codec}" })
-          .distinct.sorted.mkString(","),
-        payload_hash = partChunks.map(_.hashXor).foldLeft(0L)(_ ^ _),
-        status = "done"
-      ))
-      partChunks
-    }
-  }
-}
-
-/** Test/bench probe into the partition encode kernel. */
-object EncodeJobProbe {
-  def encodePartition(
-      it: Iterator[(String, java.sql.Timestamp, Array[Byte], String, String, Int)],
-      chunkRows: Int
-  ): Iterator[EncodedChunk] = EncodeJob.encodePartitionImpl(it, chunkRows)
 }

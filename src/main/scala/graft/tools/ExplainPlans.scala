@@ -26,13 +26,13 @@ object ExplainPlans {
     val pages = graft.spark.PagesGen.generate(spark, 2000, hostSkew = true, partitions = 8)
     graft.spark.EncodeJob.run(spark, pages, out, graft.spark.EncodeConfig(numPartitions = 8))
 
-    // encode plan (default config): narrow pre-encode BEFORE the single
-    // salted exchange, spillable Tungsten sort, streaming chunk kernel
+    // the one encode plan: narrow pre-encode BEFORE the single salted
+    // exchange, spillable Tungsten sort, streaming chunk kernel
     val cfg = graft.spark.EncodeConfig(numPartitions = 8)
     // the REAL production dataflow (round 7: byte-shaped kernel rows —
     // codegen'd cast/unix_micros feed the kernel raw UTF-8 bytes)
     val encodePlan = graft.spark.EncodeJob.encodeChunkStreamForPlan(pages.toDF(), cfg)
-    section("EncodeJob dataflow (default: pre-encode + spill-safe sort)",
+    section("EncodeJob dataflow: pre-encode, salted exchange, spill-safe sort, streaming kernel",
       "Heavy per-doc compression runs in the narrow stage BEFORE the single salted exchange (shuffle moves ~0.3x compressed payloads); the in-partition Sort is Catalyst's spillable Tungsten sort feeding the O(chunk)-memory streaming kernel — no stage buffers a whole partition.")(encodePlan)
 
     // pruned read: only chunk metadata + one nested stats leaf — no
@@ -124,7 +124,7 @@ object ExplainPlans {
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("/root/repo/BENCH"))
     // preserve manually-appended round sections (e.g. the Round-5 compact
-    // plan captured by CompactAb) across regeneration
+    // plan, BENCH/PLANS.md §Round 5: EncodeJob.compact) across regeneration
     val plansPath = java.nio.file.Paths.get("/root/repo/BENCH/PLANS.md")
     val manual =
       if (java.nio.file.Files.exists(plansPath)) {

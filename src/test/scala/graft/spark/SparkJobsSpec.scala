@@ -171,7 +171,7 @@ class SparkJobsSpec extends AnyFunSuite {
       if (i % 7 == 0) p.copy(text = null) else if (i % 11 == 0) p.copy(html = null) else p
     }
     val ds = spark.createDataset(withNulls.toIndexedSeq)
-    val cfg = EncodeConfig(numPartitions = 2, chunkRows = 32, mapSidePreEncode = true)
+    val cfg = EncodeConfig(numPartitions = 2, chunkRows = 32)
     EncodeJob.run(spark, ds, out, cfg)
     val report = VerifyJob.run(spark, ds, out)
     assert(report.rows_decoded == 80)
@@ -189,45 +189,92 @@ class SparkJobsSpec extends AnyFunSuite {
     assert(bytesIn == expected, s"bytes_in $bytesIn vs $expected")
   }
 
-  test("streaming (spill-safe) kernel emits identical chunks + lineage to the buffering kernel") {
-    // exercise chunk boundaries: 96 rows / 32-row chunks = exact multiple,
-    // a ragged tail, and chunkRows=1 (part-change append lands in an
-    // already-full buffer — regression for the >=-vs-== flush condition)
-    Seq(96 -> 32, 100 -> 32, 17 -> 1).foreach { case (nRows, chunkRows) =>
-      val pages = PagesGen.generate(spark, nRows, partitions = 3)
-      def runWith(spill: Boolean): (Map[(Int, Int), Seq[Long]], Map[Int, (Long, Long, Long)]) = {
-        val out = tmpDir(s"spill_$spill${nRows}")
-        val rep = EncodeJob.run(spark, pages, out,
-          EncodeConfig(numPartitions = 3, chunkRows = chunkRows, spillSafeSort = spill))
-        val lineage = rep.collect().map(l => l.part_id -> ((l.n_rows, l.bytes_out, l.payload_hash))).toMap
-        (chunkHashMap(out), lineage)
+  /** The chunk layout contract of the encode kernel, checked on the table
+    * at `out`: within each part the chunk ids run 0..n-1, every chunk but
+    * the part's last holds exactly `chunkRows` rows, the decoded urls in
+    * chunk-id order strictly increase in unsigned UTF-8 byte order,
+    * `url_min`/`url_max` are each chunk's first/last url, and the part's
+    * lineage row equals the aggregates of its chunk rows.
+    */
+  private def assertChunkLayout(out: String, chunkRows: Int, nRows: Int): Unit = {
+    import spark.implicits._
+    val chunks = spark.read.parquet(EncodeJob.chunksPath(out)).as[EncodedChunk].collect()
+    val lineage = spark.read.parquet(EncodeJob.lineagePath(out)).as[LineageRecord].collect()
+    assert(lineage.map(_.part_id).sorted.toSeq == chunks.map(_.part_id).distinct.sorted.toSeq,
+      "one lineage row per written part")
+    assert(chunks.map(_.n_rows.toLong).sum == nRows)
+    chunks.groupBy(_.part_id).foreach { case (pid, cs0) =>
+      val cs = cs0.sortBy(_.chunk_id)
+      assert(cs.map(_.chunk_id).toSeq == cs.indices, s"part $pid: chunk ids not contiguous from 0")
+      cs.init.foreach(c => assert(c.n_rows == chunkRows, s"part $pid chunk ${c.chunk_id}: ${c.n_rows} rows"))
+      assert(cs.last.n_rows >= 1 && cs.last.n_rows <= chunkRows, s"part $pid tail: ${cs.last.n_rows} rows")
+      val urls = cs.toSeq.flatMap { c =>
+        val us = graft.codec.ColumnCodec.decodeBinary(c.url.payload)
+        assert(us.length == c.n_rows)
+        assert(c.url_min == new String(us.head, UTF_8) && c.url_max == new String(us.last, UTF_8),
+          s"part $pid chunk ${c.chunk_id}: url_min/url_max are not its first/last url")
+        us.toSeq
       }
-      val (cs, ls) = runWith(true)
-      val (cb, lb) = runWith(false)
-      assert(cs == cb, s"chunk payloads differ (nRows=$nRows)")
-      assert(ls == lb, s"lineage differs (nRows=$nRows)")
+      urls.sliding(2).foreach {
+        case Seq(a, b) => assert(java.util.Arrays.compareUnsigned(a, b) < 0,
+          s"part $pid: urls not strictly increasing in UTF-8 byte order: " +
+            s"${new String(a, UTF_8)} then ${new String(b, UTF_8)}")
+        case _ => ()
+      }
+      val l = lineage.filter(_.part_id == pid)
+      assert(l.length == 1, s"part $pid: ${l.length} lineage rows")
+      assert(l.head.n_rows == cs.map(_.n_rows.toLong).sum, s"part $pid: lineage n_rows")
+      assert(l.head.n_chunks == cs.length, s"part $pid: lineage n_chunks")
+      assert(l.head.bytes_in == cs.map(_.bytesIn).sum, s"part $pid: lineage bytes_in")
+      assert(l.head.bytes_out == cs.map(_.bytesOut).sum, s"part $pid: lineage bytes_out")
+      assert(l.head.payload_hash == cs.map(_.hashXor).foldLeft(0L)(_ ^ _), s"part $pid: lineage payload_hash")
+      assert(l.head.codecs == cs.flatMap(_.columns.map { case (n, c) => s"$n=${c.codec}" })
+        .distinct.sorted.mkString(","), s"part $pid: lineage codecs")
     }
   }
 
-  test("kernels agree on supplementary-character urls (UTF-8 vs UTF-16 order)") {
+  test("encode kernel chunk layout: ids, sizes, url order, ranges, lineage") {
+    // exercise chunk boundaries: 96 rows / 32-row chunks = exact multiple,
+    // a ragged tail, and chunkRows=1 (every row its own chunk, so part
+    // changes land exactly on chunk boundaries)
+    Seq(96 -> 32, 100 -> 32, 17 -> 1).foreach { case (nRows, chunkRows) =>
+      val pages = PagesGen.generate(spark, nRows, partitions = 3)
+      val out = tmpDir(s"layout_${nRows}_$chunkRows")
+      EncodeJob.run(spark, pages, out, EncodeConfig(numPartitions = 3, chunkRows = chunkRows))
+      assertChunkLayout(out, chunkRows, nRows)
+    }
+  }
+
+  test("encode kernel orders supplementary-character urls by UTF-8 bytes") {
     // U+FFF0 sorts AFTER U+1F600 in UTF-16 code units (surrogate 0xD83D <
-    // 0xFFF0) but BEFORE it in UTF-8 bytes (EF BF B0 < F0 9F 98 80). The
-    // buffering kernel must slice chunks in the same (UTF-8) order Catalyst's
-    // spill-safe sort uses, or payload hashes diverge.
+    // 0xFFF0) but BEFORE it in UTF-8 bytes (EF BF B0 < F0 9F 98 80). Chunks
+    // must follow the UTF-8 order Catalyst's BinaryType sort gives — the
+    // order url_min/url_max range pruning compares in.
     import spark.implicits._
     val base = PagesGen.generate(spark, 12, partitions = 1).collect()
     val pages = base.zipWithIndex.map { case (p, i) =>
       val marker = if (i % 2 == 0) "￰" else "😀" // U+FFF0 vs U+1F600
       p.copy(url = s"https://x.test/$marker/${i / 2}")
     }
-    val ds = spark.createDataset(pages.toIndexedSeq)
-    def hashes(spill: Boolean): Map[(Int, Int), Seq[Long]] = {
-      val out = tmpDir(s"nonbmp_$spill")
-      EncodeJob.run(spark, ds, out,
-        EncodeConfig(numPartitions = 2, chunkRows = 4, spillSafeSort = spill))
-      chunkHashMap(out)
+    val out = tmpDir("nonbmp")
+    EncodeJob.run(spark, spark.createDataset(pages.toIndexedSeq), out,
+      EncodeConfig(numPartitions = 2, chunkRows = 4))
+    assertChunkLayout(out, 4, 12)
+  }
+
+  test("a null warc_ts fails the encode with an error naming the column") {
+    import spark.implicits._
+    val base = PagesGen.generate(spark, 20, partitions = 2).collect()
+    val pages = base.zipWithIndex.map { case (p, i) => if (i == 7) p.copy(warc_ts = null) else p }
+    val out = tmpDir("nullts")
+    val e = intercept[Exception] {
+      EncodeJob.run(spark, spark.createDataset(pages.toIndexedSeq), out,
+        EncodeConfig(numPartitions = 2, chunkRows = 8))
     }
-    assert(hashes(true) == hashes(false), "non-BMP urls sliced differently by the two kernels")
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains(EncodeJob.NullWarcTsError)), messages.mkString("\n"))
+    assert(EncodeJob.donePartIds(spark, out).isEmpty, "a failed encode must not checkpoint lineage")
   }
 
   test("speed-biased encode (bwtBias=0, no BWT) is still bit-identical") {
