@@ -23,7 +23,7 @@ object Bench {
     // job: read table -> salted exchange -> encode -> write chunks+lineage.
     "encode_pages" -> { s =>
       import s.implicits._
-      val out = benchDir("encode_pages")
+      val out = Scratch.dir("encode_pages")
       deleteDir(out)
       val pages = s.read.parquet(preparePages(s, sfDir)).as[graft.spark.Page]
       graft.spark.EncodeJob.run(s, pages, out,
@@ -34,7 +34,7 @@ object Bench {
       (row.getLong(0), row.getLong(2))
     },
     "decode_pages" -> { s =>
-      val out = benchDir("encode_pages") // decode what encode_pages wrote
+      val out = Scratch.dir("encode_pages") // decode what encode_pages wrote
       val decoded = graft.spark.DecodeJob.run(s, out)
       import org.apache.spark.sql.functions._
       val row = decoded.toDF()
@@ -77,7 +77,7 @@ object Bench {
       import s.implicits._
       val docs = s.read.parquet(s"$sfDir/documents.parquet")
         .select($"doc_id".cast("string"), $"text").as[(String, String)]
-      val dir = benchDir("fm_index")
+      val dir = Scratch.dir("fm_index")
       deleteDir(dir)
       graft.spark.IndexJob.build(s, docs, dir)
       val row = s.read.parquet(s"$sfDir/documents.parquet")
@@ -95,7 +95,7 @@ object Bench {
       // built for another SF (a failed build pass) is an error, not a
       // plausible-looking number
       require(builtIndexFor == sfDir, s"fm_index not built for $sfDir (got '$builtIndexFor')")
-      val hits = graft.spark.IndexJob.search(s, benchDir("fm_index"),
+      val hits = graft.spark.IndexJob.search(s, Scratch.dir("fm_index"),
         Seq("data", "the", "2022", "page"))
       (corpusTextBytes, hits.count())
     },
@@ -140,9 +140,6 @@ object Bench {
       else if (sfDir.contains("sf0.01")) 8000L
       else 2000L)
 
-  private def benchDir(name: String): String =
-    s"/root/repo/target/bench/$name"
-
   /** Materialize the deterministic pages table for this SF as parquet
     * (idempotent; keyed by page count). Called by main before the timed
     * loop so synthesis never sits inside the encode_pages window.
@@ -153,7 +150,7 @@ object Bench {
     // level never silently caps a higher level's read tasks, and gated on
     // _SUCCESS so an interrupted write is regenerated, not read partially
     val parts = s.sparkContext.defaultParallelism
-    val path = benchDir(s"pages_${n}_p$parts.parquet")
+    val path = Scratch.cache(s"pages_${n}_p$parts.parquet")
     if (!new java.io.File(s"$path/_SUCCESS").exists()) {
       graft.spark.PagesGen.generate(s, n, hostSkew = true, partitions = parts)
         .write.mode("overwrite").parquet(path)

@@ -38,8 +38,8 @@ object ScalingBench {
 
   def runLevel(cpus: Int, nPages: Long, reps: Int): (Double, Long) = {
     val spark = Bench.newSession(cpus.toString)
-    val out = s"/dev/shm/graft_bench/scaling_$cpus"
-    val pagesPath = s"/dev/shm/graft_bench/pages_$nPages.parquet"
+    val out = Scratch.dir(s"scaling_$cpus")
+    val pagesPath = Scratch.cache(s"scaling_pages_$nPages.parquet")
     try {
       // materialize the input table once (untimed, deterministic)
       if (!new java.io.File(pagesPath).exists()) {
@@ -75,14 +75,14 @@ object ScalingBench {
       }) Thread.sleep(5000)
   }
 
-  private def resultPath(cpus: Int) = s"/root/repo/target/bench/scaling_result_$cpus.txt"
+  private def resultPath(cpus: Int) = Scratch.cache(s"scaling_result_$cpus.txt")
 
   def main(args: Array[String]): Unit = args.toList match {
     case "level" :: cpus :: nPages :: reps :: Nil =>
       val (sec, bytes) = runLevel(cpus.toInt, nPages.toLong, reps.toInt)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("/root/repo/target/bench"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(resultPath(cpus.toInt)), s"$sec $bytes")
+      val result = java.nio.file.Paths.get(resultPath(cpus.toInt))
+      java.nio.file.Files.createDirectories(result.getParent)
+      java.nio.file.Files.writeString(result, s"$sec $bytes")
       println(f"SCALING level=$cpus sec=$sec%.2f bytes=$bytes")
 
     case "report" :: nPages :: rest if rest.length <= 2 =>
@@ -115,7 +115,7 @@ object ScalingBench {
            |
            |**Scaling efficiency ($lo -> $hi cores): ${f"$eff%.3f"}** (target >= 0.8).
            |""".stripMargin
-      val basePath = java.nio.file.Paths.get("/root/repo/BENCH")
+      val basePath = java.nio.file.Paths.get("BENCH")
       java.nio.file.Files.createDirectories(basePath)
       java.nio.file.Files.writeString(basePath.resolve("SCALING_LAST.md"), md)
 

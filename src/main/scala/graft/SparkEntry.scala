@@ -86,7 +86,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val outDir = "/root/repo/target/entry_encode"
+    val outDir = Scratch.dir("entry_encode")
     deleteDir(outDir)
     val pages = PagesGen.generate(spark, 300, hostSkew = true, partitions = 8)
     EncodeJob.run(spark, pages, outDir, EncodeConfig(numPartitions = 8, chunkRows = 128))
@@ -426,7 +426,7 @@ object SparkEntry {
     // index without re-reading text (serialize/deserialize surface)
     "q28_fm_index_persisted" -> { (s, dir) =>
       import s.implicits._
-      val idxDir = s"/root/repo/target/fm_index_${math.abs(dir.hashCode)}"
+      val idxDir = Scratch.dir(s"fm_index_${math.abs(dir.hashCode)}")
       val d = docsKT(s, dir).map { case (id, t) => (id.toString, t) }
       graft.spark.IndexJob.build(s, d, idxDir)
       graft.spark.IndexJob.search(s, idxDir, Seq("en"))
@@ -543,7 +543,7 @@ object SparkEntry {
     // and compared against the identity oracle. No driver-side feeder.
     "q33_streaming_encode" -> { (s, dir) =>
       import s.implicits._
-      val base = s"/root/repo/target/stream_encode_${math.abs(dir.hashCode)}"
+      val base = Scratch.dir(s"stream_encode_${math.abs(dir.hashCode)}")
       val staging = base + "_staging"
       val ckpt = base + "_ckpt"
       deleteDir(base); deleteDir(ckpt); deleteDir(staging)
@@ -581,7 +581,7 @@ object SparkEntry {
     // AnnIndexJobSpec.
     "q38_ann_ivf_stored" -> { (s, dir) =>
       import s.implicits._
-      val idxDir = s"/root/repo/target/ann_ivf_${math.abs(dir.hashCode)}"
+      val idxDir = Scratch.dir(s"ann_ivf_${math.abs(dir.hashCode)}")
       val vecs = s.read.parquet(s"$dir/embeddings.parquet")
         .select($"vec_id", $"embedding").as[(Long, Array[Float])]
       graft.pipeline.AnnIndexJob.buildIvf(s, vecs, idxDir, nLists = 32)
@@ -590,7 +590,7 @@ object SparkEntry {
     },
     "q39_ann_lsh_stored" -> { (s, dir) =>
       import s.implicits._
-      val idxDir = s"/root/repo/target/ann_rhp_${math.abs(dir.hashCode)}"
+      val idxDir = Scratch.dir(s"ann_rhp_${math.abs(dir.hashCode)}")
       val vecs = s.read.parquet(s"$dir/embeddings.parquet")
         .select($"vec_id", $"embedding").as[(Long, Array[Float])]
       graft.pipeline.AnnIndexJob.buildRhp(s, vecs, idxDir, bands = 4, bitsPerBand = 8)
@@ -606,7 +606,7 @@ object SparkEntry {
     // pruning itself, the oracle pins the returned rows.
     "q44_decode_lookup" -> { (s, dir) =>
       import s.implicits._
-      val outDir = s"/root/repo/target/lookup_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"lookup_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir,
         EncodeConfig(numPartitions = 8, chunkRows = 16))
@@ -643,7 +643,7 @@ object SparkEntry {
     // rule emulates, BASELINE.json:14). Oracle checks the decoded union.
     "q45_incremental_append" -> { (s, dir) =>
       import s.implicits._
-      val outDir = s"/root/repo/target/append_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"append_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       val pages = pagesFromDocs(s, dir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
@@ -672,7 +672,7 @@ object SparkEntry {
     // the pruned ReadSchema; the oracle pins the decoded values.
     "q48_decode_projected" -> { (s, dir) =>
       import s.implicits._
-      val outDir = s"/root/repo/target/projected_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"projected_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir,
         EncodeConfig(numPartitions = 8, chunkRows = 64))
@@ -691,7 +691,7 @@ object SparkEntry {
     // lineage replaced); the oracle pins bit-identical content.
     "q50_compact" -> { (s, dir) =>
       import s.implicits._
-      val outDir = s"/root/repo/target/compact_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"compact_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       val pages = pagesFromDocs(s, dir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
@@ -718,7 +718,7 @@ object SparkEntry {
     "q49_sql_decode_column" -> { (s, dir) =>
       import s.implicits._
       graft.sql.GraftFunctions.register(s)
-      val outDir = s"/root/repo/target/sqlcol_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"sqlcol_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir,
         EncodeConfig(numPartitions = 8, chunkRows = 64))
@@ -739,7 +739,7 @@ object SparkEntry {
     "q51_sql_pruned_lookup" -> { (s, dir) =>
       import s.implicits._
       graft.sql.GraftFunctions.register(s)
-      val outDir = s"/root/repo/target/sqlprune_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"sqlprune_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 64)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
@@ -777,7 +777,7 @@ object SparkEntry {
     // and the chunk-count shrink; the oracle pins bit-identical content.
     "q52_compact_fragmented" -> { (s, dir) =>
       import s.implicits._
-      val outDir = s"/root/repo/target/compactfrag_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"compactfrag_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       val pages = pagesFromDocs(s, dir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
@@ -800,7 +800,7 @@ object SparkEntry {
     // (require-pinned). Oracle = everything except the deleted ids.
     "q53_delete_urls" -> { (s, dir) =>
       import s.implicits._
-      val outDir = s"/root/repo/target/delete_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"delete_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
@@ -820,7 +820,7 @@ object SparkEntry {
     // the refreshed ids' text the same way.
     "q54_upsert_refresh" -> { (s, dir) =>
       import s.implicits._
-      val outDir = s"/root/repo/target/upsert_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"upsert_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
@@ -843,7 +843,7 @@ object SparkEntry {
     // Scala reader gets.
     "q55_sql_range_read" -> { (s, dir) =>
       graft.sql.GraftFunctions.register(s)
-      val outDir = s"/root/repo/target/sqlrange_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"sqlrange_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 64)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
@@ -868,7 +868,7 @@ object SparkEntry {
     // Scala API; same PushedFilters pin.
     "q56_sql_prefix_read" -> { (s, dir) =>
       graft.sql.GraftFunctions.register(s)
-      val outDir = s"/root/repo/target/sqlprefix_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"sqlprefix_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 64)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
@@ -897,7 +897,7 @@ object SparkEntry {
     // checked against the source of truth.
     "q57_describe_health" -> { (s, dir) =>
       import s.implicits._
-      val outDir = s"/root/repo/target/health_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"health_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       val pages = pagesFromDocs(s, dir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
@@ -986,7 +986,7 @@ object SparkEntry {
     // encode -> pruned-decode -> dup-span composition must be value-exact.
     "q64_store_dup_spans" -> { (s, dir) =>
       import s.implicits._
-      val outDir = s"/root/repo/target/storecur_${math.abs(dir.hashCode)}"
+      val outDir = Scratch.dir(s"storecur_${math.abs(dir.hashCode)}")
       deleteDir(outDir)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir,
         EncodeConfig(numPartitions = 8, chunkRows = 64))

@@ -2,7 +2,6 @@ package graft.spark
 
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.codec.ColumnCodec
 
@@ -86,7 +85,7 @@ object DecodeJob {
       chunkPred: Column
   ): Dataset[Page] = {
     import spark.implicits._
-    spark.read.parquet(EncodeJob.chunksPath(outDir))
+    TableScan.chunks(spark, outDir)
       .filter(chunkPred)
       .as[EncodedChunk]
       .mapPartitions(_.flatMap(decodeRowBytes))
@@ -194,19 +193,9 @@ object DecodeJob {
         (col("url_min") < prefix || col("url_min").startsWith(prefix)))
       .filter(p => p.url.startsWith(prefix))
 
-  /** Column-projected page decode: rows keyed by url with ONLY the
-    * requested payload columns decoded — the "read just the text of the
-    * corpus" path a training pipeline actually runs. Parquet nested-schema
-    * pruning means the unrequested payload leaves (e.g. html, typically
-    * most of the bytes) are never read from storage, and their decode
-    * kernels never run. Output schema: `url` plus `cols` in the given
-    * order (`warc_ts` as microseconds-long; others as string, null
-    * preserved). No exchange, like [[run]].
-    */
   /** The pruned payload scan feeding [[decodeProjected]] — separated so
-    * callers/tests can assert on ITS executed plan (the FileScan's
-    * ReadSchema); the DataFrame decodeProjected returns is an ExistingRDD
-    * whose plan string no longer shows the scan.
+    * callers/tests can assert on the FileScan's ReadSchema without the
+    * decode operators above it in the plan.
     */
   private[graft] def projectedScan(
       spark: SparkSession,
@@ -233,35 +222,44 @@ object DecodeJob {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(outCols.map { case (_, n) => StructField(n, BinaryType) }))
     }
-    spark.read.parquet(EncodeJob.chunksPath(outDir))
+    TableScan.chunks(spark, outDir)
       .select(outCols.map { case (src, n) => col(src).as(n) }: _*)
   }
 
+  /** Column-projected page decode: rows keyed by url with ONLY the
+    * requested payload columns decoded — the "read just the text of the
+    * corpus" path a training pipeline actually runs. Parquet nested-schema
+    * pruning means the unrequested payload leaves (e.g. html, typically
+    * most of the bytes) are never read from storage, and their decode
+    * kernels never run. Output schema: `url` plus `cols` in the given
+    * order (`warc_ts` as microseconds-long; others as string, null
+    * preserved). No exchange, like [[run]].
+    */
   def decodeProjected(spark: SparkSession, outDir: String, cols0: Seq[String]): org.apache.spark.sql.DataFrame = {
     val cols = cols0.distinct
     val wantTs = cols.contains("warc_ts")
     val strCols = cols.filterNot(_ == "warc_ts")
-    val rows = projectedScan(spark, outDir, cols)
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
-    val schema = StructType(
-      StructField("url", StringType, nullable = false) +:
+    // the kernel emits UTF-8 bytes; the codegen'd cast below wraps them as
+    // strings (no per-value UTF-16 decode, as in decodeChunksWhereUnchecked)
+    val binSchema = StructType(
+      StructField("url", BinaryType, nullable = false) +:
         ((if (wantTs) Seq(StructField("warc_ts_us", LongType, nullable = false)) else Nil) ++
-          strCols.map(c => StructField(c, StringType, nullable = true))))
-    val rdd = rows.rdd.mapPartitions { it =>
+          strCols.map(c => StructField(c, BinaryType, nullable = true))))
+    val decoded = projectedScan(spark, outDir, cols).mapPartitions { it =>
       it.flatMap { r =>
         val urls = ColumnCodec.decodeBinary(r.getAs[Array[Byte]]("url_p"))
         val tss = if (wantTs) ColumnCodec.decodeLong(r.getAs[Array[Byte]]("ts_p")) else null
         val strs = strCols.map(c => ColumnCodec.decodeBinaryNullable(r.getAs[Array[Byte]](s"${c}_p")))
         urls.indices.iterator.map { i =>
-          val base: Seq[Any] = Seq(new String(urls(i), UTF_8)) ++
-            (if (wantTs) Seq(tss(i)) else Nil) ++
-            strs.map(a => if (a(i) == null) null else new String(a(i), UTF_8))
-          Row.fromSeq(base)
+          Row.fromSeq(urls(i) +: ((if (wantTs) Seq(tss(i)) else Nil) ++ strs.map(_(i))))
         }
       }
-    }
-    spark.createDataFrame(rdd, schema)
+    }(Encoders.row(binSchema))
+    decoded.select(binSchema.fields.toSeq.map { f =>
+      if (f.dataType == BinaryType) col(f.name).cast("string").as(f.name) else col(f.name)
+    }: _*)
   }
 
   /** Decode a single column (positional within (part_id, chunk_id)) —
@@ -273,7 +271,7 @@ object DecodeJob {
     EncodeJob.requireNoPendingSwap(spark, outDir)
     if (!EncodeJob.hasCommittedChunks(spark, outDir))
       return spark.emptyDataset[(Int, Int, Int, Array[Byte])]
-    spark.read.parquet(EncodeJob.chunksPath(outDir))
+    TableScan.chunks(spark, outDir)
       .select($"part_id", $"chunk_id", col(s"$colName.payload").as("payload"))
       .as[(Int, Int, Array[Byte])]
       .flatMap { case (pid, cid, payload) =>

@@ -133,22 +133,51 @@ object EncodeJob {
     */
   final case class EncodeMeta(numPartitions: Int, saltFactor: Int, chunkRows: Int)
 
-  private def writeMeta(spark: SparkSession, outDir: String, cfg: EncodeConfig): Unit = {
-    import spark.implicits._
-    spark.createDataset(Seq(EncodeMeta(cfg.numPartitions, cfg.saltFactor, cfg.chunkRows)))
-      .write.mode(SaveMode.Overwrite).parquet(metaPath(outDir))
+  private val metaSchema = org.apache.spark.sql.Encoders.product[EncodeMeta].schema
+  private val lineageSchema = org.apache.spark.sql.Encoders.product[LineageRecord].schema
+
+  private def hadoopConf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
+
+  /** Persist the layout of `cfg` in `_meta`, on the driver. `stored` is
+    * what [[readMeta]] returned: when it already equals the layout and is
+    * the only file, nothing is written. Otherwise the new file is renamed
+    * in before the old one is deleted, so a crash at any step leaves
+    * `readMeta` returning the old meta or the new one, never none.
+    */
+  private[spark] def writeMeta(
+      spark: SparkSession, outDir: String, cfg: EncodeConfig, stored: Option[EncodeMeta]): Unit = {
+    val meta = EncodeMeta(cfg.numPartitions, cfg.saltFactor, cfg.chunkRows)
+    val dir = new org.apache.hadoop.fs.Path(metaPath(outDir))
+    if (!stored.contains(meta) || DriverParquet.dataFiles(hadoopConf(spark), dir).size != 1)
+      DriverParquet.replace(hadoopConf(spark), dir, Seq(meta))
   }
 
-  def readMeta(spark: SparkSession, outDir: String): Option[EncodeMeta] = {
-    import spark.implicits._
-    // gate on a COMMITTED data file, not directory existence: writeMeta's
-    // SaveMode.Overwrite deletes-then-rewrites _meta on every run, so a
-    // crash in that window leaves an existing-but-empty dir — treating it
-    // as a table would wedge every later run/append/lookup on an
-    // unreadable parquet path, when the right reading is "absent, rewrite"
-    if (!hasCommittedFileUnder(spark, metaPath(outDir))) None
-    else Some(spark.read.parquet(metaPath(outDir)).as[EncodeMeta].head())
-  }
+  /** The stored layout, read on the driver (no Spark job). A `_meta` dir
+    * without a data file (a crash inside an older writer's
+    * delete-then-rewrite, or staging junk only) reads as absent, so the
+    * next run rewrites it instead of wedging on an unreadable path. With
+    * two files (a crash between [[writeMeta]]'s rename and delete) the
+    * newer one is the meta.
+    */
+  def readMeta(spark: SparkSession, outDir: String): Option[EncodeMeta] =
+    DriverParquet.newest(hadoopConf(spark), new org.apache.hadoop.fs.Path(metaPath(outDir)))
+      .flatMap(f => DriverParquet.read(hadoopConf(spark), f.getPath, metaSchema).headOption)
+      .map(r => EncodeMeta(r.getInt(0), r.getInt(1), r.getInt(2)))
+
+  /** Every row of the `_lineage` table, read on the driver: files written
+    * by Spark and by [[DriverParquet]] alike.
+    */
+  private def readLineage(spark: SparkSession, outDir: String): Seq[LineageRecord] =
+    DriverParquet.readAll(hadoopConf(spark),
+      new org.apache.hadoop.fs.Path(lineagePath(outDir)), lineageSchema).map { r =>
+      LineageRecord(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+        r.getString(5), r.getLong(6), r.getString(7))
+    }
+
+  /** Add `records` to `_lineage` as one new file, on the driver. */
+  private def appendLineage(spark: SparkSession, outDir: String, records: Seq[LineageRecord]): Unit =
+    if (records.nonEmpty)
+      DriverParquet.write(hadoopConf(spark), new org.apache.hadoop.fs.Path(lineagePath(outDir)), records)
 
   /** A later write to an existing table must use the same partitioning
     * function, or (part_id, chunk_id) identity and lookup pruning break.
@@ -172,7 +201,7 @@ object EncodeJob {
   private[spark] def hasCommittedChunks(spark: SparkSession, outDir: String): Boolean =
     hasCommittedFileUnder(spark, chunksPath(outDir))
 
-  private def hasCommittedFileUnder(spark: SparkSession, dir: String): Boolean = {
+  private[spark] def hasCommittedFileUnder(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return false
@@ -506,16 +535,8 @@ object EncodeJob {
   }
 
   /** Part ids already completed according to the lineage table. */
-  def donePartIds(spark: SparkSession, outDir: String): Set[Int] = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(lineagePath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else
-      spark.read.parquet(lineagePath(outDir))
-        .filter($"status" === "done")
-        .select("part_id").distinct().as[Int].collect().toSet
-  }
+  def donePartIds(spark: SparkSession, outDir: String): Set[Int] =
+    readLineage(spark, outDir).filter(_.status == "done").map(_.part_id).toSet
 
   /** Encode all not-yet-done partitions; returns the lineage records of
     * this run. Idempotent: re-running after a partial failure encodes only
@@ -530,9 +551,9 @@ object EncodeJob {
   ): Dataset[LineageRecord] = withWriterLock(spark, outDir) {
     import spark.implicits._
 
-    requireLayoutMatch(spark, outDir, cfg)
+    val stored = requireLayoutMatch(spark, outDir, cfg)
     completePendingCompactSwap(spark, outDir)
-    writeMeta(spark, outDir, cfg)
+    writeMeta(spark, outDir, cfg, stored)
     val done = donePartIds(spark, outDir)
     val withPart = pages.withColumn("part_id", partIdCol(cfg))
     val todo =
@@ -555,15 +576,10 @@ object EncodeJob {
       dynamicPartitionOverwrite = true)
 
     import scala.jdk.CollectionConverters._
-    // distinct: stage retries can double-add; records are deterministic
-    val records = acc.value.asScala.toSeq.distinct
-    if (records.nonEmpty) {
-      // coalesce(1): O(partitions) tiny rows — one task, one file (the
-      // default-parallelism write paid a 32-task job + a 32-file lineage
-      // dir that every later lineage read re-listed)
-      spark.createDataset(records).coalesce(1)
-        .write.mode(SaveMode.Append).parquet(lineagePath(outDir))
-    }
+    // distinct: stage retries can double-add; records are deterministic.
+    // O(partitions) tiny rows: one file, written on the driver
+    val records = acc.value.asScala.toSeq.distinct.sortBy(_.part_id)
+    appendLineage(spark, outDir, records)
     // return THIS run's records; the full table lives at lineagePath
     spark.createDataset(records)
   }
@@ -809,7 +825,7 @@ object EncodeJob {
           .select($"url".as("d_url"), lit(null).cast("int").as("d_part")), None)
     }
     val urlChunks = {
-      val scan = spark.read.parquet(chunksPath(outDir))
+      val scan = TableScan.chunks(spark, outDir)
       homePids.fold(scan)(ps => scan.filter($"part_id".isin(ps: _*)))
     }.select($"part_id", $"url_min", $"url_max", $"url.payload".as("payload"))
     // meta known -> every target has its home pid, so part_id is a plain
@@ -1072,9 +1088,7 @@ object EncodeJob {
     import spark.implicits._
     require(selected.nonEmpty, "compactedChunkStream needs at least one partition")
     val fs = chunksFs(spark, outDir)
-    val leafSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.Encoders.product[EncodedChunk].schema
-        .filterNot(_.name == "part_id"))
+    val leafSchema = TableScan.chunkLeafSchema
     // balanced union tree: a left-deep reduce would recurse O(selected)
     // deep through analysis (stack risk at corpus-scale partition counts);
     // the per-branch driver listing cost stays O(selected) — which is why
@@ -1135,7 +1149,7 @@ object EncodeJob {
   private def partChunkStats(
       spark: SparkSession, outDir: String): Array[(Int, Long, Long)] = {
     import spark.implicits._
-    spark.read.parquet(chunksPath(outDir))
+    TableScan.chunks(spark, outDir)
       .groupBy($"part_id")
       .agg(count(lit(1)).as("n_chunks"), sum($"n_rows").as("n_rows"))
       .as[(Int, Long, Long)].collect()
@@ -1351,7 +1365,7 @@ object EncodeJob {
     // ONE aggregation job: the five per-column codec strings travel as an
     // array column and are merged by collect_set-of-arrays (flattened
     // driver-side) — a separate exploded pass would scan the metadata twice
-    val sums = spark.read.parquet(chunksPath(outDir))
+    val sums = TableScan.chunks(spark, outDir)
       .filter($"part_id".isin(parts: _*))
       .select(
         $"part_id", $"n_rows",
@@ -1384,18 +1398,14 @@ object EncodeJob {
       parts: Set[Int],
       records: Seq[LineageRecord]
   ): Unit = {
-    import spark.implicits._
     val lp = new org.apache.hadoop.fs.Path(lineagePath(outDir))
     val tmpPath = lineagePath(outDir) + "_swap_tmp"
     val tp = new org.apache.hadoop.fs.Path(tmpPath)
-    val lfs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lfs = lp.getFileSystem(hadoopConf(spark))
     if (!lfs.exists(lp) && hasCommittedFileUnder(spark, tmpPath)) {
       require(lfs.rename(tp, lp), s"failed to roll forward lineage swap at $tmpPath")
     }
-    val kept =
-      if (!lfs.exists(lp)) Seq.empty
-      else spark.read.parquet(lineagePath(outDir)).as[LineageRecord]
-        .collect().toSeq.filterNot(r => parts.contains(r.part_id))
+    val kept = readLineage(spark, outDir).filterNot(r => parts.contains(r.part_id))
     // fold superseded per-append rows while the table is being rewritten
     // anyway: append (batch and per-micro-batch streaming) APPENDS one row
     // per touched part per batch, so after thousands of micro-batches the
@@ -1419,8 +1429,7 @@ object EncodeJob {
     val newLineage = folded ++ records
     if (newLineage.nonEmpty) {
       if (lfs.exists(tp)) lfs.delete(tp, true)
-      spark.createDataset(newLineage).coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(tmpPath)
+      DriverParquet.write(hadoopConf(spark), tp, newLineage)
       lfs.delete(lp, true)
       lfs.rename(tp, lp)
     } else if (lfs.exists(lp)) {
@@ -1584,8 +1593,8 @@ object EncodeJob {
     // bootstrap attempt does not count, and run()'s Overwrite clears it;
     // no _SUCCESS check — dynamic-partition-overwrite commits write none),
     // AND no meta, AND no lineage rows — meta alone would misclassify a
-    // pre-meta legacy table (or one whose _meta died in writeMeta's
-    // delete-then-rewrite window) whose tombstones would then swallow the
+    // pre-meta legacy table (or one whose _meta died inside an older
+    // writer's delete-then-rewrite) whose tombstones would then swallow the
     // delta inside run().
     val hasChunks = hasCommittedChunks(spark, outDir)
     if (!hasChunks && readMeta(spark, outDir).isEmpty &&
@@ -1596,7 +1605,7 @@ object EncodeJob {
     // pruning: only the url payload leaf is read, never html/text)
     val newRows = if (!hasChunks) withPart.toDF()
     else {
-      val urlChunks = spark.read.parquet(chunksPath(outDir))
+      val urlChunks = TableScan.chunks(spark, outDir)
         .select($"part_id", $"chunk_id", $"url_min", $"url_max", $"url.payload".as("payload"))
       val deltaKeys = withPart.select($"url".as("d_url"), $"part_id".as("d_part"))
       val candidateChunks = urlChunks.join(deltaKeys,
@@ -1616,7 +1625,7 @@ object EncodeJob {
     // offset would reuse an orphaned chunk's (part_id, chunk_id) key
     val offsets: Map[Int, Int] =
       if (!hasChunks) Map.empty
-      else spark.read.parquet(chunksPath(outDir))
+      else TableScan.chunks(spark, outDir)
         .groupBy($"part_id").agg(max($"chunk_id").as("m"))
         .as[(Int, Int)].collect().map { case (pid, m) => pid -> (m + 1) }.toMap
     val bcOff = spark.sparkContext.broadcast(offsets)
@@ -1631,11 +1640,8 @@ object EncodeJob {
       chunksPath(outDir), SaveMode.Append)
 
     import scala.jdk.CollectionConverters._
-    val records = acc.value.asScala.toSeq.distinct
-    if (records.nonEmpty) {
-      spark.createDataset(records).coalesce(1)
-        .write.mode(SaveMode.Append).parquet(lineagePath(outDir))
-    }
+    val records = acc.value.asScala.toSeq.distinct.sortBy(_.part_id)
+    appendLineage(spark, outDir, records)
     spark.createDataset(records)
   }
 

@@ -55,7 +55,7 @@ object IndexJob {
   ): Dataset[SearchHit] = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(patterns.map(p => (p, p.getBytes(UTF_8))))
-    spark.read.parquet(indexDir).as[IndexRow].mapPartitions { it =>
+    TableScan[IndexRow](spark, indexDir).as[IndexRow].mapPartitions { it =>
       val pats = bc.value
       it.flatMap { row =>
         val fm = FmIndex.deserialize(row.index)

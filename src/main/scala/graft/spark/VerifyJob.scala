@@ -80,7 +80,7 @@ object VerifyJob {
     val encodedTextBytes =
       if (!EncodeJob.hasCommittedChunks(spark, outDir)) 0L
       else {
-        val r = spark.read.parquet(EncodeJob.chunksPath(outDir))
+        val r = TableScan.chunks(spark, outDir)
           .agg(sum($"text.bytes_out")).first()
         if (r.isNullAt(0)) 0L else r.getLong(0)
       }

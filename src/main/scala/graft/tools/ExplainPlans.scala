@@ -21,7 +21,7 @@ object ExplainPlans {
       sb.append("```\n")
     }
 
-    val out = "/root/repo/target/plans_demo"
+    val out = graft.Scratch.dir("plans_demo")
     graft.Bench.deleteDir(out)
     val pages = graft.spark.PagesGen.generate(spark, 2000, hostSkew = true, partitions = 8)
     graft.spark.EncodeJob.run(spark, pages, out, graft.spark.EncodeConfig(numPartitions = 8))
@@ -72,7 +72,7 @@ object ExplainPlans {
 
     // stored ANN index: the probed-list scan must prune at the PARTITION
     // level (PartitionFilters on list_id; unprobed list dirs never opened)
-    val ivfDir = "/root/repo/target/plans_ann_ivf"
+    val ivfDir = graft.Scratch.dir("plans_ann_ivf")
     graft.Bench.deleteDir(ivfDir)
     graft.pipeline.AnnIndexJob.buildIvf(spark, vecs, ivfDir, nLists = 8)
     val ivfScan = spark.read.parquet(s"$ivfDir/ivf_assign")
@@ -83,7 +83,7 @@ object ExplainPlans {
     section("Stored IVF index: full search plan",
       "No corpus assignment pass anywhere: the pruned scan feeds bounded per-partition heaps and the tiny merge, exactly the bruteForceTopK shape minus the unprobed lists.")(ivfSearch)
 
-    val rhpDir = "/root/repo/target/plans_ann_rhp"
+    val rhpDir = graft.Scratch.dir("plans_ann_rhp")
     graft.Bench.deleteDir(rhpDir)
     graft.pipeline.AnnIndexJob.buildRhp(spark, vecs, rhpDir, bands = 4, bitsPerBand = 8)
     val rhpSearch = graft.pipeline.AnnIndexJob.searchRhp(spark, rhpDir, Seq(0L, 1L), 5, multiProbe = 1)
@@ -122,10 +122,10 @@ object ExplainPlans {
     section("SimHash pairs, production capped regime (q40 shape)",
       "Oversized buckets are salt-split (band-dependent) instead of dropped; only sub-buckets within 2x the cap reach collect_list, so the recall recovery costs two small aggregations and never a quadratic buffer.")(capped)
 
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("/root/repo/BENCH"))
     // preserve manually-appended round sections (e.g. the Round-5 compact
     // plan, BENCH/PLANS.md §Round 5: EncodeJob.compact) across regeneration
-    val plansPath = java.nio.file.Paths.get("/root/repo/BENCH/PLANS.md")
+    val plansPath = java.nio.file.Paths.get("BENCH", "PLANS.md")
+    java.nio.file.Files.createDirectories(plansPath.getParent)
     val manual =
       if (java.nio.file.Files.exists(plansPath)) {
         val old = java.nio.file.Files.readString(plansPath)

@@ -26,8 +26,8 @@ object LifecycleSoak {
     val nPages = if (args.nonEmpty) args(0).toLong else 640000L
     val spark = Bench.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     import spark.implicits._
-    val pagesPath = s"/dev/shm/graft_bench/soak_pages_$nPages.parquet"
-    val out = "/dev/shm/graft_bench/lifecycle_out"
+    val pagesPath = graft.Scratch.cache(s"soak_pages_$nPages.parquet")
+    val out = graft.Scratch.dir("lifecycle_out")
     var failed = false
     val cfg = EncodeConfig(numPartitions = 512, saltFactor = 16)
     val wipedPid = 7
@@ -140,8 +140,7 @@ object LifecycleSoak {
       if (gates.exists(!_._2)) {
         System.err.println(s"LIFECYCLE GATE FAILED: ${gates.filter(!_._2).map(_._1)}; $report")
         // record the failure but FALL THROUGH to the finally: sys.exit
-        // here would skip the cleanup and leave the multi-GB soak table
-        // in RAM-backed /dev/shm until a reboot
+        // here would skip the table cleanup and spark.stop()
         failed = true
       }
     } finally {

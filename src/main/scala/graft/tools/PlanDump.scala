@@ -13,7 +13,7 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.Bench.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     import spark.implicits._
-    val outDir = Paths.get("/root/repo/plans/r07")
+    val outDir = Paths.get("plans", "r07")
     Files.createDirectories(outDir)
 
     def dump(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
@@ -29,7 +29,7 @@ object PlanDump {
 
     // --- encode_pages / decode_pages: run the encode first so the decode
     // (and the encode plan itself) reflect the real bench tables
-    val out = "/root/repo/target/plans_r07_table"
+    val out = graft.Scratch.dir("plans_r07_table")
     graft.Bench.deleteDir(out)
     val pages = spark.read.parquet(graft.Bench.preparePages(spark, sfDir))
       .as[graft.spark.Page]
@@ -50,7 +50,7 @@ object PlanDump {
       .select($"doc_id".cast("string"), $"text").as[(String, String)]
     dump("fm_search")(
       graft.spark.SearchJob.run(spark, docsS, Seq("data", "the")).toDF())
-    val idxDir = "/root/repo/target/plans_r07_fmindex"
+    val idxDir = graft.Scratch.dir("plans_r07_fmindex")
     graft.Bench.deleteDir(idxDir)
     graft.spark.IndexJob.build(spark, docsS, idxDir)
     dump("fm_search_indexed")(

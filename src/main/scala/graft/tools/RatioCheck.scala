@@ -13,7 +13,7 @@ object RatioCheck {
     val pages = spark.read.parquet(graft.Bench.preparePages(spark, "/root/testdata/sf0.1"))
       .as[graft.spark.Page]
     for (salt <- Seq(4, 16)) {
-      val out = s"/root/repo/target/bench/ratio_salt$salt"
+      val out = graft.Scratch.dir(s"ratio_salt$salt")
       graft.Bench.deleteDir(out)
       graft.spark.EncodeJob.run(spark, pages, out,
         graft.spark.EncodeConfig(numPartitions = 64, saltFactor = salt))

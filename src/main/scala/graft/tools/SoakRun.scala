@@ -17,8 +17,8 @@ object SoakRun {
     val nPages = if (args.nonEmpty) args(0).toLong else 640000L
     val spark = Bench.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     import spark.implicits._
-    val pagesPath = s"/dev/shm/graft_bench/soak_pages_$nPages.parquet"
-    val out = "/dev/shm/graft_bench/soak_out"
+    val pagesPath = graft.Scratch.cache(s"soak_pages_$nPages.parquet")
+    val out = graft.Scratch.dir("soak_out")
     try {
       if (!new java.io.File(pagesPath).exists()) {
         PagesGen.generate(spark, nPages, hostSkew = true, partitions = 128)
@@ -48,7 +48,7 @@ object SoakRun {
         report.size_gate_ok && report.rows_decoded == nPages
       if (!ok) { System.err.println(s"SOAK GATE FAILED: $report"); sys.exit(1) }
     } finally {
-      Bench.deleteDir(out) // keep /dev/shm usable for later runs
+      Bench.deleteDir(out) // the soak table is GBs: do not wait for JVM exit
       spark.stop()
     }
   }

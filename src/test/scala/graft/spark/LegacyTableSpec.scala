@@ -114,6 +114,38 @@ class LegacyTableSpec extends AnyFunSuite {
     assert(decoded(out) == expected.map(key).toSet)
   }
 
+  test("legacy table: append mixes Spark- and driver-written lineage files; both are read") {
+    import spark.implicits._
+    val out = legacyTable("legacy_mixed_lineage")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val lineageDir = new org.apache.hadoop.fs.Path(EncodeJob.lineagePath(out))
+    def lineageFiles = DriverParquet.dataFiles(conf, lineageDir).map(_.getPath.getName).toSet
+    val sparkWritten = lineageFiles
+    assert(sparkWritten.size == 1)
+    assert(EncodeJob.donePartIds(spark, out) == Set(0, 1, 2))
+
+    val added = (0 until 12).map(i => pages(i).copy(url = f"https://fx${i % 3}.test/added/$i%03d"))
+    EncodeJob.append(spark, spark.createDataset(added), out, cfg)
+    val driverWritten = lineageFiles -- sparkWritten
+    assert(sparkWritten.subsetOf(lineageFiles) && driverWritten.size == 1, lineageFiles)
+    // each file holds its own write's rows; the readers take both
+    def rowsOf(name: String) = spark.read.parquet(new org.apache.hadoop.fs.Path(lineageDir, name).toString)
+      .as[LineageRecord].collect().toSeq
+    val (oldRows, newRows) = (rowsOf(sparkWritten.head), rowsOf(driverWritten.head))
+    assert(oldRows.map(_.n_rows).sum == pages.size && newRows.map(_.n_rows).sum == added.size)
+    assert(EncodeJob.donePartIds(spark, out) == (oldRows ++ newRows).map(_.part_id).toSet)
+    val health = EncodeJob.describe(spark, out, cfg).collect().head
+    assert(health.n_rows == pages.size + added.size && health.n_partitions == cfg.numPartitions &&
+      health.chunk_rows == cfg.chunkRows)
+
+    // compaction folds the rows of both files into one row per partition
+    EncodeJob.compact(spark, out, cfg)
+    val lineage = spark.read.parquet(EncodeJob.lineagePath(out)).as[LineageRecord].collect()
+    assert(lineage.map(_.part_id).sorted.toSeq == Seq(0, 1, 2))
+    assert(lineage.map(_.n_rows).sum == pages.size + added.size)
+    assert(decoded(out) == (pages ++ added).map(key).toSet)
+  }
+
   test("compact with reencode writes the same chunk bytes as body reuse") {
     val base = tmpDir("reuse_vs_reencode")
     val all = PagesGen.generate(spark, 260, partitions = 4)

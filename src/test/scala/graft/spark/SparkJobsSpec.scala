@@ -902,10 +902,16 @@ class SparkJobsSpec extends AnyFunSuite {
       .collect().nonEmpty)
 
     // projected decode: exact url->text map, html leaf absent from the
-    // actual parquet scan's ReadSchema (the projectedScan plan — the outer
-    // DataFrame is an ExistingRDD that hides the scan)
+    // actual parquet scan's ReadSchema (asserted on projectedScan, the scan
+    // without the decode operators above it)
     val proj = DecodeJob.decodeProjected(spark, out, Seq("text", "warc_ts"))
-    assert(proj.columns.toSeq == Seq("url", "warc_ts_us", "text"))
+    import org.apache.spark.sql.types._
+    assert(proj.schema == StructType(Seq(
+      StructField("url", StringType, nullable = false),
+      StructField("warc_ts_us", LongType, nullable = false),
+      StructField("text", StringType, nullable = true))))
+    val plan = proj.queryExecution.executedPlan.toString()
+    assert(plan.contains("FileScan") && !plan.contains("html"), plan)
     val scan = DecodeJob.projectedScan(spark, out, Seq("text", "warc_ts"))
       .queryExecution.executedPlan.toString()
     assert(scan.contains("ReadSchema") && !scan.contains("html"),
@@ -1299,5 +1305,206 @@ class SparkJobsSpec extends AnyFunSuite {
       .collect().sorted
     val expected = pages.collect().map(_.lang).sorted
     assert(langs.toSeq == expected.toSeq)
+  }
+
+  // ------------------------------------------------ Spark jobs and metadata
+
+  private val JobsBefore = "graft-spec-jobs-before"
+  private val JobsAfter = "graft-spec-jobs-after"
+
+  /** The number of Spark jobs `body` starts. A listener sees job starts
+    * in the order the listener bus delivers them, so every job is counted
+    * that starts after a marker job run before `body` and before a marker
+    * job run after it (events of earlier tests still in the queue fall
+    * before the first marker).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(JobsBefore)
+      body
+      marker(JobsAfter)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!started.contains(JobsAfter) && System.nanoTime() < deadline) Thread.sleep(10)
+      val seen = started.asScala.toSeq
+      assert(seen.contains(JobsBefore) && seen.contains(JobsAfter), s"marker jobs not seen: $seen")
+      seen.dropWhile(_ != JobsBefore).drop(1).takeWhile(_ != JobsAfter).size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // The counts at the commit before metadata I/O moved to the driver, for
+  // the same calls: encode 4 (the _meta write, the exchange, the chunk
+  // write, the _lineage write), decode 3 and text-only decode 3 (a schema
+  // inference job, then the aggregate's two), search 2 (inference, then
+  // the scan), readMeta 2 (inference, then the read) and donePartIds 3
+  // (inference, then a distinct's two). A count above these pins means an
+  // inference or metadata job came back.
+  test("graft's own metadata and scans run no Spark jobs of their own") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count, length, lit, sum}
+    val out = tmpDir("jobs")
+    val cfg = EncodeConfig(numPartitions = 4, chunkRows = 32)
+    val pages = PagesGen.generate(spark, 120, partitions = 4).collect().toIndexedSeq
+    val input = spark.createDataset(pages)
+
+    assert(jobsOf(EncodeJob.run(spark, input, out, cfg)) == 2,
+      "encode into an empty dir: the exchange and the chunk write only")
+    assert(jobsOf {
+      DecodeJob.run(spark, out).toDF()
+        .agg(count(lit(1)), sum(length(col("text")) + length(col("html")))).first()
+    } == 2, "decode: the aggregate's two jobs, no schema inference")
+    assert(jobsOf {
+      DecodeJob.decodeProjected(spark, out, Seq("text"))
+        .agg(count(lit(1)), sum(length(col("text")))).first()
+    } == 2, "text-only decode: the aggregate's two jobs, no schema inference")
+    assert(jobsOf(EncodeJob.readMeta(spark, out)) == 0)
+    assert(jobsOf(EncodeJob.donePartIds(spark, out)) == 0)
+
+    val idx = tmpDir("jobs_index")
+    IndexJob.build(spark, pages.take(20).map(p => (p.url, p.text)).toDS(), idx)
+    assert(jobsOf(IndexJob.search(spark, idx, Seq("the", "absent-pattern")).collect()) == 1,
+      "search: the scan only, no schema inference")
+  }
+
+  /** The footer of the one data file under `dir`: (parquet schema, the
+    * key-value metadata Spark reads).
+    */
+  private def footer(dir: String): (org.apache.parquet.schema.MessageType, Map[String, String]) = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = DriverParquet.dataFiles(conf, new org.apache.hadoop.fs.Path(dir))
+    assert(files.size == 1, s"one data file expected under $dir: ${files.map(_.getPath)}")
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(files.head.getPath, conf))
+    try {
+      val md = r.getFooter.getFileMetaData
+      (md.getSchema, md.getKeyValueMetaData.asScala.toMap
+        .filter { case (k, _) => k.startsWith("org.apache.spark.") })
+    } finally r.close()
+  }
+
+  test("driver-written _meta and _lineage read back through Spark like Spark-written ones") {
+    import spark.implicits._
+    val out = tmpDir("meta_format")
+    val cfg = EncodeConfig(numPartitions = 3, chunkRows = 16)
+    EncodeJob.run(spark, PagesGen.generate(spark, 90, partitions = 3), out, cfg)
+    val meta = EncodeJob.EncodeMeta(cfg.numPartitions, cfg.saltFactor, cfg.chunkRows)
+    val lineage = spark.read.parquet(EncodeJob.lineagePath(out)).as[LineageRecord].collect()
+      .sortBy(_.part_id).toSeq
+    assert(lineage.map(_.part_id) == Seq(0, 1, 2))
+
+    // the same rows, written by Spark the way the engine used to write them
+    val sparkMeta = tmpDir("meta_spark")
+    val sparkLineage = tmpDir("lineage_spark")
+    spark.createDataset(Seq(meta)).write.parquet(sparkMeta)
+    spark.createDataset(lineage).coalesce(1).write.parquet(sparkLineage)
+
+    val (dm, sm) = (spark.read.parquet(EncodeJob.metaPath(out)), spark.read.parquet(sparkMeta))
+    assert(dm.schema == sm.schema)
+    assert(dm.as[EncodeJob.EncodeMeta].collect().toSeq == Seq(meta))
+    assert(sm.as[EncodeJob.EncodeMeta].collect().toSeq == Seq(meta))
+    val (dl, sl) = (spark.read.parquet(EncodeJob.lineagePath(out)), spark.read.parquet(sparkLineage))
+    assert(dl.schema == sl.schema)
+    assert(sl.as[LineageRecord].collect().sortBy(_.part_id).toSeq == lineage)
+    // same parquet schema and the same Spark footer keys, file for file
+    assert(footer(EncodeJob.metaPath(out)) == footer(sparkMeta))
+    assert(footer(EncodeJob.lineagePath(out)) == footer(sparkLineage))
+
+    // a run with the same layout leaves the stored _meta file as it is
+    val conf = spark.sparkContext.hadoopConfiguration
+    def metaFiles = DriverParquet.dataFiles(conf, new org.apache.hadoop.fs.Path(EncodeJob.metaPath(out)))
+      .map(f => (f.getPath.getName, f.getModificationTime))
+    val before = metaFiles
+    EncodeJob.run(spark, PagesGen.generate(spark, 90, partitions = 3), out, cfg)
+    assert(metaFiles == before)
+  }
+
+  test("a leftover hidden temp file is ignored by readers and hasCommittedFileUnder") {
+    import spark.implicits._
+    val out = tmpDir("meta_tmp")
+    val cfg = EncodeConfig(numPartitions = 2, chunkRows = 16)
+    EncodeJob.run(spark, PagesGen.generate(spark, 40, partitions = 2), out, cfg)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
+    def junk(dir: String): org.apache.hadoop.fs.Path = {
+      // a temp name as a crashed driver-side write leaves it; not parquet
+      val p = new org.apache.hadoop.fs.Path(dir, ".graft-part-00000-x-c000.snappy.parquet.tmp")
+      val o = fs.create(p, true); o.write("partial".getBytes(UTF_8)); o.close()
+      p
+    }
+    val metaJunk = junk(EncodeJob.metaPath(out))
+    junk(EncodeJob.lineagePath(out))
+    val meta = EncodeJob.EncodeMeta(cfg.numPartitions, cfg.saltFactor, cfg.chunkRows)
+    assert(EncodeJob.readMeta(spark, out).contains(meta))
+    assert(EncodeJob.donePartIds(spark, out) == Set(0, 1))
+    assert(spark.read.parquet(EncodeJob.metaPath(out)).as[EncodeJob.EncodeMeta].collect().toSeq == Seq(meta))
+    assert(spark.read.parquet(EncodeJob.lineagePath(out)).count() == 2)
+
+    // a _meta dir holding only a temp file is no table
+    val bare = tmpDir("meta_tmp_only")
+    junk(EncodeJob.metaPath(bare))
+    assert(!EncodeJob.hasCommittedFileUnder(spark, EncodeJob.metaPath(bare)))
+    assert(EncodeJob.readMeta(spark, bare).isEmpty)
+
+    // the next _meta write sweeps the leftover
+    EncodeJob.writeMeta(spark, out, cfg.copy(chunkRows = 8), EncodeJob.readMeta(spark, out))
+    assert(!fs.exists(metaJunk))
+    assert(EncodeJob.readMeta(spark, out).contains(meta.copy(chunkRows = 8)))
+    assert(DriverParquet.dataFiles(conf, new org.apache.hadoop.fs.Path(EncodeJob.metaPath(out))).size == 1)
+  }
+
+  test("a crash between any two filesystem steps of writeMeta leaves the old or the new meta") {
+    val out = tmpDir("meta_steps")
+    val cfg = EncodeConfig(numPartitions = 2, chunkRows = 16)
+    EncodeJob.run(spark, PagesGen.generate(spark, 40, partitions = 2), out, cfg)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val metaDir = new org.apache.hadoop.fs.Path(EncodeJob.metaPath(out))
+    val fs = metaDir.getFileSystem(conf)
+    val oldCfg = cfg
+    val newCfg = cfg.copy(chunkRows = 64)
+    def metaOf(c: EncodeConfig) = EncodeJob.EncodeMeta(c.numPartitions, c.saltFactor, c.chunkRows)
+    final class Crash extends RuntimeException("injected crash")
+
+    var crashAt = 1
+    var completed = false
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (!completed) {
+      // from one old file plus one hidden leftover of an earlier crash
+      EncodeJob.writeMeta(spark, out, oldCfg, EncodeJob.readMeta(spark, out))
+      assert(DriverParquet.dataFiles(conf, metaDir).size == 1)
+      fs.listStatus(metaDir).filter(_.getPath.getName.startsWith(".graft-"))
+        .foreach(f => fs.delete(f.getPath, false))
+      val o = fs.create(new org.apache.hadoop.fs.Path(metaDir, ".graft-left-over.parquet.tmp"), true)
+      o.close()
+      var step = 0
+      DriverParquet.stepHook = name => {
+        step += 1
+        if (step == crashAt) { seen += name; throw new Crash }
+      }
+      try {
+        EncodeJob.writeMeta(spark, out, newCfg, EncodeJob.readMeta(spark, out))
+        completed = true
+      } catch { case _: Crash => () }
+      finally DriverParquet.stepHook = _ => ()
+      val read = EncodeJob.readMeta(spark, out)
+      assert(read.contains(metaOf(oldCfg)) || read.contains(metaOf(newCfg)),
+        s"crash after step $crashAt (${seen.lastOption}) left $read")
+      crashAt += 1
+    }
+    assert(EncodeJob.readMeta(spark, out).contains(metaOf(newCfg)))
+    assert(DriverParquet.dataFiles(conf, metaDir).size == 1)
+    assert(seen.toSeq == Seq("swept", "written", "renamed", "deleted"), seen)
   }
 }
