@@ -137,9 +137,9 @@ object SparkEntry {
       )),
     "q02_rle_direct_roundtrip" -> ((s, dir) =>
       roundtripQuery(s, dir)(Pipelines.rleDirectEncode, Pipelines.rleDirectDecode)),
-    // the speed-biased policy point (EncodeConfig.bwtBias = 0): order-0
-    // Huffman with a raw floor, no SA/BWT work — same tag space as
-    // textEncode so textDecode reads both
+    // the speed codec: order-0 Huffman with a raw floor, no SA/BWT work —
+    // same tag space as textEncode so textDecode reads both (textEncode
+    // itself falls back to it for documents above MaxBwtDocBytes)
     "q43_speed_encode_roundtrip" -> ((s, dir) =>
       roundtripQuery(s, dir)(Pipelines.textEncodeFast, Pipelines.textDecode)),
     "q03_bwt_rle_roundtrip" -> ((s, dir) =>
@@ -621,8 +621,7 @@ object SparkEntry {
       // may touch at most k chunks (chunk url ranges are disjoint within a
       // partition, and each url is probed only in its home partition)
       val meta = EncodeJob.readMeta(s, outDir).get
-      val lookCfg = EncodeConfig(numPartitions = meta.numPartitions, saltFactor = meta.saltFactor)
-      val pidByUrl = urls.toDF("url").withColumn("part_id", EncodeJob.partIdCol(lookCfg))
+      val pidByUrl = urls.toDF("url").withColumn("part_id", EncodeJob.partIdCol(meta))
         .as[(String, Int)].collect().toMap
       val chunks = s.read.parquet(EncodeJob.chunksPath(outDir))
       urls.map(u =>

@@ -95,14 +95,8 @@ object ColumnCodec {
 
   // ---------------------------------------------------------------- strings
 
-  /** Encode a chunk of binary values (strings arrive UTF-8 encoded).
-    *
-    * `bwtBias` tunes the long-text sample decision: the BWT path is chosen
-    * when `bwtSampleSize <= fsstSampleSize * bwtBias`. 1.0 = size-optimal
-    * (default). Values < 1.0 demand a size win before paying the BWT
-    * path's ~6x CPU cost (speed-biased deployments); 0.0 = never BWT.
-    */
-  def encodeBinary(values: Array[Array[Byte]], bwtBias: Double = 1.0): Array[Byte] = {
+  /** Encode a chunk of binary values (strings arrive UTF-8 encoded). */
+  def encodeBinary(values: Array[Array[Byte]]): Array[Byte] = {
     val n = values.length
     if (n == 0) return Array[Byte](RawBin.toByte, 0)
 
@@ -151,7 +145,7 @@ object ColumnCodec {
       val fsstBuf = new Bytes.Buf()
       sample.foreach(v => Fsst.encodeValue(fsstTable, v, fsstBuf))
       val fsstSize = fsstBuf.size.toLong + Fsst.serializeTable(fsstTable).length
-      candidates += (if (bwtSize <= fsstSize * bwtBias) encodeBwtValues(values) else encodeFsst(values))
+      candidates += (if (bwtSize <= fsstSize) encodeBwtValues(values) else encodeFsst(values))
     } else if (totalBytes >= 64) candidates += encodeFsst(values)
     candidates += encodeRawBin(values)
     val best = candidates.minBy(_.length)
@@ -162,22 +156,20 @@ object ColumnCodec {
     * encoded as empty values; the bitmap wrapper is only added when nulls
     * actually occur, so null-free data pays nothing.
     */
-  def encodeBinaryNullable(values: Array[Array[Byte]], bwtBias: Double = 1.0): Array[Byte] = {
-    var hasNull = false
-    var i = 0
-    while (i < values.length && !hasNull) { if (values(i) == null) hasNull = true; i += 1 }
-    if (!hasNull) return encodeBinary(values, bwtBias)
+  def encodeBinaryNullable(values: Array[Array[Byte]]): Array[Byte] =
+    if (!values.contains(null)) encodeBinary(values)
+    else nullWrap(values, encodeBinary(values.map(v => if (v == null) Array.emptyByteArray else v)))
+
+  /** NullWrap: `values`' null-presence bitmap in front of `inner`, the
+    * payload that holds their non-null slots.
+    */
+  private def nullWrap(values: Array[Array[Byte]], inner: Array[Byte]): Array[Byte] = {
     val bitmap = new Array[Byte]((values.length + 7) / 8)
-    val dense = new Array[Array[Byte]](values.length)
-    i = 0
+    var i = 0
     while (i < values.length) {
-      if (values(i) == null) {
-        bitmap(i >> 3) = (bitmap(i >> 3) | (1 << (i & 7))).toByte
-        dense(i) = Array.emptyByteArray
-      } else dense(i) = values(i)
+      if (values(i) == null) bitmap(i >> 3) = (bitmap(i >> 3) | (1 << (i & 7))).toByte
       i += 1
     }
-    val inner = encodeBinary(dense, bwtBias)
     val buf = new Bytes.Buf(inner.length + bitmap.length + 8)
     buf.writeByte(NullWrap)
     buf.writeVarInt(values.length)
@@ -209,17 +201,28 @@ object ColumnCodec {
     inner
   }
 
+  /** The per-value text container over already-compressed bodies, one per
+    * value (`null` for a null value): the BwtBin container, a NullWrap
+    * bitmap when a body is null, and the Huffman wrap when it pays. Inverse
+    * of [[extractBwtBodies]].
+    */
+  def encodeBwtBodies(bodies: Array[Array[Byte]]): Array[Byte] = {
+    val container = bwtContainer(bodies)
+    hufWrapIfSmaller(if (bodies.contains(null)) nullWrap(bodies, container) else container)
+  }
+
   /** Per-value compressed bodies of a BwtBin-family payload, WITHOUT
     * decoding them: unwraps HufWrap/NullWrap and slices the container into
-    * its stored `textEncode` bodies (`null` for null-bitmap slots). Returns
-    * `None` when the payload's codec is not per-value (Dict/Rle/Fsst/Raw
-    * chose differently) — callers fall back to a decode + re-encode.
+    * its stored bodies (`null` for null-bitmap slots). Returns `None` when
+    * the payload's codec is not per-value (Dict/Rle/Fsst/Raw chose
+    * differently) — callers fall back to a decode + re-encode.
     *
     * The contract that makes reuse sound: a body extracted here is exactly
-    * `Pipelines.textEncode(value)` (or `textEncodeFast` under a speed-biased
-    * config) for the value it encodes, and both are deterministic — so
-    * re-containerizing extracted bodies yields byte-identical payloads to a
-    * fresh encode of the same row slice.
+    * `Pipelines.textEncode(value)` for the value it encodes (or, in tables
+    * written with the since-removed speed-biased policy,
+    * `Pipelines.textEncodeFast(value)`), and both are deterministic — so
+    * [[encodeBwtBodies]] over extracted bodies yields the payload a fresh
+    * encode of the same row slice writes.
     */
   def extractBwtBodies(payload: Array[Byte]): Option[Array[Array[Byte]]] =
     (payload(0) & 0xFF) match {
@@ -390,17 +393,26 @@ object ColumnCodec {
   /** Per-value BWT+MTF+RLE (never across value boundaries — SURVEY.md §7.4
     * chunking decision, keeps the per-url bit-identical invariant local).
     */
-  def encodeBwtValues(values: Array[Array[Byte]]): Array[Byte] = {
+  def encodeBwtValues(values: Array[Array[Byte]]): Array[Byte] =
+    bwtContainer(values.map(Pipelines.textEncode))
+
+  /** The BwtBin container: value count, then each body length-prefixed. A
+    * null slot stores the canonical empty body (its NullWrap bit restores
+    * the null).
+    */
+  private def bwtContainer(bodies: Array[Array[Byte]]): Array[Byte] = {
     val buf = new Bytes.Buf()
     buf.writeByte(BwtBin)
-    buf.writeVarInt(values.length)
-    values.foreach { v =>
-      val enc = Pipelines.textEncode(v)
-      buf.writeVarInt(enc.length)
-      buf.writeBytes(enc)
+    buf.writeVarInt(bodies.length)
+    bodies.foreach { b =>
+      val v = if (b == null) EmptyTextBody else b
+      buf.writeVarInt(v.length)
+      buf.writeBytes(v)
     }
     buf.toArray
   }
+
+  private val EmptyTextBody: Array[Byte] = Pipelines.textEncode(Array.emptyByteArray)
 
   private def decodeBwtValues(rd: Bytes.Reader): Array[Array[Byte]] = {
     val n = readCount(rd)

@@ -301,6 +301,9 @@ object Pipelines {
     * Huffman with a raw floor, same self-describing tag space as
     * [[textEncode]] so [[textDecode]] reads both. ~6x the throughput of
     * the BWT pipeline at a weaker ratio (see BENCH/BASELINE.md bias rows).
+    * [[textEncode]] takes it for documents above the BWT size cap, and
+    * tables written by the removed speed-biased table policy hold its
+    * bodies.
     */
   def textEncodeFast(value: Array[Byte]): Array[Byte] = {
     val freq = Huffman.histogram(value)

@@ -117,7 +117,7 @@ object DecodeJob {
 
   /** Point lookup: the pages for exactly these urls (absent urls simply
     * yield no row). Two-level pruning:
-    *  - part_id is a pure function of (url, stored EncodeMeta), so each
+    *  - part_id is a pure function of (url, stored layout), so each
     *    url's HOME PARTITION is computed up front and the scan opens only
     *    those partition directories (partition pruning proper);
     *  - within them, only chunks whose `[url_min, url_max]` covers the url
@@ -139,8 +139,7 @@ object DecodeJob {
     // encoder used (config recovered from the stored _meta table)
     val pidByUrl: Map[String, Int] = EncodeJob.readMeta(spark, outDir) match {
       case Some(m) =>
-        val cfg = EncodeConfig(numPartitions = m.numPartitions, saltFactor = m.saltFactor)
-        urls.toDF("url").withColumn("part_id", EncodeJob.partIdCol(cfg))
+        urls.toDF("url").withColumn("part_id", EncodeJob.partIdCol(m))
           .as[(String, Int)].collect().toMap
       case None => Map.empty // pre-meta table: range-only pruning
     }

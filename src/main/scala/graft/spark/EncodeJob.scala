@@ -60,7 +60,7 @@ final case class LineageRecord(
     bytes_in: Long,
     bytes_out: Long,
     codecs: String, // col=codec[,codec...] summary
-    payload_hash: Long, // xor-combined xxhash of payloads (symbol-table hash analogue)
+    payload_hash: Long, // xor-combined FNV-1a of payloads (symbol-table hash analogue)
     status: String
 )
 
@@ -77,15 +77,20 @@ final case class TableHealth(
     writer_lease_held: Boolean // a writer currently holds _writer.lock
 )
 
-/** Encode layout and codec policy. There is one encode path (see
+/** Encode layout, persisted in `_meta` (see [[EncodeJob.readMeta]]): once
+  * a table has one, the stored layout governs every later write to it and
+  * a caller's differing config is ignored. part_id is a pure function of
+  * (url, numPartitions, saltFactor), so a reader who knows these computes
+  * any url's home partition and prunes a lookup to ONE partition
+  * directory. There is one encode path (see
   * [[EncodeJob.encodeChunkStream]]): text/html are compressed per document
   * before the single salted exchange and containerized per value (the
   * BwtBin container), so the shuffle moves ~ratio x the bytes and the heavy
   * compute runs in the skew-free narrow stage; a spillable sort then feeds
-  * the O(chunkRows)-memory streaming kernel. Tables written before the
-  * raw-row path was removed may hold chunk-level text codecs
-  * (Dict/Rle/Fsst/Raw) for text/html; the format is self-describing, so
-  * every reader and maintenance op still handles them.
+  * the O(chunkRows)-memory streaming kernel. Tables written by older
+  * encoders may hold chunk-level text codecs (Dict/Rle/Fsst/Raw) or
+  * speed-biased per-value bodies for text/html; the format is
+  * self-describing, so every reader and maintenance op still handles them.
   */
 final case class EncodeConfig(
     numPartitions: Int = 32,
@@ -97,8 +102,7 @@ final case class EncodeConfig(
     // partition dirs per host — point lookups (exact home partition) are
     // unaffected. Layout config, persisted in _meta like before.
     saltFactor: Int = 16,
-    chunkRows: Int = 1024, // codec unit; bounds kernel memory at any scale
-    bwtBias: Double = 1.0 // text-codec policy: 1.0 size-optimal, <1 speed-biased
+    chunkRows: Int = 1024 // codec unit; bounds kernel memory at any scale
 )
 
 /** The north-rule batch encode: pages -> salted explicit hash partitioning
@@ -126,30 +130,22 @@ object EncodeJob {
   def chunksPath(outDir: String) = s"$outDir/chunks"
   def metaPath(outDir: String) = s"$outDir/_meta"
 
-  /** The layout-determining half of [[EncodeConfig]], persisted next to
-    * the chunks: part_id is a pure function of (url, numPartitions,
-    * saltFactor), so a reader who knows these can compute any url's home
-    * partition and prune the lookup scan to ONE partition directory.
-    */
-  final case class EncodeMeta(numPartitions: Int, saltFactor: Int, chunkRows: Int)
-
-  private val metaSchema = org.apache.spark.sql.Encoders.product[EncodeMeta].schema
+  private val metaSchema = org.apache.spark.sql.Encoders.product[EncodeConfig].schema
   private val lineageSchema = org.apache.spark.sql.Encoders.product[LineageRecord].schema
 
   private def hadoopConf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
 
-  /** Persist the layout of `cfg` in `_meta`, on the driver. `stored` is
-    * what [[readMeta]] returned: when it already equals the layout and is
-    * the only file, nothing is written. Otherwise the new file is renamed
-    * in before the old one is deleted, so a crash at any step leaves
-    * `readMeta` returning the old meta or the new one, never none.
+  /** Persist `cfg` in `_meta`, on the driver. `stored` is what
+    * [[readMeta]] returned: when it already equals `cfg` and is the only
+    * file, nothing is written. Otherwise the new file is renamed in before
+    * the old one is deleted, so a crash at any step leaves `readMeta`
+    * returning the old meta or the new one, never none.
     */
   private[spark] def writeMeta(
-      spark: SparkSession, outDir: String, cfg: EncodeConfig, stored: Option[EncodeMeta]): Unit = {
-    val meta = EncodeMeta(cfg.numPartitions, cfg.saltFactor, cfg.chunkRows)
+      spark: SparkSession, outDir: String, cfg: EncodeConfig, stored: Option[EncodeConfig]): Unit = {
     val dir = new org.apache.hadoop.fs.Path(metaPath(outDir))
-    if (!stored.contains(meta) || DriverParquet.dataFiles(hadoopConf(spark), dir).size != 1)
-      DriverParquet.replace(hadoopConf(spark), dir, Seq(meta))
+    if (!stored.contains(cfg) || DriverParquet.dataFiles(hadoopConf(spark), dir).size != 1)
+      DriverParquet.replace(hadoopConf(spark), dir, Seq(cfg))
   }
 
   /** The stored layout, read on the driver (no Spark job). A `_meta` dir
@@ -159,10 +155,10 @@ object EncodeJob {
     * two files (a crash between [[writeMeta]]'s rename and delete) the
     * newer one is the meta.
     */
-  def readMeta(spark: SparkSession, outDir: String): Option[EncodeMeta] =
+  def readMeta(spark: SparkSession, outDir: String): Option[EncodeConfig] =
     DriverParquet.newest(hadoopConf(spark), new org.apache.hadoop.fs.Path(metaPath(outDir)))
       .flatMap(f => DriverParquet.read(hadoopConf(spark), f.getPath, metaSchema).headOption)
-      .map(r => EncodeMeta(r.getInt(0), r.getInt(1), r.getInt(2)))
+      .map(r => EncodeConfig(r.getInt(0), r.getInt(1), r.getInt(2)))
 
   /** Every row of the `_lineage` table, read on the driver: files written
     * by Spark and by [[DriverParquet]] alike.
@@ -179,19 +175,18 @@ object EncodeJob {
     if (records.nonEmpty)
       DriverParquet.write(hadoopConf(spark), new org.apache.hadoop.fs.Path(lineagePath(outDir)), records)
 
-  /** A later write to an existing table must use the same partitioning
-    * function, or (part_id, chunk_id) identity and lookup pruning break.
-    * Returns the meta it read so callers don't pay a second _meta scan.
+  /** The layout a write to `outDir` uses, with the stored meta it came
+    * from: the stored `_meta` when the table has one, whatever `cfg` says
+    * — (part_id, chunk_id) identity and lookup pruning hold only while
+    * every write uses the partitioning function the table was built with,
+    * and compaction must re-slice with the chunkRows that
+    * [[fragmentedPartIds]] measures against. A new table, or one written
+    * before `_meta` existed, takes the caller's `cfg`.
     */
-  private def requireLayoutMatch(
-      spark: SparkSession, outDir: String, cfg: EncodeConfig): Option[EncodeMeta] = {
-    val meta = readMeta(spark, outDir)
-    meta.foreach { m =>
-      require(m.numPartitions == cfg.numPartitions && m.saltFactor == cfg.saltFactor,
-        s"encoded table at $outDir was written with numPartitions=${m.numPartitions}/" +
-          s"saltFactor=${m.saltFactor}; this config says ${cfg.numPartitions}/${cfg.saltFactor}")
-    }
-    meta
+  private def layout(
+      spark: SparkSession, outDir: String, cfg: EncodeConfig): (EncodeConfig, Option[EncodeConfig]) = {
+    val stored = readMeta(spark, outDir)
+    (stored.getOrElse(cfg), stored)
   }
 
   /** True iff the chunks table has at least one COMMITTED data file
@@ -551,11 +546,11 @@ object EncodeJob {
   ): Dataset[LineageRecord] = withWriterLock(spark, outDir) {
     import spark.implicits._
 
-    val stored = requireLayoutMatch(spark, outDir, cfg)
+    val (effCfg, stored) = layout(spark, outDir, cfg)
     completePendingCompactSwap(spark, outDir)
-    writeMeta(spark, outDir, cfg, stored)
+    writeMeta(spark, outDir, effCfg, stored)
     val done = donePartIds(spark, outDir)
-    val withPart = pages.withColumn("part_id", partIdCol(cfg))
+    val withPart = pages.withColumn("part_id", partIdCol(effCfg))
     val todo =
       if (done.isEmpty) withPart
       else withPart.filter(!$"part_id".isin(done.toSeq: _*))
@@ -570,7 +565,7 @@ object EncodeJob {
 
     // one shuffle; chunk layout determinism comes from the Catalyst
     // (part_id, url) sort inside encodeChunkStream
-    val chunks = encodeChunkStream(todo, cfg, r => acc.add(r))
+    val chunks = encodeChunkStream(todo, effCfg, r => acc.add(r))
 
     writeChunks(chunks.toDF(), chunksPath(outDir), SaveMode.Overwrite,
       dynamicPartitionOverwrite = true)
@@ -603,7 +598,7 @@ object EncodeJob {
     * is bit-identical before vs after; lineage rows of compacted
     * partitions are REPLACED so metrics reflect the new layout.
     *
-    * Plan shape — NO exchange, and (by default) NO re-compression:
+    * Plan shape — NO exchange, and NO re-compression:
     *  - each selected partition directory is scanned as its own coalesced
     *    single-task branch of a union (every page already sits in its home
     *    partition — part_id is a pure row function — so there is nothing
@@ -615,15 +610,15 @@ object EncodeJob {
     *    the container are deterministic, so the result is byte-identical
     *    to a fresh encode of the same rows while skipping all BWT/SA work
     *    — compaction costs about as much as a decode, not an encode.
-    *    `reencode = true` forces the decode + re-encode path instead (use
-    *    after changing `bwtBias`, to re-run the per-value codec policy).
-    *    Caveat: body reuse applies to per-value (BwtBin-container)
-    *    payloads, which is all the current encoder writes. Tables written
-    *    before the raw-row path was removed may hold chunk-level
-    *    Dict/Rle/Fsst/Raw text/html payloads; those chunks fall back to
-    *    decode + per-value re-encode, converting them to the per-value
-    *    form (full BWT cost for them — decode stays bit-identical,
-    *    compressed size may differ);
+    *    Stored bodies are reused whatever per-value codec wrote them, so a
+    *    table written with the since-removed speed-biased policy keeps its
+    *    fast-coded bodies. Caveat: body reuse applies to per-value
+    *    (BwtBin-container) payloads, which is all the current encoder
+    *    writes. Tables written before the raw-row path was removed may
+    *    hold chunk-level Dict/Rle/Fsst/Raw text/html payloads; those chunks
+    *    fall back to decode + per-value re-encode, converting them to the
+    *    per-value form (full BWT cost for them — decode stays
+    *    bit-identical, compressed size may differ);
     *  - the narrow spillable `sortWithinPartitions` + the streaming kernel
     *    keep task memory at O(chunkRows) even for an oversized partition.
     *
@@ -643,20 +638,16 @@ object EncodeJob {
       spark: SparkSession,
       outDir: String,
       cfg: EncodeConfig = EncodeConfig(),
-      partIds: Option[Seq[Int]] = None,
-      reencode: Boolean = false
+      partIds: Option[Seq[Int]] = None
   ): Dataset[LineageRecord] = withWriterLock(spark, outDir) {
     import spark.implicits._
-    val meta = requireLayoutMatch(spark, outDir, cfg)
-    completePendingCompactSwap(spark, outDir)
-
-    // re-slice with the STORED chunkRows (the layout the table was built
-    // with and fragmentedPartIds measures against) — compacting with a
-    // caller's divergent chunkRows would rewrite the table into a layout
-    // the selection metric permanently disagrees with (every partition
-    // reads as fragmented forever, and an in-stream compaction hook would
+    // re-slice with the STORED chunkRows — compacting with a caller's
+    // divergent chunkRows would rewrite the table into a layout the
+    // selection metric permanently disagrees with (every partition reads
+    // as fragmented forever, and an in-stream compaction hook would
     // re-compact the whole table on every interval without converging)
-    val effCfg = meta.map(m => cfg.copy(chunkRows = m.chunkRows)).getOrElse(cfg)
+    val (effCfg, _) = layout(spark, outDir, cfg)
+    completePendingCompactSwap(spark, outDir)
 
     val fs = chunksFs(spark, outDir)
     val root = new org.apache.hadoop.fs.Path(chunksPath(outDir))
@@ -672,7 +663,7 @@ object EncodeJob {
     }
     if (selected.isEmpty) return spark.emptyDataset[LineageRecord]
 
-    val compacted = compactedChunkStream(spark, outDir, effCfg, selected, reencode)
+    val compacted = compactedChunkStream(spark, outDir, effCfg, selected)
 
     // --- stage, then swap; never overwrite the live partition dirs in place
     val tmp = new org.apache.hadoop.fs.Path(compactTmpPath(outDir))
@@ -725,18 +716,16 @@ object EncodeJob {
     require(distinctUrls.size <= MaxDeleteUrls,
       s"delete is bounded at $MaxDeleteUrls distinct urls per call " +
         s"(got ${distinctUrls.size}); batch larger removals")
-    val meta = requireLayoutMatch(spark, outDir, cfg)
+    val (effCfg, meta) = layout(spark, outDir, cfg)
     completePendingCompactSwap(spark, outDir)
     if (distinctUrls.isEmpty || !hasCommittedChunks(spark, outDir))
       return spark.emptyDataset[LineageRecord]
-    val effCfg = meta.map(m => cfg.copy(chunkRows = m.chunkRows)).getOrElse(cfg)
 
     val affected = presentHomeParts(spark, outDir, distinctUrls, meta)
     if (affected.isEmpty) return spark.emptyDataset[LineageRecord]
 
     val urlSet = distinctUrls.toSet
-    val rewritten = compactedChunkStream(
-      spark, outDir, effCfg, affected, reencode = false, dropUrls = urlSet)
+    val rewritten = compactedChunkStream(spark, outDir, effCfg, affected, dropUrls = urlSet)
 
     val fs = chunksFs(spark, outDir)
     val tmp = new org.apache.hadoop.fs.Path(compactTmpPath(outDir))
@@ -759,7 +748,7 @@ object EncodeJob {
       spark: SparkSession,
       outDir: String,
       distinctUrls: Seq[String],
-      meta: Option[EncodeMeta]
+      meta: Option[EncodeConfig]
   ): Seq[Int] =
     presentHomePairs(spark, outDir, distinctUrls, meta).map(_._1).distinct.sorted
 
@@ -784,7 +773,7 @@ object EncodeJob {
       spark: SparkSession,
       outDir: String,
       distinctUrls: Seq[String],
-      meta: Option[EncodeMeta]
+      meta: Option[EncodeConfig]
   ): Seq[(Int, String)] = {
     import spark.implicits._
     val (covering, targets) = presenceScan(spark, outDir, distinctUrls, meta)
@@ -807,16 +796,15 @@ object EncodeJob {
       spark: SparkSession,
       outDir: String,
       distinctUrls: Seq[String],
-      meta: Option[EncodeMeta]
+      meta: Option[EncodeConfig]
   ): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
     val (targets, homePids) = meta match {
       case Some(m) =>
-        val homeCfg = EncodeConfig(numPartitions = m.numPartitions, saltFactor = m.saltFactor)
         // evaluate partIdCol ONCE, driver-side (lookupUrls' pattern): the
         // pairs feed both the join targets and the scan's partition filter
         val pairs = distinctUrls.toDF("url")
-          .withColumn("part_id", partIdCol(homeCfg))
+          .withColumn("part_id", partIdCol(m))
           .as[(String, Int)].collect()
         (spark.createDataset(pairs.toIndexedSeq).toDF("d_url", "d_part"),
           Some(pairs.map(_._2).distinct.toSeq))
@@ -899,7 +887,6 @@ object EncodeJob {
       cfg: EncodeConfig = EncodeConfig()
   ): Dataset[LineageRecord] = withWriterLock(spark, outDir) {
     import spark.implicits._
-    requireLayoutMatch(spark, outDir, cfg)
     completePendingCompactSwap(spark, outDir)
     // persist once: every later step (bound check, url collect, delta
     // encode, rest split/append) re-reads the deduped delta — without
@@ -952,7 +939,7 @@ object EncodeJob {
       cfg: EncodeConfig
   ): Dataset[LineageRecord] = {
     import spark.implicits._
-    val meta = requireLayoutMatch(spark, outDir, cfg)
+    val (effCfg, meta) = layout(spark, outDir, cfg)
     // bootstrap / wiped table: nothing stored to replace — plain append
     if (!hasCommittedChunks(spark, outDir))
       return append(spark, deduped, outDir, cfg)
@@ -960,7 +947,6 @@ object EncodeJob {
     require(urls.size <= MaxDeleteUrls,
       s"internal: upsert group exceeded $MaxDeleteUrls urls (${urls.size})")
     if (urls.isEmpty) return spark.emptyDataset[LineageRecord]
-    val effCfg = meta.map(m => cfg.copy(chunkRows = m.chunkRows)).getOrElse(cfg)
     val pairs = presentHomePairs(spark, outDir, urls, meta)
     // no url stored anywhere: the whole delta is a pure insert
     if (pairs.isEmpty) return append(spark, deduped, outDir, cfg)
@@ -1002,8 +988,7 @@ object EncodeJob {
     val tmp = new org.apache.hadoop.fs.Path(compactTmpPath(outDir))
     if (fs.exists(tmp)) fs.delete(tmp, true)
     val rewritten = compactedChunkStream(
-      spark, outDir, effCfg, affected, reencode = false,
-      dropUrls = urls.toSet, deltaDir = Some(deltaTmp))
+      spark, outDir, effCfg, affected, dropUrls = urls.toSet, deltaDir = Some(deltaTmp))
     writeChunks(rewritten.toDF(), compactTmpPath(outDir), SaveMode.Overwrite)
     upsertPhaseHook("staged")
 
@@ -1081,7 +1066,6 @@ object EncodeJob {
       outDir: String,
       cfg: EncodeConfig,
       selected: Seq[Int],
-      reencode: Boolean,
       dropUrls: Set[String] = Set.empty,
       deltaDir: Option[String] = None
   ): Dataset[EncodedChunk] = {
@@ -1114,8 +1098,6 @@ object EncodeJob {
       withDelta.withColumn("part_id", lit(pid)).coalesce(1)
     })
 
-    val bias = cfg.bwtBias
-    val forceReencode = reencode
     // ship the url set as an explicit torrent broadcast, not a closure
     // capture: a delete-batch-sized set (<= MaxDeleteUrls = 100k urls)
     // closure-captured here inflates the TASK BINARY to tens of MB, which
@@ -1125,7 +1107,7 @@ object EncodeJob {
     val hasDrop = dropUrls.nonEmpty // driver-side fact, avoids .value.isEmpty per chunk
     val pre = chunkRowsDf.as[EncodedChunk].mapPartitions { it =>
       it.flatMap { c =>
-        val rows = compactPreRows(c, bias, forceReencode)
+        val rows = compactPreRows(c)
         // delta chunks carry the REPLACEMENT rows of the very urls being
         // dropped from the stored generation — never filter those
         if (!hasDrop || c.chunk_id >= UpsertDeltaChunkBase) rows
@@ -1137,7 +1119,7 @@ object EncodeJob {
       // order = the UTF8String order the old String column sorted in
       .sortWithinPartitions($"_6", $"_1")
       .as[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte], Int)]
-      .mapPartitions(it => encodePreEncodedSorted(it, cfg.chunkRows, _ => (), bias))
+      .mapPartitions(it => encodePreEncodedSorted(it, cfg.chunkRows, _ => ()))
   }
 
   /** Per-partition (part_id, n_chunks, n_rows) from the chunks table's
@@ -1179,8 +1161,7 @@ object EncodeJob {
     // rows are missing entirely) — same fail-fast contract as the readers
     requireNoPendingSwap(spark, outDir)
     if (!hasCommittedChunks(spark, outDir)) return Seq.empty
-    val chunkRows =
-      readMeta(spark, outDir).map(_.chunkRows).getOrElse(cfg.chunkRows)
+    val chunkRows = layout(spark, outDir, cfg)._1.chunkRows
     partChunkStats(spark, outDir)
       .filter { case (_, c, r) => isFragmented(c, r, chunkRows, slackChunks) }
       .map(_._1).toSeq.sorted
@@ -1206,17 +1187,16 @@ object EncodeJob {
     val fs = chunksFs(spark, outDir)
     val pending = fs.exists(swapMarkerPath(outDir))
     val lease = fs.exists(writerLockPath(outDir))
-    val meta = readMeta(spark, outDir)
+    val (effCfg, meta) = layout(spark, outDir, cfg)
     val (rows, chunks, partsLive, fragged) =
       if (!hasCommittedChunks(spark, outDir)) (0L, 0L, 0, 0)
       else {
-        // same chunkRows fallback chain and fragmentation predicate as
+        // same layout rule and fragmentation predicate as
         // fragmentedPartIds — a meta-less table or a non-default slack
         // must read identically from the probe and the selector
-        val chunkRows = meta.map(_.chunkRows).getOrElse(cfg.chunkRows)
         val per = partChunkStats(spark, outDir)
         (per.map(_._3).sum, per.map(_._2).sum, per.length,
-          per.count { case (_, c, r) => isFragmented(c, r, chunkRows, slackChunks) })
+          per.count { case (_, c, r) => isFragmented(c, r, effCfg.chunkRows, slackChunks) })
       }
     spark.createDataset(Seq(TableHealth(
       rows, chunks, partsLive,
@@ -1231,7 +1211,8 @@ object EncodeJob {
     * live table is still canonical and [[compact]] discards them on its
     * next run. Returns true when a pending swap was completed. Called
     * automatically by every write entry point ([[run]]/[[append]]/
-    * [[compact]]); readers instead fail fast via [[requireNoPendingSwap]].
+    * [[compact]]/[[delete]]/[[upsert]]); readers instead fail fast via
+    * [[requireNoPendingSwap]].
     */
   def completePendingCompactSwap(spark: SparkSession, outDir: String): Boolean = {
     val fs = chunksFs(spark, outDir)
@@ -1443,21 +1424,19 @@ object EncodeJob {
     * ([[ColumnCodec.extractBwtBodies]] + the O(1)-ish
     * [[graft.codec.Pipelines.rawLenOf]] header recovery) unless the stored
     * codec is not per-value (chunk-level Dict/Rle/Fsst/Raw, found only in
-    * tables written before the raw-row path was removed) or `reencode`
-    * forces the full decode + per-value re-encode.
+    * tables written before the raw-row path was removed), which takes the
+    * full decode + per-value re-encode.
     */
   private def compactPreRows(
-      c: EncodedChunk,
-      bias: Double,
-      reencode: Boolean
+      c: EncodedChunk
   ): Iterator[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte], Int)] = {
     val urls = ColumnCodec.decodeBinary(c.url.payload)
     val tss = ColumnCodec.decodeLong(c.warc_ts.payload)
     val langs = ColumnCodec.decodeBinaryNullable(c.lang.payload)
-    def preCol(cc: ColChunk): Array[Array[Byte]] = {
-      if (!reencode) ColumnCodec.extractBwtBodies(cc.payload) match {
+    def preCol(cc: ColChunk): Array[Array[Byte]] =
+      ColumnCodec.extractBwtBodies(cc.payload) match {
         case Some(bodies) =>
-          return bodies.map { b =>
+          bodies.map { b =>
             if (b == null) null
             else {
               val buf = new graft.codec.Bytes.Buf(b.length + 5)
@@ -1466,10 +1445,8 @@ object EncodeJob {
               buf.toArray
             }
           }
-        case None => ()
+        case None => ColumnCodec.decodeBinaryNullable(cc.payload).map(preEncodeValue)
       }
-      ColumnCodec.decodeBinaryNullable(cc.payload).map(v => preEncodeValue(v, bias))
-    }
     val htmlPre = preCol(c.html)
     val textPre = preCol(c.text)
     // stored bytes/micros feed the kernel directly — the former
@@ -1509,7 +1486,6 @@ object EncodeJob {
   ): Dataset[EncodedChunk] = {
     val spark = todo.sparkSession
     import spark.implicits._
-    val bias = cfg.bwtBias
     todo
       .select(col("url").cast("binary"),
         // url and warc_ts are the row identity: a null warc_ts fails here,
@@ -1521,13 +1497,12 @@ object EncodeJob {
       .as[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte], Int)]
       .mapPartitions { it =>
         it.map { case (url, ts, html, text, lang, pid) =>
-          (url, ts, preEncodeValue(html, bias), preEncodeValue(text, bias),
-            lang, pid)
+          (url, ts, preEncodeValue(html), preEncodeValue(text), lang, pid)
         }
       }
       .repartition(cfg.numPartitions, $"_6")
       .sortWithinPartitions($"_6", $"_1")
-      .mapPartitions(it => encodePreEncodedSorted(it, cfg.chunkRows, onPart, bias))
+      .mapPartitions(it => encodePreEncodedSorted(it, cfg.chunkRows, onPart))
   }
 
   /** The error a page with a null `warc_ts` fails the encode with. */
@@ -1572,14 +1547,14 @@ object EncodeJob {
   ): Dataset[LineageRecord] = withWriterLock(spark, outDir) {
     import spark.implicits._
 
-    requireLayoutMatch(spark, outDir, cfg)
+    val (effCfg, meta) = layout(spark, outDir, cfg)
     completePendingCompactSwap(spark, outDir)
 
     // intra-delta dedupe FIRST (it applies to the bootstrap path too): a
     // crawler re-delivering the same url WITHIN one batch is as normal as
     // across batches
     val deduped = dedupeDelta(delta)
-    val withPart = deduped.withColumn("part_id", partIdCol(cfg))
+    val withPart = deduped.withColumn("part_id", partIdCol(effCfg))
 
     // Bootstrap vs wiped-table routing. A dir with no committed chunks is
     // either a NEW table (the initial encode — the natural way to start an
@@ -1597,8 +1572,7 @@ object EncodeJob {
     // writer's delete-then-rewrite) whose tombstones would then swallow the
     // delta inside run().
     val hasChunks = hasCommittedChunks(spark, outDir)
-    if (!hasChunks && readMeta(spark, outDir).isEmpty &&
-        donePartIds(spark, outDir).isEmpty)
+    if (!hasChunks && meta.isEmpty && donePartIds(spark, outDir).isEmpty)
       return run(spark, deduped, outDir, cfg)
 
     // --- dedupe against the stored table via per-chunk url ranges (nested
@@ -1634,7 +1608,7 @@ object EncodeJob {
     spark.sparkContext.register(acc, "graft_lineage_append")
 
     writeChunks(
-      encodeChunkStream(newRows, cfg, r => acc.add(r))
+      encodeChunkStream(newRows, effCfg, r => acc.add(r))
         .map(c => c.copy(chunk_id = c.chunk_id + bcOff.value.getOrElse(c.part_id, 0)))
         .toDF(),
       chunksPath(outDir), SaveMode.Append)
@@ -1663,16 +1637,10 @@ object EncodeJob {
       .select("url", "warc_ts", "html", "text", "lang").as[Page]
   }
 
-  /** Map-side pre-encoding of one value: varint(rawLen) ++ textEncode.
-    * `bwtBias <= 0` is the speed-biased policy point: skip the BWT pipeline
-    * entirely and emit the order-0-Huffman/raw tagged form (~6x the encode
-    * throughput at a weaker ratio — measured rows in BENCH/BASELINE.md).
-    */
-  private[spark] def preEncodeValue(raw: Array[Byte], bwtBias: Double = 1.0): Array[Byte] = {
+  /** Map-side pre-encoding of one value: varint(rawLen) ++ textEncode. */
+  private[spark] def preEncodeValue(raw: Array[Byte]): Array[Byte] = {
     if (raw == null) return null
-    val enc =
-      if (bwtBias <= 0.0) graft.codec.Pipelines.textEncodeFast(raw)
-      else graft.codec.Pipelines.textEncode(raw)
+    val enc = graft.codec.Pipelines.textEncode(raw)
     val buf = new graft.codec.Bytes.Buf(enc.length + 5)
     buf.writeVarInt(raw.length)
     buf.writeBytes(enc)
@@ -1684,65 +1652,21 @@ object EncodeJob {
   // only in the per-chunk url_min/url_max metadata
   private type PreRow = (Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte])
 
-  /** Container in BwtBin layout over pre-encoded values (+ null bitmap +
-    * Huffman wrap when they pay for themselves); one column of a chunk.
+  /** One column of a chunk from its pre-encoded values: the varint raw
+    * length is stripped (and summed into `bytes_in`) and the bodies go into
+    * [[ColumnCodec.encodeBwtBodies]]' per-value container.
     */
   private def containerizePre(pre: Array[Array[Byte]]): ColChunk = {
-    import graft.codec.{Bytes, ColumnCodec}
     var rawBytes = 0L
-    val bodies = new Array[Array[Byte]](pre.length)
-    var i = 0
-    while (i < pre.length) {
-      if (pre(i) != null) {
-        val rd = new Bytes.Reader(pre(i))
-        rawBytes += rd.readVarLong()
-        bodies(i) = java.util.Arrays.copyOfRange(pre(i), rd.pos, pre(i).length)
-      }
-      i += 1
-    }
-    val hasNull = bodies.exists(_ == null)
-    val inner = {
-      val buf = new Bytes.Buf()
-      buf.writeByte(ColumnCodec.BwtBin)
-      buf.writeVarInt(bodies.length)
-      val emptyEnc = graft.codec.Pipelines.textEncode(Array.emptyByteArray)
-      bodies.foreach { b =>
-        val v = if (b == null) emptyEnc else b // null slot: canonical empty
-        buf.writeVarInt(v.length)
-        buf.writeBytes(v)
-      }
-      buf.toArray
-    }
-    val withNulls = if (!hasNull) inner else {
-      val bitmap = new Array[Byte]((bodies.length + 7) / 8)
-      var j = 0
-      while (j < bodies.length) {
-        if (bodies(j) == null) bitmap(j >> 3) = (bitmap(j >> 3) | (1 << (j & 7))).toByte
-        j += 1
-      }
-      val buf = new Bytes.Buf(inner.length + bitmap.length + 8)
-      buf.writeByte(ColumnCodec.NullWrap)
-      buf.writeVarInt(bodies.length)
-      buf.writeBytes(bitmap)
-      buf.writeBytes(inner)
-      buf.toArray
-    }
-    val payload = {
-      // exact-size precheck: container bodies are mostly already
-      // entropy-coded, so the wrap rarely wins — don't pay its encode pass
-      val freq = graft.codec.Huffman.histogram(withNulls)
-      val lens = graft.codec.Huffman.codeLengths(freq)
-      val hSize = graft.codec.Huffman.compressedSize(freq, lens, withNulls.length)
-      if (hSize + 1 >= withNulls.length)
-        withNulls
+    val bodies = pre.map { p =>
+      if (p == null) null
       else {
-        val huf = graft.codec.Huffman.compressWithSized(withNulls, lens, hSize.toInt)
-        val out = new Array[Byte](huf.length + 1)
-        out(0) = ColumnCodec.HufWrap.toByte
-        System.arraycopy(huf, 0, out, 1, huf.length)
-        out
+        val rd = new graft.codec.Bytes.Reader(p)
+        rawBytes += rd.readVarLong()
+        java.util.Arrays.copyOfRange(p, rd.pos, p.length)
       }
     }
+    val payload = ColumnCodec.encodeBwtBodies(bodies)
     ColChunk(ColumnCodec.codecName(payload), rawBytes, payload.length.toLong,
       fnv1a(payload), payload)
   }
@@ -1751,8 +1675,7 @@ object EncodeJob {
   private def preEncodedChunkRow(
       pid: Int,
       cid: Int,
-      chunk: scala.collection.Seq[PreRow],
-      bwtBias: Double
+      chunk: scala.collection.Seq[PreRow]
   ): EncodedChunk = {
     val urls = chunk.map { r =>
       require(r._1 != null, "EncodeJob: null url in the input pages")
@@ -1761,7 +1684,7 @@ object EncodeJob {
     val tss = chunk.map(_._2).toArray
     val langs = chunk.map(_._5).toArray
     def bin(values: Array[Array[Byte]]): ColChunk = {
-      val payload = ColumnCodec.encodeBinaryNullable(values, bwtBias)
+      val payload = ColumnCodec.encodeBinaryNullable(values)
       ColChunk(ColumnCodec.codecName(payload),
         values.map(v => if (v == null) 0L else v.length.toLong).sum,
         payload.length.toLong, fnv1a(payload), payload)
@@ -1788,8 +1711,7 @@ object EncodeJob {
   private[spark] def encodePreEncodedSorted(
       it: Iterator[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte], Int)],
       chunkRows: Int,
-      onPartDone: LineageRecord => Unit,
-      bwtBias: Double
+      onPartDone: LineageRecord => Unit
   ): Iterator[EncodedChunk] = new Iterator[Seq[EncodedChunk]] {
     private val buf = scala.collection.mutable.ArrayBuffer.empty[PreRow]
     private var curPid = Int.MinValue
@@ -1803,7 +1725,7 @@ object EncodeJob {
     private var pendingLineagePid = Int.MinValue
 
     private def flushChunk(): Seq[EncodedChunk] = {
-      val c = preEncodedChunkRow(curPid, cid, buf, bwtBias)
+      val c = preEncodedChunkRow(curPid, cid, buf)
       cid += 1
       rows += buf.length
       bytesIn += c.bytesIn

@@ -15,12 +15,10 @@ object RatioCheck {
     for (salt <- Seq(4, 16)) {
       val out = graft.Scratch.dir(s"ratio_salt$salt")
       graft.Bench.deleteDir(out)
-      graft.spark.EncodeJob.run(spark, pages, out,
-        graft.spark.EncodeConfig(numPartitions = 64, saltFactor = salt))
-      val r = spark.read.parquet(graft.spark.EncodeJob.lineagePath(out))
-        .agg(org.apache.spark.sql.functions.sum($"bytes_in"),
-          org.apache.spark.sql.functions.sum($"bytes_out")).as[(Long, Long)].head()
-      println(f"RATIO salt=$salt%2d bytes_in=${r._1} bytes_out=${r._2} ratio=${r._2.toDouble / r._1}%.4f")
+      val recs = graft.spark.EncodeJob.run(spark, pages, out,
+        graft.spark.EncodeConfig(numPartitions = 64, saltFactor = salt)).collect()
+      val (bytesIn, bytesOut) = (recs.map(_.bytes_in).sum, recs.map(_.bytes_out).sum)
+      println(f"RATIO salt=$salt%2d bytes_in=$bytesIn bytes_out=$bytesOut ratio=${bytesOut.toDouble / bytesIn}%.4f")
       graft.Bench.deleteDir(out)
     }
     spark.stop()

@@ -27,20 +27,16 @@ object SoakRun {
       Bench.deleteDir(out)
       val pages = spark.read.parquet(pagesPath).as[graft.spark.Page]
       val t0 = System.nanoTime()
-      EncodeJob.run(spark, pages, out,
-        EncodeConfig(numPartitions = 512, saltFactor = 16))
+      val lin = EncodeJob.run(spark, pages, out,
+        EncodeConfig(numPartitions = 512, saltFactor = 16)).collect()
       val encSec = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val report = VerifyJob.run(spark, pages, out)
       val verSec = (System.nanoTime() - t1) / 1e9
-      val lin = spark.read.parquet(EncodeJob.lineagePath(out))
-        .agg(org.apache.spark.sql.functions.sum("bytes_in"),
-          org.apache.spark.sql.functions.sum("bytes_out"),
-          org.apache.spark.sql.functions.sum("n_rows"),
-          org.apache.spark.sql.functions.sum("n_chunks")).first()
-      val gb = lin.getLong(0) / 1e9
-      println(f"SOAK pages=$nPages bytes_in=${lin.getLong(0)} (${gb}%.2f GB) " +
-        f"ratio=${lin.getLong(1).toDouble / lin.getLong(0)}%.4f chunks=${lin.getLong(3)} " +
+      val (bytesIn, bytesOut) = (lin.map(_.bytes_in).sum, lin.map(_.bytes_out).sum)
+      val gb = bytesIn / 1e9
+      println(f"SOAK pages=$nPages bytes_in=$bytesIn (${gb}%.2f GB) " +
+        f"ratio=${bytesOut.toDouble / bytesIn}%.4f chunks=${lin.map(_.n_chunks).sum} " +
         f"encode_sec=$encSec%.1f (${gb / encSec}%.3f GB/s) verify_sec=$verSec%.1f " +
         s"rows_decoded=${report.rows_decoded} mismatched=${report.mismatched_rows} " +
         s"except=${report.except_violations} size_gate_ok=${report.size_gate_ok}")

@@ -97,6 +97,18 @@ class CompactReuseSpec extends AnyFunSuite {
       buf.toArray
     }
     assert(rebuilt.sameElements(payload))
+    // the container writer over bodies is extractBwtBodies' inverse, null
+    // slots and speed-coded (tag 4) bodies included
+    val withNulls: Array[Array[Byte]] =
+      Array(bodies(0), null, bodies(2), null, Pipelines.textEncodeFast(values(3)))
+    val written = ColumnCodec.encodeBwtBodies(withNulls)
+    val back = ColumnCodec.extractBwtBodies(written).getOrElse(fail("must extract"))
+    assert(back.length == withNulls.length)
+    withNulls.indices.foreach { i =>
+      assert(if (withNulls(i) == null) back(i) == null else back(i).sameElements(withNulls(i)), s"slot $i")
+    }
+    assert(ColumnCodec.decodeBinaryNullable(written).map(Option(_).map(_.toSeq)).toSeq ==
+      Seq(Some(values(0).toSeq), None, Some(values(2).toSeq), None, Some(values(3).toSeq)))
   }
 
   test("extractBwtBodies throws on corrupt containers rather than mis-slicing") {

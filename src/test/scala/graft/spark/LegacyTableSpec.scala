@@ -3,11 +3,12 @@ package graft.spark
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 
-/** Tables written by the removed raw-row encode path keep working.
+/** Tables written by removed encode paths keep working.
   *
-  * That path shuffled raw rows and let the chunk-level codec policy pick
-  * text/html codecs (Dict/Rle/Fsst/Raw as well as the per-value BwtBin
-  * container the current encoder always writes). The fixture under
+  * The raw-row path shuffled raw rows and let the chunk-level codec
+  * policy pick text/html codecs (Dict/Rle/Fsst/Raw as well as the
+  * per-value BwtBin container the current encoder always writes). The
+  * fixture under
   * `src/test/resources/legacy_raw_table` (chunks, `_meta`, `_lineage`) was
   * written by that path at commit 0e5c44d with
   * {{{
@@ -20,6 +21,17 @@ import java.nio.file.{Files, Path, Paths}
   * `git show 0e5c44d:src/main/scala/graft/spark/EncodeJob.scala`), and
   * copied without its `.crc` side files. Its pages are short, so the chunk
   * policy chose dict/raw for them.
+  *
+  * `src/test/resources/legacy_speed_table` was written by the removed
+  * speed-biased codec policy, whose per-value text/html bodies are
+  * `Pipelines.textEncodeFast`'s order-0 Huffman/raw forms (tags 4/2)
+  * instead of BWT ones, at commit 585d06c with
+  * {{{
+  *   // local[4], spark.sql.shuffle.partitions = 4, session time zone UTC
+  *   EncodeJob.run(spark, PagesGen.generate(spark, 60, partitions = 4), out,
+  *     EncodeConfig(numPartitions = 3, chunkRows = 16, bwtBias = 0.0))
+  * }}}
+  * and copied without its `.crc` side files.
   */
 object LegacyTableSpec {
   val cfg: EncodeConfig = EncodeConfig(numPartitions = 3, chunkRows = 16)
@@ -54,12 +66,17 @@ class LegacyTableSpec extends AnyFunSuite {
     d.getAbsolutePath + "/out"
   }
 
-  /** A private, writable copy of the fixture table. */
-  private def legacyTable(name: String): String = {
+  /** A private, writable copy of a fixture table. */
+  private def legacyTable(name: String, fixture: String = "legacy_raw_table"): String = {
     val out = tmpDir(name)
-    copyTree(Paths.get(getClass.getResource("/legacy_raw_table").toURI), Paths.get(out))
+    copyTree(Paths.get(getClass.getResource(s"/$fixture").toURI), Paths.get(out))
     out
   }
+
+  private def speedTable(name: String): String = legacyTable(name, "legacy_speed_table")
+
+  /** The pages `legacy_speed_table` holds. */
+  private lazy val speedPages: Seq[Page] = PagesGen.generate(spark, 60, partitions = 4).collect().toSeq
 
   /** Page as comparable values (html is an Array[Byte]). */
   private def key(p: Page) =
@@ -146,24 +163,49 @@ class LegacyTableSpec extends AnyFunSuite {
     assert(decoded(out) == (pages ++ added).map(key).toSet)
   }
 
-  test("compact with reencode writes the same chunk bytes as body reuse") {
-    val base = tmpDir("reuse_vs_reencode")
-    val all = PagesGen.generate(spark, 260, partitions = 4)
-    val cfg2 = EncodeConfig(numPartitions = 2, chunkRows = 32)
-    EncodeJob.run(spark, all.limit(200), base, cfg2)
-    EncodeJob.append(spark, all, base, cfg2) // tail chunks: something to re-slice
-    val reuse = tmpDir("reuse")
-    val reencode = tmpDir("reencode")
-    copyTree(Paths.get(base), Paths.get(reuse))
-    copyTree(Paths.get(base), Paths.get(reencode))
-    EncodeJob.compact(spark, reuse, cfg2)
-    EncodeJob.compact(spark, reencode, cfg2, reencode = true)
-    def rows(out: String) = chunks(out).map { c =>
-      (c.part_id, c.chunk_id, c.n_rows, c.url_min, c.url_max,
-        c.columns.map { case (n, cc) => (n, cc.codec, cc.bytes_in, cc.bytes_out, cc.payload_hash, cc.payload.toSeq) })
-    }.sortBy(r => (r._1, r._2)).toSeq
-    val a = rows(reuse)
-    assert(a.map(_._3).sum == 260)
-    assert(a == rows(reencode))
+  /** url -> its stored (html, text) per-value bodies. */
+  private def bodiesByUrl(out: String): Map[String, Seq[Seq[Byte]]] =
+    chunks(out).toSeq.flatMap { c =>
+      val urls = graft.codec.ColumnCodec.decodeBinary(c.url.payload).map(new String(_, "UTF-8"))
+      val bodies = Seq(c.html, c.text).map(cc =>
+        graft.codec.ColumnCodec.extractBwtBodies(cc.payload).getOrElse(fail(s"${cc.codec} is not per-value")))
+      urls.indices.map(i => urls(i) -> bodies.map(b => b(i).toSeq))
+    }.toMap
+
+  test("legacy speed-biased table: decode and lookupUrls return the original pages") {
+    val out = speedTable("speed_read")
+    assert(decoded(out) == speedPages.map(key).toSet)
+    val wanted = Seq(speedPages(2), speedPages(17), speedPages(40), speedPages(59))
+    val got = DecodeJob.lookupUrls(spark, out, wanted.map(_.url) :+ "https://host1.example/p/absent/0")
+      .collect().map(key).toSet
+    assert(got == wanted.map(key).toSet)
+  }
+
+  test("legacy speed-biased table: compact reuses the fast-coded bodies, decode bit-identical") {
+    val out = speedTable("speed_compact")
+    val before = bodiesByUrl(out)
+    assert(before.size == speedPages.size)
+    assert(before.values.flatten.forall(b => b.head == 2 || b.head == 4),
+      "the fixture's text/html bodies must be the speed codec's (tags 2/4)")
+    EncodeJob.compact(spark, out, cfg)
+    assert(decoded(out) == speedPages.map(key).toSet)
+    assert(bodiesByUrl(out) == before, "compact must reuse the stored bodies, not re-encode them")
+  }
+
+  test("legacy speed-biased table: append and upsert keep decode bit-identical") {
+    import spark.implicits._
+    val out = speedTable("speed_append_upsert")
+    val added = PagesGen.generate(spark, 80, partitions = 4).collect().toSeq.drop(60)
+    EncodeJob.append(spark, spark.createDataset(added), out, cfg)
+    assert(decoded(out) == (speedPages ++ added).map(key).toSet)
+    val refreshed = Seq(speedPages(5), added(3)).map(p =>
+      p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 1000L), text = p.text + " (refreshed)"))
+    EncodeJob.upsert(spark, spark.createDataset(refreshed), out, cfg)
+    val expected = (speedPages ++ added).filterNot(p => refreshed.exists(_.url == p.url)) ++ refreshed
+    assert(decoded(out) == expected.map(key).toSet)
+    // the untouched fixture pages keep their fast-coded bodies
+    val bodies = bodiesByUrl(out)
+    assert(speedPages.filterNot(p => refreshed.exists(_.url == p.url))
+      .forall(p => bodies(p.url).forall(b => b.head == 2 || b.head == 4)))
   }
 }

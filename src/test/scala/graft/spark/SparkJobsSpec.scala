@@ -277,15 +277,6 @@ class SparkJobsSpec extends AnyFunSuite {
     assert(EncodeJob.donePartIds(spark, out).isEmpty, "a failed encode must not checkpoint lineage")
   }
 
-  test("speed-biased encode (bwtBias=0, no BWT) is still bit-identical") {
-    val out = tmpDir("speedbias")
-    val pages = PagesGen.generate(spark, 150, partitions = 4)
-    EncodeJob.run(spark, pages, out,
-      EncodeConfig(numPartitions = 4, chunkRows = 64, bwtBias = 0.0))
-    val report = VerifyJob.run(spark, pages, out)
-    assert(report.mismatched_rows == 0 && report.except_violations == 0)
-  }
-
   test("SearchJob.runWithIndex: second invocation never touches docs (no SA-IS)") {
     import spark.implicits._
     val docs = spark.createDataset(Seq(("a", "abracadabra"), ("b", "banana band stand")))
@@ -516,7 +507,7 @@ class SparkJobsSpec extends AnyFunSuite {
 
     // the pipeline plan is pure narrow: union of coalesced per-dir scans,
     // in-partition sort, kernels — no Exchange node anywhere
-    val plan = EncodeJob.compactedChunkStream(spark, out, cfg, Seq(0, 1), reencode = false)
+    val plan = EncodeJob.compactedChunkStream(spark, out, cfg, Seq(0, 1))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"compaction plan must not shuffle:\n$plan")
 
@@ -885,8 +876,7 @@ class SparkJobsSpec extends AnyFunSuite {
     // reads survive (range-only pruning), writes heal the meta table
     assert(DecodeJob.lookupUrls(spark, out, Seq("https://nope.example/")).count() == 0)
     EncodeJob.run(spark, pages, out, cfg)
-    assert(EncodeJob.readMeta(spark, out).contains(
-      EncodeJob.EncodeMeta(cfg.numPartitions, cfg.saltFactor, cfg.chunkRows)))
+    assert(EncodeJob.readMeta(spark, out).contains(cfg))
   }
 
   test("decodeProjected: only requested leaves read; values exact; lookup works after append") {
@@ -1118,7 +1108,7 @@ class SparkJobsSpec extends AnyFunSuite {
           .withColumn("part_id", EncodeJob.partIdCol(cfg))
           .select($"part_id").distinct().as[Int].collect().toSeq.sorted
         rewritePlan = EncodeJob.compactedChunkStream(spark, out, cfg, pids,
-          reencode = false, dropUrls = delta.map(_.url).toSet,
+          dropUrls = delta.map(_.url).toSet,
           deltaDir = Some(EncodeJob.chunksPath(out) + "_upsert_delta_tmp"))
           .queryExecution.executedPlan.toString
       case _ => ()
@@ -1244,6 +1234,54 @@ class SparkJobsSpec extends AnyFunSuite {
     val after = DecodeJob.run(spark, out).collect().map(p => p.url -> p.text).toMap
     assert(after.size == 80)
     refreshed.foreach(r => assert(after(r.url) == r.text))
+  }
+
+  test("writes to an existing table take the stored _meta layout, not the caller's cfg") {
+    import spark.implicits._
+    val stored = EncodeConfig(numPartitions = 4, chunkRows = 16)
+    val all = PagesGen.generate(spark, 200, partitions = 4).collect().toIndexedSeq
+    val refreshed = all.take(6).map(p => p.copy(
+      warc_ts = java.sql.Timestamp.from(p.warc_ts.toInstant.plusSeconds(60)), text = "v2 " + p.text))
+    val doomed = all.slice(20, 26).map(_.url)
+    def maxChunkRows(out: String) =
+      spark.read.parquet(EncodeJob.chunksPath(out))
+        .select(org.apache.spark.sql.functions.max($"n_rows")).first().getInt(0)
+    def metaFiles(out: String) = DriverParquet.dataFiles(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(EncodeJob.metaPath(out))).map(f => (f.getPath.getName, f.getModificationTime))
+    /** Writes a table with `stored`, then runs every later write and the
+      * two layout readers with `cfg`; returns what the readers said. */
+    def sequence(out: String, cfg: EncodeConfig): (Seq[Int], TableHealth) = {
+      EncodeJob.run(spark, spark.createDataset(all.take(80)), out, stored)
+      val meta = metaFiles(out)
+      def check(step: String): Unit = {
+        assert(maxChunkRows(out) <= stored.chunkRows, s"$step wrote a chunk above the stored chunkRows")
+        assert(EncodeJob.readMeta(spark, out).contains(stored) && metaFiles(out) == meta,
+          s"$step changed _meta")
+      }
+      EncodeJob.append(spark, spark.createDataset(all.slice(80, 160)), out, cfg)
+      check("append")
+      val frag = EncodeJob.fragmentedPartIds(spark, out, cfg, slackChunks = 0)
+      val health = EncodeJob.describe(spark, out, cfg).head()
+      EncodeJob.upsert(spark, spark.createDataset(refreshed ++ all.slice(160, 200)), out, cfg)
+      check("upsert")
+      EncodeJob.delete(spark, out, doomed, cfg)
+      check("delete")
+      EncodeJob.compact(spark, out, cfg)
+      check("compact")
+      (frag, health)
+    }
+    val (out, ref) = (tmpDir("stored_layout"), tmpDir("stored_layout_ref"))
+    val got = sequence(out, EncodeConfig())
+    val want = sequence(ref, stored)
+    assert(got._1.nonEmpty && got == want)
+    assert(got._2.n_partitions == 4 && got._2.chunk_rows == 16)
+    def rows(o: String) = DecodeJob.run(spark, o).collect()
+      .map(p => (p.url, p.warc_ts, p.html.toSeq, p.text, p.lang)).toSet
+    val expected = (all.filterNot(p => refreshed.exists(_.url == p.url) || doomed.contains(p.url)) ++ refreshed)
+      .map(p => (p.url, p.warc_ts, p.html.toSeq, p.text, p.lang)).toSet
+    assert(rows(out) == expected && rows(ref) == expected)
+    // the two tables are the same bytes, chunk for chunk
+    assert(chunkHashMap(out) == chunkHashMap(ref))
   }
 
   test("a truncated swap marker is pre-commit junk, not a wedge") {
@@ -1400,7 +1438,7 @@ class SparkJobsSpec extends AnyFunSuite {
     val out = tmpDir("meta_format")
     val cfg = EncodeConfig(numPartitions = 3, chunkRows = 16)
     EncodeJob.run(spark, PagesGen.generate(spark, 90, partitions = 3), out, cfg)
-    val meta = EncodeJob.EncodeMeta(cfg.numPartitions, cfg.saltFactor, cfg.chunkRows)
+    val meta = cfg
     val lineage = spark.read.parquet(EncodeJob.lineagePath(out)).as[LineageRecord].collect()
       .sortBy(_.part_id).toSeq
     assert(lineage.map(_.part_id) == Seq(0, 1, 2))
@@ -1413,8 +1451,8 @@ class SparkJobsSpec extends AnyFunSuite {
 
     val (dm, sm) = (spark.read.parquet(EncodeJob.metaPath(out)), spark.read.parquet(sparkMeta))
     assert(dm.schema == sm.schema)
-    assert(dm.as[EncodeJob.EncodeMeta].collect().toSeq == Seq(meta))
-    assert(sm.as[EncodeJob.EncodeMeta].collect().toSeq == Seq(meta))
+    assert(dm.as[EncodeConfig].collect().toSeq == Seq(meta))
+    assert(sm.as[EncodeConfig].collect().toSeq == Seq(meta))
     val (dl, sl) = (spark.read.parquet(EncodeJob.lineagePath(out)), spark.read.parquet(sparkLineage))
     assert(dl.schema == sl.schema)
     assert(sl.as[LineageRecord].collect().sortBy(_.part_id).toSeq == lineage)
@@ -1446,10 +1484,10 @@ class SparkJobsSpec extends AnyFunSuite {
     }
     val metaJunk = junk(EncodeJob.metaPath(out))
     junk(EncodeJob.lineagePath(out))
-    val meta = EncodeJob.EncodeMeta(cfg.numPartitions, cfg.saltFactor, cfg.chunkRows)
+    val meta = cfg
     assert(EncodeJob.readMeta(spark, out).contains(meta))
     assert(EncodeJob.donePartIds(spark, out) == Set(0, 1))
-    assert(spark.read.parquet(EncodeJob.metaPath(out)).as[EncodeJob.EncodeMeta].collect().toSeq == Seq(meta))
+    assert(spark.read.parquet(EncodeJob.metaPath(out)).as[EncodeConfig].collect().toSeq == Seq(meta))
     assert(spark.read.parquet(EncodeJob.lineagePath(out)).count() == 2)
 
     // a _meta dir holding only a temp file is no table
@@ -1474,7 +1512,6 @@ class SparkJobsSpec extends AnyFunSuite {
     val fs = metaDir.getFileSystem(conf)
     val oldCfg = cfg
     val newCfg = cfg.copy(chunkRows = 64)
-    def metaOf(c: EncodeConfig) = EncodeJob.EncodeMeta(c.numPartitions, c.saltFactor, c.chunkRows)
     final class Crash extends RuntimeException("injected crash")
 
     var crashAt = 1
@@ -1499,11 +1536,11 @@ class SparkJobsSpec extends AnyFunSuite {
       } catch { case _: Crash => () }
       finally DriverParquet.stepHook = _ => ()
       val read = EncodeJob.readMeta(spark, out)
-      assert(read.contains(metaOf(oldCfg)) || read.contains(metaOf(newCfg)),
+      assert(read.contains(oldCfg) || read.contains(newCfg),
         s"crash after step $crashAt (${seen.lastOption}) left $read")
       crashAt += 1
     }
-    assert(EncodeJob.readMeta(spark, out).contains(metaOf(newCfg)))
+    assert(EncodeJob.readMeta(spark, out).contains(newCfg))
     assert(DriverParquet.dataFiles(conf, metaDir).size == 1)
     assert(seen.toSeq == Seq("swept", "written", "renamed", "deleted"), seen)
   }
