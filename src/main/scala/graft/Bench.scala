@@ -107,8 +107,8 @@ object Bench {
       (pairs.count(), 0L)
     },
     // NEW in round 6: the substring-dedup signal (q61) — the heaviest of
-    // the wave-2 curation ops (explode + 2 aggs + rejoin); bytes = corpus
-    // text, rows = docs carrying a duplicated span
+    // the wave-2 curation ops (window explode + 2 exchanges); bytes =
+    // corpus text, rows = docs carrying a duplicated span
     "dedup_spans" -> { s =>
       import s.implicits._
       val docs = s.read.parquet(s"$sfDir/documents.parquet")

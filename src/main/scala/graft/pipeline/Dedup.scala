@@ -58,17 +58,20 @@ object Dedup {
   @inline private[pipeline] def subBucketSalt(id: Long, band: Int, s: Long): Long =
     (mix(id + band + 1) & Long.MaxValue) % s
 
-  /** Candidate pairs (id_a < id_b) from a banded (band, bucket, id) table,
-    * with the oversized-bucket cap applied scale-safely:
-    *  1. count bucket sizes (map-side combinable agg — no lists),
+  /** Candidate pairs (id_a < id_b, each pair once) from a banded (band,
+    * bucket, id) table, with the oversized-bucket cap applied scale-safely:
+    *  1. one hash exchange on (band, bucket) annotates every member with
+    *     its bucket size `n` (a window count — no lists),
     *  2. buckets <= `maxBucket` pair directly; buckets over it are
-    *     salt-split into ceil(n/maxBucket) sub-buckets (bounded pair loss
-    *     across sub-buckets, reported as `splitBuckets`/`splitRows`, still
-    *     no quadratic blow-up),
+    *     salt-split into ceil(n/maxBucket) sub-buckets of size `m` (bounded
+    *     pair loss across sub-buckets, reported as `splitBuckets`/
+    *     `splitRows`, still no quadratic blow-up),
     *  3. sub-buckets still above 2x maxBucket (hash-skew pathology) are
     *     dropped and reported,
     *  4. only then collect the surviving (bounded) member lists and
     *     explode the in-bucket pairs.
+    * The result is hash-partitioned on `id_a`, so a caller's sort-merge
+    * join on `id_a` reuses the exchange of the final `distinct`.
     */
   private[pipeline] def cappedBucketPairs(
       banded0: DataFrame,
@@ -93,37 +96,24 @@ object Dedup {
     // would sever the attribute lineage and force the (band, bucket,
     // salt) window below to re-exchange; as a Project the planner sees
     // hash(band, bucket) already clusters every refined key (subset
-    // rule), so the second window and the groupBy need only a sort.
+    // rule), so the second window needs only a sort.
     // (Splitmix64 as raw Catalyst arithmetic is not an option: 64-bit
     // wrapping multiplies throw under ANSI mode.)
     val saltUdf = udf((id: Long, band: Int, n: Long) =>
       subBucketSalt(id, band, (n + mb - 1) / mb))
     val wSub = org.apache.spark.sql.expressions.Window.partitionBy($"band", $"bucket", $"salt")
-    // persisted once: the drop-report action and the pair explode both
-    // read these rows, and the window chain (two in-partition sorts over
-    // every banded row) must not run twice
-    val bandedN = autoPersist(banded0
+    // persisted once: the drop report and the pair explode both read
+    // these rows, and the window chain (two in-partition sorts over every
+    // banded row) must not run twice
+    val members = autoPersist(banded0
       .withColumn("n", count(lit(1)).over(wBucket))
       .filter($"n" >= 2)
       .withColumn("salt",
         when($"n" <= mb, lit(0L)).otherwise(saltUdf($"id", $"band", $"n")))
       .withColumn("m", count(lit(1)).over(wSub))
-      .as[(Int, Long, Long, Long, Long, Long)]
-    ).toDF("band", "bucket", "id", "n", "salt", "m")
-      .select($"band", $"bucket", $"salt", $"id", $"n", $"m")
+      .as[(Int, Long, Long, Long, Long, Long)])
 
-    // split + drop statistics in ONE action, computed from member rows
-    // (each member of an oversized bucket contributes exactly once, so
-    // row counts equal the old sum-of-sub-bucket-sizes forms)
-    val (splitBuckets, splitRows, droppedBuckets, droppedRows) =
-      bandedN.filter($"n" > mb).agg(
-        coalesce(countDistinct(struct($"band", $"bucket")), lit(0L)),
-        count(lit(1)),
-        coalesce(countDistinct(when($"m" > 2 * mb, struct($"band", $"bucket", $"salt"))), lit(0L)),
-        coalesce(sum(when($"m" > 2 * mb, lit(1L))), lit(0L))
-      ).as[(Long, Long, Long, Long)].head()
-
-    val report = DropReport(droppedBuckets, droppedRows, splitBuckets, splitRows)
+    val report = dropReport(members, mb)
     if (report.splitBuckets > 0)
       log.info(s"bucket cap $maxBucket salt-split ${report.splitBuckets} buckets " +
         s"(${report.splitRows} member rows) into <= ~$maxBucket-member sub-buckets; " +
@@ -135,17 +125,51 @@ object Dedup {
 
     // size gate BEFORE any member list is collected: only sub-buckets with
     // 2..2*maxBucket members (or whole in-cap buckets) reach collect_list.
-    // Every member row carries its own (n, m), so the former keep-join is
-    // now a plain row filter — no exchange at all between the gate and
-    // the (same-keyed) groupBy.
-    bandedN.filter($"m" >= 2 && ($"n" <= mb || $"m" <= 2 * mb))
+    // Every member row carries its own (n, m), so the gate is a plain row
+    // filter. A pair shared by several bands is exploded once per band;
+    // the distinct's exchange on id_a is the one the caller's join needs.
+    members.toDF("band", "bucket", "id", "n", "salt", "m")
+      .filter($"m" >= 2 && ($"n" <= mb || $"m" <= 2 * mb))
       .groupBy($"band", $"bucket", $"salt")
       .agg(sort_array(collect_list($"id")).as("ids"))
       .select(explode(expr(
         "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), b -> struct(a, b))))"
       )).as("p"))
       .select($"p.a".as("id_a"), $"p.b".as("id_b"))
+      .repartition($"id_a")
       .distinct()
+  }
+
+  /** The split and drop counts of [[cappedBucketPairs]]'s persisted
+    * (band, bucket, id, n, salt, m) member rows, in one pass with no
+    * exchange: the window's hash exchange put every (band, bucket) group
+    * in one partition, so each partition counts its own oversized buckets
+    * and sub-buckets, and the driver sums four longs per partition. The
+    * key sets hold only oversized buckets, at most rows/maxBucket of them.
+    */
+  private def dropReport(
+      members: Dataset[(Int, Long, Long, Long, Long, Long)],
+      mb: Long
+  ): DropReport = {
+    import members.sparkSession.implicits._
+    val perPartition = members.mapPartitions { it =>
+      val split = scala.collection.mutable.HashSet.empty[(Int, Long)]
+      val dropped = scala.collection.mutable.HashSet.empty[(Int, Long, Long)]
+      var splitRows, droppedRows = 0L
+      it.foreach { case (band, bucket, _, n, salt, m) =>
+        if (n > mb) {
+          split += ((band, bucket))
+          splitRows += 1
+          if (m > 2 * mb) {
+            dropped += ((band, bucket, salt))
+            droppedRows += 1
+          }
+        }
+      }
+      Iterator.single((dropped.size.toLong, droppedRows, split.size.toLong, splitRows))
+    }.collect()
+    DropReport(perPartition.map(_._1).sum, perPartition.map(_._2).sum,
+      perPartition.map(_._3).sum, perPartition.map(_._4).sum)
   }
 
   /** Scale-adaptive parallelism floor for the per-doc kernel stages
@@ -154,10 +178,33 @@ object Dedup {
     * splits and passes through untouched; a sub-parallelism input (a
     * single small parquet file — every core but one would idle through
     * the signature/banding compute) is spread once, round-robin.
+    * Deciding runs nothing: see [[plannedPartitions]].
     */
   private[graft] def spread[T](ds: Dataset[T]): Dataset[T] = {
     val p = ds.sparkSession.sparkContext.defaultParallelism
-    if (ds.rdd.getNumPartitions < p) ds.repartition(p) else ds
+    if (plannedPartitions(ds) < p) ds.repartition(p) else ds
+  }
+
+  /** The number of partitions `ds` is planned to have, found without
+    * running it. A plan whose output states its partitioning (an
+    * exchange, a coalesce) gives that count; under AQE it is the count
+    * before any coalescing. A plan with no exchange in it (a file scan, a
+    * local relation and the narrow maps over them) builds its RDD without
+    * a job, so the RDD is asked. Asking the RDD of a plan with an exchange
+    * would run that exchange, so such a plan that states no count (a
+    * union of shuffled inputs) counts as parallel.
+    */
+  private def plannedPartitions(ds: Dataset[_]): Int = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = ds.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val stated = plan.outputPartitioning.numPartitions
+    if (stated > 0) stated
+    else if (plan.exists(p => p.isInstanceOf[Exchange] || p.isInstanceOf[QueryStageExec])) Int.MaxValue
+    else ds.rdd.getNumPartitions
   }
 
   /** SplitMix64 (public domain). */
@@ -223,7 +270,9 @@ object Dedup {
   }
 
   /** Near-duplicate candidate pairs via banded LSH on MinHash signatures.
-    * Returns (key_a, key_b, est_jaccard) with key_a < key_b, deduped.
+    * Returns (key_a, key_b, est_jaccard) with key_a < key_b, each pair
+    * once. Keys must be unique: a key given twice pairs with itself and
+    * multiplies its pairs.
     */
   def minHashPairs(
       spark: SparkSession,
@@ -247,21 +296,23 @@ object Dedup {
       }
     }.toDF("band", "bucket", "id")
 
-    val cand = cappedBucketPairs(banded, maxBucket, onDrop)
-
-    // estimate jaccard by signature agreement
-    val withSig = cand
-      .join(sigs.withColumnRenamed("id", "id_a").withColumnRenamed("sig", "sig_a"), "id_a")
-      .join(sigs.withColumnRenamed("id", "id_b").withColumnRenamed("sig", "sig_b"), "id_b")
+    // estimate jaccard by signature agreement; the candidates are unique
+    // and keys are unique, so the joins add no duplicate pair
+    cappedBucketPairs(banded, maxBucket, onDrop)
+      .join(sigs.select($"id".as("id_a"), $"sig".as("sig_a")), "id_a")
+      .join(sigs.select($"id".as("id_b"), $"sig".as("sig_b")), "id_b")
+      // joins put the join key first — reselect so the positional encoder
+      // below binds (id_a, id_b) and not (id_b, id_a)
+      .select($"id_a", $"id_b", $"sig_a", $"sig_b")
       .as[(Long, Long, Array[Long], Array[Long])]
       .map { case (a, b, sa, sb) =>
         var eq = 0
         var i = 0
         while (i < NumHashes) { if (sa(i) == sb(i)) eq += 1; i += 1 }
-        (math.min(a, b), math.max(a, b), eq.toDouble / NumHashes)
+        (a, b, eq.toDouble / NumHashes)
       }
       .toDF("id_a", "id_b", "est_jaccard")
-    withSig.filter($"est_jaccard" >= threshold).distinct()
+      .filter($"est_jaccard" >= threshold)
   }
 
   /** 64-bit SimHash over whitespace tokens (weight = term frequency). */
@@ -483,23 +534,25 @@ object Dedup {
     * (dup_windows, dup_tokens): the number of duplicated window positions
     * and the number of token positions covered by at least one duplicated
     * window — the quantity a span-cutting dedup pass would remove.
-    * Every doc gets a row (zeros when nothing is duplicated or the doc is
-    * shorter than k tokens).
+    * Every input row gets exactly one output row (zeros when nothing is
+    * duplicated or the doc is shorter than k tokens); a key given twice
+    * gets two identical rows, each counting the windows of both copies.
     *
     * 100 TB shape: windows are exploded as 64-bit rolling content hashes
     * (O(tokens) per doc, no gram string ever built) — a narrow flatMap,
     * deliberately NOT cached: at corpus scale the window set dwarfs any
-    * cache tier, so both consumers recompute the cheap map instead;
-    * duplicated-window positions fall out of ONE exchange on the hash:
-    * `groupByKey(gh).flatMapGroups` streams each hash group (Spark's
-    * spillable sort-based grouping) and a group re-emits its rows exactly
-    * when a second row exists — no count-aggregate + rejoin (which would
-    * shuffle the window set twice and sort both join sides), no
+    * cache tier; duplicated-window positions fall out of ONE exchange on
+    * the hash: `groupByKey(gh).flatMapGroups` streams each hash group
+    * (Spark's spillable sort-based grouping) and a group re-emits its rows
+    * exactly when a second row exists — no count-aggregate + rejoin (which
+    * would shuffle the window set twice and sort both join sides), no
     * collect_list buffer (a boilerplate gram repeated 10^9 times streams
     * through; nothing materializes a group). The per-doc interval-union
-    * fold is the second and final exchange. Two shuffles total on
-    * bounded-width (hash, id, pos) rows — no document text moves past the
-    * first map.
+    * fold is the second and final exchange; one (id, -1) sentinel per
+    * input row joins it there, so no join back to the docs is needed. Two
+    * shuffles total on bounded-width rows (three when `spread` widens a
+    * narrow input) — no document text moves past the first map, and the
+    * sentinels read only the key column.
     */
   def dupSpanCoverage(
       spark: SparkSession,
@@ -511,39 +564,39 @@ object Dedup {
       val hs = windowHashes(t, k)
       Iterator.range(0, hs.length).map(i => (hs(i), id, i))
     }
-    val perDoc = windows.groupByKey(_._1)
+    val dupPositions = windows.groupByKey(_._1)
       .flatMapGroups { (_, it) =>
         val first = it.next()
         if (!it.hasNext) Iterator.empty
         else (Iterator.single(first) ++ it).map(w => (w._2, w._3))
       }
-      // per-doc interval-union fold: the duplicated-position lists are
-      // doc-length-bounded, so a Tungsten collect_list + sort_array stays
-      // codegen'd through the exchange (the former typed groupByKey +
-      // in-kernel sort deserialized every row to a tuple first); the fold
-      // itself is one typed map over the sorted array
       .toDF("id", "pos")
+    val sentinels = docs.toDF("id", "text").select($"id".cast("long"), lit(-1).as("pos"))
+    // per-doc interval-union fold: the duplicated-position lists are
+    // doc-length-bounded, so a Tungsten collect_list + sort_array stays
+    // codegen'd through the exchange (the former typed groupByKey +
+    // in-kernel sort deserialized every row to a tuple first); the fold
+    // itself is one typed flatMap over the sorted array, whose leading
+    // sentinels say how many rows the key has
+    dupPositions.union(sentinels)
       .groupBy($"id")
       .agg(sort_array(collect_list($"pos")).as("ps"))
       .as[(Long, Array[Int])]
-      .map { case (id, starts) =>
+      .flatMap { case (id, ps) =>
+        var j = 0
+        while (j < ps.length && ps(j) < 0) j += 1
+        val rows = j
         var dupTokens = 0L
         var covEnd = 0 // exclusive end of covered-so-far interval union
-        var j = 0
-        while (j < starts.length) {
-          val s = starts(j)
+        while (j < ps.length) {
+          val s = ps(j)
           val e = s + k
           dupTokens += math.max(0, e - math.max(s, covEnd))
           if (e > covEnd) covEnd = e
           j += 1
         }
-        (id, starts.length.toLong, dupTokens)
+        Iterator.fill(rows)((id, (ps.length - rows).toLong, dupTokens))
       }
       .toDF("doc_id", "dup_windows", "dup_tokens")
-    docs.map(_._1).toDF("doc_id")
-      .join(perDoc, Seq("doc_id"), "left")
-      .select($"doc_id",
-        coalesce($"dup_windows", lit(0L)).as("dup_windows"),
-        coalesce($"dup_tokens", lit(0L)).as("dup_tokens"))
   }
 }

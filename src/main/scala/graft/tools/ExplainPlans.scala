@@ -63,7 +63,7 @@ object ExplainPlans {
       .select($"doc_id", $"text").as[(Long, String)]
     val mhPlan = graft.pipeline.Dedup.minHashPairs(spark, docsKT, threshold = 0.3)
     section("MinHash LSH candidate pairs",
-      "Bucket sizes are counted (map-side combinable agg) BEFORE any member list is collected; only <= maxBucket buckets reach collect_list, so no aggregation buffer ever holds a degenerate bucket.")(mhPlan)
+      "One hash exchange on (band, bucket) counts bucket sizes with a window BEFORE any member list is collected; oversized buckets are salt-split, and only sub-buckets within 2x maxBucket reach collect_list, so no aggregation buffer ever holds a degenerate bucket. The drop report is one exchange-free pass over the persisted member rows (not in this plan). The candidates' distinct and the first signature join share one exchange on id_a, and no distinct follows the joins.")(mhPlan)
 
     val lineitem = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val fil = lineitem.filter($"l_quantity" > 45.0).select($"l_orderkey", $"l_quantity")
@@ -117,7 +117,7 @@ object ExplainPlans {
       graft.pipeline.Dedup.decontaminate(spark,
         docsW2.filter(_._1 % 7 != 0), docsW2.filter(_._1 % 7 == 0)))
     section("Duplicated-span coverage (q61 shape)",
-      "Document text never shuffles: windows leave the narrow flatMap as (rolling 64-bit hash, doc_id, pos) triples, computed O(tokens) per doc with no gram string built. TWO exchanges only: one spillable sort-based groupByKey on the hash whose flatMapGroups STREAMS each group (re-emitting it exactly when a second member exists — a billion-occurrence boilerplate gram never buffers), then the per-doc interval-union fold. No count-aggregate + rejoin pair, no second shuffle of the window set.")(
+      "Document text never shuffles: windows leave the narrow flatMap as (rolling 64-bit hash, doc_id, pos) triples, computed O(tokens) per doc with no gram string built. TWO exchanges only: one spillable sort-based groupByKey on the hash whose flatMapGroups STREAMS each group (re-emitting it exactly when a second member exists — a billion-occurrence boilerplate gram never buffers), then the per-doc interval-union fold, whose groupBy also takes one (doc_id, -1) sentinel per input row from a key-only scan, so every row gets its output row without a join back to the docs. No count-aggregate + rejoin pair, no second shuffle of the window set.")(
       graft.pipeline.Dedup.dupSpanCoverage(spark, docsW2))
     section("SimHash pairs, production capped regime (q40 shape)",
       "Oversized buckets are salt-split (band-dependent) instead of dropped; only sub-buckets within 2x the cap reach collect_list, so the recall recovery costs two small aggregations and never a quadratic buffer.")(capped)

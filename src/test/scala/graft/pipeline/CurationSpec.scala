@@ -196,4 +196,18 @@ class CurationSpec extends AnyFunSuite {
     assert(got(3L) == ((0L, 0L)))
     assert(got(4L) == ((0L, 0L)))
   }
+
+  test("dupSpanCoverage: an empty corpus gives no rows") {
+    assert(Dedup.dupSpanCoverage(spark, docsDs(Seq.empty), k = 4).count() == 0)
+  }
+
+  test("dupSpanCoverage: a key given twice gets two identical rows over both copies") {
+    // both copies' windows land on key 7: each copy's 3 windows occur
+    // twice, so key 7 has 6 duplicated window positions covering 6 tokens
+    val twice = "a b c d e f"
+    val docs = Seq(7L -> twice, 7L -> twice, 8L -> "g h i j k l")
+    val got = Dedup.dupSpanCoverage(spark, docsDs(docs), k = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
+    assert(got.toSeq == Seq((7L, 6L, 6L), (7L, 6L, 6L), (8L, 0L, 0L)))
+  }
 }

@@ -95,6 +95,72 @@ class PipelineSpec extends AnyFunSuite {
     assert(mhPairs.size >= (0.95 * total).toInt, s"recall ${mhPairs.size}/$total") // ~1-(1/2)^16
   }
 
+  test("bucket cap: sub-buckets over twice the cap are dropped and reported exactly") {
+    // 300 identical docs, cap 2: every band's one bucket (n = 300) is
+    // salt-split into 150 sub-buckets; those with 2..4 members pair, those
+    // with more are dropped. Brute force over subBucketSalt gives both.
+    val n = 300L
+    val docs = (0L until n).map(i => (i, "the same boilerplate page text"))
+    def expected(bands: Int): (Set[(Long, Long)], Dedup.DropReport) = {
+      val subs = for {
+        band <- 0 until bands
+        members <- (0L until n).groupBy(Dedup.subBucketSalt(_, band, (n + 1) / 2)).values
+      } yield members
+      val dropped = subs.filter(_.size > 4)
+      val pairs = (for {
+        m <- subs if m.size >= 2 && m.size <= 4
+        a <- m; b <- m if a < b
+      } yield (a, b)).toSet
+      (pairs, Dedup.DropReport(dropped.size.toLong, dropped.map(_.size.toLong).sum,
+        bands.toLong, bands * n))
+    }
+
+    var mhReport = Dedup.DropReport(0, 0)
+    val mh = Dedup.minHashPairs(spark, docsDs(docs), maxBucket = 2, onDrop = r => mhReport = r)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+    val (mhPairs, mhExpected) = expected(Dedup.Bands)
+    assert(mhExpected == Dedup.DropReport(144, 774, 16, 4800))
+    assert(mhReport == mhExpected)
+    assert(mh.length == mhPairs.size && mh.map(_._1).toSet == mhPairs)
+    assert(mh.forall(_._2 == 1.0))
+
+    var shReport = Dedup.DropReport(0, 0)
+    val sh = Dedup.simHashPairs(spark, docsDs(docs), maxHamming = 3, maxBucket = 2,
+      onDrop = r => shReport = r)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2)))
+    val (shPairs, shExpected) = expected(4)
+    assert(shExpected.droppedBuckets > 0)
+    assert(shReport == shExpected)
+    assert(sh.length == shPairs.size && sh.map(_._1).toSet == shPairs)
+    assert(sh.forall(_._2 == 0))
+  }
+
+  // Spark jobs of each dedup operator, collect included, on a 60-doc
+  // in-memory corpus of 4 partitions (so `spread` adds no exchange). Under
+  // AQE each exchange runs as a job of its own when its stage is built,
+  // and on a corpus this small AQE turns both id joins into broadcast
+  // joins that share one broadcast. minHashPairs and simHashPairs start 7:
+  //  1. the (band, bucket) window exchange, run when the member rows are
+  //     persisted;
+  //  2. the drop report's one pass over the persisted member rows;
+  //  3. the (band, bucket, salt) groupBy exchange of the pair explode;
+  //  4. the signature (hash) table's exchange on id;
+  //  5. the broadcast of that table, reused by both joins;
+  //  6. the candidates' id_a exchange under their distinct (on a large
+  //     corpus the first sort-merge join reuses it);
+  //  7. the collect.
+  // dupSpanCoverage starts 3: the window-hash exchange, the per-doc
+  // groupBy exchange (positions and sentinels together), the collect.
+  // Before these pins the counts were 9, 8 and 4: the drop report was an
+  // aggregate with an exchange of its own, minHashPairs ended in a second
+  // distinct, and dupSpanCoverage joined its result back to the docs.
+  test("dedup operators run a pinned number of Spark jobs") {
+    val docs = docsDs((0L until 60L).map(i => i -> synthDoc((i / 3).toInt, words = 60)))
+    assert(TestSpark.jobsOf(Dedup.minHashPairs(spark, docs).collect()) == 7)
+    assert(TestSpark.jobsOf(Dedup.simHashPairs(spark, docs).collect()) == 7)
+    assert(TestSpark.jobsOf(Dedup.dupSpanCoverage(spark, docs).collect()) == 3)
+  }
+
   test("minHashPairs finds the planted near-duplicates") {
     val base = synthDoc(1, words = 120)
     val baseWords = base.split(' ')

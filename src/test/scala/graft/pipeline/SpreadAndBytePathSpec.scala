@@ -8,7 +8,8 @@ import graft.spark.{DecodeJob, EncodeConfig, EncodeJob, Page}
 /** Pins the round-7 optimization internals:
   *  - [[Dedup.spread]] is a parallelism FLOOR: sub-parallelism inputs are
   *    spread to defaultParallelism, already-parallel inputs pass through
-  *    with their partitioning untouched (no shuffle added at scale);
+  *    with their partitioning untouched (no shuffle added at scale), and
+  *    deciding which runs no Spark job;
   *  - the byte-shaped encode/decode path (binary kernel rows + codegen'd
   *    cast/timestamp_micros on decode) round-trips multibyte text and
   *    sub-second timestamps exactly.
@@ -35,6 +36,21 @@ class SpreadAndBytePathSpec extends AnyFunSuite {
     val wide = spark.createDataset(1 to 100).repartition(p + 2)
     val spreadDs = Dedup.spread(wide)
     assert(spreadDs eq wide) // identity: not even a new plan node
+  }
+
+  test("spread decides on a grouped input without running it") {
+    import spark.implicits._
+    val p = spark.sparkContext.defaultParallelism
+    val grouped = spark.createDataset(1 to 100).groupByKey(_ % 7).count()
+    // planned at spark.sql.shuffle.partitions (4 here): already parallel
+    var kept: org.apache.spark.sql.Dataset[(Int, Long)] = null
+    assert(graft.spark.TestSpark.jobsOf { kept = Dedup.spread(grouped) } == 0)
+    assert(kept eq grouped)
+    // coalesced to one partition: spread, still without a job
+    val narrow = grouped.coalesce(1)
+    var spreadDs: org.apache.spark.sql.Dataset[(Int, Long)] = null
+    assert(graft.spark.TestSpark.jobsOf { spreadDs = Dedup.spread(narrow) } == 0)
+    assert(spreadDs.rdd.getNumPartitions == p)
   }
 
   test("byte-path encode/decode round-trips multibyte text, urls and micros exactly") {

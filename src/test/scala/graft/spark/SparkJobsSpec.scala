@@ -16,6 +16,41 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  private val JobsBefore = "graft-spec-jobs-before"
+  private val JobsAfter = "graft-spec-jobs-after"
+
+  /** The number of Spark jobs `body` starts. A listener sees job starts
+    * in the order the listener bus delivers them, so every job is counted
+    * that starts after a marker job run before `body` and before a marker
+    * job run after it (events of earlier tests still in the queue fall
+    * before the first marker).
+    */
+  def jobsOf(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(JobsBefore)
+      body
+      marker(JobsAfter)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!started.contains(JobsAfter) && System.nanoTime() < deadline) Thread.sleep(10)
+      val seen = started.asScala.toSeq
+      assert(seen.contains(JobsBefore) && seen.contains(JobsAfter), s"marker jobs not seen: $seen")
+      seen.dropWhile(_ != JobsBefore).drop(1).takeWhile(_ != JobsAfter).size
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /** Local-mode shared-JVM failure switch for the crash-resume test. */
@@ -24,7 +59,7 @@ object FailureInjection {
 }
 
 class SparkJobsSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{jobsOf, spark}
 
   private def tmpDir(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_$name").toFile
@@ -1346,41 +1381,6 @@ class SparkJobsSpec extends AnyFunSuite {
   }
 
   // ------------------------------------------------ Spark jobs and metadata
-
-  private val JobsBefore = "graft-spec-jobs-before"
-  private val JobsAfter = "graft-spec-jobs-after"
-
-  /** The number of Spark jobs `body` starts. A listener sees job starts
-    * in the order the listener bus delivers them, so every job is counted
-    * that starts after a marker job run before `body` and before a marker
-    * job run after it (events of earlier tests still in the queue fall
-    * before the first marker).
-    */
-  private def jobsOf(body: => Unit): Int = {
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker(JobsBefore)
-      body
-      marker(JobsAfter)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!started.contains(JobsAfter) && System.nanoTime() < deadline) Thread.sleep(10)
-      val seen = started.asScala.toSeq
-      assert(seen.contains(JobsBefore) && seen.contains(JobsAfter), s"marker jobs not seen: $seen")
-      seen.dropWhile(_ != JobsBefore).drop(1).takeWhile(_ != JobsAfter).size
-    } finally sc.removeSparkListener(listener)
-  }
 
   // The counts at the commit before metadata I/O moved to the driver, for
   // the same calls: encode 4 (the _meta write, the exchange, the chunk
