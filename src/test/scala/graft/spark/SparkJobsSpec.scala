@@ -2,6 +2,10 @@ package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import java.nio.charset.StandardCharsets.UTF_8
 
 object TestSpark {
@@ -52,6 +56,9 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 }
+
+/** Tree walks that descend into adaptive plans and their query stages. */
+object AqePlans extends AdaptiveSparkPlanHelper
 
 /** Local-mode shared-JVM failure switch for the crash-resume test. */
 object FailureInjection {
@@ -295,6 +302,22 @@ class SparkJobsSpec extends AnyFunSuite {
     EncodeJob.run(spark, spark.createDataset(pages.toIndexedSeq), out,
       EncodeConfig(numPartitions = 2, chunkRows = 4))
     assertChunkLayout(out, 4, 12)
+  }
+
+  test("drop-set probe: UTF-8 byte order, byte-prefix urls, empty set") {
+    // U+FFF0 sorts after U+1F600 in UTF-16 code units but before it in
+    // UTF-8 bytes: a set sorted as Strings would miss members here
+    val members = Seq("https://x.test/\uFFF0/1", "https://x.test/\uD83D\uDE00/1",
+      "https://x.test/a", "https://x.test/ab", "https://x.test/\uFFF0", "https://x.test/b")
+    val sorted = EncodeJob.sortedUtf8(members)
+    members.foreach(u => assert(EncodeJob.containsUtf8(sorted, u.getBytes(UTF_8)), u))
+    // byte-prefixes and extensions of members are not members
+    Seq("https://x.test/", "https://x.test/abc", "https://x.test/\uD83D\uDE00",
+      "https://x.test/\uD83D\uDE00/1/", "https://x.test/\uFFF0/", "https://x.test/\uD83D\uDE01/1")
+      .foreach(u => assert(!EncodeJob.containsUtf8(sorted, u.getBytes(UTF_8)), u))
+    assert(EncodeJob.sortedUtf8(Nil).isEmpty)
+    assert(!EncodeJob.containsUtf8(EncodeJob.sortedUtf8(Nil), "https://x.test/a".getBytes(UTF_8)))
+    assert(!EncodeJob.containsUtf8(EncodeJob.sortedUtf8(Nil), Array.emptyByteArray))
   }
 
   test("a null warc_ts fails the encode with an error naming the column") {
@@ -1133,25 +1156,36 @@ class SparkJobsSpec extends AnyFunSuite {
       text = "fresh " + p.text)
     val delta = all.take(12).map(bump)
 
-    // pin the rewrite-with-delta pipeline's plan from inside the commit
-    // window (the delta temp table only exists there): union of coalesced
-    // per-dir scans + in-partition sort + kernels — no Exchange anywhere
-    var rewritePlan = ""
-    EncodeJob.upsertPhaseHook = {
-      case "staged" if rewritePlan.isEmpty =>
-        val pids = spark.createDataset(delta.toIndexedSeq)
-          .withColumn("part_id", EncodeJob.partIdCol(cfg))
-          .select($"part_id").distinct().as[Int].collect().toSeq.sorted
-        rewritePlan = EncodeJob.compactedChunkStream(spark, out, cfg, pids,
-          dropUrls = delta.map(_.url).toSet,
-          deltaDir = Some(EncodeJob.chunksPath(out) + "_upsert_delta_tmp"))
-          .queryExecution.executedPlan.toString
-      case _ => ()
+    // pin the plan of the staged rewrite itself — the query that writes
+    // the staging dir, as it executed: union of coalesced per-dir
+    // branches (the replacement rows pre-encoded inside their home
+    // part's branch) + in-partition sort + kernels. No node of it, AQE
+    // stages included, may be a shuffle exchange. A plan-node test, not a
+    // substring one: the persisted delta prints its cached dedupe window,
+    // and a broadcast of the (url, home) pairs is allowed
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    def rewritePlans = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .filter(_.toString.contains(EncodeJob.compactTmpPath(out)))
+    spark.listenerManager.register(listener)
     try EncodeJob.upsert(spark, spark.createDataset(delta.toIndexedSeq), out, cfg)
-    finally EncodeJob.upsertPhaseHook = _ => ()
-    assert(rewritePlan.nonEmpty && !rewritePlan.contains("Exchange"),
-      s"upsert's rewrite plan must not shuffle:\n$rewritePlan")
+    finally {
+      // the listener bus delivers asynchronously: wait for the staged write
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (rewritePlans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(rewritePlans.nonEmpty, "the staged write's plan was not seen")
+    rewritePlans.foreach { plan =>
+      assert(AqePlans.collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty,
+        s"upsert's rewrite plan must not shuffle:\n$plan")
+      assert(AqePlans.collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty,
+        s"the replacement rows must come from the persisted delta inside the rewrite:\n$plan")
+    }
 
     // the staged re-slice must reproduce EXACTLY what a fresh bootstrap
     // of the final logical rows produces — per-chunk, per-column payload
@@ -1414,6 +1448,42 @@ class SparkJobsSpec extends AnyFunSuite {
     IndexJob.build(spark, pages.take(20).map(p => (p.url, p.text)).toDS(), idx)
     assert(jobsOf(IndexJob.search(spark, idx, Seq("the", "absent-pattern")).collect()) == 1,
       "search: the scan only, no schema inference")
+  }
+
+  // The jobs each maintenance call runs, by this spec's table and deltas.
+  // At the commit before upsert's single staged rewrite the same calls ran
+  // upsert 24, append 8 and delete 7; upsert then also encoded and wrote
+  // the replacement rows to a delta temp table (3), checked the rows left
+  // for an append (2) and ran the public append on them (7, with a second
+  // dedupe window and stored-url scan).
+  //  - upsert 16: the bound count, which also fills the persisted dedupe
+  //    window (4); the url collect (1); the presence scan (4); the staged
+  //    rewrite (1); the swap's lineage aggregate (2); the new urls'
+  //    chunk-id offsets (2); their encode exchange and chunk write (2).
+  //  - append 8: the chunk-id offsets (2); the write, whose dedupe window,
+  //    stored-url anti-join and encode exchanges run as adaptive stages (6).
+  //  - delete 7: the presence scan (4); the staged write (1); the swap's
+  //    lineage aggregate (2).
+  test("upsert, append and delete run a pinned number of Spark jobs") {
+    import spark.implicits._
+    val out = tmpDir("jobs_maint")
+    val cfg = EncodeConfig(numPartitions = 4, chunkRows = 16)
+    val all = PagesGen.generate(spark, 160, partitions = 4, hostSkew = true).collect()
+    EncodeJob.run(spark, spark.createDataset(all.take(120).toIndexedSeq), out, cfg)
+    val replaced = all.take(6).map(p => p.copy(
+      warc_ts = java.sql.Timestamp.from(p.warc_ts.toInstant.plusSeconds(60)),
+      text = "v2 " + p.text))
+    val upsertJobs = jobsOf(EncodeJob.upsert(spark,
+      spark.createDataset((replaced ++ all.slice(120, 126)).toIndexedSeq), out, cfg))
+    val appendJobs = jobsOf(EncodeJob.append(spark,
+      spark.createDataset(all.slice(130, 140).toIndexedSeq), out, cfg))
+    val deleteJobs = jobsOf(EncodeJob.delete(spark, out, all.slice(10, 15).map(_.url).toSeq, cfg))
+    assert(upsertJobs == 16, "upsert of 6 replaced + 6 new urls")
+    assert(appendJobs == 8, "append of 10 new urls")
+    assert(deleteJobs == 7, "delete of 5 urls")
+    val decoded = DecodeJob.run(spark, out).collect().map(p => p.url -> p.text).toMap
+    assert(decoded.size == 120 + 6 + 10 - 5)
+    replaced.foreach(p => assert(decoded(p.url) == p.text))
   }
 
   /** The footer of the one data file under `dir`: (parquet schema, the
