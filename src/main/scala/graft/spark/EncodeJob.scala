@@ -690,12 +690,10 @@ object EncodeJob {
     if (fs.exists(tmp)) fs.delete(tmp, true)
     writeChunks(rewritten.toDF(), compactTmpPath(outDir), SaveMode.Overwrite)
     phase("staged")
-    val actions = parts.map { pid =>
-      (pid, !fs.exists(new org.apache.hadoop.fs.Path(tmp, s"part_id=$pid")))
-    }
-    actions.foreach { case (pid, drop) =>
+    val actions = parts.map(pid =>
+      (pid, !fs.exists(new org.apache.hadoop.fs.Path(tmp, s"part_id=$pid"))))
+    for ((pid, drop) <- actions)
       require(mayDrop || !drop, s"staged output missing for part $pid — refusing to swap")
-    }
     writeSwapMarker(fs, outDir, actions)
     phase("marked")
     val records = finishSwap(spark, outDir, actions)
@@ -819,16 +817,10 @@ object EncodeJob {
     // EQUI key and the range test a residual: Catalyst plans a (broadcast)
     // hash join where each chunk row scans only ITS partition's urls —
     // O(urls/P) per chunk, vs O(all urls) under a nested-loop join. The
-    // previous folded form (`d_part.isNull || part_id === d_part`) got the
-    // SAME hash join, but only because d_part's non-nullable Int schema
-    // let Catalyst constant-fold the isNull — a schema-incidental
-    // property (any target construction that makes d_part nullable would
-    // silently degrade the join to nested-loop). The explicit split makes
-    // the equi-key contract visible, spec-pinned, and independent of
-    // nullability inference; the range-only form survives solely for
-    // pre-meta legacy tables (the two shapes measured at plan parity on
-    // meta tables, as expected for identical physical plans — BENCH/
-    // BASELINE.md §Presence-check equi-join A/B).
+    // split is explicit so the equi key does not hang on d_part's
+    // nullability (a folded `d_part.isNull || part_id === d_part` form
+    // turns nested-loop once d_part is nullable); the range-only form is
+    // for pre-meta tables (BENCH/BASELINE.md §Presence-check equi-join A/B).
     val range = $"d_url" >= $"url_min" && $"d_url" <= $"url_max"
     val covering =
       if (homePids.isDefined)
@@ -972,10 +964,18 @@ object EncodeJob {
       if (pairs.isEmpty) Seq.empty
       else {
         val affected = pairs.map(_._1).distinct.sorted
-        stageAndSwap(spark, outDir, affected,
-          compactedChunkStream(spark, outDir, effCfg, affected, dropUrls = urls.toSet,
-            replacements = Some(deduped.withColumn("part_id", homeOf($"url")))),
-          mayDrop = true, upsertPhaseHook)
+        // pre-encode (the costly text transform) ONCE, by a job as wide as
+        // the persisted delta: the rewrite may run in one task, and every
+        // branch scans all these rows for its part's slice
+        val pre = preEncoded(deduped.withColumn("part_id", homeOf($"url")).filter($"part_id" >= 0))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          pre.foreachPartition((_: Iterator[KernelRow]) => ()) // fills the cache
+          stageAndSwap(spark, outDir, affected,
+            compactedChunkStream(spark, outDir, effCfg, affected, dropUrls = urls.toSet,
+              replacements = Some(pre)),
+            mayDrop = true, upsertPhaseHook)
+        } finally { pre.unpersist(); () }
       }
 
     // urls stored at no home partition (pre-meta table: nowhere) are new:
@@ -983,7 +983,7 @@ object EncodeJob {
     // stored-url scan would drop none of these rows, so they are skipped
     val restRecords =
       if (urls.forall(storedHome.contains)) Seq.empty
-      else appendNew(spark, outDir, effCfg,
+      else appendNew(spark, outDir, effCfg, hasChunks = true,
         deduped.filter(homeOf($"url") === -1).withColumn("part_id", partIdCol(effCfg)))
     spark.createDataset(swapRecords ++ restRecords)
   }
@@ -1018,7 +1018,7 @@ object EncodeJob {
     * on its plan): one coalesced single-task branch per partition
     * directory — a plain scan would split/merge tasks across parts, a
     * repartition would shuffle — holding the part's stored rows minus
-    * `dropUrls` and the `replacements` rows (pages with a `part_id`)
+    * `dropUrls` and the `replacements` rows (pre-encoded by [[preEncoded]])
     * homed there, then the spillable in-partition sort + streaming kernel.
     */
   private[graft] def compactedChunkStream(
@@ -1027,11 +1027,10 @@ object EncodeJob {
       cfg: EncodeConfig,
       selected: Seq[Int],
       dropUrls: Set[String] = Set.empty,
-      replacements: Option[DataFrame] = None
+      replacements: Option[Dataset[KernelRow]] = None
   ): Dataset[EncodedChunk] = {
     import spark.implicits._
     require(selected.nonEmpty, "compactedChunkStream needs at least one partition")
-    val leafSchema = TableScan.chunkLeafSchema
     // balanced union tree: a left-deep reduce would recurse O(selected)
     // deep through analysis (stack risk at corpus-scale partition counts);
     // the per-branch driver listing cost stays O(selected) — which is why
@@ -1051,7 +1050,7 @@ object EncodeJob {
     // about; a broadcast variable ships once per executor and is reused.
     // Sorted UTF-8 bytes, so the per-row probe builds no String
     val bcDrop = spark.sparkContext.broadcast(sortedUtf8(dropUrls))
-    def payloads(pid: Int): DataFrame = spark.read.schema(leafSchema)
+    def payloads(pid: Int): DataFrame = spark.read.schema(TableScan.chunkLeafSchema)
       .parquet(s"${chunksPath(outDir)}/part_id=$pid")
       .select(lit(pid) +: Seq("url", "warc_ts", "html", "text", "lang")
         .map(c => col(s"$c.payload").as(c)): _*)
@@ -1062,11 +1061,12 @@ object EncodeJob {
         }
     // replacements meet their part's stored rows after the drop filter, so
     // each branch extracts alone; else ONE typed extract after the union
-    // (per-branch typed stages measured ~0.3 s slower on an 8-part compact)
+    // (per-branch extracts: 1.40 s against 1.20 median per 8-part compact,
+    // BENCH/BASELINE.md "Compact: one typed extract after the union")
     val rows = replacements match {
       case None => storedRows(balancedUnion(selected.map(pid => payloads(pid).coalesce(1))))
-      case Some(d) => balancedUnion(selected.map { pid =>
-        storedRows(payloads(pid)).union(preEncoded(d.filter(col("part_id") === pid))).coalesce(1)
+      case Some(r) => balancedUnion(selected.map { pid =>
+        storedRows(payloads(pid)).union(r.filter($"_6" === pid)).coalesce(1)
       })
     }
     rows.toDF()
@@ -1572,17 +1572,19 @@ object EncodeJob {
       withPart.join(existingUrls, Seq("url"), "left_anti")
     }
 
-    spark.createDataset(appendNew(spark, outDir, effCfg, newRows))
+    spark.createDataset(appendNew(spark, outDir, effCfg, hasChunks, newRows))
   }
 
   /** The write step of [[append]] and of [[upsert]]'s new urls: `rows`
     * (deduplicated pages with their home `part_id`, none stored there)
     * become new chunks with ids past each part's stored ones, plus lineage.
+    * `hasChunks`: the table has committed chunks (the caller has listed).
     */
   private def appendNew(
       spark: SparkSession,
       outDir: String,
       cfg: EncodeConfig,
+      hasChunks: Boolean,
       rows: DataFrame
   ): Seq[LineageRecord] = {
     import spark.implicits._
@@ -1592,7 +1594,7 @@ object EncodeJob {
     // crash in that window the lineage undercounts and a lineage-derived
     // offset would reuse an orphaned chunk's (part_id, chunk_id) key
     val offsets: Map[Int, Int] =
-      if (!hasCommittedChunks(spark, outDir)) Map.empty
+      if (!hasChunks) Map.empty
       else TableScan.chunks(spark, outDir)
         .groupBy($"part_id").agg(max($"chunk_id").as("m"))
         .as[(Int, Int)].collect().map { case (pid, m) => pid -> (m + 1) }.toMap

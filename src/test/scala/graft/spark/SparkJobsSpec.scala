@@ -1158,8 +1158,8 @@ class SparkJobsSpec extends AnyFunSuite {
 
     // pin the plan of the staged rewrite itself — the query that writes
     // the staging dir, as it executed: union of coalesced per-dir
-    // branches (the replacement rows pre-encoded inside their home
-    // part's branch) + in-partition sort + kernels. No node of it, AQE
+    // branches (each with its part's slice of the persisted pre-encoded
+    // replacement rows) + in-partition sort + kernels. No node of it, AQE
     // stages included, may be a shuffle exchange. A plan-node test, not a
     // substring one: the persisted delta prints its cached dedupe window,
     // and a broadcast of the (url, home) pairs is allowed
@@ -1184,7 +1184,7 @@ class SparkJobsSpec extends AnyFunSuite {
       assert(AqePlans.collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty,
         s"upsert's rewrite plan must not shuffle:\n$plan")
       assert(AqePlans.collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty,
-        s"the replacement rows must come from the persisted delta inside the rewrite:\n$plan")
+        s"the replacement rows must come from the persisted pre-encoded rows:\n$plan")
     }
 
     // the staged re-slice must reproduce EXACTLY what a fresh bootstrap
@@ -1456,10 +1456,13 @@ class SparkJobsSpec extends AnyFunSuite {
   // the replacement rows to a delta temp table (3), checked the rows left
   // for an append (2) and ran the public append on them (7, with a second
   // dedupe window and stored-url scan).
-  //  - upsert 16: the bound count, which also fills the persisted dedupe
-  //    window (4); the url collect (1); the presence scan (4); the staged
-  //    rewrite (1); the swap's lineage aggregate (2); the new urls'
-  //    chunk-id offsets (2); their encode exchange and chunk write (2).
+  //  - upsert 18: the bound count, which also fills the persisted dedupe
+  //    window (4); the url collect (1); the presence scan (4); the
+  //    replacement rows' pre-encode into a cache, whose adaptive cache
+  //    stage runs apart from the no-op pass that asks for it (2); the
+  //    staged rewrite (1); the swap's lineage aggregate (2); the new
+  //    urls' chunk-id offsets (2); their encode exchange and chunk write
+  //    (2).
   //  - append 8: the chunk-id offsets (2); the write, whose dedupe window,
   //    stored-url anti-join and encode exchanges run as adaptive stages (6).
   //  - delete 7: the presence scan (4); the staged write (1); the swap's
@@ -1478,7 +1481,7 @@ class SparkJobsSpec extends AnyFunSuite {
     val appendJobs = jobsOf(EncodeJob.append(spark,
       spark.createDataset(all.slice(130, 140).toIndexedSeq), out, cfg))
     val deleteJobs = jobsOf(EncodeJob.delete(spark, out, all.slice(10, 15).map(_.url).toSeq, cfg))
-    assert(upsertJobs == 16, "upsert of 6 replaced + 6 new urls")
+    assert(upsertJobs == 18, "upsert of 6 replaced + 6 new urls")
     assert(appendJobs == 8, "append of 10 new urls")
     assert(deleteJobs == 7, "delete of 5 urls")
     val decoded = DecodeJob.run(spark, out).collect().map(p => p.url -> p.text).toMap
