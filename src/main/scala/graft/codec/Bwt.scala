@@ -36,10 +36,14 @@ final case class Bwt(data: Array[Byte], sentinelPos: Int) {
   */
 object BwtCodec {
 
-  def encode(t: Array[Byte]): Bwt = {
+  def encode(t: Array[Byte]): Bwt = fromSuffixArray(t, SuffixArrays.build(t))
+
+  /** The BWT of `t` read off its suffix array `sa` (n+1 entries, the
+    * sentinel suffix included, as [[SuffixArrays.build]] returns it).
+    * Shared by [[encode]] and [[FmIndex.build]], which keeps the SA.
+    */
+  def fromSuffixArray(t: Array[Byte], sa: Array[Int]): Bwt = {
     val n = t.length
-    if (n == 0) return Bwt(Array.emptyByteArray, -1)
-    val sa = SuffixArrays.build(t)
     val out = new Array[Byte](n)
     var sentinel = -1
     var w = 0
@@ -50,7 +54,7 @@ object BwtCodec {
       else { out(w) = t(p - 1); w += 1 }
       i += 1
     }
-    Bwt(out, sentinel)
+    Bwt(out, if (n == 0) -1 else sentinel)
   }
 
   def decode(b: Bwt): Array[Byte] = {

@@ -201,23 +201,11 @@ object FmIndex {
   def build(text: Array[Byte], blockBits: Int = 8): FmIndex = {
     val n = text.length
     val sa = SuffixArrays.build(text)
-
-    // BWT from SA
-    val data = new Array[Byte](n)
-    var sentinel = -1
-    var w = 0
-    var i = 0
-    while (i <= n) {
-      val p = sa(i)
-      if (p == 0) sentinel = i
-      else { data(w) = text(p - 1); w += 1 }
-      i += 1
-    }
-    val bwt = Bwt(data, if (n == 0) -1 else sentinel)
+    val bwt = BwtCodec.fromSuffixArray(text, sa)
 
     // alphabet + counts
     val byteCnt = new Array[Int](256)
-    i = 0
+    var i = 0
     while (i < n) { byteCnt(text(i) & 0xFF) += 1; i += 1 }
     var sigmaReal = 0
     i = 0

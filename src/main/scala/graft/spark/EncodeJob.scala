@@ -600,12 +600,14 @@ object EncodeJob {
     * partitions are REPLACED so metrics reflect the new layout.
     *
     * Plan shape — NO exchange, and NO re-compression:
-    *  - each selected partition directory is scanned as its own coalesced
-    *    single-task branch of a union (every page already sits in its home
+    *  - ONE chunks scan, partition-pruned to the selected `part_id` dirs
+    *    and coalesced into ONE task, which rewrites the selected
+    *    partitions one after another (every page already sits in its home
     *    partition — part_id is a pure row function — so there is nothing
     *    to shuffle; the old implementation re-ran the full encode pipeline
-    *    and paid an exchange of every decoded payload);
-    *  - within a task, the stored per-value compressed bodies of text/html
+    *    and paid an exchange of every decoded payload). A parallel rewrite
+    *    would need an exchange or one job per partition;
+    *  - within that task, the stored per-value compressed bodies of text/html
     *    are EXTRACTED from their containers and re-containerized as-is
     *    ([[ColumnCodec.extractBwtBodies]]): both the per-value encoder and
     *    the container are deterministic, so the result is byte-identical
@@ -964,9 +966,8 @@ object EncodeJob {
       if (pairs.isEmpty) Seq.empty
       else {
         val affected = pairs.map(_._1).distinct.sorted
-        // pre-encode (the costly text transform) ONCE, by a job as wide as
-        // the persisted delta: the rewrite may run in one task, and every
-        // branch scans all these rows for its part's slice
+        // pre-encode (the costly text transform) by a job as wide as the
+        // persisted delta, not in the rewrite's one task
         val pre = preEncoded(deduped.withColumn("part_id", homeOf($"url")).filter($"part_id" >= 0))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -1015,11 +1016,11 @@ object EncodeJob {
   }
 
   /** The exchange-free rewrite pipeline (separated so tests can assert
-    * on its plan): one coalesced single-task branch per partition
-    * directory — a plain scan would split/merge tasks across parts, a
-    * repartition would shuffle — holding the part's stored rows minus
-    * `dropUrls` and the `replacements` rows (pre-encoded by [[preEncoded]])
-    * homed there, then the spillable in-partition sort + streaming kernel.
+    * on its plan): ONE chunks scan, partition-pruned to `selected`, whose
+    * stored rows minus `dropUrls` are extracted in one typed pass and
+    * unioned with the `replacements` rows (pre-encoded by [[preEncoded]],
+    * already homed by `_6`), then coalesced into ONE task — a repartition
+    * would shuffle — for the spillable in-partition sort + streaming kernel.
     */
   private[graft] def compactedChunkStream(
       spark: SparkSession,
@@ -1031,18 +1032,6 @@ object EncodeJob {
   ): Dataset[EncodedChunk] = {
     import spark.implicits._
     require(selected.nonEmpty, "compactedChunkStream needs at least one partition")
-    // balanced union tree: a left-deep reduce would recurse O(selected)
-    // deep through analysis (stack risk at corpus-scale partition counts);
-    // the per-branch driver listing cost stays O(selected) — which is why
-    // fragmentedPartIds-driven selection, not full-table compaction, is
-    // the intended steady-state maintenance call
-    def balancedUnion[T](dss: Seq[Dataset[T]]): Dataset[T] =
-      if (dss.length == 1) dss.head
-      else balancedUnion(dss.grouped(2).map {
-        case Seq(a, b) => a.union(b)
-        case Seq(a) => a
-      }.toSeq)
-
     // ship the url set as an explicit torrent broadcast, not a closure
     // capture: a delete-batch-sized set (<= MaxDeleteUrls = 100k urls)
     // closure-captured here inflates the TASK BINARY to tens of MB, which
@@ -1050,26 +1039,17 @@ object EncodeJob {
     // about; a broadcast variable ships once per executor and is reused.
     // Sorted UTF-8 bytes, so the per-row probe builds no String
     val bcDrop = spark.sparkContext.broadcast(sortedUtf8(dropUrls))
-    def payloads(pid: Int): DataFrame = spark.read.schema(TableScan.chunkLeafSchema)
-      .parquet(s"${chunksPath(outDir)}/part_id=$pid")
-      .select(lit(pid) +: Seq("url", "warc_ts", "html", "text", "lang")
+    val stored = TableScan.chunks(spark, outDir)
+      .filter($"part_id".isin(selected: _*))
+      .select($"part_id" +: Seq("url", "warc_ts", "html", "text", "lang")
         .map(c => col(s"$c.payload").as(c)): _*)
-    def storedRows(chunks: DataFrame): Dataset[KernelRow] =
-      chunks.as[(Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-        .mapPartitions { it =>
-          it.flatMap(c => compactPreRows(c).filterNot(r => containsUtf8(bcDrop.value, r._1)))
-        }
-    // replacements meet their part's stored rows after the drop filter, so
-    // each branch extracts alone; else ONE typed extract after the union
-    // (per-branch extracts: 1.40 s against 1.20 median per 8-part compact,
-    // BENCH/BASELINE.md "Compact: one typed extract after the union")
-    val rows = replacements match {
-      case None => storedRows(balancedUnion(selected.map(pid => payloads(pid).coalesce(1))))
-      case Some(r) => balancedUnion(selected.map { pid =>
-        storedRows(payloads(pid)).union(r.filter($"_6" === pid)).coalesce(1)
-      })
-    }
-    rows.toDF()
+      .as[(Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
+      .mapPartitions { it =>
+        it.flatMap(c => compactPreRows(c).filterNot(r => containsUtf8(bcDrop.value, r._1)))
+      }
+    replacements.fold(stored)(stored.union)
+      .coalesce(1)
+      .toDF()
       // narrow: no exchange, spillable. BinaryType sorts in unsigned byte
       // order = the UTF8String order the old String column sorted in
       .sortWithinPartitions($"_6", $"_1")

@@ -28,10 +28,6 @@ private[graft] object TableScan {
   /** The chunks table of the encoded table at `outDir`. */
   def chunks(spark: SparkSession, outDir: String): DataFrame =
     apply[EncodedChunk](spark, EncodeJob.chunksPath(outDir))
-
-  /** The chunk columns stored inside one `part_id=N` directory. */
-  val chunkLeafSchema: StructType =
-    StructType(Encoders.product[EncodedChunk].schema.filterNot(_.name == "part_id"))
 }
 
 /** Driver-side I/O for the small metadata tables next to the chunks

@@ -13,7 +13,7 @@ import graft.spark.{DecodeJob, EncodeConfig, EncodeJob, Page, PagesGen, VerifyJo
   * compact -> full bit-identical verify. The per-verb specs and the
   * sf0.01/sf0.1 oracles prove correctness; this run proves the verbs
   * COMPOSE at a scale where chunk-id fan-in, lineage folding, the
-  * presence-scan joins and the 512-branch compaction union have nowhere
+  * presence-scan joins and the 512-partition compaction rewrite have nowhere
   * to hide.
   *
   *   SPARK_DRIVER_MEM=24g sbt -batch "runMain graft.tools.LifecycleSoak 640000"

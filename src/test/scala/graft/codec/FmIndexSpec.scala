@@ -158,6 +158,18 @@ class FmIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("serialized index bytes are pinned on a PagesGen text") {
+    // four pages' html (11,671 bytes); the digest pins build's BWT, C table,
+    // Occ checkpoints and SA samples together
+    val t = (0L until 4L)
+      .map(id => graft.spark.PagesGen.page(42L, id, 100, hostSkew = false).html).reduce(_ ++ _)
+    val fm = FmIndex.build(t)
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(fm.serialize(5)).map("%02x".format(_)).mkString
+    assert(digest == "a13d626c473ce554e63e349b69fd06682d65cd0f731412d2c6f3f3558e1475aa")
+    assert(fm.bwt == BwtCodec.encode(t))
+  }
+
   test("FM inverse recovers the text (seqFromFMIndex + BWT decode path)") {
     val rnd = new scala.util.Random(31)
     (1 to 10).foreach { _ =>

@@ -2,7 +2,7 @@ package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -563,11 +563,15 @@ class SparkJobsSpec extends AnyFunSuite {
       EncodeJob.append(spark, spark.createDataset(r.map(all).toIndexedSeq), out, cfg)
     }
 
-    // the pipeline plan is pure narrow: union of coalesced per-dir scans,
-    // in-partition sort, kernels — no Exchange node anywhere
-    val plan = EncodeJob.compactedChunkStream(spark, out, cfg, Seq(0, 1))
-      .queryExecution.executedPlan.toString
+    // the pipeline plan is pure narrow: one partition-pruned chunks scan
+    // coalesced into one task, in-partition sort, kernels — no Exchange
+    // node anywhere, and one scan however many partitions are selected
+    val executed = EncodeJob.compactedChunkStream(spark, out, cfg, Seq(0, 1))
+      .queryExecution.executedPlan
+    val plan = executed.toString
     assert(!plan.contains("Exchange"), s"compaction plan must not shuffle:\n$plan")
+    assert(AqePlans.collect(executed) { case s: FileSourceScanExec => s }.size == 1,
+      s"the selected partitions must be read by one chunks scan:\n$plan")
 
     EncodeJob.compact(spark, out, cfg)
     // body reuse (no BWT re-run) must reproduce EXACTLY what a fresh
@@ -1155,14 +1159,18 @@ class SparkJobsSpec extends AnyFunSuite {
       warc_ts = java.sql.Timestamp.from(p.warc_ts.toInstant.plusSeconds(1800)),
       text = "fresh " + p.text)
     val delta = all.take(12).map(bump)
+    // the delta refreshes both partitions, so a per-partition plan would
+    // read the replacement rows more than once
+    assert(spark.createDataset(delta.toIndexedSeq).select(EncodeJob.partIdCol(cfg))
+      .distinct().count() == 2, "the delta must touch both partitions")
 
     // pin the plan of the staged rewrite itself — the query that writes
-    // the staging dir, as it executed: union of coalesced per-dir
-    // branches (each with its part's slice of the persisted pre-encoded
-    // replacement rows) + in-partition sort + kernels. No node of it, AQE
-    // stages included, may be a shuffle exchange. A plan-node test, not a
-    // substring one: the persisted delta prints its cached dedupe window,
-    // and a broadcast of the (url, home) pairs is allowed
+    // the staging dir, as it executed: one partition-pruned chunks scan
+    // unioned with ONE scan of the persisted pre-encoded replacement rows,
+    // coalesced into one task + in-partition sort + kernels. No node of
+    // it, AQE stages included, may be a shuffle exchange. A plan-node
+    // test, not a substring one: the persisted delta prints its cached
+    // dedupe window, and a broadcast of the (url, home) pairs is allowed
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -1185,6 +1193,8 @@ class SparkJobsSpec extends AnyFunSuite {
         s"upsert's rewrite plan must not shuffle:\n$plan")
       assert(AqePlans.collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty,
         s"the replacement rows must come from the persisted pre-encoded rows:\n$plan")
+      assert(AqePlans.collect(plan) { case s: InMemoryTableScanExec => s }.size == 1,
+        s"the replacement rows must be scanned once, not once per partition:\n$plan")
     }
 
     // the staged re-slice must reproduce EXACTLY what a fresh bootstrap
