@@ -229,7 +229,10 @@ object FmIndex {
       i += 1
     }
 
-    // Occ checkpoints every 2^blockBits BWT positions
+    // Occ checkpoints every 2^blockBits BWT positions. An empty text
+    // (n == 0) keeps the reference's empty BWT (no symbols, sentinelPos
+    // -1), so no position is counted: its index has an empty alphabet and
+    // count/locate are None for every pattern
     val totalLen = n + 1
     val numBlocks = (totalLen >> blockBits) + 1
     val ckpt = new Array[Int](numBlocks * math.max(sigmaReal, 1))
@@ -241,7 +244,7 @@ object FmIndex {
       if ((i & ((1 << blockBits) - 1)) == 0) {
         System.arraycopy(running, 0, ckpt, (i >> blockBits) * sigmaReal, sigmaReal)
       }
-      if (i < totalLen && i != bwt.sentinelPos) {
+      if (i < bwt.conceptualLength && i != bwt.sentinelPos) {
         running(byteToDense(bwt.symbolAt(i))) += 1
       }
       i += 1

@@ -186,7 +186,7 @@ object SuffixArrays {
     * suffixes is ordered strictly within s1 and appending the extra
     * sentinel changes nothing — SA(s1) = saisBytes(s1 as bytes) minus its
     * leading sentinel entry. (Cross-checked against the generic path by
-    * naive-sort tests and graft.tools.DeepSweep; the A/B that measured
+    * the naive-sort and generic-path cases of BwtSpec; the A/B that measured
     * it is in the same BENCH/BASELINE.md section.)
     */
   private def recurseOnNames(

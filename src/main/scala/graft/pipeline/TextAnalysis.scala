@@ -76,11 +76,16 @@ object TextAnalysis {
   /** Karp-Rabin style rolling polynomial fingerprint of the UTF-8 bytes,
     * mod 2^61-1 — a deterministic whole-document content id.
     */
-  def fingerprint(text: String): Long = {
+  def fingerprint(text: String): Long =
+    fingerprintBytes(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** The one fingerprint kernel, over raw UTF-8 bytes: [[fingerprint]] and
+    * the `graft_fingerprint` SQL function both call it.
+    */
+  def fingerprintBytes(bytes: Array[Byte]): Long = {
     val M = (1L << 61) - 1
     val B = 1000003L
     var h = 0L
-    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     var i = 0
     while (i < bytes.length) {
       // h = (h * B + byte) mod M, with 128-bit intermediate via Math.multiplyHigh

@@ -160,12 +160,13 @@ object EncodeJob {
       .flatMap(f => DriverParquet.read(hadoopConf(spark), f.getPath, metaSchema).headOption)
       .map(r => EncodeConfig(r.getInt(0), r.getInt(1), r.getInt(2)))
 
-  /** Every row of the `_lineage` table, read on the driver: files written
-    * by Spark and by [[DriverParquet]] alike.
+  /** Every row of the lineage table at `dir` (a table's `_lineage`, or the
+    * staged records of a swap), read on the driver: files written by Spark
+    * and by [[DriverParquet]] alike.
     */
-  private def readLineage(spark: SparkSession, outDir: String): Seq[LineageRecord] =
+  private def readLineage(spark: SparkSession, dir: String): Seq[LineageRecord] =
     DriverParquet.readAll(hadoopConf(spark),
-      new org.apache.hadoop.fs.Path(lineagePath(outDir)), lineageSchema).map { r =>
+      new org.apache.hadoop.fs.Path(dir), lineageSchema).map { r =>
       LineageRecord(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getString(5), r.getLong(6), r.getString(7))
     }
@@ -509,17 +510,26 @@ object EncodeJob {
     } finally heldLocks.remove(key)
   }
 
-  /** The one chunk-parquet writer configuration — shared by every path
-    * that writes chunk rows (bootstrap, append, compaction/delete staging)
-    * so the physical format cannot silently diverge between them.
+  /** The one chunk writer, shared by every path that writes chunk rows
+    * (bootstrap, append, the staged rewrite of compaction/delete/upsert),
+    * so neither the physical format nor the lineage bookkeeping can
+    * diverge between them. `chunks` builds the stream around the kernel's
+    * per-part callback; the lineage records the kernel emits while it
+    * encodes are collected through an accumulator and returned, sorted by
+    * part. There is no post-hoc re-scan of the written chunks. The
+    * accumulator only reaches the driver when the write action commits, so
+    * a returned record implies its part's chunks are durable. `distinct`:
+    * stage retries can double-add, and records are deterministic.
     */
   private def writeChunks(
-      df: DataFrame,
+      spark: SparkSession,
       path: String,
       mode: SaveMode,
       dynamicPartitionOverwrite: Boolean = false
-  ): Unit = {
-    val w = df.write.mode(mode)
+  )(chunks: (LineageRecord => Unit) => Dataset[EncodedChunk]): Seq[LineageRecord] = {
+    val acc = new org.apache.spark.util.CollectionAccumulator[LineageRecord]
+    spark.sparkContext.register(acc, "graft_lineage")
+    val w = chunks(r => acc.add(r)).toDF().write.mode(mode)
       .option("parquet.enable.dictionary", "false") // payloads are ~MB blobs
       .option("parquet.block.size", (16 * 1024 * 1024).toString) // bound writer memory
       .option("compression", "none") // payloads are already codec-compressed
@@ -528,11 +538,13 @@ object EncodeJob {
     (if (dynamicPartitionOverwrite) w.option("partitionOverwriteMode", "dynamic") else w)
       .partitionBy("part_id")
       .parquet(path)
+    import scala.jdk.CollectionConverters._
+    acc.value.asScala.toSeq.distinct.sortBy(_.part_id)
   }
 
   /** Part ids already completed according to the lineage table. */
   def donePartIds(spark: SparkSession, outDir: String): Set[Int] =
-    readLineage(spark, outDir).filter(_.status == "done").map(_.part_id).toSet
+    readLineage(spark, lineagePath(outDir)).filter(_.status == "done").map(_.part_id).toSet
 
   /** Encode all not-yet-done partitions; returns the lineage records of
     * this run. Idempotent: re-running after a partial failure encodes only
@@ -556,25 +568,11 @@ object EncodeJob {
       if (done.isEmpty) withPart
       else withPart.filter(!$"part_id".isin(done.toSeq: _*))
 
-    // Lineage metrics are collected per part DURING the encode via an
-    // accumulator — no post-hoc re-scan of the written chunks (that extra
-    // read was a serial-fraction killer in the scaling runs). The
-    // accumulator only reaches the driver when the write action commits,
-    // so a lineage row still implies its partition's chunks are durable.
-    val acc = new org.apache.spark.util.CollectionAccumulator[LineageRecord]
-    spark.sparkContext.register(acc, "graft_lineage")
-
     // one shuffle; chunk layout determinism comes from the Catalyst
-    // (part_id, url) sort inside encodeChunkStream
-    val chunks = encodeChunkStream(todo, effCfg, r => acc.add(r))
-
-    writeChunks(chunks.toDF(), chunksPath(outDir), SaveMode.Overwrite,
-      dynamicPartitionOverwrite = true)
-
-    import scala.jdk.CollectionConverters._
-    // distinct: stage retries can double-add; records are deterministic.
-    // O(partitions) tiny rows: one file, written on the driver
-    val records = acc.value.asScala.toSeq.distinct.sortBy(_.part_id)
+    // (part_id, url) sort inside encodeChunkStream. O(partitions) tiny
+    // lineage rows: one file, written on the driver
+    val records = writeChunks(spark, chunksPath(outDir), SaveMode.Overwrite,
+      dynamicPartitionOverwrite = true)(encodeChunkStream(todo, effCfg, _))
     appendLineage(spark, outDir, records)
     // return THIS run's records; the full table lives at lineagePath
     spark.createDataset(records)
@@ -583,6 +581,7 @@ object EncodeJob {
   def compactTmpPath(outDir: String) = chunksPath(outDir) + "_compact_tmp"
   private def swapMarkerPath(outDir: String) =
     new org.apache.hadoop.fs.Path(compactTmpPath(outDir), "_SWAP")
+  private def stagedLineagePath(outDir: String) = compactTmpPath(outDir) + "/_lineage"
 
   private def chunksFs(spark: SparkSession, outDir: String) =
     new org.apache.hadoop.fs.Path(chunksPath(outDir))
@@ -626,14 +625,16 @@ object EncodeJob {
     *    keep task memory at O(chunkRows) even for an oversized partition.
     *
     * Crash safety (write-ahead staging, never in-place): new chunks are
-    * written to `chunks_compact_tmp`; only after that write fully commits
-    * is a `_SWAP` marker (listing the part ids) created and the partition
-    * directories swapped one rename at a time, then lineage is recomputed
-    * and the staging dir removed. A crash BEFORE the marker leaves the
-    * live table untouched (stale staging is discarded on the next write);
-    * a crash AFTER it is rolled forward — the marker proves the staging
-    * dir is complete — by [[completePendingCompactSwap]], which every
-    * write entry point runs first. Readers fail fast on a pending marker
+    * written to `chunks_compact_tmp`, with the lineage records the kernel
+    * emitted for them; only after both are durable is a `_SWAP` marker
+    * (listing the part ids) created and the partition directories swapped
+    * one rename at a time, then the staged lineage replaces the
+    * partitions' rows and the staging dir is removed. A crash BEFORE the
+    * marker leaves the live table untouched (stale staging is discarded on
+    * the next write); a crash AFTER it is rolled forward — the marker
+    * proves the staging dir is complete — by
+    * [[completePendingCompactSwap]], which every write entry point runs
+    * first. Readers fail fast on a pending marker
     * ([[requireNoPendingSwap]]) instead of silently seeing a half-swapped
     * table.
     */
@@ -669,28 +670,33 @@ object EncodeJob {
     // compaction never empties a partition: every selected part's staged
     // output must exist before the swap intent is recorded
     spark.createDataset(stageAndSwap(spark, outDir, selected,
-      compactedChunkStream(spark, outDir, effCfg, selected), mayDrop = false))
+      compactedChunkStream(spark, outDir, effCfg, selected, _), mayDrop = false))
   }
 
   /** The stage -> mark -> swap commit of [[compact]], [[delete]] and
-    * [[upsert]]: `rewritten` (the new content of `parts`) goes to the
-    * staging dir, never over live dirs; a part with no staged output was
-    * emptied and is recorded as a drop (refused unless `mayDrop`); the
-    * `_SWAP` marker commits the intent (roll-forward from there on) and
-    * [[finishSwap]] applies it. `phase` sees "staged", "marked", "swapped".
+    * [[upsert]]: `rewritten` (the new content of `parts`, built around the
+    * kernel's per-part lineage callback) goes to the staging dir, never
+    * over live dirs, and the lineage records the kernel emitted for it go
+    * to the staging dir's `_lineage`. A part with no staged output was
+    * emptied and is recorded as a drop (refused unless `mayDrop`). The
+    * `_SWAP` marker then commits chunks and lineage together (roll-forward
+    * from there on) and [[finishSwap]] applies them. `phase` sees
+    * "staged", "marked", "swapped".
     */
   private def stageAndSwap(
       spark: SparkSession,
       outDir: String,
       parts: Seq[Int],
-      rewritten: Dataset[EncodedChunk],
+      rewritten: (LineageRecord => Unit) => Dataset[EncodedChunk],
       mayDrop: Boolean,
       phase: String => Unit = _ => ()
   ): Seq[LineageRecord] = {
     val fs = chunksFs(spark, outDir)
     val tmp = new org.apache.hadoop.fs.Path(compactTmpPath(outDir))
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    writeChunks(rewritten.toDF(), compactTmpPath(outDir), SaveMode.Overwrite)
+    val records = writeChunks(spark, compactTmpPath(outDir), SaveMode.Overwrite)(rewritten)
+    if (records.nonEmpty)
+      DriverParquet.write(hadoopConf(spark), new org.apache.hadoop.fs.Path(stagedLineagePath(outDir)), records)
     phase("staged")
     val actions = parts.map(pid =>
       (pid, !fs.exists(new org.apache.hadoop.fs.Path(tmp, s"part_id=$pid"))))
@@ -698,9 +704,9 @@ object EncodeJob {
       require(mayDrop || !drop, s"staged output missing for part $pid — refusing to swap")
     writeSwapMarker(fs, outDir, actions)
     phase("marked")
-    val records = finishSwap(spark, outDir, actions)
+    val swapped = finishSwap(spark, outDir, actions)
     phase("swapped")
-    records
+    swapped
   }
 
   /** Driver-side url-list bound for [[delete]]/[[upsert]]: the url set is
@@ -747,7 +753,7 @@ object EncodeJob {
     // a partition the delete fully emptied is recorded as a drop, so
     // roll-forward removes it too
     spark.createDataset(stageAndSwap(spark, outDir, affected,
-      compactedChunkStream(spark, outDir, effCfg, affected, dropUrls = distinctUrls.toSet),
+      compactedChunkStream(spark, outDir, effCfg, affected, _, dropUrls = distinctUrls.toSet),
       mayDrop = true))
   }
 
@@ -899,26 +905,25 @@ object EncodeJob {
         s"upsert is bounded at $ceiling distinct urls per call (delta has more): " +
           "a refresh this size is a bulk rebuild — re-encode the affected partitions " +
           "with run() instead")
-      if (nUrls == 0) spark.emptyDataset[LineageRecord]
-      else if (nUrls <= groupSize) upsertGroup(spark, deduped, outDir, cfg)
-      else {
-        // hash-group the urls (never collected as one set): each group is
-        // a full, per-url-atomic upsert; /2 headroom keeps every group
-        // under the bound despite hash imbalance
-        val groups = math.ceil(nUrls.toDouble / math.max(1, groupSize / 2)).toInt
-        val touched = (0 until groups).flatMap { g =>
-          upsertGroup(spark,
-            deduped.filter(pmod(xxhash64($"url"), lit(groups)) === g), outDir, cfg)
-            .select($"part_id").as[Int].collect().toSeq
-        }.distinct.sorted
-        // per-group records mix ABSOLUTE swap rows (full-partition
-        // recomputes) with INCREMENTAL append rows (this group's added
-        // rows only), so no single group's record is the final word for a
-        // partition several groups touched — recompute every touched
-        // partition from the live chunk metadata (the same aggregation
-        // finishSwap uses), which is layout-final by construction
-        spark.createDataset(lineageFromChunks(spark, outDir, touched))
-      }
+      spark.createDataset(
+        if (nUrls == 0) Seq.empty
+        else if (nUrls <= groupSize) upsertGroup(spark, deduped, outDir, cfg)
+        else {
+          // hash-group the urls (never collected as one set): each group
+          // is a full, per-url-atomic upsert; /2 headroom keeps every
+          // group under the bound despite hash imbalance
+          val groups = math.ceil(nUrls.toDouble / math.max(1, groupSize / 2)).toInt
+          val touched = (0 until groups).flatMap { g =>
+            upsertGroup(spark,
+              deduped.filter(pmod(xxhash64($"url"), lit(groups)) === g), outDir, cfg)
+          }.map(_.part_id).toSet
+          // per-group records mix ABSOLUTE swap rows (whole partitions)
+          // with INCREMENTAL append rows (one group's added rows only), so
+          // no single group's record is the final word for a partition
+          // several groups touched: return each touched part's `_lineage`
+          // rows folded into one (read on the driver, no Spark job)
+          foldLineage(readLineage(spark, lineagePath(outDir)).filter(r => touched(r.part_id)))
+        })
     } finally { deduped.unpersist(); () }
   }
 
@@ -933,16 +938,16 @@ object EncodeJob {
       deduped: Dataset[Page],
       outDir: String,
       cfg: EncodeConfig
-  ): Dataset[LineageRecord] = {
+  ): Seq[LineageRecord] = {
     import spark.implicits._
     // bootstrap / wiped table: nothing stored to replace — plain append
     if (!hasCommittedChunks(spark, outDir))
-      return append(spark, deduped, outDir, cfg)
+      return append(spark, deduped, outDir, cfg).collect().toSeq
     val (effCfg, meta) = layout(spark, outDir, cfg)
     val urls = deduped.select($"url").as[String].collect().toSeq
     require(urls.size <= MaxDeleteUrls,
       s"internal: upsert group exceeded $MaxDeleteUrls urls (${urls.size})")
-    if (urls.isEmpty) return spark.emptyDataset[LineageRecord]
+    if (urls.isEmpty) return Seq.empty
     val pairs = presentHomePairs(spark, outDir, urls, meta)
     // each stored url's replacement row is homed at its STORED partition
     // (on a meta table that IS partIdCol's home; on a pre-meta table whose
@@ -973,7 +978,7 @@ object EncodeJob {
         try {
           pre.foreachPartition((_: Iterator[KernelRow]) => ()) // fills the cache
           stageAndSwap(spark, outDir, affected,
-            compactedChunkStream(spark, outDir, effCfg, affected, dropUrls = urls.toSet,
+            compactedChunkStream(spark, outDir, effCfg, affected, _, dropUrls = urls.toSet,
               replacements = Some(pre)),
             mayDrop = true, upsertPhaseHook)
         } finally { pre.unpersist(); () }
@@ -986,7 +991,7 @@ object EncodeJob {
       if (urls.forall(storedHome.contains)) Seq.empty
       else appendNew(spark, outDir, effCfg, hasChunks = true,
         deduped.filter(homeOf($"url") === -1).withColumn("part_id", partIdCol(effCfg)))
-    spark.createDataset(swapRecords ++ restRecords)
+    swapRecords ++ restRecords
   }
 
   /** The swap marker is the roll-forward COMMIT RECORD — it must appear
@@ -1020,13 +1025,15 @@ object EncodeJob {
     * stored rows minus `dropUrls` are extracted in one typed pass and
     * unioned with the `replacements` rows (pre-encoded by [[preEncoded]],
     * already homed by `_6`), then coalesced into ONE task — a repartition
-    * would shuffle — for the spillable in-partition sort + streaming kernel.
+    * would shuffle — for the spillable in-partition sort + streaming kernel,
+    * which hands each part's lineage record to `onPart`.
     */
   private[graft] def compactedChunkStream(
       spark: SparkSession,
       outDir: String,
       cfg: EncodeConfig,
       selected: Seq[Int],
+      onPart: LineageRecord => Unit,
       dropUrls: Set[String] = Set.empty,
       replacements: Option[Dataset[KernelRow]] = None
   ): Dataset[EncodedChunk] = {
@@ -1054,7 +1061,7 @@ object EncodeJob {
       // order = the UTF8String order the old String column sorted in
       .sortWithinPartitions($"_6", $"_1")
       .as[KernelRow]
-      .mapPartitions(it => encodePreEncodedSorted(it, cfg.chunkRows, _ => ()))
+      .mapPartitions(it => encodePreEncodedSorted(it, cfg.chunkRows, onPart))
   }
 
   /** `urls` as UTF-8 bytes in unsigned byte order, for [[containsUtf8]]. */
@@ -1155,13 +1162,13 @@ object EncodeJob {
 
   /** Roll forward a compaction swap that crashed after its `_SWAP` marker
     * was written (the marker proves the staging dir is complete): finish
-    * the remaining renames, recompute the affected lineage rows, drop the
-    * staging dir. Pre-marker staging leftovers are NOT touched here — the
-    * live table is still canonical and [[compact]] discards them on its
-    * next run. Returns true when a pending swap was completed. Called
-    * automatically by every write entry point ([[run]]/[[append]]/
-    * [[compact]]/[[delete]]/[[upsert]]); readers instead fail fast via
-    * [[requireNoPendingSwap]].
+    * the remaining renames, replace the affected lineage rows with the
+    * staged ones, drop the staging dir (see [[finishSwap]]). Pre-marker
+    * staging leftovers are NOT touched here — the live table is still
+    * canonical and [[compact]] discards them on its next run. Returns
+    * true when a pending swap was completed. Called automatically by every
+    * write entry point ([[run]]/[[append]]/[[compact]]/[[delete]]/
+    * [[upsert]]); readers instead fail fast via [[requireNoPendingSwap]].
     */
   def completePendingCompactSwap(spark: SparkSession, outDir: String): Boolean = {
     val fs = chunksFs(spark, outDir)
@@ -1212,27 +1219,30 @@ object EncodeJob {
   }
 
   /** Swap staged partition dirs into the live table (or remove partitions
-    * a delete emptied), recompute + replace the affected lineage rows, and
-    * remove the staging dir — the shared tail of [[compact]]/[[delete]]
-    * and [[completePendingCompactSwap]]. Idempotent: a part already
-    * swapped (its staged dir gone) or already dropped is skipped, and
-    * lineage is recomputed from the live chunks table rather than carried
-    * through the crash.
+    * a delete emptied), replace the affected lineage rows, and remove the
+    * staging dir — the shared tail of [[stageAndSwap]] and
+    * [[completePendingCompactSwap]]. One order for every swap: marker ->
+    * renames -> lineage -> staging dir (which holds the marker). Lineage
+    * comes from the staged records the kernel emitted (`_lineage` in the
+    * staging dir, committed by the marker), plus a zero-row tombstone per
+    * dropped part; nothing is recomputed. Idempotent: a part already
+    * swapped (its staged dir gone) or already dropped is skipped, and the
+    * staged records replace the parts' rows again on a re-run.
+    *
+    * A marker written by an older binary has no staged lineage: it rolls
+    * forward with tombstones for its drops, and the swapped parts keep
+    * their existing `_lineage` rows. Those count the same rows (a swap
+    * changes layout, not content) but their chunk metrics are stale until
+    * the next rewrite of those parts.
     *
     * Reader-outage window: readers fail fast while the `_SWAP` marker
-    * exists, so the marker should live exactly as long as a read could be
-    * WRONG. For a drop-free swap (compaction/upsert — every partition's
-    * rows survive, only their chunk layout changes) the table is fully
-    * consistent the moment the O(parts) renames finish, so the marker is
-    * cleared RIGHT THEN — before the lineage recompute (a full Spark
-    * aggregation), which would otherwise hard-error every concurrent
-    * reader of a live streaming table on each healthy in-stream compaction
-    * cycle. The cost is a narrow crash window in which live chunks are new
-    * but lineage metrics are stale (data correct; metrics self-heal on the
-    * next compact of those parts). A swap WITH drops (delete) keeps the
-    * marker through the lineage replace: the zero-row tombstones it writes
-    * are load-bearing for resume safety, so "repair me first" must hold
-    * until they are durable.
+    * exists. After the O(parts) renames, the marker stays only through the
+    * lineage replace, which is driver-side file I/O (a read, one file
+    * written and renamed in) rather than a Spark job, so a healthy
+    * in-stream compaction cycle blocks concurrent readers for about as
+    * long as the renames themselves. Keeping the marker until the lineage
+    * is durable makes "repair me first" hold until the drop tombstones,
+    * which resume safety depends on, are written.
     */
   private def finishSwap(
       spark: SparkSession,
@@ -1251,10 +1261,6 @@ object EncodeJob {
         require(fs.rename(staged, live), s"failed to swap in compacted $live")
       }
     }
-    if (actions.forall(!_._2) && fs.exists(swapMarkerPath(outDir)))
-      fs.delete(swapMarkerPath(outDir), false)
-    val parts = actions.map(_._1)
-    val live = lineageFromChunks(spark, outDir, parts)
     // a dropped (fully-deleted) partition keeps a zero-row "done" lineage
     // TOMBSTONE: donePartIds still lists it, so a later resume-style run()
     // with the original input does NOT re-encode the partition and
@@ -1262,57 +1268,13 @@ object EncodeJob {
     // whether a url shared its partition with surviving rows. Tombstones
     // are strict: only removing the table directory starts a new corpus
     // (new data still lands via append's wiped-table path).
-    val havePids = live.map(_.part_id).toSet
-    val tombstones = actions.collect { case (pid, true) if !havePids.contains(pid) =>
+    val tombstones = actions.collect { case (pid, true) =>
       LineageRecord(pid, 0L, 0L, 0L, 0L, "", 0L, "done")
     }
-    val records = live ++ tombstones
-    replaceLineageRows(spark, outDir, parts.toSet, records)
-    // staging dir goes last (for a swap with drops this also removes the
-    // marker, which until here kept the table in "repair me first" state;
-    // a drop-free swap already cleared it right after the renames)
+    val records = (readLineage(spark, stagedLineagePath(outDir)) ++ tombstones).sortBy(_.part_id)
+    replaceLineageRows(spark, outDir, records.map(_.part_id).toSet, records)
     fs.delete(new org.apache.hadoop.fs.Path(compactTmpPath(outDir)), true)
     records
-  }
-
-  /** Recompute the lineage rows of `parts` from the live chunks table's
-    * metadata columns alone (nested-pruned scan: codec/bytes/hash leaves,
-    * never a payload). Field-for-field the same aggregation the encode
-    * kernels stream out, so a recomputed row is indistinguishable from an
-    * original one.
-    */
-  private def lineageFromChunks(
-      spark: SparkSession,
-      outDir: String,
-      parts: Seq[Int]
-  ): Seq[LineageRecord] = {
-    import spark.implicits._
-    // a delete can have emptied EVERY partition: scanning a data-file-less
-    // chunks dir would throw (schema inference) with the _SWAP marker
-    // still pending — i.e. a permanently wedged table
-    if (!hasCommittedChunks(spark, outDir)) return Seq.empty
-    val cols = Seq("url", "warc_ts", "html", "text", "lang")
-    // ONE aggregation job: the five per-column codec strings travel as an
-    // array column and are merged by collect_set-of-arrays (flattened
-    // driver-side) — a separate exploded pass would scan the metadata twice
-    val sums = TableScan.chunks(spark, outDir)
-      .filter($"part_id".isin(parts: _*))
-      .select(
-        $"part_id", $"n_rows",
-        cols.map(c => col(s"$c.bytes_in")).reduce(_ + _).as("bin"),
-        cols.map(c => col(s"$c.bytes_out")).reduce(_ + _).as("bout"),
-        cols.map(c => col(s"$c.payload_hash")).reduce(_.bitwiseXOR(_)).as("h"),
-        array(cols.map(c => concat(lit(s"$c="), col(s"$c.codec"))): _*).as("cs"))
-      .groupBy($"part_id")
-      .agg(sum($"n_rows").as("n_rows"), count(lit(1)).as("n_chunks"),
-        sum($"bin").as("bin"), sum($"bout").as("bout"),
-        expr("bit_xor(h)").as("h"),
-        collect_set($"cs").as("css"))
-      .as[(Int, Long, Long, Long, Long, Long, Seq[Seq[String]])].collect()
-    sums.map { case (pid, nRows, nChunks, bin, bout, h, css) =>
-      LineageRecord(pid, nRows, nChunks, bin, bout,
-        css.flatten.distinct.sorted.mkString(","), h, "done")
-    }.toSeq.sortBy(_.part_id)
   }
 
   /** REPLACE `parts`' lineage rows (append would double the metrics);
@@ -1335,27 +1297,15 @@ object EncodeJob {
     if (!lfs.exists(lp) && hasCommittedFileUnder(spark, tmpPath)) {
       require(lfs.rename(tp, lp), s"failed to roll forward lineage swap at $tmpPath")
     }
-    val kept = readLineage(spark, outDir).filterNot(r => parts.contains(r.part_id))
     // fold superseded per-append rows while the table is being rewritten
     // anyway: append (batch and per-micro-batch streaming) APPENDS one row
     // per touched part per batch, so after thousands of micro-batches the
     // `_lineage` reads in donePartIds/append scan an ever-growing table —
     // folding here keeps it O(partitions) across any stream length (the
     // in-stream compaction hook reaches this pass every
-    // `compactEveryBatches` batches). Sums/xor/codec-union are exactly the
-    // aggregation lineageFromChunks computes, so a folded row is
-    // indistinguishable from a recomputed one; a zero-row drop tombstone
-    // folds harmlessly (0-row contribution) and keeps its part "done".
-    val folded = kept.groupBy(_.part_id).map { case (pid, rs) =>
-      if (rs.sizeIs == 1) rs.head
-      else LineageRecord(pid,
-        rs.map(_.n_rows).sum, rs.map(_.n_chunks).sum,
-        rs.map(_.bytes_in).sum, rs.map(_.bytes_out).sum,
-        rs.flatMap(_.codecs.split(',')).filter(_.nonEmpty)
-          .distinct.sorted.mkString(","),
-        rs.map(_.payload_hash).foldLeft(0L)(_ ^ _),
-        if (rs.forall(_.status == "done")) "done" else rs.last.status)
-    }.toSeq.sortBy(_.part_id)
+    // `compactEveryBatches` batches)
+    val folded = foldLineage(
+      readLineage(spark, lineagePath(outDir)).filterNot(r => parts.contains(r.part_id)))
     val newLineage = folded ++ records
     if (newLineage.nonEmpty) {
       if (lfs.exists(tp)) lfs.delete(tp, true)
@@ -1367,6 +1317,25 @@ object EncodeJob {
       lfs.delete(lp, true)
     }
   }
+
+  /** One row per part: the part's rows summed (rows, chunks, bytes),
+    * xor-ed (payload hash) and codec-unioned — the same aggregation the
+    * encode kernel streams over a part's chunks, so a folded row equals the
+    * one a single encode of those chunks would emit. A zero-row drop
+    * tombstone folds harmlessly (0-row contribution) and keeps its part
+    * "done".
+    */
+  private def foldLineage(rows: Seq[LineageRecord]): Seq[LineageRecord] =
+    rows.groupBy(_.part_id).map { case (pid, rs) =>
+      if (rs.sizeIs == 1) rs.head
+      else LineageRecord(pid,
+        rs.map(_.n_rows).sum, rs.map(_.n_chunks).sum,
+        rs.map(_.bytes_in).sum, rs.map(_.bytes_out).sum,
+        rs.flatMap(_.codecs.split(',')).filter(_.nonEmpty)
+          .distinct.sorted.mkString(","),
+        rs.map(_.payload_hash).foldLeft(0L)(_ ^ _),
+        if (rs.forall(_.status == "done")) "done" else rs.last.status)
+    }.toSeq.sortBy(_.part_id)
 
   /** One chunk's (part_id, url, warc_ts, html, text, lang payloads) -> its
     * per-page pre-encoded tuples (the exact input the
@@ -1580,17 +1549,10 @@ object EncodeJob {
         .as[(Int, Int)].collect().map { case (pid, m) => pid -> (m + 1) }.toMap
     val bcOff = spark.sparkContext.broadcast(offsets)
 
-    val acc = new org.apache.spark.util.CollectionAccumulator[LineageRecord]
-    spark.sparkContext.register(acc, "graft_lineage_append")
-
-    writeChunks(
-      encodeChunkStream(rows, cfg, r => acc.add(r))
+    val records = writeChunks(spark, chunksPath(outDir), SaveMode.Append) { onPart =>
+      encodeChunkStream(rows, cfg, onPart)
         .map(c => c.copy(chunk_id = c.chunk_id + bcOff.value.getOrElse(c.part_id, 0)))
-        .toDF(),
-      chunksPath(outDir), SaveMode.Append)
-
-    import scala.jdk.CollectionConverters._
-    val records = acc.value.asScala.toSeq.distinct.sortBy(_.part_id)
+    }
     appendLineage(spark, outDir, records)
     records
   }

@@ -28,24 +28,8 @@ object GraftFunctions {
   def decode(payload: Array[Byte]): UTF8String =
     UTF8String.fromBytes(graft.codec.Pipelines.textDecode(payload))
 
-  def fingerprint(s: UTF8String): Long = {
-    // Karp-Rabin mod 2^61-1 over the UTF-8 bytes (same value as
-    // TextAnalysis.fingerprint, which goes through String)
-    val bytes = s.getBytes
-    val M = (1L << 61) - 1
-    val B = 1000003L
-    var h = 0L
-    var i = 0
-    while (i < bytes.length) {
-      val lo = h * B
-      val hi = Math.multiplyHigh(h, B)
-      var folded = (lo & M) + ((lo >>> 61) | (hi << 3)) + (bytes(i) & 0xFFL)
-      while (folded >= M) folded -= M
-      h = folded
-      i += 1
-    }
-    h
-  }
+  def fingerprint(s: UTF8String): Long =
+    graft.pipeline.TextAnalysis.fingerprintBytes(s.getBytes)
 
   /** FM-index backward-search count; null (the reference's Nothing, not
     * Just 0) when the pattern does not occur. Builds the per-row index —
@@ -252,30 +236,30 @@ object GraftFunctions {
       copy(first = f, second = s, third = t)
   }
 
-  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_encode" -> (args => GraftEncode(args.head)),
-    "graft_decode" -> (args => GraftDecode(args.head)),
-    "graft_fingerprint" -> (args => GraftFingerprint(args.head)),
-    "graft_simhash" -> (args => GraftSimhash(args.head)),
-    "graft_fm_count" -> (args => GraftFmCount(args(0), args(1))),
-    "graft_fm_locate" -> (args => GraftFmLocate(args(0), args(1))),
-    "graft_decode_column" -> (args => GraftDecodeColumn(args.head)),
-    "graft_decode_column_binary" -> (args => GraftDecodeColumnBinary(args.head)),
-    "graft_sample_residue" -> (args => GraftSampleResidue(args(0), args(1), args(2)))
-  )
+  /** Every function as Spark's (name, info, builder) description: the one
+    * list both [[register]] and [[GraftExtensions]] install.
+    */
+  private[sql] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq[(String, Seq[Expression] => Expression)](
+      "graft_encode" -> (args => GraftEncode(args.head)),
+      "graft_decode" -> (args => GraftDecode(args.head)),
+      "graft_fingerprint" -> (args => GraftFingerprint(args.head)),
+      "graft_simhash" -> (args => GraftSimhash(args.head)),
+      "graft_fm_count" -> (args => GraftFmCount(args(0), args(1))),
+      "graft_fm_locate" -> (args => GraftFmLocate(args(0), args(1))),
+      "graft_decode_column" -> (args => GraftDecodeColumn(args.head)),
+      "graft_decode_column_binary" -> (args => GraftDecodeColumnBinary(args.head)),
+      "graft_sample_residue" -> (args => GraftSampleResidue(args(0), args(1), args(2)))
+    ).map { case (name, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo("graft.sql.GraftFunctions", name), builder)
+    }
 
   /** Programmatic registration (idempotent) for sessions we don't build
     * ourselves (e.g. the driver's).
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    functions.foreach { case (name, builder) =>
-      registry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.sql.GraftFunctions", name),
-        builder
-      )
-    }
+    functions.foreach { case (id, info, builder) => registry.registerFunction(id, info, builder) }
   }
 }
 
@@ -283,46 +267,6 @@ object GraftFunctions {
   * `--conf spark.sql.extensions=graft.sql.GraftExtensions`.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_encode"),
-      new ExpressionInfo("graft.sql.GraftFunctions", "graft_encode"),
-      (args: Seq[Expression]) => GraftFunctions.GraftEncode(args.head)
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("graft_decode"),
-      new ExpressionInfo("graft.sql.GraftFunctions", "graft_decode"),
-      (args: Seq[Expression]) => GraftFunctions.GraftDecode(args.head)
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo("graft.sql.GraftFunctions", "graft_fingerprint"),
-      (args: Seq[Expression]) => GraftFunctions.GraftFingerprint(args.head)
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo("graft.sql.GraftFunctions", "graft_simhash"),
-      (args: Seq[Expression]) => GraftFunctions.GraftSimhash(args.head)
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fm_count"),
-      new ExpressionInfo("graft.sql.GraftFunctions", "graft_fm_count"),
-      (args: Seq[Expression]) => GraftFunctions.GraftFmCount(args(0), args(1))
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fm_locate"),
-      new ExpressionInfo("graft.sql.GraftFunctions", "graft_fm_locate"),
-      (args: Seq[Expression]) => GraftFunctions.GraftFmLocate(args(0), args(1))
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("graft_decode_column"),
-      new ExpressionInfo("graft.sql.GraftFunctions", "graft_decode_column"),
-      (args: Seq[Expression]) => GraftFunctions.GraftDecodeColumn(args.head)
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("graft_decode_column_binary"),
-      new ExpressionInfo("graft.sql.GraftFunctions", "graft_decode_column_binary"),
-      (args: Seq[Expression]) => GraftFunctions.GraftDecodeColumnBinary(args.head)
-    ))
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.functions.foreach(ext.injectFunction)
 }

@@ -23,13 +23,19 @@ class BwtSpec extends AnyFunSuite {
       val n = rnd.nextInt(200) + 1
       val sigma = Seq(2, 4, 16, 256)(rnd.nextInt(4))
       Array.fill(n)(rnd.nextInt(sigma).toByte)
-    }
+    } ++ ShapedInputs.all(20260817L, perShape = 5, maxLen = 600)
     cases.foreach { t =>
       val naive = SuffixArrays.buildNaive(t).toSeq
       assert(SuffixArrays.build(t).toSeq == naive,
         s"SA mismatch for ${t.toSeq.take(30)} (len ${t.length})")
       assert(SuffixArrays.buildGeneric(t).toSeq == naive,
         s"generic SA mismatch (len ${t.length})")
+    }
+    // longer inputs of the same shapes, past the naive sort's reach: the
+    // byte-level path against the generic int-level one
+    ShapedInputs.all(20260818L, perShape = 2, maxLen = 20000).foreach { t =>
+      assert(SuffixArrays.build(t).toSeq == SuffixArrays.buildGeneric(t).toSeq,
+        s"byte vs generic SA mismatch (len ${t.length})")
     }
   }
 

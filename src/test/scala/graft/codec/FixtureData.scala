@@ -33,3 +33,42 @@ object FixtureData {
     Some("31"), Some("U"), Some("2"), Some("h"), Some("9"), Some("U")
   )
 }
+
+/** Seeded inputs of six pathological shapes for the kernel equivalence
+  * cases (SA vs naive/generic, fused vs unfused MTF/RLE): full alphabet,
+  * binary, constant, periodic, text-like (with multi-byte UTF-8) and runs
+  * of runs.
+  */
+object ShapedInputs {
+  val Shapes = 6
+
+  def apply(rnd: scala.util.Random, shape: Int, maxLen: Int): Array[Byte] = {
+    val n = rnd.nextInt(maxLen) + 1
+    shape match {
+      case 0 => Array.fill(n)(rnd.nextInt(256).toByte)
+      case 1 => Array.fill(n)(rnd.nextInt(2).toByte)
+      case 2 => Array.fill(n)(7.toByte)
+      case 3 =>
+        val p = rnd.nextInt(8) + 1
+        Array.tabulate(n)(i => (i % p).toByte)
+      case 4 =>
+        val words = Array("the", "cat", "sat", "on", "mat", "über", "naïve", "data ")
+        val sb = new StringBuilder
+        while (sb.length < n) sb.append(words(rnd.nextInt(words.length))).append(' ')
+        sb.toString.take(n).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      case _ =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
+        while (out.length < n) {
+          val b = rnd.nextInt(4).toByte
+          out ++= Iterator.fill(rnd.nextInt(50) + 1)(b)
+        }
+        out.take(n).toArray
+    }
+  }
+
+  /** `perShape` inputs of each shape, up to `maxLen` bytes each. */
+  def all(seed: Long, perShape: Int, maxLen: Int): Seq[Array[Byte]] = {
+    val rnd = new scala.util.Random(seed)
+    for (shape <- 0 until Shapes; _ <- 1 to perShape) yield apply(rnd, shape, maxLen)
+  }
+}

@@ -158,6 +158,27 @@ class FmIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("empty text: count and locate are None for every pattern, through serialization too") {
+    val fm = FmIndex.build(Array.emptyByteArray)
+    assert(fm.n == 0 && fm.alphabet.isEmpty)
+    // the stored empty BWT is the reference's `BWT Empty`, unchanged
+    assert(fm.bwt == BwtCodec.encode(Array.emptyByteArray) && fm.bwt.sentinelPos == -1)
+    val patterns = Seq(bytes("a"), bytes("ab"), Array[Byte](0), Array.emptyByteArray)
+    def noMatches(ix: FmIndex): Unit =
+      for (p <- patterns; compat <- Seq(false, true)) {
+        assert(ix.count(p, compat).isEmpty, s"count of ${p.toSeq} (compat=$compat)")
+        assert(ix.locate(p, compat).isEmpty, s"locate of ${p.toSeq} (compat=$compat)")
+      }
+    noMatches(fm)
+    Seq(0, 3).foreach { k =>
+      val payload = fm.serialize(k)
+      val back = FmIndex.deserialize(payload)
+      assert(back.n == 0 && back.bwt == fm.bwt, s"k=$k")
+      noMatches(back)
+      if (k == 0) assert(back.serialize(0).sameElements(payload), "full-SA round trip is byte-stable")
+    }
+  }
+
   test("serialized index bytes are pinned on a PagesGen text") {
     // four pages' html (11,671 bytes); the digest pins build's BWT, C table,
     // Occ checkpoints and SA samples together

@@ -209,7 +209,8 @@ class RleMtfSpec extends AnyFunSuite {
     ) ++
       (1 to 60).map(_ => Array.fill(rnd.nextInt(600) + 1)(rnd.nextInt(5).toByte)) ++
       (1 to 20).map(_ => Array.fill(rnd.nextInt(600) + 1)(rnd.nextInt(256).toByte)) ++
-      (1 to 10).map(i => bytes(graft.spark.PagesGen.page(9L, i.toLong, 50, hostSkew = false).text))
+      (1 to 10).map(i => bytes(graft.spark.PagesGen.page(9L, i.toLong, 50, hostSkew = false).text)) ++
+      ShapedInputs.all(20260817L, perShape = 3, maxLen = 20000)
   }
 
   test("mtfRleEncodeFused is byte-identical to the unfused MTF->RLE serialization") {

@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the compaction forms change LAYOUT only, never content.
   *
   * After EVERY verb the whole table is decoded and compared field-exact to
-  * the model. The targeted specs each pin one verb's edges; this walk pins
+  * the model, and its lineage is checked against its chunks: each live
+  * part's folded `_lineage` row equals an aggregation of that part's chunk
+  * metadata, and each part a verb emptied keeps a zero-row tombstone. The targeted specs each pin one verb's edges; this walk pins
   * the COMPOSITIONS the targeted specs cannot enumerate (e.g. delete-all →
   * append into the wiped table → upsert → compact), with deltas that
   * overlap stored urls, repeat urls intra-delta, and delete absent urls.
@@ -76,6 +78,7 @@ class LifecyclePropertySpec extends AnyFunSuite {
     }
 
     val model = scala.collection.mutable.Map.empty[String, Page]
+    val everLive = scala.collection.mutable.Set.empty[Int]
 
     def check(step: String): Unit = {
       val got = DecodeJob.run(spark, out).collect().toSeq
@@ -83,6 +86,17 @@ class LifecyclePropertySpec extends AnyFunSuite {
         s"[seed=$seed $step] duplicate urls in decode")
       assert(got.map(key).sorted == model.values.toSeq.map(key).sorted,
         s"[seed=$seed $step] decode != model (table=${got.size} model=${model.size})")
+      val chunks = LineageOracle.fromChunks(spark, out)
+      val lineage = LineageOracle.folded(spark, out)
+      chunks.foreach { case (pid, agg) =>
+        assert(lineage.get(pid).contains(agg),
+          s"[seed=$seed $step] part $pid: folded lineage ${lineage.get(pid)} != chunks $agg")
+      }
+      everLive ++= chunks.keySet
+      everLive.filterNot(chunks.contains).foreach { pid =>
+        assert(lineage.get(pid).contains(LineageOracle.Tombstone),
+          s"[seed=$seed $step] emptied part $pid: no zero-row tombstone (${lineage.get(pid)})")
+      }
     }
 
     // bootstrap

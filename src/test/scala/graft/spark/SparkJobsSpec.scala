@@ -57,6 +57,49 @@ object TestSpark {
   }
 }
 
+/** Test-side lineage oracle. Per part: (n_rows, n_chunks, bytes_in,
+  * bytes_out, xor of payload hashes, codec set), either aggregated here
+  * from the chunks table's metadata columns or folded from the `_lineage`
+  * rows, so a spec can check that a table's lineage describes its chunks.
+  */
+object LineageOracle {
+  type Agg = (Long, Long, Long, Long, Long, Set[String])
+  /** A dropped part's zero-row tombstone, folded. */
+  val Tombstone: Agg = (0L, 0L, 0L, 0L, 0L, Set.empty)
+  private val cols = Seq("url", "warc_ts", "html", "text", "lang")
+
+  private def fold(rows: Seq[(Int, Agg)]): Map[Int, Agg] =
+    rows.groupBy(_._1).map { case (pid, rs) =>
+      pid -> rs.map(_._2).reduce { (a, b) =>
+        (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4, a._5 ^ b._5, a._6 ++ b._6)
+      }
+    }
+
+  def fromChunks(spark: SparkSession, out: String): Map[Int, Agg] =
+    if (!EncodeJob.hasCommittedChunks(spark, out)) Map.empty
+    else fold(TableScan.chunks(spark, out).collect().toSeq.map { r =>
+      val cs = cols.map(c => r.getAs[org.apache.spark.sql.Row](c))
+      r.getAs[Int]("part_id") -> ((r.getAs[Int]("n_rows").toLong, 1L,
+        cs.map(_.getAs[Long]("bytes_in")).sum, cs.map(_.getAs[Long]("bytes_out")).sum,
+        cs.map(_.getAs[Long]("payload_hash")).reduce(_ ^ _),
+        cols.zip(cs).map { case (c, cc) => s"$c=${cc.getAs[String]("codec")}" }.toSet))
+    })
+
+  /** `records` folded to one aggregate per part. */
+  def of(records: Seq[LineageRecord]): Map[Int, Agg] =
+    fold(records.map { l =>
+      l.part_id -> ((l.n_rows, l.n_chunks, l.bytes_in, l.bytes_out, l.payload_hash,
+        l.codecs.split(',').filter(_.nonEmpty).toSet))
+    })
+
+  /** The table's `_lineage` rows, folded. */
+  def folded(spark: SparkSession, out: String): Map[Int, Agg] = {
+    import spark.implicits._
+    of(if (!EncodeJob.hasCommittedFileUnder(spark, EncodeJob.lineagePath(out))) Seq.empty
+      else spark.read.parquet(EncodeJob.lineagePath(out)).as[LineageRecord].collect().toSeq)
+  }
+}
+
 /** Tree walks that descend into adaptive plans and their query stages. */
 object AqePlans extends AdaptiveSparkPlanHelper
 
@@ -566,7 +609,7 @@ class SparkJobsSpec extends AnyFunSuite {
     // the pipeline plan is pure narrow: one partition-pruned chunks scan
     // coalesced into one task, in-partition sort, kernels — no Exchange
     // node anywhere, and one scan however many partitions are selected
-    val executed = EncodeJob.compactedChunkStream(spark, out, cfg, Seq(0, 1))
+    val executed = EncodeJob.compactedChunkStream(spark, out, cfg, Seq(0, 1), _ => ())
       .queryExecution.executedPlan
     val plan = executed.toString
     assert(!plan.contains("Exchange"), s"compaction plan must not shuffle:\n$plan")
@@ -580,12 +623,12 @@ class SparkJobsSpec extends AnyFunSuite {
     EncodeJob.run(spark, spark.createDataset(all.toIndexedSeq), fresh, cfg)
     assert(chunkHashMap(out) == chunkHashMap(fresh),
       "compacted chunks must be byte-identical to a fresh encode")
-    // and the recomputed lineage matches the fresh run's kernel-streamed one
+    // and the rewrite's staged kernel lineage matches the fresh run's
     val a = spark.read.parquet(EncodeJob.lineagePath(out))
       .as[LineageRecord].collect().sortBy(_.part_id).toSeq
     val b = spark.read.parquet(EncodeJob.lineagePath(fresh))
       .as[LineageRecord].collect().sortBy(_.part_id).toSeq
-    assert(a == b, s"recomputed lineage diverged:\n$a\nvs\n$b")
+    assert(a == b, s"compacted lineage diverged:\n$a\nvs\n$b")
   }
 
   test("fragmentation-aware compaction rewrites only the fragmented partitions") {
@@ -671,7 +714,8 @@ class SparkJobsSpec extends AnyFunSuite {
     assert(!fs.exists(tmp), "staging dir must be gone after roll-forward")
     val after = DecodeJob.run(spark, out).collect().map(p => (p.url, p.text)).sorted.toSeq
     assert(after == (before ++ extra.map(p => (p.url, p.text))).sorted.toSeq)
-    // lineage was recomputed for the rolled-forward parts: totals consistent
+    // a marker of an older binary has no staged lineage: the rolled-forward
+    // parts keep their existing rows, whose totals still count every row
     val lin = spark.read.parquet(EncodeJob.lineagePath(out)).as[LineageRecord].collect()
     assert(lin.map(_.n_rows).sum == after.length)
 
@@ -1139,6 +1183,9 @@ class SparkJobsSpec extends AnyFunSuite {
     finally EncodeJob.upsertPhaseHook = _ => ()
     intercept[IllegalArgumentException](DecodeJob.run(spark, out))
     assert(EncodeJob.completePendingCompactSwap(spark, out))
+    // the roll-forward commits the staged kernel lineage: every part's
+    // `_lineage` describes its live chunks
+    assert(LineageOracle.folded(spark, out) == LineageOracle.fromChunks(spark, out))
     val after = DecodeJob.run(spark, out).collect().map(p => p.url -> p.text).toMap
     assert(after.size == 120)
     refreshed2.foreach(r => assert(after(r.url) == r.text,
@@ -1269,6 +1316,9 @@ class SparkJobsSpec extends AnyFunSuite {
     returned.foreach(r =>
       assert(r.n_rows == chunkRows(r.part_id),
         s"part ${r.part_id}: returned ${r.n_rows} rows, chunks hold ${chunkRows(r.part_id)}"))
+    // and every other field too: the returned records describe the chunks
+    assert(LineageOracle.of(returned) ==
+      LineageOracle.fromChunks(spark, out).filter { case (pid, _) => returned.exists(_.part_id == pid) })
 
     // the ceiling is enforced via limit+count BEFORE the driver-side url
     // collect: a delta far past it fails loudly without being materialized
@@ -1465,18 +1515,21 @@ class SparkJobsSpec extends AnyFunSuite {
   // upsert 24, append 8 and delete 7; upsert then also encoded and wrote
   // the replacement rows to a delta temp table (3), checked the rows left
   // for an append (2) and ran the public append on them (7, with a second
-  // dedupe window and stored-url scan).
-  //  - upsert 18: the bound count, which also fills the persisted dedupe
+  // dedupe window and stored-url scan). Until the swap took its lineage
+  // from the rewrite's kernel, upsert, delete and compact each also ran a
+  // lineage aggregation over the chunk metadata (2): upsert 18, delete 7,
+  // compact 3.
+  //  - upsert 16: the bound count, which also fills the persisted dedupe
   //    window (4); the url collect (1); the presence scan (4); the
   //    replacement rows' pre-encode into a cache, whose adaptive cache
   //    stage runs apart from the no-op pass that asks for it (2); the
-  //    staged rewrite (1); the swap's lineage aggregate (2); the new
-  //    urls' chunk-id offsets (2); their encode exchange and chunk write
-  //    (2).
+  //    staged rewrite, whose kernel also emits the swap's lineage (1); the
+  //    new urls' chunk-id offsets (2); their encode exchange and chunk
+  //    write (2).
   //  - append 8: the chunk-id offsets (2); the write, whose dedupe window,
   //    stored-url anti-join and encode exchanges run as adaptive stages (6).
-  //  - delete 7: the presence scan (4); the staged write (1); the swap's
-  //    lineage aggregate (2).
+  //  - delete 5: the presence scan (4); the staged write (1).
+  //  - compact 1: the staged write.
   test("upsert, append and delete run a pinned number of Spark jobs") {
     import spark.implicits._
     val out = tmpDir("jobs_maint")
@@ -1491,9 +1544,11 @@ class SparkJobsSpec extends AnyFunSuite {
     val appendJobs = jobsOf(EncodeJob.append(spark,
       spark.createDataset(all.slice(130, 140).toIndexedSeq), out, cfg))
     val deleteJobs = jobsOf(EncodeJob.delete(spark, out, all.slice(10, 15).map(_.url).toSeq, cfg))
-    assert(upsertJobs == 18, "upsert of 6 replaced + 6 new urls")
+    val compactJobs = jobsOf(EncodeJob.compact(spark, out, cfg))
+    assert(upsertJobs == 16, "upsert of 6 replaced + 6 new urls")
     assert(appendJobs == 8, "append of 10 new urls")
-    assert(deleteJobs == 7, "delete of 5 urls")
+    assert(deleteJobs == 5, "delete of 5 urls")
+    assert(compactJobs == 1, "compact of the 4 partitions")
     val decoded = DecodeJob.run(spark, out).collect().map(p => p.url -> p.text).toMap
     assert(decoded.size == 120 + 6 + 10 - 5)
     replaced.foreach(p => assert(decoded(p.url) == p.text))

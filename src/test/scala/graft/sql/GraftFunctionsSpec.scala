@@ -56,7 +56,8 @@ class GraftFunctionsSpec extends AnyFunSuite {
   test("graft_fm_count: values match FmIndex; no-match is NULL, never 0") {
     import spark.implicits._
     GraftFunctions.register(spark)
-    val texts = Seq((1L, "abracadabra"), (2L, "no such pattern here"), (3L, "aaaa"))
+    // an empty text has no occurrence of anything: NULL
+    val texts = Seq((1L, "abracadabra"), (2L, "no such pattern here"), (3L, "aaaa"), (4L, ""))
     texts.toDF("id", "text").createOrReplaceTempView("t_fmc")
     val rows = spark.sql(
       "SELECT id, graft_fm_count(text, 'a') AS ca, graft_fm_count(text, 'zzz') AS cz FROM t_fmc"
@@ -67,12 +68,13 @@ class GraftFunctionsSpec extends AnyFunSuite {
         .map(_.toInt) == fm.count("a".getBytes("UTF-8")))
       assert(r.isNullAt(2), "absent pattern must be NULL (reference Nothing), not 0")
     }
+    assert(rows.find(_.getLong(0) == 4L).get.isNullAt(1), "graft_fm_count('', 'a') must be NULL")
   }
 
   test("graft_fm_locate: positions match FmIndex.locate; absent is NULL; multibyte byte offsets") {
     import spark.implicits._
     GraftFunctions.register(spark)
-    val texts = Seq((1L, "abracadabra"), (2L, "no such pattern"), (3L, "naïve ab naïve ab"))
+    val texts = Seq((1L, "abracadabra"), (2L, "no such pattern"), (3L, "naïve ab naïve ab"), (4L, ""))
     texts.toDF("id", "text").createOrReplaceTempView("t_fml")
     val rows = spark.sql(
       "SELECT id, graft_fm_locate(text, 'ab') AS pa, graft_fm_locate(text, 'zzz') AS pz FROM t_fml"
@@ -87,6 +89,7 @@ class GraftFunctionsSpec extends AnyFunSuite {
     // positions 8 and 18 (1-based) — the locate is byte-addressed
     val multibyte = rows.find(_.getLong(0) == 3L).get.getSeq[Long](1).sorted
     assert(multibyte == Seq(8L, 18L), multibyte.toString)
+    assert(rows.find(_.getLong(0) == 4L).get.isNullAt(1), "graft_fm_locate('', 'ab') must be NULL")
   }
 
   test("graft_simhash matches the pipeline simHash") {
@@ -236,13 +239,28 @@ class GraftFunctionsSpec extends AnyFunSuite {
   }
 
   test("extensions class injects the functions into a fresh session") {
-    // the spark.sql.extensions entry point accepts the injection calls
-    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
+    // the spark.sql.extensions entry point injects every function of the
+    // one list register installs, graft_sample_residue included
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    assert(injected.toSeq == GraftFunctions.functions.map(_._1.funcName))
+    assert(injected.contains("graft_sample_residue"))
     // programmatic path on an isolated session state
     val s2 = TestSpark.spark.newSession()
     GraftFunctions.register(s2)
     import s2.implicits._
     val n = s2.sql("SELECT graft_fingerprint('abc') AS fp").as[Long].head()
     assert(n == GraftFunctions.fingerprint(org.apache.spark.unsafe.types.UTF8String.fromString("abc")))
+    // the fingerprint's values are pinned, through SQL and TextAnalysis:
+    // (h * 1000003 + byte) mod 2^61-1 over the UTF-8 bytes
+    assert(n == 97000680001266L)
+    val multi = "naïve über ∑ text"
+    assert(graft.pipeline.TextAnalysis.fingerprint(multi) == 1368040915499145783L)
+    assert(s2.sql(s"SELECT graft_fingerprint('$multi')").as[Long].head() == 1368040915499145783L)
   }
 }
