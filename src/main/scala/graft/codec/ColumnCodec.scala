@@ -218,11 +218,13 @@ object ColumnCodec {
     * differently) — callers fall back to a decode + re-encode.
     *
     * The contract that makes reuse sound: a body extracted here is exactly
-    * `Pipelines.textEncode(value)` for the value it encodes (or, in tables
-    * written with the since-removed speed-biased policy,
-    * `Pipelines.textEncodeFast(value)`), and both are deterministic — so
-    * [[encodeBwtBodies]] over extracted bodies yields the payload a fresh
-    * encode of the same row slice writes.
+    * `Pipelines.textEncode(value)` for the value it encodes (for html,
+    * `Pipelines.htmlEncode(value, rowText)`; in tables written before text
+    * slots, `textEncode(value)`; in tables written with the since-removed
+    * speed-biased policy, `Pipelines.textEncodeFast(value)`), and all are
+    * deterministic — so [[encodeBwtBodies]] over extracted bodies yields the
+    * payload a fresh encode of the same row slice writes (for tables
+    * written by the current encoder).
     */
   def extractBwtBodies(payload: Array[Byte]): Option[Array[Array[Byte]]] =
     (payload(0) & 0xFF) match {
@@ -246,6 +248,26 @@ object ColumnCodec {
         val n = readCount(rd)
         Some(Array.fill(n)(rd.readBytes(rd.readVarInt())))
       case _ => None
+    }
+
+  /** Decode an html column payload against its chunk's decoded `texts`
+    * (same slots, null for a null text): per-value bodies go through
+    * [[Pipelines.htmlDecode]], which splices text-slot bodies (tag 5) from
+    * their row's text; other codecs hold no such bodies and decode as
+    * [[decodeBinaryNullable]].
+    */
+  def decodeHtml(payload: Array[Byte], texts: Array[Array[Byte]]): Array[Array[Byte]] =
+    extractBwtBodies(payload) match {
+      case Some(bodies) =>
+        require(bodies.length == texts.length,
+          s"corrupt chunk: ${bodies.length} html values for ${texts.length} texts")
+        var i = 0
+        while (i < bodies.length) {
+          if (bodies(i) != null) bodies(i) = Pipelines.htmlDecode(bodies(i), texts(i))
+          i += 1
+        }
+        bodies
+      case None => decodeBinaryNullable(payload)
     }
 
   /** Entropy stage: wrap the chosen payload in order-0 Huffman when that

@@ -318,7 +318,7 @@ object Pipelines {
     out
   }
 
-  /** Raw (decoded) length of a [[textEncode]]/[[textEncodeFast]] payload,
+  /** Raw (decoded) length of a [[textEncode]]/[[textEncodeFast]]/[[htmlEncode]] payload,
     * WITHOUT decoding it — every tag's stream leads with enough structure
     * to recover the original length cheaply:
     *  - tag 0 (MTF+RLE): leading `varint(conceptualLength)`; raw = total-1
@@ -328,13 +328,16 @@ object Pipelines {
     *  - tag 2 (raw): the body length;
     *  - tag 3 (Huffman over MTF+RLE): the inner stream's leading varint,
     *    read via a bounded-prefix decompress (O(1) symbols, not O(n));
-    *  - tag 4 (Huffman over raw): the Huffman header's own length varint.
+    *  - tag 4 (Huffman over raw): the Huffman header's own length varint;
+    *  - tag 5 (text-slot html, [[htmlEncode]]): its leading raw-length varint.
     * This is what lets table compaction re-containerize stored per-value
     * bodies without re-running any BWT/SA work ([[graft.spark.EncodeJob]]).
     */
   def rawLenOf(enc: Array[Byte]): Long = {
     if (enc.isEmpty) return 0L
     (enc(0): Int) match {
+      case TextSlotTag =>
+        new Bytes.Reader(enc, 1).readVarInt().toLong // [[htmlEncode]]'s raw html length
       case 0 =>
         val total = new Bytes.Reader(enc, 1).readVarInt()
         if (total == 0) 0L else total - 1L
@@ -367,8 +370,177 @@ object Pipelines {
       case 1 => BwtCodec.decode(RleCodec.decode(RleCodec.deserialize(body)))
       case 3 => bwtMtfRleDecode(Huffman.decompress(body))
       case 4 => Huffman.decompress(body) // huffman-over-raw (outlier gate)
+      case TextSlotTag => throw new IllegalArgumentException(TextSlotNeedsText)
       case _ => body
     }
+  }
+
+  /** Body tag of an html value stored with text slots ([[htmlEncode]]). */
+  final val TextSlotTag = 5
+
+  /** The error a text-slot html body fails with when decoded without the
+    * text of its row.
+    */
+  final val TextSlotNeedsText =
+    "text-slot html body (tag 5) needs its row's text: decode it with " +
+      "Pipelines.htmlDecode, ColumnCodec.decodeHtml or " +
+      "graft_decode_column_binary(html.payload, text.payload)"
+
+  /** In the slotted stream, this byte is followed by `varint(k)`: `k = 0`
+    * is a literal marker byte, `k >= 1` is paragraph `k` of the row's text.
+    */
+  private final val SlotMarker = 1
+  private val MarkerByte = Array[Byte](SlotMarker.toByte)
+  /** Shorter paragraphs stay literal: a slot costs 2+ bytes. */
+  private final val MinSlotBytes = 8
+  /** The paragraph searches compare at most this many times the html's
+    * bytes: a text the html does not hold verbatim (each miss scans the
+    * rest of the html, and a near-miss at a position compares up to a
+    * paragraph) costs linear time, not paragraphs x html. On perfbench's
+    * bulk_load pages an html that holds all its text uses at most 1.02
+    * passes, and one whose every third paragraph differs from its text
+    * at most 7.7, so 8 keeps all their slots while a text the html does
+    * not hold adds at most 8 scans of it to the plain body's encode
+    * (BENCH/BASELINE.md, "Text-slot html bodies").
+    */
+  private final val SearchPasses = 8
+
+  /** Per-value html encoding against the row's `text` (nullable), for
+    * html that embeds its text, as crawl html does the text extracted from
+    * it. The text is split on `\n`; each paragraph of at least
+    * [[MinSlotBytes]] bytes is searched for in the html left to right from
+    * a cursor, and where found it is replaced by a reference (the marker
+    * byte and its 1-based index). A paragraph that is not found stays
+    * literal html, so an extraction that differs from the html costs ratio,
+    * never bytes; so do the paragraphs left once the searches have used up
+    * their [[SearchPasses]] budget. Layout: `5, varint(rawHtmlLen),
+    * textEncode(slotted)`. When nothing is slotted (or `text` is null) the
+    * body is exactly `textEncode(html)`.
+    */
+  def htmlEncode(html: Array[Byte], text: Array[Byte]): Array[Byte] = {
+    val slotted = if (text == null) null else slotHtml(html, text)
+    if (slotted == null) return textEncode(html)
+    val inner = textEncode(slotted)
+    val buf = new Bytes.Buf(inner.length + 6)
+    buf.writeByte(TextSlotTag)
+    buf.writeVarInt(html.length)
+    buf.writeBytes(inner)
+    buf.toArray
+  }
+
+  /** `html` with the paragraphs of `text` it holds as slots and literal
+    * marker bytes escaped; null when no paragraph is slotted.
+    */
+  private def slotHtml(html: Array[Byte], text: Array[Byte]): Array[Byte] = {
+    var buf: Bytes.Buf = null
+    var cursor = 0 // html before it is written (or slotted)
+    var k = 0
+    var start = 0
+    var budget = SearchPasses.toLong * html.length // bytes compared
+    while (start <= text.length) {
+      var end = start
+      while (end < text.length && text(end) != '\n') end += 1
+      k += 1
+      val n = end - start
+      if (n >= MinSlotBytes) {
+        // first html position >= cursor holding the paragraph, or -1
+        var at = -1
+        var i = cursor
+        val last = html.length - n
+        while (at < 0 && i <= last && budget > 0) {
+          var j = 0
+          while (j < n && html(i + j) == text(start + j)) j += 1
+          budget -= j + 1
+          if (j == n) at = i else i += 1
+        }
+        if (at >= 0) {
+          if (buf == null) buf = new Bytes.Buf(html.length / 2 + 16)
+          writeEscaped(buf, html, cursor, at)
+          buf.writeByte(SlotMarker)
+          buf.writeVarInt(k)
+          cursor = at + n
+        }
+      }
+      start = end + 1
+    }
+    if (buf == null) return null
+    writeEscaped(buf, html, cursor, html.length)
+    buf.toArray
+  }
+
+  private def writeEscaped(buf: Bytes.Buf, html: Array[Byte], from: Int, until: Int): Unit = {
+    var run = from
+    var i = from
+    while (i < until) {
+      if (html(i) == SlotMarker) {
+        buf.writeBytes(html, run, i + 1 - run) // the marker, then k = 0
+        buf.writeByte(0)
+        run = i + 1
+      }
+      i += 1
+    }
+    buf.writeBytes(html, run, until - run)
+  }
+
+  /** Inverse of [[htmlEncode]]: `text` is the row's decoded text (null
+    * for a null text). Plain bodies (tags 0-4) decode as [[textDecode]];
+    * a text-slot body splices the referenced paragraphs back in. A corrupt
+    * body (a slot past the paragraph count, a truncated slot varint, a
+    * spliced length other than the stored one) throws.
+    */
+  def htmlDecode(body: Array[Byte], text: Array[Byte]): Array[Byte] = {
+    if (body.isEmpty || body(0) != TextSlotTag) return textDecode(body)
+    require(text != null, "corrupt text-slot html body: its row's text is null")
+    val rd = new Bytes.Reader(body, 1)
+    val rawLen = rd.readVarLong()
+    require(rawLen >= 0 && rawLen <= ColumnCodec.MaxDecodedValueBytes,
+      s"corrupt text-slot html body: declared length $rawLen")
+    val slotted = textDecode(java.util.Arrays.copyOfRange(body, rd.pos, body.length))
+    // paragraph k spans text(starts(k - 1) until ends(k - 1))
+    val starts = scala.collection.mutable.ArrayBuilder.make[Int]
+    starts += 0
+    var t = 0
+    while (t < text.length) { if (text(t) == '\n') starts += t + 1; t += 1 }
+    val paraStarts = starts.result()
+    val out = new Array[Byte](rawLen.toInt)
+    var w = 0
+    def put(src: Array[Byte], from: Int, n: Int): Unit = {
+      require(n <= out.length - w, s"corrupt text-slot html body: longer than $rawLen bytes")
+      System.arraycopy(src, from, out, w, n)
+      w += n
+    }
+    var i = 0
+    while (i < slotted.length) {
+      var j = i
+      while (j < slotted.length && slotted(j) != SlotMarker) j += 1
+      put(slotted, i, j - i)
+      i = j
+      if (i < slotted.length) {
+        i += 1 // the marker
+        var k = 0L
+        var shift = 0
+        var more = true
+        while (more) {
+          require(i < slotted.length, "corrupt text-slot html body: truncated slot varint")
+          require(shift < 35, "corrupt text-slot html body: malformed slot varint")
+          val v = slotted(i) & 0xFF
+          i += 1
+          k |= (v & 0x7FL) << shift
+          shift += 7
+          more = (v & 0x80) != 0
+        }
+        if (k == 0) put(MarkerByte, 0, 1)
+        else {
+          require(k <= paraStarts.length,
+            s"corrupt text-slot html body: slot $k of ${paraStarts.length} paragraphs")
+          val ps = paraStarts(k.toInt - 1)
+          val pe = if (k == paraStarts.length) text.length else paraStarts(k.toInt) - 1
+          put(text, ps, pe - ps)
+        }
+      }
+    }
+    require(w == out.length, s"corrupt text-slot html body: spliced $w bytes, declared $rawLen")
+    out
   }
 
   /** Reference costing of the canonical compress pipelines for the

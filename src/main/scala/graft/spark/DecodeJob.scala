@@ -47,8 +47,8 @@ object DecodeJob {
   ): Iterator[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte])] = {
     val urls = ColumnCodec.decodeBinary(c.url.payload)
     val tss = ColumnCodec.decodeLong(c.warc_ts.payload)
-    val htmls = ColumnCodec.decodeBinaryNullable(c.html.payload)
     val texts = ColumnCodec.decodeBinaryNullable(c.text.payload)
+    val htmls = ColumnCodec.decodeHtml(c.html.payload, texts) // splices text slots
     val langs = ColumnCodec.decodeBinaryNullable(c.lang.payload)
     urls.indices.iterator.map { i =>
       (urls(i), tss(i), htmls(i), texts(i), langs(i))
@@ -206,7 +206,10 @@ object DecodeJob {
     val valid = Set("warc_ts", "html", "text", "lang")
     require(cols.nonEmpty && cols.forall(valid), s"cols must be among $valid: $cols")
     val wantTs = cols.contains("warc_ts")
-    val strCols = cols.filterNot(_ == "warc_ts")
+    // html's text slots decode from the row's text, so html reads the text
+    // leaf too
+    val strCols = cols.filterNot(_ == "warc_ts") ++
+      (if (cols.contains("html") && !cols.contains("text")) Seq("text") else Nil)
     // one (source column -> output name) list drives both the projection
     // and the empty-table schema, so the two shapes cannot diverge
     val outCols: Seq[(String, String)] =
@@ -230,9 +233,11 @@ object DecodeJob {
     * corpus" path a training pipeline actually runs. Parquet nested-schema
     * pruning means the unrequested payload leaves (e.g. html, typically
     * most of the bytes) are never read from storage, and their decode
-    * kernels never run. Output schema: `url` plus `cols` in the given
-    * order (`warc_ts` as microseconds-long; others as string, null
-    * preserved). No exchange, like [[run]].
+    * kernels never run. The one exception: `html` also reads and decodes
+    * the `text` leaf, which its text slots are spliced from, without
+    * returning it. Output schema: `url` plus `cols` in the given order
+    * (`warc_ts` as microseconds-long; others as string, null preserved).
+    * No exchange, like [[run]].
     */
   def decodeProjected(spark: SparkSession, outDir: String, cols0: Seq[String]): org.apache.spark.sql.DataFrame = {
     val cols = cols0.distinct
@@ -250,7 +255,12 @@ object DecodeJob {
       it.flatMap { r =>
         val urls = ColumnCodec.decodeBinary(r.getAs[Array[Byte]]("url_p"))
         val tss = if (wantTs) ColumnCodec.decodeLong(r.getAs[Array[Byte]]("ts_p")) else null
-        val strs = strCols.map(c => ColumnCodec.decodeBinaryNullable(r.getAs[Array[Byte]](s"${c}_p")))
+        lazy val texts = ColumnCodec.decodeBinaryNullable(r.getAs[Array[Byte]]("text_p"))
+        val strs = strCols.map {
+          case "html" => ColumnCodec.decodeHtml(r.getAs[Array[Byte]]("html_p"), texts)
+          case "text" => texts
+          case c => ColumnCodec.decodeBinaryNullable(r.getAs[Array[Byte]](s"${c}_p"))
+        }
         urls.indices.iterator.map { i =>
           Row.fromSeq(urls(i) +: ((if (wantTs) Seq(tss(i)) else Nil) ++ strs.map(_(i))))
         }
@@ -263,20 +273,24 @@ object DecodeJob {
 
   /** Decode a single column (positional within (part_id, chunk_id)) —
     * the column-pruned read path: parquet nested-schema pruning reads only
-    * the `<colName>.payload` leaf, never the other four payload columns.
+    * the `<colName>.payload` leaf, never the other four payload columns
+    * (`html` also reads the `text` leaf its text slots are spliced from).
     */
   def decodeColumn(spark: SparkSession, outDir: String, colName: String): Dataset[(Int, Int, Int, Array[Byte])] = {
     import spark.implicits._
     EncodeJob.requireNoPendingSwap(spark, outDir)
     if (!EncodeJob.hasCommittedChunks(spark, outDir))
       return spark.emptyDataset[(Int, Int, Int, Array[Byte])]
+    val isHtml = colName == "html"
     TableScan.chunks(spark, outDir)
-      .select($"part_id", $"chunk_id", col(s"$colName.payload").as("payload"))
-      .as[(Int, Int, Array[Byte])]
-      .flatMap { case (pid, cid, payload) =>
-        ColumnCodec.decodeBinaryNullable(payload).iterator.zipWithIndex.map { case (v, i) =>
-          (pid, cid, i, v)
-        }
+      .select($"part_id", $"chunk_id", col(s"$colName.payload").as("payload"),
+        if (isHtml) $"text.payload".as("text") else lit(null).cast("binary").as("text"))
+      .as[(Int, Int, Array[Byte], Array[Byte])]
+      .flatMap { case (pid, cid, payload, text) =>
+        val values =
+          if (isHtml) ColumnCodec.decodeHtml(payload, ColumnCodec.decodeBinaryNullable(text))
+          else ColumnCodec.decodeBinaryNullable(payload)
+        values.iterator.zipWithIndex.map { case (v, i) => (pid, cid, i, v) }
       }
   }
 }

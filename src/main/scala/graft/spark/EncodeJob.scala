@@ -581,6 +581,10 @@ object EncodeJob {
   def compactTmpPath(outDir: String) = chunksPath(outDir) + "_compact_tmp"
   private def swapMarkerPath(outDir: String) =
     new org.apache.hadoop.fs.Path(compactTmpPath(outDir), "_SWAP")
+  // the complete `_lineage` a staged swap installs
+  private def stagedLineageTablePath(outDir: String) = compactTmpPath(outDir) + "/_lineage_next"
+  // only in the staging dir of a swap marked by an older binary: its
+  // kernel records alone
   private def stagedLineagePath(outDir: String) = compactTmpPath(outDir) + "/_lineage"
 
   private def chunksFs(spark: SparkSession, outDir: String) =
@@ -625,11 +629,12 @@ object EncodeJob {
     *    keep task memory at O(chunkRows) even for an oversized partition.
     *
     * Crash safety (write-ahead staging, never in-place): new chunks are
-    * written to `chunks_compact_tmp`, with the lineage records the kernel
-    * emitted for them; only after both are durable is a `_SWAP` marker
+    * written to `chunks_compact_tmp`, with the table's new `_lineage`
+    * (the kernel's records for the rewritten partitions, the others' rows
+    * carried over); only after both are durable is a `_SWAP` marker
     * (listing the part ids) created and the partition directories swapped
-    * one rename at a time, then the staged lineage replaces the
-    * partitions' rows and the staging dir is removed. A crash BEFORE the
+    * one rename at a time, then the staged lineage is renamed in and the
+    * staging dir is removed. A crash BEFORE the
     * marker leaves the live table untouched (stale staging is discarded on
     * the next write); a crash AFTER it is rolled forward — the marker
     * proves the staging dir is complete — by
@@ -676,12 +681,13 @@ object EncodeJob {
   /** The stage -> mark -> swap commit of [[compact]], [[delete]] and
     * [[upsert]]: `rewritten` (the new content of `parts`, built around the
     * kernel's per-part lineage callback) goes to the staging dir, never
-    * over live dirs, and the lineage records the kernel emitted for it go
-    * to the staging dir's `_lineage`. A part with no staged output was
-    * emptied and is recorded as a drop (refused unless `mayDrop`). The
+    * over live dirs. A part with no staged output was emptied and is
+    * recorded as a drop (refused unless `mayDrop`). The complete
+    * replacement `_lineage` (the other parts' rows folded, the kernel's
+    * records, a tombstone per drop) is staged next to the chunks. The
     * `_SWAP` marker then commits chunks and lineage together (roll-forward
-    * from there on) and [[finishSwap]] applies them. `phase` sees
-    * "staged", "marked", "swapped".
+    * from there on) and [[finishSwap]] renames them in. Returns the
+    * swapped parts' records. `phase` sees "staged", "marked", "swapped".
     */
   private def stageAndSwap(
       spark: SparkSession,
@@ -695,16 +701,16 @@ object EncodeJob {
     val tmp = new org.apache.hadoop.fs.Path(compactTmpPath(outDir))
     if (fs.exists(tmp)) fs.delete(tmp, true)
     val records = writeChunks(spark, compactTmpPath(outDir), SaveMode.Overwrite)(rewritten)
-    if (records.nonEmpty)
-      DriverParquet.write(hadoopConf(spark), new org.apache.hadoop.fs.Path(stagedLineagePath(outDir)), records)
-    phase("staged")
     val actions = parts.map(pid =>
       (pid, !fs.exists(new org.apache.hadoop.fs.Path(tmp, s"part_id=$pid"))))
     for ((pid, drop) <- actions)
       require(mayDrop || !drop, s"staged output missing for part $pid — refusing to swap")
+    val swapped = (records ++ tombstones(actions)).sortBy(_.part_id)
+    stageLineageTable(spark, outDir, swapped)
+    phase("staged")
     writeSwapMarker(fs, outDir, actions)
     phase("marked")
-    val swapped = finishSwap(spark, outDir, actions)
+    finishSwap(spark, outDir, actions)
     phase("swapped")
     swapped
   }
@@ -1219,36 +1225,32 @@ object EncodeJob {
   }
 
   /** Swap staged partition dirs into the live table (or remove partitions
-    * a delete emptied), replace the affected lineage rows, and remove the
+    * a delete emptied), install the staged `_lineage`, and remove the
     * staging dir — the shared tail of [[stageAndSwap]] and
     * [[completePendingCompactSwap]]. One order for every swap: marker ->
-    * renames -> lineage -> staging dir (which holds the marker). Lineage
-    * comes from the staged records the kernel emitted (`_lineage` in the
-    * staging dir, committed by the marker), plus a zero-row tombstone per
-    * dropped part; nothing is recomputed. Idempotent: a part already
-    * swapped (its staged dir gone) or already dropped is skipped, and the
-    * staged records replace the parts' rows again on a re-run.
+    * renames -> lineage rename -> staging dir (which holds the marker).
+    * Idempotent: a part already swapped (its staged dir gone) or already
+    * dropped is skipped, and a crash between the lineage delete and rename
+    * leaves the staged table for the re-run to rename.
     *
-    * A marker written by an older binary has no staged lineage: it rolls
-    * forward with tombstones for its drops, and the swapped parts keep
-    * their existing `_lineage` rows. Those count the same rows (a swap
-    * changes layout, not content) but their chunk metrics are stale until
-    * the next rewrite of those parts.
+    * A marker written by an older binary has no staged lineage table: its
+    * table is staged here, from its staged kernel records (if any) and a
+    * tombstone per drop; with no staged records the swapped parts keep
+    * their existing `_lineage` rows, which count the same rows (a swap
+    * changes layout, not content) with chunk metrics stale until the next
+    * rewrite of those parts.
     *
     * Reader-outage window: readers fail fast while the `_SWAP` marker
-    * exists. After the O(parts) renames, the marker stays only through the
-    * lineage replace, which is driver-side file I/O (a read, one file
-    * written and renamed in) rather than a Spark job, so a healthy
-    * in-stream compaction cycle blocks concurrent readers for about as
-    * long as the renames themselves. Keeping the marker until the lineage
-    * is durable makes "repair me first" hold until the drop tombstones,
-    * which resume safety depends on, are written.
+    * exists, which is O(parts) renames plus one lineage delete and rename:
+    * everything the swap commits was written before the marker. Keeping
+    * the marker until the lineage is in place makes "repair me first" hold
+    * until the drop tombstones, which resume safety depends on, are live.
     */
   private def finishSwap(
       spark: SparkSession,
       outDir: String,
       actions: Seq[(Int, Boolean)] // (part_id, dropPartition)
-  ): Seq[LineageRecord] = {
+  ): Unit = {
     val fs = chunksFs(spark, outDir)
     actions.foreach { case (pid, drop) =>
       val staged = new org.apache.hadoop.fs.Path(compactTmpPath(outDir), s"part_id=$pid")
@@ -1261,61 +1263,55 @@ object EncodeJob {
         require(fs.rename(staged, live), s"failed to swap in compacted $live")
       }
     }
-    // a dropped (fully-deleted) partition keeps a zero-row "done" lineage
-    // TOMBSTONE: donePartIds still lists it, so a later resume-style run()
-    // with the original input does NOT re-encode the partition and
-    // resurrect taken-down urls — deletion durability must not depend on
-    // whether a url shared its partition with surviving rows. Tombstones
-    // are strict: only removing the table directory starts a new corpus
-    // (new data still lands via append's wiped-table path).
-    val tombstones = actions.collect { case (pid, true) =>
-      LineageRecord(pid, 0L, 0L, 0L, 0L, "", 0L, "done")
+    val staged = new org.apache.hadoop.fs.Path(stagedLineageTablePath(outDir))
+    val lp = new org.apache.hadoop.fs.Path(lineagePath(outDir))
+    val lfs = lp.getFileSystem(hadoopConf(spark))
+    // staged only once its file is committed: a crash inside the staging
+    // write leaves the directory holding a hidden temp file alone
+    if (DriverParquet.dataFiles(hadoopConf(spark), staged).isEmpty) {
+      if (lfs.exists(staged)) lfs.delete(staged, true)
+      stageLineageTable(spark, outDir,
+        readLineage(spark, stagedLineagePath(outDir)) ++ tombstones(actions))
     }
-    val records = (readLineage(spark, stagedLineagePath(outDir)) ++ tombstones).sortBy(_.part_id)
-    replaceLineageRows(spark, outDir, records.map(_.part_id).toSet, records)
+    if (lfs.exists(lp)) lfs.delete(lp, true)
+    require(lfs.rename(staged, lp), s"failed to install the staged lineage at $lp")
     fs.delete(new org.apache.hadoop.fs.Path(compactTmpPath(outDir)), true)
-    records
   }
 
-  /** REPLACE `parts`' lineage rows (append would double the metrics);
-    * other partitions' rows are carried over untouched. Write-then-swap so
-    * a crash never leaves the lineage table empty: if a previous swap
-    * crashed between the delete and the rename, the intact `_swap_tmp` IS
-    * the newest complete table — roll it forward before reading, or the
-    * kept rows of every non-compacted partition would be lost for good.
+  /** A dropped (fully-deleted) partition keeps a zero-row "done" lineage
+    * TOMBSTONE: donePartIds still lists it, so a later resume-style run()
+    * with the original input does NOT re-encode the partition and
+    * resurrect taken-down urls — deletion durability must not depend on
+    * whether a url shared its partition with surviving rows. Tombstones
+    * are strict: only removing the table directory starts a new corpus
+    * (new data still lands via append's wiped-table path).
     */
-  private def replaceLineageRows(
-      spark: SparkSession,
-      outDir: String,
-      parts: Set[Int],
-      records: Seq[LineageRecord]
-  ): Unit = {
+  private def tombstones(actions: Seq[(Int, Boolean)]): Seq[LineageRecord] =
+    actions.collect { case (pid, true) => LineageRecord(pid, 0L, 0L, 0L, 0L, "", 0L, "done") }
+
+  /** Stage the whole `_lineage` a swap installs: `records` REPLACE their
+    * parts' rows (appending would double the metrics); the other parts'
+    * rows are carried over folded. Folding superseded per-append rows
+    * while the table is rewritten anyway keeps `_lineage` O(partitions):
+    * append (batch and per-micro-batch streaming) adds one row per touched
+    * part per batch, and the in-stream compaction hook reaches this pass
+    * every `compactEveryBatches` batches. A `_lineage_swap_tmp` left by an
+    * older binary's crash between its lineage delete and rename IS the
+    * newest complete table: it is rolled forward before reading, or the
+    * rows of every part outside `records` would be lost for good.
+    */
+  private def stageLineageTable(spark: SparkSession, outDir: String, records: Seq[LineageRecord]): Unit = {
     val lp = new org.apache.hadoop.fs.Path(lineagePath(outDir))
     val tmpPath = lineagePath(outDir) + "_swap_tmp"
-    val tp = new org.apache.hadoop.fs.Path(tmpPath)
     val lfs = lp.getFileSystem(hadoopConf(spark))
     if (!lfs.exists(lp) && hasCommittedFileUnder(spark, tmpPath)) {
-      require(lfs.rename(tp, lp), s"failed to roll forward lineage swap at $tmpPath")
+      require(lfs.rename(new org.apache.hadoop.fs.Path(tmpPath), lp),
+        s"failed to roll forward lineage swap at $tmpPath")
     }
-    // fold superseded per-append rows while the table is being rewritten
-    // anyway: append (batch and per-micro-batch streaming) APPENDS one row
-    // per touched part per batch, so after thousands of micro-batches the
-    // `_lineage` reads in donePartIds/append scan an ever-growing table —
-    // folding here keeps it O(partitions) across any stream length (the
-    // in-stream compaction hook reaches this pass every
-    // `compactEveryBatches` batches)
-    val folded = foldLineage(
-      readLineage(spark, lineagePath(outDir)).filterNot(r => parts.contains(r.part_id)))
-    val newLineage = folded ++ records
-    if (newLineage.nonEmpty) {
-      if (lfs.exists(tp)) lfs.delete(tp, true)
-      DriverParquet.write(hadoopConf(spark), tp, newLineage)
-      lfs.delete(lp, true)
-      lfs.rename(tp, lp)
-    } else if (lfs.exists(lp)) {
-      // a delete emptied every partition: stale rows must not survive
-      lfs.delete(lp, true)
-    }
+    val parts = records.map(_.part_id).toSet
+    val kept = foldLineage(readLineage(spark, lineagePath(outDir)).filterNot(r => parts(r.part_id)))
+    DriverParquet.write(hadoopConf(spark),
+      new org.apache.hadoop.fs.Path(stagedLineageTablePath(outDir)), kept ++ records)
   }
 
   /** One row per part: the part's rows summed (rows, chunks, bytes),
@@ -1341,10 +1337,11 @@ object EncodeJob {
     * per-page pre-encoded tuples (the exact input the
     * streaming kernel consumes). text/html bodies are reused as stored
     * ([[ColumnCodec.extractBwtBodies]] + the O(1)-ish
-    * [[graft.codec.Pipelines.rawLenOf]] header recovery) unless the stored
-    * codec is not per-value (chunk-level Dict/Rle/Fsst/Raw, found only in
-    * tables written before the raw-row path was removed), which takes the
-    * full decode + per-value re-encode.
+    * [[graft.codec.Pipelines.rawLenOf]] header recovery), plain and
+    * text-slot html bodies alike, unless the stored codec is not per-value
+    * (chunk-level Dict/Rle/Fsst/Raw, found only in tables written before
+    * the raw-row path was removed), which takes the full decode and the
+    * pre-encode of a fresh encode ([[preEncodeValue]], [[preEncodeHtml]]).
     */
   private def compactPreRows(
       c: (Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Array[Byte])
@@ -1353,22 +1350,18 @@ object EncodeJob {
     val urls = ColumnCodec.decodeBinary(url)
     val tss = ColumnCodec.decodeLong(warcTs)
     val langs = ColumnCodec.decodeBinaryNullable(lang)
-    def preCol(payload: Array[Byte]): Array[Array[Byte]] =
+    def preCol(payload: Array[Byte])(reEncoded: => Array[Array[Byte]]): Array[Array[Byte]] =
       ColumnCodec.extractBwtBodies(payload) match {
         case Some(bodies) =>
-          bodies.map { b =>
-            if (b == null) null
-            else {
-              val buf = new graft.codec.Bytes.Buf(b.length + 5)
-              buf.writeVarLong(graft.codec.Pipelines.rawLenOf(b))
-              buf.writeBytes(b)
-              buf.toArray
-            }
-          }
-        case None => ColumnCodec.decodeBinaryNullable(payload).map(preEncodeValue)
+          bodies.map(b => if (b == null) null else withRawLen(graft.codec.Pipelines.rawLenOf(b), b))
+        case None => reEncoded
       }
-    val htmlPre = preCol(html)
-    val textPre = preCol(text)
+    val htmlPre = preCol(html) {
+      val texts = ColumnCodec.decodeBinaryNullable(text)
+      val htmls = ColumnCodec.decodeBinaryNullable(html)
+      htmls.indices.map(i => preEncodeHtml(htmls(i), texts(i))).toArray
+    }
+    val textPre = preCol(text)(ColumnCodec.decodeBinaryNullable(text).map(preEncodeValue))
     // stored bytes/micros feed the kernel directly — the former
     // String/Timestamp round-trip existed only to match the old row shape
     urls.indices.iterator.map { i =>
@@ -1387,7 +1380,9 @@ object EncodeJob {
     * [[upsert]]: pages-with-part_id rows in, EncodedChunk stream out (chunk
     * ids start at 0 per part; [[append]] shifts them afterwards).
     *  - narrow pre-encode of the two heavy columns BEFORE the exchange:
-    *    each text/html value becomes varint(rawLen) ++ textEncode(bytes).
+    *    each text value becomes varint(rawLen) ++ textEncode(bytes), each
+    *    html value varint(rawLen) ++ htmlEncode(bytes, row's text bytes),
+    *    so the shuffle carries html with its text paragraphs as slots.
     *    The scan hands the kernel RAW UTF-8 bytes and epoch-micros
     *    (cast/unix_micros are codegen'd) — cast("binary") of a parquet
     *    string column is exactly its UTF-8 bytes, so no value is decoded
@@ -1429,7 +1424,7 @@ object EncodeJob {
       .as[KernelRow]
       .mapPartitions { it =>
         it.map { case (url, ts, html, text, lang, pid) =>
-          (url, ts, preEncodeValue(html), preEncodeValue(text), lang, pid)
+          (url, ts, preEncodeHtml(html, text), preEncodeValue(text), lang, pid)
         }
       }
   }
@@ -1575,13 +1570,20 @@ object EncodeJob {
       .select("url", "warc_ts", "html", "text", "lang").as[Page]
   }
 
-  /** Map-side pre-encoding of one value: varint(rawLen) ++ textEncode. */
-  private[spark] def preEncodeValue(raw: Array[Byte]): Array[Byte] = {
-    if (raw == null) return null
-    val enc = graft.codec.Pipelines.textEncode(raw)
-    val buf = new graft.codec.Bytes.Buf(enc.length + 5)
-    buf.writeVarInt(raw.length)
-    buf.writeBytes(enc)
+  /** Map-side pre-encoding of one text value: varint(rawLen) ++ textEncode. */
+  private[spark] def preEncodeValue(raw: Array[Byte]): Array[Byte] =
+    if (raw == null) null else withRawLen(raw.length, graft.codec.Pipelines.textEncode(raw))
+
+  /** Map-side pre-encoding of one html value against its row's text bytes
+    * (nullable): varint(rawLen) ++ htmlEncode.
+    */
+  private[spark] def preEncodeHtml(html: Array[Byte], text: Array[Byte]): Array[Byte] =
+    if (html == null) null else withRawLen(html.length, graft.codec.Pipelines.htmlEncode(html, text))
+
+  private def withRawLen(rawLen: Long, body: Array[Byte]): Array[Byte] = {
+    val buf = new graft.codec.Bytes.Buf(body.length + 5)
+    buf.writeVarLong(rawLen)
+    buf.writeBytes(body)
     buf.toArray
   }
 

@@ -59,12 +59,22 @@ object GraftFunctions {
   }
 
   /** Binary-typed twin of [[decodeColumn]] for payload columns whose
-    * values are NOT UTF-8 text (e.g. `html.payload`) — laundering raw
-    * bytes through UTF8String would silently corrupt them.
+    * values are NOT UTF-8 text — laundering raw bytes through UTF8String
+    * would silently corrupt them. An html payload holding text-slot
+    * bodies fails with [[graft.codec.Pipelines.TextSlotNeedsText]]: it
+    * needs [[decodeHtmlColumn]].
     */
   def decodeColumnBinary(payload: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData =
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
       graft.codec.ColumnCodec.decodeBinaryNullable(payload))
+
+  /** The two-argument `graft_decode_column_binary(html.payload,
+    * text.payload)`: a chunk's html values, text slots spliced from the
+    * same chunk's texts.
+    */
+  def decodeHtmlColumn(html: Array[Byte], text: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData =
+    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
+      graft.codec.ColumnCodec.decodeHtml(html, graft.codec.ColumnCodec.decodeBinaryNullable(text)))
 
   /** FM-index locate: 1-based byte positions of every occurrence,
     * row-ordered as the reference returns them
@@ -162,6 +172,24 @@ object GraftFunctions {
       copy(child = newChild)
   }
 
+  case class GraftDecodeHtmlColumn(left: Expression, right: Expression)
+      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with Serializable {
+    override def dataType: DataType =
+      org.apache.spark.sql.types.ArrayType(BinaryType, containsNull = true)
+    override def prettyName: String = "graft_decode_column_binary"
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (left.dataType == BinaryType && right.dataType == BinaryType)
+        TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"graft_decode_column_binary(html, text) expects (binary, binary), got (${left.dataType}, ${right.dataType})")
+    override protected def nullSafeEval(h: Any, t: Any): Any =
+      decodeHtmlColumn(h.asInstanceOf[Array[Byte]], t.asInstanceOf[Array[Byte]])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (h, t) => s"graft.sql.GraftFunctions.decodeHtmlColumn($h, $t)")
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(left = l, right = r)
+  }
+
   case class GraftFmCount(left: Expression, right: Expression)
       extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with Serializable {
     override def dataType: DataType = LongType
@@ -248,7 +276,8 @@ object GraftFunctions {
       "graft_fm_count" -> (args => GraftFmCount(args(0), args(1))),
       "graft_fm_locate" -> (args => GraftFmLocate(args(0), args(1))),
       "graft_decode_column" -> (args => GraftDecodeColumn(args.head)),
-      "graft_decode_column_binary" -> (args => GraftDecodeColumnBinary(args.head)),
+      "graft_decode_column_binary" -> (args =>
+        if (args.size == 2) GraftDecodeHtmlColumn(args(0), args(1)) else GraftDecodeColumnBinary(args.head)),
       "graft_sample_residue" -> (args => GraftSampleResidue(args(0), args(1), args(2)))
     ).map { case (name, builder) =>
       (FunctionIdentifier(name), new ExpressionInfo("graft.sql.GraftFunctions", name), builder)

@@ -109,6 +109,99 @@ class ColumnCodecSpec extends AnyFunSuite {
     assert(base(ColumnCodec.encodeLong(narrow)) == "for_bitpack")
   }
 
+  test("text-slot html: htmlDecode(htmlEncode(h, t), t) == h for any html and text") {
+    val rnd = new scala.util.Random(61)
+    val words = Array("alpha", "beta", "über", "naïve", "中文", "тест", "\u0001", "data", "<b>", "x")
+    def para(): String = Seq.fill(1 + rnd.nextInt(8))(words(rnd.nextInt(words.length))).mkString(" ")
+    def b(s: String): Array[Byte] = s.getBytes(UTF_8)
+    var withSlots = 0
+    var plain = 0
+    (0 until 400).foreach { c =>
+      // empty text, one paragraph without '\n', or several split by '\n'
+      // or "\r\n" (then every paragraph but the last ends in '\r')
+      val paras = IndexedSeq.fill(rnd.nextInt(6))(para())
+      val text = b(paras.mkString(if (c % 3 == 0) "\r\n" else "\n"))
+      val out = new Bytes.Buf()
+      out.writeBytes(b("<html>\u0001<body>"))
+      (0 until rnd.nextInt(9)).foreach { _ =>
+        val p = b(if (paras.isEmpty) para() else paras(rnd.nextInt(paras.size)))
+        rnd.nextInt(6) match {
+          case 0 => out.writeBytes(b("<p>")); out.writeBytes(p); out.writeBytes(b("</p>"))
+          case 1 => out.writeBytes(p); out.writeBytes(p) // repeated
+          case 2 => // overlapping: a suffix of one paragraph runs into another
+            out.writeBytes(p, p.length / 2, p.length - p.length / 2)
+            out.writeBytes(b(if (paras.isEmpty) para() else paras(rnd.nextInt(paras.size))))
+          case 3 => out.writeBytes(text) // the whole text, separators included
+          case 4 => out.writeBytes(Array.fill(rnd.nextInt(12))(rnd.nextInt(256).toByte))
+          case _ => out.writeByte(1); out.writeBytes(p.reverse)
+        }
+      }
+      val html = out.toArray
+      val enc = Pipelines.htmlEncode(html, text)
+      assert(Pipelines.htmlDecode(enc, text).sameElements(html), s"case $c")
+      assert(Pipelines.rawLenOf(enc) == html.length.toLong, s"case $c")
+      if (enc.head == Pipelines.TextSlotTag) withSlots += 1
+      else {
+        plain += 1
+        assert(enc.sameElements(Pipelines.textEncode(html)), s"case $c: no slot must be textEncode")
+      }
+      // a null text slots nothing
+      val noText = Pipelines.htmlEncode(html, null)
+      assert(noText.sameElements(Pipelines.textEncode(html)))
+      assert(Pipelines.htmlDecode(noText, null).sameElements(html))
+    }
+    assert(withSlots > 100 && plain > 20, s"$withSlots slotted, $plain plain")
+    // null html and null text slots in one column
+    val html = b("<p>a paragraph of the page</p>")
+    val text = b("a paragraph of the page")
+    val col = ColumnCodec.encodeBwtBodies(
+      Array(Pipelines.htmlEncode(html, text), null, Pipelines.htmlEncode(html, null)))
+    assert(ColumnCodec.decodeHtml(col, Array(text, text, null)).map(Option(_).map(_.toSeq)).toSeq ==
+      Seq(Some(html.toSeq), None, Some(html.toSeq)))
+  }
+
+  test("text-slot html: paragraph searches stop after a budget of html passes") {
+    // 4,000 paragraphs the html does not hold, each miss a scan of the
+    // whole html, then one it ends with: past the budget the last one is
+    // not searched, so the body is plain
+    val html = ("<p>" + "lorem ipsum " * 2000 + "the final paragraph</p>").getBytes(UTF_8)
+    val misses = (0 until 4000).map(i => f"absent paragraph $i%05d")
+    val text = (misses :+ "the final paragraph").mkString("\n").getBytes(UTF_8)
+    val enc = Pipelines.htmlEncode(html, text)
+    assert(enc.sameElements(Pipelines.textEncode(html)))
+    // within the budget the same paragraph is slotted
+    val near = (misses.take(3) :+ "the final paragraph").mkString("\n").getBytes(UTF_8)
+    assert(Pipelines.htmlEncode(html, near).head == Pipelines.TextSlotTag)
+    assert(Pipelines.htmlDecode(Pipelines.htmlEncode(html, near), near).sameElements(html))
+
+    // near-misses: a run of one byte in the html and a paragraph of the
+    // same run ending in another byte compare up to a paragraph at every
+    // position (4e10 byte compares here without the budget); the budget
+    // counts compared bytes, so the miss stops after 8 html lengths
+    val run = Array.fill[Byte](400000)('a')
+    val nearMiss = (new String(run, 0, 200000, UTF_8) + "b\n" + "a" * 100).getBytes(UTF_8)
+    val t0 = System.nanoTime()
+    val runEnc = Pipelines.htmlEncode(run, nearMiss)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 5.0, f"near-miss search took $secs%.1f s")
+    assert(runEnc.sameElements(Pipelines.textEncode(run)))
+  }
+
+  test("text-slot html column: at most 0.6x the plain-body column on PagesGen pages, decode bit-identical") {
+    val pages = (0L until 48L).map(i => graft.spark.PagesGen.page(7L, i, 20, hostSkew = true))
+    val htmls = pages.map(_.html).toArray
+    val texts = pages.map(_.text.getBytes(UTF_8)).toArray
+    val plain = ColumnCodec.encodeBwtBodies(htmls.map(Pipelines.textEncode))
+    val slotted = ColumnCodec.encodeBwtBodies(htmls.indices.map(i => Pipelines.htmlEncode(htmls(i), texts(i))).toArray)
+    val textCol = ColumnCodec.encodeBwtBodies(texts.map(Pipelines.textEncode))
+    val raw = (htmls.map(_.length.toLong).sum + texts.map(_.length.toLong).sum).toDouble
+    info(f"html column ${slotted.length.toDouble / plain.length}%.4f of the plain-body encode; " +
+      f"text + html ${(textCol.length + plain.length) / raw}%.4f -> ${(textCol.length + slotted.length) / raw}%.4f of raw")
+    assert(slotted.length <= 0.6 * plain.length, s"${slotted.length} vs plain ${plain.length}")
+    val back = ColumnCodec.decodeHtml(slotted, texts)
+    assert(back.length == htmls.length && htmls.indices.forall(i => back(i).sameElements(htmls(i))))
+  }
+
   test("fsst encodes repetitive strings smaller than raw") {
     val vals = Array.fill(300)(bytes("https://host-42.example.com/path/to/page"))
     val fsst = ColumnCodec.encodeFsst(vals)

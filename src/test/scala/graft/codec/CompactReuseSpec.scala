@@ -71,6 +71,12 @@ class CompactReuseSpec extends AnyFunSuite {
     val noise = Array.fill(1500)(rnd.nextInt(256).toByte)
     assert(Pipelines.textEncode(noise).head == 2)
     assert(Pipelines.textEncodeFast(v).head == 4)
+    // tag 5: a text-slot html body leads with the raw html length
+    val html = bytes("<html><body><p>") ++ v ++ bytes("</p></body></html>")
+    val tag5 = Pipelines.htmlEncode(html, v)
+    assert(tag5.head == Pipelines.TextSlotTag)
+    assert(Pipelines.rawLenOf(tag5) == html.length.toLong)
+    assert(Pipelines.htmlDecode(tag5, v).sameElements(html))
   }
 
   test("extractBwtBodies returns the exact stored per-value bodies") {

@@ -74,6 +74,50 @@ class FuzzDecodeSpec extends AnyFunSuite {
     }
   }
 
+  test("text-slot html bodies: corrupt slots, varints and lengths fail promptly with named errors") {
+    val text = "first paragraph of the page\nsecond paragraph, longer than eight".getBytes(UTF_8)
+    val html = ("<html><p>first paragraph of the page</p><p>second paragraph, longer than eight" +
+      "</p></html>").getBytes(UTF_8)
+    val good = Pipelines.htmlEncode(html, text)
+    assert(good.head == Pipelines.TextSlotTag)
+    /** A tag-5 body over a hand-written slotted stream. */
+    def body(rawLen: Long, slotted: Array[Byte]): Array[Byte] = {
+      val buf = new Bytes.Buf()
+      buf.writeByte(Pipelines.TextSlotTag)
+      buf.writeVarLong(rawLen)
+      buf.writeBytes(Pipelines.textEncode(slotted))
+      buf.toArray
+    }
+    def named(what: String, b: Array[Byte], t: Array[Byte] = text): Unit =
+      bounded(what) {
+        val e = intercept[IllegalArgumentException](Pipelines.htmlDecode(b, t))
+        assert(e.getMessage.contains("corrupt text-slot html body"), s"$what: ${e.getMessage}")
+      }
+    val lit = "<p>".getBytes(UTF_8)
+    named("slot past the paragraph count", body(40, lit ++ Array[Byte](1, 3)))
+    named("truncated slot varint", body(40, lit ++ Array[Byte](1, 0x80.toByte)))
+    named("truncated slot varint at the end", body(40, lit ++ Array[Byte](1)))
+    named("rawHtmlLen above the spliced length", body(lit.length + 28, lit ++ Array[Byte](1, 1)))
+    named("rawHtmlLen below the spliced length", body(lit.length + 26, lit ++ Array[Byte](1, 1)))
+    named("rawHtmlLen above MaxDecodedValueBytes",
+      body(ColumnCodec.MaxDecodedValueBytes + 1L, lit ++ Array[Byte](1, 1)))
+    named("null text", good, null)
+    // the same stream with the right length decodes (the cases above
+    // differ from a valid body only where named)
+    assert(Pipelines.htmlDecode(body(lit.length + 27, lit ++ Array[Byte](1, 1)), text)
+      .sameElements(lit ++ "first paragraph of the page".getBytes(UTF_8)))
+    // a text-slot body read without its text is a named error, not bytes
+    val e = intercept[IllegalArgumentException](Pipelines.textDecode(good))
+    assert(e.getMessage == Pipelines.TextSlotNeedsText)
+    // random corruptions of a valid body, alone and in a column, never hang
+    corruptionsOf(good).foreach { c => bounded("htmlDecode")(Pipelines.htmlDecode(c, text)) }
+    val column = ColumnCodec.encodeBwtBodies(Array(good, null, Pipelines.textEncode(html)))
+    val texts: Array[Array[Byte]] = Array(text, null, text)
+    assert(ColumnCodec.decodeHtml(column, texts).map(Option(_).map(_.toSeq)).toSeq ==
+      Seq(Some(html.toSeq), None, Some(html.toSeq)))
+    corruptionsOf(column).foreach { c => bounded("decodeHtml")(ColumnCodec.decodeHtml(c, texts)) }
+  }
+
   test("FmIndex.deserialize + search: corrupt index bytes never hang") {
     val fm = FmIndex.build("abracadabra banana band stand data".getBytes(UTF_8))
     Seq(0, 5).foreach { k =>

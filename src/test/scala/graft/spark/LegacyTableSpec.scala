@@ -32,6 +32,17 @@ import java.nio.file.{Files, Path, Paths}
   *     EncodeConfig(numPartitions = 3, chunkRows = 16, bwtBias = 0.0))
   * }}}
   * and copied without its `.crc` side files.
+  *
+  * `src/test/resources/legacy_plain_body_table` was written before html
+  * bodies could hold text slots (body tag 5), so every html body is
+  * `Pipelines.textEncode(html)`, at commit bb4beb5 with
+  * {{{
+  *   // local[4], spark.sql.shuffle.partitions = 4, session time zone UTC
+  *   EncodeJob.run(spark, PagesGen.generate(spark, 60, partitions = 4), out,
+  *     EncodeConfig(numPartitions = 3, chunkRows = 16))
+  * }}}
+  * and copied without its `.crc` side files. It holds the same pages as
+  * `legacy_speed_table`.
   */
 object LegacyTableSpec {
   val cfg: EncodeConfig = EncodeConfig(numPartitions = 3, chunkRows = 16)
@@ -75,7 +86,9 @@ class LegacyTableSpec extends AnyFunSuite {
 
   private def speedTable(name: String): String = legacyTable(name, "legacy_speed_table")
 
-  /** The pages `legacy_speed_table` holds. */
+  private def plainBodyTable(name: String): String = legacyTable(name, "legacy_plain_body_table")
+
+  /** The pages `legacy_speed_table` and `legacy_plain_body_table` hold. */
   private lazy val speedPages: Seq[Page] = PagesGen.generate(spark, 60, partitions = 4).collect().toSeq
 
   /** Page as comparable values (html is an Array[Byte]). */
@@ -207,5 +220,79 @@ class LegacyTableSpec extends AnyFunSuite {
     val bodies = bodiesByUrl(out)
     assert(speedPages.filterNot(p => refreshed.exists(_.url == p.url))
       .forall(p => bodies(p.url).forall(b => b.head == 2 || b.head == 4)))
+  }
+
+  /** Whether a stored per-value html body has text slots. */
+  private def slotted(body: Seq[Byte]): Boolean = body.head == graft.codec.Pipelines.TextSlotTag
+
+  test("pre-text-slot table: reads, lookups and a compact that keeps its plain html bodies") {
+    val out = plainBodyTable("plain_read_compact")
+    val before = bodiesByUrl(out)
+    assert(before.size == speedPages.size)
+    assert(before.values.forall(b => !slotted(b.head)), "the fixture's html bodies must be plain")
+    assert(decoded(out) == speedPages.map(key).toSet)
+    val wanted = Seq(speedPages(1), speedPages(30), speedPages(58))
+    assert(DecodeJob.lookupUrls(spark, out, wanted.map(_.url)).collect().map(key).toSet ==
+      wanted.map(key).toSet)
+    // an html-only projection reads the text leaf for the splice: both
+    // forms decode the same html
+    import spark.implicits._
+    val htmlOnly = DecodeJob.decodeProjected(spark, out, Seq("html"))
+      .as[(String, String)].collect().toMap
+    assert(htmlOnly == speedPages.map(p => p.url -> new String(p.html, "UTF-8")).toMap)
+    EncodeJob.compact(spark, out, cfg)
+    assert(decoded(out) == speedPages.map(key).toSet)
+    assert(bodiesByUrl(out) == before, "compact must reuse the plain html bodies, not re-slot them")
+  }
+
+  test("pre-text-slot table: append, upsert and delete; chunks mixing plain and text-slot bodies decode to the model") {
+    import spark.implicits._
+    val out = plainBodyTable("plain_lifecycle")
+    val added = PagesGen.generate(spark, 80, partitions = 4).collect().toSeq.drop(60)
+    EncodeJob.append(spark, spark.createDataset(added), out, cfg)
+    var model = (speedPages ++ added).map(p => p.url -> p).toMap
+    assert(decoded(out) == model.values.map(key).toSet)
+    // a refresh whose html embeds its new text: the replacement rows get
+    // text-slot bodies, the untouched stored rows keep their plain ones
+    val refreshed = Seq(speedPages(5), speedPages(22), added(3)).map { p =>
+      val t = p.text + " refreshed"
+      p.copy(warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 1000L), text = t,
+        html = s"<html><body><p>$t</p></body></html>".getBytes("UTF-8"))
+    }
+    EncodeJob.upsert(spark, spark.createDataset(refreshed), out, cfg)
+    model ++= refreshed.map(p => p.url -> p)
+    assert(decoded(out) == model.values.map(key).toSet)
+    val bodies = bodiesByUrl(out)
+    assert(refreshed.forall(p => slotted(bodies(p.url).head)))
+    assert(speedPages.filterNot(p => refreshed.exists(_.url == p.url)).forall(p => !slotted(bodies(p.url).head)))
+    val mixed = chunks(out).filter { c =>
+      val heads = graft.codec.ColumnCodec.extractBwtBodies(c.html.payload).get.map(b => slotted(b.toSeq))
+      heads.contains(true) && heads.contains(false)
+    }
+    assert(mixed.nonEmpty, "the upsert's rewrite must mix plain and text-slot bodies in a chunk")
+    // each mixed chunk decodes to the model on its own too
+    mixed.foreach { c =>
+      val urls = graft.codec.ColumnCodec.decodeBinary(c.url.payload).map(new String(_, "UTF-8"))
+      val texts = graft.codec.ColumnCodec.decodeBinaryNullable(c.text.payload)
+      val htmls = graft.codec.ColumnCodec.decodeHtml(c.html.payload, texts)
+      urls.indices.foreach(i => assert(htmls(i).sameElements(model(urls(i)).html), urls(i)))
+    }
+    // the html column decode splices from the text leaf it scans alongside
+    val urlAt = DecodeJob.decodeColumn(spark, out, "url").collect()
+      .map { case (pid, cid, i, u) => (pid, cid, i) -> new String(u, "UTF-8") }.toMap
+    val htmlCol = DecodeJob.decodeColumn(spark, out, "html").collect()
+    assert(htmlCol.length == model.size)
+    htmlCol.foreach { case (pid, cid, i, h) =>
+      val url = urlAt((pid, cid, i))
+      assert(h.sameElements(model(url).html), url)
+    }
+    val gone = Seq(speedPages(7).url, refreshed(1).url, added(10).url)
+    EncodeJob.delete(spark, out, gone, cfg)
+    model --= gone
+    assert(decoded(out) == model.values.map(key).toSet)
+    val beforeCompact = bodiesByUrl(out)
+    EncodeJob.compact(spark, out, cfg)
+    assert(decoded(out) == model.values.map(key).toSet)
+    assert(bodiesByUrl(out) == beforeCompact, "compact reuses plain and text-slot bodies alike")
   }
 }

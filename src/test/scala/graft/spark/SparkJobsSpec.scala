@@ -726,6 +726,47 @@ class SparkJobsSpec extends AnyFunSuite {
     assert(!fs.exists(tmp))
   }
 
+  test("a crash while rolling an older binary's marker forward keeps every lineage row") {
+    import spark.implicits._
+    val out = tmpDir("old_marker_crash")
+    val cfg = EncodeConfig(numPartitions = 2, chunkRows = 16)
+    EncodeJob.run(spark, PagesGen.generate(spark, 80, partitions = 2), out, cfg)
+    val part0Rows = spark.read.parquet(EncodeJob.lineagePath(out)).as[LineageRecord]
+      .collect().filter(_.part_id == 0).map(_.n_rows).sum
+    assert(part0Rows > 0)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
+    val tmp = new org.apache.hadoop.fs.Path(EncodeJob.compactTmpPath(out))
+    // an older binary's committed marker: part 0 swapped in from a staged
+    // copy, part 1 dropped; no staged lineage table
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(EncodeJob.chunksPath(out), "part_id=0"),
+      fs, new org.apache.hadoop.fs.Path(tmp, "part_id=0"), false, conf)
+    val marker = fs.create(new org.apache.hadoop.fs.Path(tmp, "_SWAP"), true)
+    marker.write("0,1:drop;".getBytes(UTF_8))
+    marker.close()
+
+    // crash inside the roll-forward's staging write, before its rename
+    final class Crash extends RuntimeException("injected crash")
+    DriverParquet.stepHook = name => if (name == "written") throw new Crash
+    try intercept[Crash](EncodeJob.completePendingCompactSwap(spark, out))
+    finally DriverParquet.stepHook = _ => ()
+    assert(fs.exists(tmp), "the marker must survive the crash")
+    val next = new org.apache.hadoop.fs.Path(tmp, "_lineage_next")
+    assert(fs.exists(next) && DriverParquet.dataFiles(conf, next).isEmpty,
+      "the crash must leave the staged lineage directory without a committed file")
+
+    assert(EncodeJob.completePendingCompactSwap(spark, out))
+    assert(!fs.exists(tmp))
+    val lin = spark.read.parquet(EncodeJob.lineagePath(out)).as[LineageRecord].collect()
+    val byPart = lin.groupBy(_.part_id)
+    assert(byPart.keySet == Set(0, 1), s"lineage rows lost: ${lin.toSeq}")
+    assert(byPart(0).map(_.n_rows).sum == part0Rows)
+    assert(byPart(1).map(_.n_rows).sum == 0L, "part 1's drop tombstone")
+    assert(EncodeJob.donePartIds(spark, out) == Set(0, 1),
+      "the tombstone keeps a dropped part done, so a resume-style run() does not re-encode it")
+  }
+
   test("crashed lineage swap rolls forward; compact re-slices with the STORED chunkRows") {
     import spark.implicits._
     val out = tmpDir("lineage_swap")
@@ -739,8 +780,9 @@ class SparkJobsSpec extends AnyFunSuite {
     }
     val fullLineageRows = spark.read.parquet(EncodeJob.lineagePath(out)).count()
 
-    // simulate a crash inside replaceLineageRows' delete->rename window:
-    // _lineage is gone, the complete _swap_tmp is the only copy
+    // simulate a crash inside an older binary's lineage replace, in its
+    // delete->rename window: _lineage is gone, the complete _swap_tmp is
+    // the only copy
     val conf = spark.sparkContext.hadoopConfiguration
     val lp = new org.apache.hadoop.fs.Path(EncodeJob.lineagePath(out))
     val fs = lp.getFileSystem(conf)

@@ -53,6 +53,39 @@ class GraftFunctionsSpec extends AnyFunSuite {
     assert(binArr(1) == null && binArr(2).length == 0)
   }
 
+  test("graft_decode_column_binary(html.payload, text.payload) splices text slots; the one-argument form fails by name") {
+    import spark.implicits._
+    import graft.spark.{EncodeConfig, EncodeJob, PagesGen}
+    GraftFunctions.register(spark)
+    val out = {
+      val d = java.nio.file.Files.createTempDirectory("graft_sqlhtml").toFile
+      d.deleteOnExit(); d.getAbsolutePath + "/out"
+    }
+    val pages = PagesGen.generate(spark, 24, partitions = 2).collect().toIndexedSeq
+    val stored = pages.updated(3, pages(3).copy(html = null)).updated(5, pages(5).copy(text = null))
+    EncodeJob.run(spark, spark.createDataset(stored), out, EncodeConfig(numPartitions = 2, chunkRows = 8))
+    spark.read.parquet(EncodeJob.chunksPath(out)).createOrReplaceTempView("chunks_html_sql")
+    val rows = spark.sql(
+      """SELECT p.url, p.html FROM (
+        |  SELECT explode(zip_with(graft_decode_column(url.payload),
+        |                          graft_decode_column_binary(html.payload, text.payload),
+        |                          (u, h) -> struct(u AS url, h AS html))) AS p
+        |  FROM chunks_html_sql) q""".stripMargin).collect()
+    assert(rows.map(r => r.getString(0) -> Option(r.getAs[Array[Byte]](1)).map(_.toSeq)).toMap ==
+      stored.map(p => p.url -> Option(p.html).map(_.toSeq)).toMap)
+    // the html bodies hold text slots, which the one-argument form cannot
+    // splice: a named error, never the slotted bytes
+    val err = intercept[Exception](
+      spark.sql("SELECT graft_decode_column_binary(html.payload) FROM chunks_html_sql").collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains(graft.codec.Pipelines.TextSlotNeedsText))), err)
+    // the two-argument form is in the one list GraftExtensions injects
+    val (_, _, build) = GraftFunctions.functions.find(_._1.funcName == "graft_decode_column_binary").get
+    val a = org.apache.spark.sql.catalyst.expressions.Literal(Array[Byte](0))
+    assert(build(Seq(a, a)).isInstanceOf[GraftFunctions.GraftDecodeHtmlColumn])
+    assert(build(Seq(a)).isInstanceOf[GraftFunctions.GraftDecodeColumnBinary])
+  }
+
   test("graft_fm_count: values match FmIndex; no-match is NULL, never 0") {
     import spark.implicits._
     GraftFunctions.register(spark)
