@@ -87,22 +87,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val outDir = Scratch.dir("entry_encode")
-    deleteDir(outDir)
+    Bench.deleteDir(outDir)
     val pages = PagesGen.generate(spark, 300, hostSkew = true, partitions = 8)
     EncodeJob.run(spark, pages, outDir, EncodeConfig(numPartitions = 8, chunkRows = 128))
     val report = VerifyJob.run(spark, pages, outDir)
     require(report.mismatched_rows == 0 && report.except_violations == 0,
       s"bit-identical gate failed: $report")
     spark.read.parquet(EncodeJob.lineagePath(outDir))
-  }
-
-  private def deleteDir(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rec)
-      f.delete()
-    }
-    val f = new java.io.File(path)
-    if (f.exists()) rec(f)
   }
 
   /** Shared q61/q64 oracle: per-doc duplicated 8-token-window stats. */
@@ -539,14 +530,14 @@ object SparkEntry {
     // --- Structured Streaming ingest over a REAL file source: documents
     // are staged as two parquet slices (the landing-zone pattern), the
     // stream discovers them as micro-batches (maxFilesPerTrigger = 1),
-    // each encoded through the batch kernel (foreachBatch), decoded back
-    // and compared against the identity oracle. No driver-side feeder.
+    // each appended to ONE encoded table (foreachBatch), decoded back and
+    // compared against the identity oracle. No driver-side feeder.
     "q33_streaming_encode" -> { (s, dir) =>
       import s.implicits._
       val base = Scratch.dir(s"stream_encode_${math.abs(dir.hashCode)}")
       val staging = base + "_staging"
       val ckpt = base + "_ckpt"
-      deleteDir(base); deleteDir(ckpt); deleteDir(staging)
+      Bench.deleteDir(base); Bench.deleteDir(ckpt); Bench.deleteDir(staging)
       val kt = docs(s, dir).select($"doc_id", $"text").as[(Long, String)]
       val n = kt.count()
       Seq(kt.filter($"doc_id" < n / 2), kt.filter($"doc_id" >= n / 2)).foreach { part =>
@@ -554,10 +545,10 @@ object SparkEntry {
           graft.spark.Page(s"https://stream.test/$id", new java.sql.Timestamp(0L), null, t, null)
         }.coalesce(1).write.mode("append").parquet(staging)
       }
-      graft.streaming.StreamingEncodeJob.start(
+      graft.streaming.StreamingEncodeJob.startAppending(
         graft.streaming.StreamingEncodeJob.pagesFileStream(s, staging), base, ckpt,
         EncodeConfig(numPartitions = 4, chunkRows = 128)).awaitTermination()
-      graft.streaming.StreamingEncodeJob.decodeAll(s, base)
+      DecodeJob.run(s, base)
         .map(p => (p.url.substring("https://stream.test/".length).toLong, p.text))
         .toDF("doc_id", "text_rt")
     },
@@ -607,7 +598,7 @@ object SparkEntry {
     "q44_decode_lookup" -> { (s, dir) =>
       import s.implicits._
       val outDir = Scratch.dir(s"lookup_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir,
         EncodeConfig(numPartitions = 8, chunkRows = 16))
       // bounded id sample: % 97 == 3 grows with the corpus and would trip
@@ -643,7 +634,7 @@ object SparkEntry {
     "q45_incremental_append" -> { (s, dir) =>
       import s.implicits._
       val outDir = Scratch.dir(s"append_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       val pages = pagesFromDocs(s, dir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
       EncodeJob.run(s, pages.filter(p => hashDocId(p.url) % 3 != 2), outDir, cfg)
@@ -672,12 +663,12 @@ object SparkEntry {
     "q48_decode_projected" -> { (s, dir) =>
       import s.implicits._
       val outDir = Scratch.dir(s"projected_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir,
         EncodeConfig(numPartitions = 8, chunkRows = 64))
       // the gate inspects the actual parquet scan (decodeProjected's own
       // plan is an ExistingRDD that would hide the ReadSchema)
-      val scan = DecodeJob.projectedScan(s, outDir, Seq("text"))
+      val scan = DecodeJob.projectedScan(s, outDir, Seq("text")).head
         .queryExecution.executedPlan.toString()
       require(scan.contains("ReadSchema") && scan.contains("text") && !scan.contains("html"),
         s"projection not pruned to the requested leaves:\n$scan")
@@ -691,7 +682,7 @@ object SparkEntry {
     "q50_compact" -> { (s, dir) =>
       import s.implicits._
       val outDir = Scratch.dir(s"compact_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       val pages = pagesFromDocs(s, dir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
       EncodeJob.run(s, pages.filter(p => hashDocId(p.url) % 3 == 0), outDir, cfg)
@@ -718,7 +709,7 @@ object SparkEntry {
       import s.implicits._
       graft.sql.GraftFunctions.register(s)
       val outDir = Scratch.dir(s"sqlcol_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir,
         EncodeConfig(numPartitions = 8, chunkRows = 64))
       s.read.parquet(EncodeJob.chunksPath(outDir)).createOrReplaceTempView("graft_chunks")
@@ -739,7 +730,7 @@ object SparkEntry {
       import s.implicits._
       graft.sql.GraftFunctions.register(s)
       val outDir = Scratch.dir(s"sqlprune_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 64)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
       val ids = Seq(3L, 77L, 205L)
@@ -777,7 +768,7 @@ object SparkEntry {
     "q52_compact_fragmented" -> { (s, dir) =>
       import s.implicits._
       val outDir = Scratch.dir(s"compactfrag_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       val pages = pagesFromDocs(s, dir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
       EncodeJob.run(s, pages.filter(p => hashDocId(p.url) % 4 != 3), outDir, cfg)
@@ -800,7 +791,7 @@ object SparkEntry {
     "q53_delete_urls" -> { (s, dir) =>
       import s.implicits._
       val outDir = Scratch.dir(s"delete_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
       val doomed = docs(s, dir).select($"doc_id").as[Long].collect()
@@ -820,7 +811,7 @@ object SparkEntry {
     "q54_upsert_refresh" -> { (s, dir) =>
       import s.implicits._
       val outDir = Scratch.dir(s"upsert_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
       val before = DecodeJob.run(s, outDir).count()
@@ -843,7 +834,7 @@ object SparkEntry {
     "q55_sql_range_read" -> { (s, dir) =>
       graft.sql.GraftFunctions.register(s)
       val outDir = Scratch.dir(s"sqlrange_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 64)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
       val (lo, hi) = ("https://host2.example/d/3", "https://host2.example/d/6")
@@ -868,7 +859,7 @@ object SparkEntry {
     "q56_sql_prefix_read" -> { (s, dir) =>
       graft.sql.GraftFunctions.register(s)
       val outDir = Scratch.dir(s"sqlprefix_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 64)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir, cfg)
       val p = "https://host5.example/"
@@ -897,7 +888,7 @@ object SparkEntry {
     "q57_describe_health" -> { (s, dir) =>
       import s.implicits._
       val outDir = Scratch.dir(s"health_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       val pages = pagesFromDocs(s, dir)
       val cfg = EncodeConfig(numPartitions = 8, chunkRows = 16)
       EncodeJob.run(s, pages.filter(p => hashDocId(p.url) % 4 != 3), outDir, cfg)
@@ -986,7 +977,7 @@ object SparkEntry {
     "q64_store_dup_spans" -> { (s, dir) =>
       import s.implicits._
       val outDir = Scratch.dir(s"storecur_${math.abs(dir.hashCode)}")
-      deleteDir(outDir)
+      Bench.deleteDir(outDir)
       EncodeJob.run(s, pagesFromDocs(s, dir), outDir,
         EncodeConfig(numPartitions = 8, chunkRows = 64))
       val stored = DecodeJob.decodeProjected(s, outDir, Seq("text"))

@@ -1,7 +1,8 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 import graft.codec.ColumnCodec
 
@@ -9,14 +10,20 @@ import graft.codec.ColumnCodec
   * bit-identical (the BASELINE.json:15 invariant is checked by
   * [[VerifyJob]] on top of this).
   *
+  * Every read is the same two steps: [[projectedScan]], the gated scan of
+  * the chunks passing a chunk predicate that reads only the payload leaves
+  * a read asks for, then [[decodeChunks]], the one chunk kernel. The public
+  * reads differ only in their chunk predicate, the columns they ask for
+  * and the projection of the kernel's bytes.
+  *
   * Plan shape: NO exchange at all. A chunk row is self-contained (all five
   * column payloads in nested columns), so decode is a pure narrow map over
   * the scan — each task decodes the rows of the files it reads. A
   * row-per-column layout would need a shuffle of every compressed payload
   * to regroup chunks (at 100 TB: the entire compressed corpus through the
-  * shuffle fabric); this layout removes it by construction. Column-pruned
-  * reads stay available through parquet nested-schema pruning
-  * ([[decodeColumn]] reads only the requested payload leaf).
+  * shuffle fabric); this layout removes it by construction. Parquet
+  * nested-schema pruning keeps each read to the payload leaves it decodes:
+  * a chunk's codec names, byte counts and hashes are never read.
   *
   * Point/range reads — "give me url X" / "give me host Y's pages", the most
   * common patterns an encoded-pages table serves — go through
@@ -30,73 +37,37 @@ import graft.codec.ColumnCodec
   */
 object DecodeJob {
 
+  /** The value columns a read can ask for besides `url`. */
+  private val ValueCols = Seq("warc_ts", "html", "text", "lang")
+
+  /** The kernel's rows for a [[Page]] read: UTF-8 bytes and epoch micros.
+    * `url` is nullable as `Encoders.product[Page]` declares it.
+    */
+  private val PageBytes = StructType(Seq(
+    StructField("url", BinaryType),
+    StructField("warc_ts_us", LongType, nullable = false),
+    StructField("html", BinaryType),
+    StructField("text", BinaryType),
+    StructField("lang", BinaryType)))
+
   def run(spark: SparkSession, outDir: String): Dataset[Page] =
-    decodeChunksWhere(spark, outDir, lit(true))
+    pages(projectedScan(spark, outDir, ValueCols).head)
 
-  /** Decode one self-contained chunk row into raw page fields: UTF-8
-    * bytes and epoch micros. The String/Timestamp shape the public
-    * Dataset[Page] carries is applied by codegen'd cast/timestamp_micros
-    * in [[decodeChunksWhereUnchecked]] — binary-to-string is a UTF8String
-    * wrap, so a downstream SQL consumer (aggregations, filters, writes)
-    * never pays the UTF-16 decode + re-encode per value that building
-    * Page objects here cost; a typed consumer deserializes Page exactly
-    * as before.
+  /** The [[Page]] rows of one scan of all four value columns. The
+    * String/Timestamp shape is applied by codegen'd cast/timestamp_micros:
+    * binary-to-string is a UTF8String wrap, so a downstream SQL consumer
+    * (aggregations, filters, writes) never pays the UTF-16 decode +
+    * re-encode per value that building Page objects in the kernel would
+    * cost; a typed consumer deserializes Page as usual.
     */
-  private def decodeRowBytes(
-      c: EncodedChunk
-  ): Iterator[(Array[Byte], Long, Array[Byte], Array[Byte], Array[Byte])] = {
-    val urls = ColumnCodec.decodeBinary(c.url.payload)
-    val tss = ColumnCodec.decodeLong(c.warc_ts.payload)
-    val texts = ColumnCodec.decodeBinaryNullable(c.text.payload)
-    val htmls = ColumnCodec.decodeHtml(c.html.payload, texts) // splices text slots
-    val langs = ColumnCodec.decodeBinaryNullable(c.lang.payload)
-    urls.indices.iterator.map { i =>
-      (urls(i), tss(i), htmls(i), texts(i), langs(i))
-    }
-  }
-
-  /** Decode only the chunks passing `chunkPred` (a predicate over the
-    * chunk METADATA columns `part_id`/`chunk_id`/`url_min`/`url_max` —
-    * never the payloads).
-    */
-  private def decodeChunksWhere(
-      spark: SparkSession,
-      outDir: String,
-      chunkPred: Column
-  ): Dataset[Page] = {
-    EncodeJob.requireNoPendingSwap(spark, outDir)
-    // a fully-deleted table has a chunks dir with no data files: that is
-    // an empty table, not an error (scanning it would fail schema
-    // inference)
-    if (!EncodeJob.hasCommittedChunks(spark, outDir))
-      return spark.emptyDataset(org.apache.spark.sql.Encoders.product[Page])
-    decodeChunksWhereUnchecked(spark, outDir, chunkPred)
-  }
-
-  /** [[decodeChunksWhere]] minus the pending-swap / committed-file gates —
-    * for callers that issue SEVERAL scans of one table in one call (the
-    * batched [[lookupUrls]]) and have already run the gates once: the
-    * gates are driver-side remote-FS calls, and re-running them per batch
-    * multiplies that listing cost for no added safety within one read.
-    */
-  private def decodeChunksWhereUnchecked(
-      spark: SparkSession,
-      outDir: String,
-      chunkPred: Column
-  ): Dataset[Page] = {
-    import spark.implicits._
-    TableScan.chunks(spark, outDir)
-      .filter(chunkPred)
-      .as[EncodedChunk]
-      .mapPartitions(_.flatMap(decodeRowBytes))
-      .toDF("u", "ts", "html", "t", "l")
-      .select(col("u").cast("string").as("url"),
-        timestamp_micros(col("ts")).as("warc_ts"),
+  private def pages(scan: DataFrame): Dataset[Page] =
+    decodeChunks(scan, PageBytes)
+      .select(col("url").cast("string").as("url"),
+        timestamp_micros(col("warc_ts_us")).as("warc_ts"),
         col("html"),
-        col("t").cast("string").as("text"),
-        col("l").cast("string").as("lang"))
-      .as[Page]
-  }
+        col("text").cast("string").as("text"),
+        col("lang").cast("string").as("lang"))
+      .as[Page](Encoders.product[Page])
 
   /** Point-read fan-in cap for [[lookupUrls]]: its chunk predicate is an
     * OR of one range test per url, which grows linearly — fine for point
@@ -133,8 +104,7 @@ object DecodeJob {
       s"lookupUrls is a point-read API (got ${urls.size} urls, max $MaxLookupUrls): " +
         "for url sets use decodeUrlRange/decodeUrlPrefix per host/prefix slice, " +
         "or join against the decoded url column")
-    if (urls.isEmpty) return spark.emptyDataset(
-      org.apache.spark.sql.Encoders.product[Page])
+    if (urls.isEmpty) return spark.emptyDataset(Encoders.product[Page])
     // home partition per url, via the exact partIdCol expression the
     // encoder used (config recovered from the stored _meta table)
     val pidByUrl: Map[String, Int] = EncodeJob.readMeta(spark, outDir) match {
@@ -143,24 +113,18 @@ object DecodeJob {
           .as[(String, Int)].collect().toMap
       case None => Map.empty // pre-meta table: range-only pruning
     }
-    // table-level gates once, not once per batch scan
-    EncodeJob.requireNoPendingSwap(spark, outDir)
-    if (!EncodeJob.hasCommittedChunks(spark, outDir))
-      return spark.emptyDataset(org.apache.spark.sql.Encoders.product[Page])
-    // each batch filters by ITS OWN url subset: a chunk whose range covers
-    // urls from two batches is decoded by both scans, and a shared
-    // full-set filter would then emit those pages twice
-    urls.distinct.grouped(LookupUrlsPerScan).map { batch =>
-      val pred = batch.map { u =>
-        val range = col("url_min") <= u && col("url_max") >= u
-        pidByUrl.get(u) match {
-          case Some(pid) => col("part_id") === pid && range
-          case None => range
-        }
-      }.reduce(_ || _)
-      val batchSet = batch.toSet
-      decodeChunksWhereUnchecked(spark, outDir, pred).filter(p => batchSet.contains(p.url))
-    }.reduce(_ union _)
+    val batches = urls.distinct.grouped(LookupUrlsPerScan).toSeq
+    val preds = batches.map(_.map { u =>
+      val range = col("url_min") <= u && col("url_max") >= u
+      pidByUrl.get(u).fold(range)(pid => col("part_id") === pid && range)
+    }.reduce(_ || _))
+    // one scan per batch, the table gates once for all of them; each batch
+    // keeps ITS OWN urls: a chunk whose range covers urls from two batches
+    // is decoded by both scans, and a shared full-set filter would then
+    // emit those pages twice
+    projectedScan(spark, outDir, ValueCols, preds).zip(batches)
+      .map { case (scan, batch) => pages(scan).filter(col("url").isin(batch: _*)) }
+      .reduce(_ union _)
   }
 
   /** All pages with `lo <= url < hiExclusive` (Catalyst UTF8String binary
@@ -173,12 +137,9 @@ object DecodeJob {
       lo: String,
       hiExclusive: String
   ): Dataset[Page] =
-    decodeChunksWhere(spark, outDir, col("url_max") >= lo && col("url_min") < hiExclusive)
-      .filter(p => {
-        val u = org.apache.spark.unsafe.types.UTF8String.fromString(p.url)
-        u.compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(lo)) >= 0 &&
-          u.compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(hiExclusive)) < 0
-      })
+    pages(projectedScan(spark, outDir, ValueCols,
+      Seq(col("url_max") >= lo && col("url_min") < hiExclusive)).head)
+      .filter(col("url") >= lo && col("url") < hiExclusive)
 
   /** All pages whose url starts with `prefix` (e.g. a scheme+host slice).
     * The prefix interval `[prefix, succ(prefix))` needs no successor-string
@@ -187,45 +148,65 @@ object DecodeJob {
     * prefix itself.
     */
   def decodeUrlPrefix(spark: SparkSession, outDir: String, prefix: String): Dataset[Page] =
-    decodeChunksWhere(spark, outDir,
-      col("url_max") >= prefix &&
-        (col("url_min") < prefix || col("url_min").startsWith(prefix)))
-      .filter(p => p.url.startsWith(prefix))
+    pages(projectedScan(spark, outDir, ValueCols,
+      Seq(col("url_max") >= prefix &&
+        (col("url_min") < prefix || col("url_min").startsWith(prefix)))).head)
+      .filter(col("url").startsWith(prefix))
 
-  /** The pruned payload scan feeding [[decodeProjected]] — separated so
-    * callers/tests can assert on the FileScan's ReadSchema without the
-    * decode operators above it in the plan.
+  /** The gated, pruned payload scan every read decodes: one scan of the
+    * chunks table per chunk predicate (over the chunk METADATA columns
+    * `part_id`/`chunk_id`/`url_min`/`url_max`, never the payloads),
+    * selecting `url.payload` as `url_p` and each of `cols` as `<col>_p`.
+    * `html` also reads the `text` leaf, which its text slots are spliced
+    * from. The reader gates run once for all the scans: a pending swap
+    * fails the read, and a table without committed chunks (fully deleted)
+    * is an empty table, not a scan error. `private[graft]` so callers and
+    * tests can assert on the FileScan's ReadSchema without the decode
+    * operators above it in the plan.
     */
   private[graft] def projectedScan(
       spark: SparkSession,
       outDir: String,
-      cols0: Seq[String]
-  ): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
+      cols0: Seq[String],
+      chunkPreds: Seq[Column] = Seq(lit(true))
+  ): Seq[DataFrame] = {
     val cols = cols0.distinct // duplicate requests would alias-collide
-    val valid = Set("warc_ts", "html", "text", "lang")
-    require(cols.nonEmpty && cols.forall(valid), s"cols must be among $valid: $cols")
-    val wantTs = cols.contains("warc_ts")
-    // html's text slots decode from the row's text, so html reads the text
-    // leaf too
-    val strCols = cols.filterNot(_ == "warc_ts") ++
-      (if (cols.contains("html") && !cols.contains("text")) Seq("text") else Nil)
-    // one (source column -> output name) list drives both the projection
-    // and the empty-table schema, so the two shapes cannot diverge
-    val outCols: Seq[(String, String)] =
-      Seq("url.payload" -> "url_p") ++
-        (if (wantTs) Seq("warc_ts.payload" -> "ts_p") else Nil) ++
-        strCols.map(c => s"$c.payload" -> s"${c}_p")
+    require(cols.nonEmpty && cols.forall(ValueCols.contains),
+      s"cols must be among ${ValueCols.mkString(", ")}: $cols")
+    val leaves = "url" +: (cols ++
+      (if (cols.contains("html") && !cols.contains("text")) Seq("text") else Nil))
     EncodeJob.requireNoPendingSwap(spark, outDir)
     if (!EncodeJob.hasCommittedChunks(spark, outDir)) {
-      // fully-deleted table: empty, not a scan error
-      import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(outCols.map { case (_, n) => StructField(n, BinaryType) }))
+      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(leaves.map(c => StructField(s"${c}_p", BinaryType))))
+      return chunkPreds.map(_ => empty)
     }
-    TableScan.chunks(spark, outDir)
-      .select(outCols.map { case (src, n) => col(src).as(n) }: _*)
+    chunkPreds.map(p => TableScan.chunks(spark, outDir).filter(p)
+      .select(leaves.map(c => col(s"$c.payload").as(s"${c}_p")): _*))
+  }
+
+  /** The chunk kernel: each [[projectedScan]] row (one chunk) becomes the
+    * chunk's rows of `schema`, whose first field is `url` and the rest any
+    * of `warc_ts_us` (epoch micros) and the binary `html`, `text` and
+    * `lang` (UTF-8 bytes, null kept). The only decoder of html: its text
+    * slots splice from the chunk's decoded text.
+    */
+  private def decodeChunks(scan: DataFrame, schema: StructType): DataFrame = {
+    val valueFields = schema.fieldNames.toSeq.tail
+    scan.mapPartitions { it =>
+      it.flatMap { r =>
+        def payload(c: String) = r.getAs[Array[Byte]](s"${c}_p")
+        lazy val texts = ColumnCodec.decodeBinaryNullable(payload("text"))
+        val urls = ColumnCodec.decodeBinary(payload("url"))
+        val values: Seq[Int => Any] = valueFields.map {
+          case "warc_ts_us" => ColumnCodec.decodeLong(payload("warc_ts"))
+          case "html" => ColumnCodec.decodeHtml(payload("html"), texts)
+          case "text" => texts
+          case c => ColumnCodec.decodeBinaryNullable(payload(c))
+        }
+        urls.indices.iterator.map(i => Row.fromSeq(urls(i) +: values.map(_(i))))
+      }
+    }(Encoders.row(schema))
   }
 
   /** Column-projected page decode: rows keyed by url with ONLY the
@@ -235,62 +216,19 @@ object DecodeJob {
     * most of the bytes) are never read from storage, and their decode
     * kernels never run. The one exception: `html` also reads and decodes
     * the `text` leaf, which its text slots are spliced from, without
-    * returning it. Output schema: `url` plus `cols` in the given order
-    * (`warc_ts` as microseconds-long; others as string, null preserved).
-    * No exchange, like [[run]].
+    * returning it. Output schema: `url`, then `warc_ts` as the
+    * microseconds-long `warc_ts_us` if asked for, then the other `cols` in
+    * the given order as strings, null preserved. No exchange, like [[run]].
     */
-  def decodeProjected(spark: SparkSession, outDir: String, cols0: Seq[String]): org.apache.spark.sql.DataFrame = {
+  def decodeProjected(spark: SparkSession, outDir: String, cols0: Seq[String]): DataFrame = {
     val cols = cols0.distinct
-    val wantTs = cols.contains("warc_ts")
-    val strCols = cols.filterNot(_ == "warc_ts")
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types._
-    // the kernel emits UTF-8 bytes; the codegen'd cast below wraps them as
-    // strings (no per-value UTF-16 decode, as in decodeChunksWhereUnchecked)
-    val binSchema = StructType(
-      StructField("url", BinaryType, nullable = false) +:
-        ((if (wantTs) Seq(StructField("warc_ts_us", LongType, nullable = false)) else Nil) ++
-          strCols.map(c => StructField(c, BinaryType, nullable = true))))
-    val decoded = projectedScan(spark, outDir, cols).mapPartitions { it =>
-      it.flatMap { r =>
-        val urls = ColumnCodec.decodeBinary(r.getAs[Array[Byte]]("url_p"))
-        val tss = if (wantTs) ColumnCodec.decodeLong(r.getAs[Array[Byte]]("ts_p")) else null
-        lazy val texts = ColumnCodec.decodeBinaryNullable(r.getAs[Array[Byte]]("text_p"))
-        val strs = strCols.map {
-          case "html" => ColumnCodec.decodeHtml(r.getAs[Array[Byte]]("html_p"), texts)
-          case "text" => texts
-          case c => ColumnCodec.decodeBinaryNullable(r.getAs[Array[Byte]](s"${c}_p"))
-        }
-        urls.indices.iterator.map { i =>
-          Row.fromSeq(urls(i) +: ((if (wantTs) Seq(tss(i)) else Nil) ++ strs.map(_(i))))
-        }
-      }
-    }(Encoders.row(binSchema))
-    decoded.select(binSchema.fields.toSeq.map { f =>
-      if (f.dataType == BinaryType) col(f.name).cast("string").as(f.name) else col(f.name)
-    }: _*)
-  }
-
-  /** Decode a single column (positional within (part_id, chunk_id)) —
-    * the column-pruned read path: parquet nested-schema pruning reads only
-    * the `<colName>.payload` leaf, never the other four payload columns
-    * (`html` also reads the `text` leaf its text slots are spliced from).
-    */
-  def decodeColumn(spark: SparkSession, outDir: String, colName: String): Dataset[(Int, Int, Int, Array[Byte])] = {
-    import spark.implicits._
-    EncodeJob.requireNoPendingSwap(spark, outDir)
-    if (!EncodeJob.hasCommittedChunks(spark, outDir))
-      return spark.emptyDataset[(Int, Int, Int, Array[Byte])]
-    val isHtml = colName == "html"
-    TableScan.chunks(spark, outDir)
-      .select($"part_id", $"chunk_id", col(s"$colName.payload").as("payload"),
-        if (isHtml) $"text.payload".as("text") else lit(null).cast("binary").as("text"))
-      .as[(Int, Int, Array[Byte], Array[Byte])]
-      .flatMap { case (pid, cid, payload, text) =>
-        val values =
-          if (isHtml) ColumnCodec.decodeHtml(payload, ColumnCodec.decodeBinaryNullable(text))
-          else ColumnCodec.decodeBinaryNullable(payload)
-        values.iterator.zipWithIndex.map { case (v, i) => (pid, cid, i, v) }
-      }
+    val (ts, strs) = cols.partition(_ == "warc_ts")
+    val schema = StructType(StructField("url", BinaryType, nullable = false) +:
+      (ts.map(_ => StructField("warc_ts_us", LongType, nullable = false)) ++
+        strs.map(StructField(_, BinaryType))))
+    decodeChunks(projectedScan(spark, outDir, cols).head, schema)
+      .select(schema.fields.toSeq.map { f =>
+        if (f.dataType == BinaryType) col(f.name).cast("string").as(f.name) else col(f.name)
+      }: _*)
   }
 }

@@ -800,8 +800,8 @@ object EncodeJob {
 
   /** The range-covering chunk rows (url payload leaf only) for a presence
     * check, plus the `(d_url, d_part)` targets they were joined against.
-    * `private[graft]` so the join-strategy contract below is pinnable by a
-    * plan-shape spec without executing a delete.
+    * `private[graft]` so the join-strategy contract of [[coveringChunks]]
+    * is pinnable by a plan-shape spec without executing a delete.
     */
   private[graft] def presenceScan(
       spark: SparkSession,
@@ -827,20 +827,27 @@ object EncodeJob {
       val scan = TableScan.chunks(spark, outDir)
       homePids.fold(scan)(ps => scan.filter($"part_id".isin(ps: _*)))
     }.select($"part_id", $"url_min", $"url_max", $"url.payload".as("payload"))
-    // meta known -> every target has its home pid, so part_id is a plain
-    // EQUI key and the range test a residual: Catalyst plans a (broadcast)
-    // hash join where each chunk row scans only ITS partition's urls —
-    // O(urls/P) per chunk, vs O(all urls) under a nested-loop join. The
-    // split is explicit so the equi key does not hang on d_part's
-    // nullability (a folded `d_part.isNull || part_id === d_part` form
-    // turns nested-loop once d_part is nullable); the range-only form is
-    // for pre-meta tables (BENCH/BASELINE.md §Presence-check equi-join A/B).
-    val range = $"d_url" >= $"url_min" && $"d_url" <= $"url_max"
-    val covering =
-      if (homePids.isDefined)
-        urlChunks.join(targets, col("part_id") === $"d_part" && range, "left_semi")
-      else urlChunks.join(targets, range, "left_semi")
-    (covering, targets)
+    (coveringChunks(urlChunks, targets, homePids.isDefined), targets)
+  }
+
+  /** The rows of `urlChunks` whose `[url_min, url_max]` covers one of the
+    * `targets`' `d_url`s, for a table with or without stored meta. With
+    * meta, every target's `d_part` is its home under the table's own
+    * layout, so `part_id` is a plain EQUI key and the range test a
+    * residual: Catalyst plans a (broadcast) hash join where each chunk row
+    * scans only ITS partition's urls — O(urls/P) per chunk, vs O(all urls)
+    * under a nested-loop join. The split is explicit so the equi key does
+    * not hang on d_part's nullability (a folded `d_part.isNull || part_id
+    * === d_part` form turns nested-loop once d_part is nullable)
+    * (BENCH/BASELINE.md §Presence-check equi-join A/B). Without meta (a
+    * table written before `_meta` existed) no cfg says where a url is
+    * stored, so the join is range-only and `d_part` is ignored. The one
+    * join rule of [[presenceScan]] and [[append]]'s stored-url dedupe.
+    */
+  private def coveringChunks(urlChunks: DataFrame, targets: DataFrame, hasMeta: Boolean): DataFrame = {
+    val range = col("d_url") >= col("url_min") && col("d_url") <= col("url_max")
+    if (hasMeta) urlChunks.join(targets, col("part_id") === col("d_part") && range, "left_semi")
+    else urlChunks.join(targets, range, "left_semi")
   }
 
   /** Distinct-url ceiling for one [[upsert]] call. Above [[MaxDeleteUrls]]
@@ -1506,11 +1513,8 @@ object EncodeJob {
       val urlChunks = TableScan.chunks(spark, outDir)
         .select($"part_id", $"chunk_id", $"url_min", $"url_max", $"url.payload".as("payload"))
       val deltaKeys = withPart.select($"url".as("d_url"), $"part_id".as("d_part"))
-      val candidateChunks = urlChunks.join(deltaKeys,
-          urlChunks("part_id") === $"d_part" &&
-            $"d_url" >= $"url_min" && $"d_url" <= $"url_max",
-          "left_semi")
-      val existingUrls = candidateChunks.select($"payload").as[Array[Byte]]
+      val existingUrls = coveringChunks(urlChunks, deltaKeys, meta.isDefined)
+        .select($"payload").as[Array[Byte]]
         .flatMap(p => ColumnCodec.decodeBinary(p).iterator.map(new String(_, UTF_8)))
         .toDF("url")
       withPart.join(existingUrls, Seq("url"), "left_anti")

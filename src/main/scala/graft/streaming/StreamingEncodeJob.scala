@@ -6,55 +6,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.spark.{EncodeConfig, EncodeJob, Page}
 
 /** Structured-Streaming ingestion for the encode pipeline: a stream of
-  * pages (file source, Kafka, or any Dataset[Page] stream) is encoded
-  * micro-batch by micro-batch through the SAME batch kernel — `foreachBatch`
-  * hands each batch to [[EncodeJob.run]], so every property of the batch
-  * job (salted partitioning, chunked column codecs, bit-identical decode,
-  * the ≤-reference size gate) holds per batch with zero duplicated code.
-  *
-  * Output layout: `outDir/batch=<id>/` per micro-batch, each with its own
-  * chunks table and `_lineage`. Exactly-once: Spark's streaming checkpoint
-  * guarantees a batch id is delivered once per successful run, and
-  * EncodeJob's own lineage-resume makes a re-delivered batch id (after a
-  * crash mid-batch) idempotent — the two layers together are the streaming
-  * analogue of the batch job's resume contract. Readers treat the batch
-  * dirs as table partitions (`decodeAll` unions them).
+  * pages (file source, Kafka, or any Dataset[Page] stream) lands in ONE
+  * encoded table through [[StreamingEncodeJob.startAppending]], the one
+  * sink: `foreachBatch` hands each micro-batch to the batch write
+  * verbs ([[EncodeJob.append]], or [[EncodeJob.upsert]] for newest-wins),
+  * so the batch job's salted partitioning, chunked column codecs and
+  * bit-identical decode hold per batch with no duplicated code, and the
+  * table serves every reader ([[graft.spark.DecodeJob]]) and maintenance
+  * verb as it grows.
   *
   * At scale this is the right shape: each micro-batch is an independent
-  * bounded encode job (one salted exchange, partition-local kernels), so
-  * stream throughput scales exactly like the batch job does, and
-  * watermark/state machinery is unnecessary — the encode is stateless
-  * per page.
+  * bounded write (one salted exchange, partition-local kernels), so
+  * stream throughput scales like the batch job does, and watermark/state
+  * machinery is unnecessary — the encode is stateless per page.
   */
 object StreamingEncodeJob {
-
-  def batchDir(outDir: String, batchId: Long): String = s"$outDir/batch=$batchId"
-
-  /** Start the streaming encode. The caller owns the query lifecycle.
-    * `onBatchStart` fires (on the driver) before each micro-batch encodes —
-    * a failure-injection seam the kill/resume tests use to crash the query
-    * between the checkpoint offset commit and the batch work, proving the
-    * restart redelivers the same batch id idempotently.
-    */
-  def start(
-      pages: Dataset[Page],
-      outDir: String,
-      checkpointDir: String,
-      cfg: EncodeConfig = EncodeConfig(),
-      trigger: Trigger = Trigger.AvailableNow(),
-      onBatchStart: Long => Unit = _ => ()
-  ): StreamingQuery = {
-    require(pages.isStreaming, "StreamingEncodeJob.start needs a streaming Dataset[Page]")
-    pages.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Page], batchId: Long) =>
-        onBatchStart(batchId)
-        EncodeJob.run(batch.sparkSession, batch, batchDir(outDir, batchId), cfg)
-        () // Unit: the lineage dataset is persisted inside the batch dir
-      }
-      .start()
-  }
 
   /** Stream into ONE canonical encoded table via chunk-level append: each
     * micro-batch's genuinely-new urls become new chunk files + lineage
@@ -64,10 +30,10 @@ object StreamingEncodeJob {
     * stored per-chunk url ranges and encodes nothing — even a crash
     * between the chunk commit and the lineage append only orphans
     * metrics rows, never data (chunk-id offsets come from the chunks
-    * table itself). Unlike [[start]]'s `batch=<id>` dirs, the result is a
-    * single table that serves [[graft.spark.DecodeJob.lookupUrls]] /
-    * `decodeProjected` directly — the landing-zone-to-queryable-table
-    * path a continuous crawl actually needs.
+    * table itself). The result is a single table that serves
+    * [[graft.spark.DecodeJob.lookupUrls]] / `decodeProjected` directly —
+    * the landing-zone-to-queryable-table path a continuous crawl actually
+    * needs.
     *
     * Default semantics inherited from [[EncodeJob.append]]: INSERT-ONLY
     * across batches — the first successfully-stored version of a url is
@@ -157,24 +123,5 @@ object StreamingEncodeJob {
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(stagingDir)
       .as[Page]
-  }
-
-  /** Decode every committed micro-batch back to pages (batch read).
-    * Batch-dir discovery goes through the Hadoop FS API like every other
-    * path in the engine — a 100 TB landing zone lives on HDFS/S3, where
-    * `java.io.File` listing silently sees nothing.
-    */
-  def decodeAll(spark: SparkSession, outDir: String): Dataset[Page] = {
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDirs =
-      if (!fs.exists(root)) Array.empty[String]
-      else fs.listStatus(root)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .map(_.getPath.toString)
-        .sorted
-    require(batchDirs.nonEmpty, s"no committed batches under $outDir")
-    batchDirs.map(d => graft.spark.DecodeJob.run(spark, d))
-      .reduce(_ union _)
   }
 }

@@ -45,7 +45,7 @@ object ExplainPlans {
     val decodePlan = graft.spark.DecodeJob.run(spark, out).toDF()
     section("DecodeJob", "NO exchange at all: a chunk row is self-contained (all five column payloads nested in one row), so decode is a pure narrow map over the scan — the layout removes the payload-regrouping shuffle by construction.")(decodePlan)
 
-    val projScan = graft.spark.DecodeJob.projectedScan(spark, out, Seq("text"))
+    val projScan = graft.spark.DecodeJob.projectedScan(spark, out, Seq("text")).head
     section("DecodeJob.decodeProjected: nested-schema-pruned payload scan",
       "ReadSchema carries only the url and text payload leaves — the html payload (most of the table's bytes) is never read from storage, so 'decode just the text' costs the text bytes, not the corpus.")(projScan)
 

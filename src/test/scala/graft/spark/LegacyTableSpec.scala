@@ -97,6 +97,27 @@ class LegacyTableSpec extends AnyFunSuite {
 
   private def decoded(out: String) = DecodeJob.run(spark, out).collect().map(key).toSet
 
+  /** The range, prefix and four-column projected reads of `out` return
+    * the `model` pages they select.
+    */
+  private def assertSliceReads(out: String, model: Seq[Page]): Unit = {
+    val urls = model.map(_.url).sorted
+    val (lo, hi) = (urls(urls.size / 4), urls(3 * urls.size / 4))
+    assert(DecodeJob.decodeUrlRange(spark, out, lo, hi).collect().map(key).toSet ==
+      model.filter(p => p.url >= lo && p.url < hi).map(key).toSet)
+    val prefix = urls.head.take(urls.head.indexOf('/', "https://".length) + 1) // one host
+    val hostPages = model.filter(_.url.startsWith(prefix))
+    assert(hostPages.nonEmpty && hostPages.size < model.size)
+    assert(DecodeJob.decodeUrlPrefix(spark, out, prefix).collect().map(key).toSet ==
+      hostPages.map(key).toSet)
+    val projected = DecodeJob.decodeProjected(spark, out, Seq("warc_ts", "html", "text", "lang"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3), r.getString(4)))
+    assert(projected.toSet == model.map(p => (p.url,
+      Math.floorDiv(p.warc_ts.getTime, 1000L) * 1000000L + p.warc_ts.getNanos / 1000L,
+      Option(p.html).map(new String(_, "UTF-8")).orNull, p.text, p.lang)).toSet)
+    assert(projected.length == model.size)
+  }
+
   /** Whether a chunk's text and html payloads are in the per-value form. */
   private def perValue(c: EncodedChunk): Seq[Boolean] =
     Seq(c.html, c.text).map(cc => graft.codec.ColumnCodec.extractBwtBodies(cc.payload).isDefined)
@@ -120,6 +141,7 @@ class LegacyTableSpec extends AnyFunSuite {
     val got = DecodeJob.lookupUrls(spark, out, wanted.map(_.url) :+ "https://fx0.test/absent")
       .collect().map(key).toSet
     assert(got == wanted.map(key).toSet)
+    assertSliceReads(out, pages)
   }
 
   test("legacy table: compact re-encodes per value, decode bit-identical") {
@@ -192,6 +214,7 @@ class LegacyTableSpec extends AnyFunSuite {
     val got = DecodeJob.lookupUrls(spark, out, wanted.map(_.url) :+ "https://host1.example/p/absent/0")
       .collect().map(key).toSet
     assert(got == wanted.map(key).toSet)
+    assertSliceReads(out, speedPages)
   }
 
   test("legacy speed-biased table: compact reuses the fast-coded bodies, decode bit-identical") {
@@ -240,6 +263,7 @@ class LegacyTableSpec extends AnyFunSuite {
     val htmlOnly = DecodeJob.decodeProjected(spark, out, Seq("html"))
       .as[(String, String)].collect().toMap
     assert(htmlOnly == speedPages.map(p => p.url -> new String(p.html, "UTF-8")).toMap)
+    assertSliceReads(out, speedPages)
     EncodeJob.compact(spark, out, cfg)
     assert(decoded(out) == speedPages.map(key).toSet)
     assert(bodiesByUrl(out) == before, "compact must reuse the plain html bodies, not re-slot them")
@@ -277,15 +301,11 @@ class LegacyTableSpec extends AnyFunSuite {
       val htmls = graft.codec.ColumnCodec.decodeHtml(c.html.payload, texts)
       urls.indices.foreach(i => assert(htmls(i).sameElements(model(urls(i)).html), urls(i)))
     }
-    // the html column decode splices from the text leaf it scans alongside
-    val urlAt = DecodeJob.decodeColumn(spark, out, "url").collect()
-      .map { case (pid, cid, i, u) => (pid, cid, i) -> new String(u, "UTF-8") }.toMap
-    val htmlCol = DecodeJob.decodeColumn(spark, out, "html").collect()
-    assert(htmlCol.length == model.size)
-    htmlCol.foreach { case (pid, cid, i, h) =>
-      val url = urlAt((pid, cid, i))
-      assert(h.sameElements(model(url).html), url)
-    }
+    // the html-only projection splices from the text leaf it scans alongside
+    val htmlOnly = DecodeJob.decodeProjected(spark, out, Seq("html"))
+      .as[(String, String)].collect()
+    assert(htmlOnly.length == model.size &&
+      htmlOnly.toMap == model.map { case (u, p) => u -> new String(p.html, "UTF-8") })
     val gone = Seq(speedPages(7).url, refreshed(1).url, added(10).url)
     EncodeJob.delete(spark, out, gone, cfg)
     model --= gone

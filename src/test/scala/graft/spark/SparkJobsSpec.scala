@@ -903,7 +903,6 @@ class SparkJobsSpec extends AnyFunSuite {
     EncodeJob.delete(spark, out, all.map(_.url).toSeq, cfg)
     assert(DecodeJob.run(spark, out).count() == 0)
     assert(DecodeJob.lookupUrls(spark, out, Seq(all.head.url)).count() == 0)
-    assert(DecodeJob.decodeColumn(spark, out, "text").count() == 0)
     assert(DecodeJob.decodeProjected(spark, out, Seq("text")).count() == 0)
     val lin = spark.read.parquet(EncodeJob.lineagePath(out)).as[LineageRecord].collect()
     assert(lin.nonEmpty && lin.forall(r => r.n_rows == 0 && r.status == "done"))
@@ -1050,7 +1049,7 @@ class SparkJobsSpec extends AnyFunSuite {
       StructField("text", StringType, nullable = true))))
     val plan = proj.queryExecution.executedPlan.toString()
     assert(plan.contains("FileScan") && !plan.contains("html"), plan)
-    val scan = DecodeJob.projectedScan(spark, out, Seq("text", "warc_ts"))
+    val scan = DecodeJob.projectedScan(spark, out, Seq("text", "warc_ts")).head
       .queryExecution.executedPlan.toString()
     assert(scan.contains("ReadSchema") && !scan.contains("html"),
       s"html leaf must be pruned out of the parquet scan:\n$scan")
@@ -1061,6 +1060,10 @@ class SparkJobsSpec extends AnyFunSuite {
       assert(text == p.text && ts == Math.floorDiv(p.warc_ts.getTime, 1000L) * 1000000L +
         p.warc_ts.getNanos / 1000L)
     }
+    // a lang-only projection: the column-pruned read of one value column
+    val langs = DecodeJob.decodeProjected(spark, out, Seq("lang"))
+      .as[(String, String)].collect()
+    assert(langs.length == 120 && langs.toMap == all.map(p => p.url -> p.lang).toMap)
 
     // point lookup spans chunks from BOTH append generations
     val wanted = Seq(all(10), all(100))
@@ -1407,6 +1410,26 @@ class SparkJobsSpec extends AnyFunSuite {
     refreshed.foreach(r => assert(after(r.url) == r.text))
   }
 
+  test("append on a pre-meta table finds stored urls outside their cfg-computed home partition") {
+    import spark.implicits._
+    val out = tmpDir("append_premeta")
+    val all = PagesGen.generate(spark, 80, partitions = 4).collect()
+    // small chunks: narrow url ranges, so a stored url is found only
+    // through its own chunk, never by luck through a neighbour's
+    EncodeJob.run(spark, spark.createDataset(all.take(60).toIndexedSeq), out,
+      EncodeConfig(numPartitions = 4, chunkRows = 4))
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(EncodeJob.metaPath(out)), true)
+    // 20 stored + 20 new urls under a cfg whose homes disagree with the
+    // stored layout for most urls
+    EncodeJob.append(spark, spark.createDataset(all.slice(40, 80).toIndexedSeq), out,
+      EncodeConfig(numPartitions = 7, chunkRows = 4))
+    val urls = DecodeJob.run(spark, out).collect().map(_.url)
+    assert(urls.length == 80, "every url stored once: " +
+      urls.groupBy(identity).collect { case (u, us) if us.length > 1 => u }.mkString(", "))
+    assert(urls.toSet == all.map(_.url).toSet)
+  }
+
   test("writes to an existing table take the stored _meta layout, not the caller's cfg") {
     import spark.implicits._
     val stored = EncodeConfig(numPartitions = 4, chunkRows = 16)
@@ -1504,16 +1527,34 @@ class SparkJobsSpec extends AnyFunSuite {
     assert(DecodeJob.run(spark, out).count() == 200)
   }
 
-  test("decodeColumn provides the column-pruned read path") {
+  /** The leaves each parquet scan of `ds` reads, as dotted paths. */
+  private def readLeaves(ds: org.apache.spark.sql.Dataset[_]): Seq[Set[String]] = {
+    import org.apache.spark.sql.types.StructType
+    def leaves(t: StructType, prefix: String): Set[String] = t.fields.toSet.flatMap {
+      (f: org.apache.spark.sql.types.StructField) => f.dataType match {
+        case st: StructType => leaves(st, s"$prefix${f.name}.")
+        case _ => Set(s"$prefix${f.name}")
+      }
+    }
+    ds.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => leaves(s.requiredSchema, "") }
+  }
+
+  test("a full decode reads the five payload leaves and no chunk metadata") {
     import spark.implicits._
-    val out = tmpDir("colprune")
-    val pages = PagesGen.generate(spark, 80, partitions = 2)
-    EncodeJob.run(spark, pages, out, EncodeConfig(numPartitions = 2, chunkRows = 32))
-    val langs = DecodeJob.decodeColumn(spark, out, "lang")
-      .map { case (_, _, _, v) => new String(v, UTF_8) }
-      .collect().sorted
-    val expected = pages.collect().map(_.lang).sorted
-    assert(langs.toSeq == expected.toSeq)
+    val out = tmpDir("decode_leaves")
+    val cfg = EncodeConfig(numPartitions = 2, chunkRows = 32)
+    val all = PagesGen.generate(spark, 80, partitions = 2).collect()
+    EncodeJob.run(spark, spark.createDataset(all.toIndexedSeq), out, cfg)
+    val payloads = Set("url", "warc_ts", "html", "text", "lang").map(c => s"$c.payload")
+    // no codec, bytes_in, bytes_out or payload_hash leaf
+    assert(readLeaves(DecodeJob.run(spark, out)) == Seq(payloads))
+    // a range read adds only the chunk bounds its predicate tests
+    // (part_id comes from the directory names)
+    val lookupUrls = all.take(60).map(_.url).toSeq // two scan batches
+    assert(readLeaves(DecodeJob.lookupUrls(spark, out, lookupUrls)) ==
+      Seq.fill(2)(payloads + "url_min" + "url_max"))
+    assert(DecodeJob.lookupUrls(spark, out, lookupUrls).collect().map(_.url).sorted.toSeq ==
+      lookupUrls.sorted)
   }
 
   // ------------------------------------------------ Spark jobs and metadata

@@ -16,52 +16,6 @@ class StreamingSpec extends AnyFunSuite {
     d.getAbsolutePath + "/out"
   }
 
-  test("file-source stream: discovery, mid-stream kill, checkpoint resume, exactly once") {
-    val pages = (0 until 90).map(i => PagesGen.page(11L, i.toLong, 90, hostSkew = false))
-    val staging = tmp("stage")
-    val out = tmp("fsrc")
-    val ckpt = tmp("fsrc_ckpt")
-    val cfg = EncodeConfig(numPartitions = 2, chunkRows = 32)
-    // stage three parquet slices (one part-file each -> three micro-batches)
-    (0 until 3).foreach { s =>
-      spark.createDataset(pages.slice(s * 30, s * 30 + 30))
-        .coalesce(1).write.mode("append").parquet(staging)
-    }
-
-    // run 1: crash injected at the start of batch 1 — batch 0 is committed,
-    // batch 1's offsets may already be checkpointed but no work happened
-    val q1 = StreamingEncodeJob.start(
-      StreamingEncodeJob.pagesFileStream(spark, staging), out, ckpt, cfg,
-      onBatchStart = id => if (id == 1) sys.error("injected crash before batch 1"))
-    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q1.awaitTermination()
-    }
-    assert(err.getMessage.contains("injected crash"))
-    assert(new java.io.File(out, "batch=0").exists())
-    assert(!new java.io.File(out, "batch=2").exists())
-
-    // run 2: restart from the checkpoint — batch 1 is redelivered with the
-    // SAME id, then batch 2; nothing is reprocessed twice, nothing skipped
-    val q2 = StreamingEncodeJob.start(
-      StreamingEncodeJob.pagesFileStream(spark, staging), out, ckpt, cfg)
-    q2.awaitTermination()
-    val batchDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("batch="))
-      .map(_.getName).sorted
-    assert(batchDirs.toSeq == Seq("batch=0", "batch=1", "batch=2"), batchDirs.mkString(","))
-
-    val decoded = StreamingEncodeJob.decodeAll(spark, out)
-    assert(decoded.count() == 90)
-    assert(decoded.select("url").distinct().count() == 90) // exactly once, no dupes
-    // bit-identical against the staged source
-    val orig = spark.createDataset(pages)
-    val joined = decoded.toDF("d_url", "d_ts", "d_html", "d_text", "d_lang")
-      .join(orig.toDF("url", "ts", "html", "text", "lang"), $"d_url" === $"url")
-    assert(joined.count() == 90)
-    assert(joined.filter(
-      !($"d_text" <=> $"text") || !($"d_lang" <=> $"lang") ||
-        !($"d_html" <=> $"html") || !($"d_ts" <=> $"ts")).count() == 0)
-  }
-
   test("startAppending: micro-batches land in ONE canonical table, idempotently") {
     val pages = (0 until 90).map(i => PagesGen.page(23L, i.toLong, 90, hostSkew = false))
     val staging = tmp("app_stage")
@@ -80,7 +34,11 @@ class StreamingSpec extends AnyFunSuite {
     val q1 = StreamingEncodeJob.startAppending(
       StreamingEncodeJob.pagesFileStream(spark, staging), table, ckpt, cfg,
       onBatchStart = id => if (id == 1) sys.error("injected crash before batch 1"))
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.awaitTermination())
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.awaitTermination())
+    assert(err.getMessage.contains("injected crash"))
+    // batch 0 (the first slice, discovered alone) is committed; nothing after it
+    assert(graft.spark.DecodeJob.run(spark, table).collect().map(_.url).toSet ==
+      pages.take(30).map(_.url).toSet)
     val q2 = StreamingEncodeJob.startAppending(
       StreamingEncodeJob.pagesFileStream(spark, staging), table, ckpt, cfg)
     q2.awaitTermination()
@@ -220,21 +178,21 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming encode: micro-batches run the batch kernel; decode is bit-identical") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val pages = (0 until 120).map(i => PagesGen.page(7L, i.toLong, 120, hostSkew = false))
-    val out = tmp("enc")
+    val table = tmp("enc")
     val ckpt = tmp("ckpt")
     val cfg = EncodeConfig(numPartitions = 4, chunkRows = 32)
 
     val stream = MemoryStream[Page]
     stream.addData(pages.take(70))
-    val q1 = StreamingEncodeJob.start(stream.toDS(), out, ckpt, cfg)
+    val q1 = StreamingEncodeJob.startAppending(stream.toDS(), table, ckpt, cfg)
     q1.awaitTermination()
 
     // second delivery after a "restart": checkpoint assigns a fresh batch id
     stream.addData(pages.drop(70))
-    val q2 = StreamingEncodeJob.start(stream.toDS(), out, ckpt, cfg)
+    val q2 = StreamingEncodeJob.startAppending(stream.toDS(), table, ckpt, cfg)
     q2.awaitTermination()
 
-    val decoded = StreamingEncodeJob.decodeAll(spark, out)
+    val decoded = graft.spark.DecodeJob.run(spark, table)
     assert(decoded.count() == 120)
 
     // bit-identical: join on url, compare every payload column
@@ -247,13 +205,10 @@ class StreamingSpec extends AnyFunSuite {
         !($"d_html" <=> $"html") || !($"d_ts" <=> $"ts")).count()
     assert(mismatches == 0)
 
-    // each micro-batch carries its own lineage table
-    val batchDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("batch="))
-    assert(batchDirs.length == 2, batchDirs.map(_.getName).mkString(","))
-    batchDirs.foreach { d =>
-      val lineage = spark.read.parquet(
-        graft.spark.EncodeJob.lineagePath(d.getAbsolutePath))
-      assert(lineage.filter($"status" === "done").count() > 0)
-    }
+    // each micro-batch's write adds its own lineage rows to the one table
+    val lineage = spark.read.parquet(graft.spark.EncodeJob.lineagePath(table))
+      .as[graft.spark.LineageRecord].collect()
+    assert(lineage.forall(_.status == "done") && lineage.map(_.n_rows).sum == 120)
+    assert(lineage.groupBy(_.part_id).values.forall(_.length == 2), lineage.toSeq)
   }
 }
