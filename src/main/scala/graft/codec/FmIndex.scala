@@ -23,6 +23,17 @@ package graft.codec
   * characters absent from the alphabet, leaving the stale range
   * (Internal.hs:390-391,420-423): e.g. count("zx") == count("x") when 'z'
   * does not occur. Default is the fixed behavior (absent char -> no match).
+  *
+  * Serialized formats ([[serialize]], [[FmIndex.deserialize]]):
+  *  - v1 (`k = 0`, reference parity): the raw BWT, alphabet, C table,
+  *    symbol counts, Occ checkpoints and the full SA.
+  *  - v2 (read only; written before v3): v1 with SA samples instead of
+  *    the full SA.
+  *  - v3 (`k > 0`, what [[graft.spark.IndexJob]] writes): the SA samples
+  *    and the BWT coded as the text column codes it, about 0.56x the text
+  *    on web pages. Nothing derived is stored: the alphabet, C table,
+  *    symbol counts and checkpoints are rebuilt from the decoded BWT on
+  *    load, as the reference derives them from its BWT.
   */
 final class FmIndex private (
     val bwt: Bwt,
@@ -144,17 +155,31 @@ final class FmIndex private (
     * once and searched many times (the reference gained the same ability
     * when it embedded the SA in the index, CHANGELOG.md:104-106).
     *
-    * `saSampleBits = 0` stores the full SA — exact parity with the
+    * `saSampleBits = 0` writes format v1: the raw BWT, the alphabet, the C
+    * table, the Occ checkpoints and the full SA — exact parity with the
     * reference's since-v0.1.0.25 behavior but ~2-5x the text size on disk.
-    * `saSampleBits = k > 0` stores only SA values divisible by 2^k
-    * (~1/2^k of the rows); locate recovers the rest by LF-walking, which
-    * is the layout a 100 TB persisted index table actually affords.
+    *
+    * `saSampleBits = k > 0` writes format v3, a compressed-BWT index after
+    * Ferragina and Manzini (FOCS 2000): the SA values divisible by 2^k
+    * (~1/2^k of the rows; locate recovers the rest by LF-walking) and the
+    * BWT coded as the text column codes it ([[Pipelines.bwtBody]]). The
+    * alphabet, C table and checkpoints are rebuilt from the BWT on load,
+    * as the reference derives them (`seqToCc`/`seqToOccCK`). Layout:
+    * `3, varint n, k, varint m, m x (varint rowDelta, varint sa(row) >> k),
+    * body`, the body running to the end of the payload: tag 0, 1 or 3 as
+    * [[Pipelines.textEncode]] writes them over this BWT (byte for byte its
+    * body whenever it picks one of them), or tag 2, the raw BWT form
+    * `varint(sentinelPos + 1), BWT bytes`, where nothing is shorter.
     */
   def serialize(saSampleBits: Int = 0): Array[Byte] = {
     require(saSampleBits >= 0 && saSampleBits < 31, s"bad saSampleBits=$saSampleBits")
     require(sampleBits == 0, "cannot re-serialize an already-sampled index at a different rate")
+    if (saSampleBits == 0) serializeFullSa() else serializeCompressed(saSampleBits)
+  }
+
+  private def serializeFullSa(): Array[Byte] = {
     val buf = new Bytes.Buf(n * 5 + 64)
-    buf.writeByte(if (saSampleBits == 0) 1 else 2) // format version
+    buf.writeByte(1) // format version
     buf.writeVarInt(n)
     buf.writeVarInt(bwt.sentinelPos + 1)
     buf.writeBytes(bwt.data)
@@ -166,47 +191,70 @@ final class FmIndex private (
     buf.writeVarInt(ckpt.length)
     i = 0
     while (i < ckpt.length) { buf.writeVarInt(ckpt(i)); i += 1 }
-    if (saSampleBits == 0) {
-      i = 0
-      while (i <= n) { buf.writeVarInt(sa(i)); i += 1 }
-    } else {
-      val mask = (1 << saSampleBits) - 1
-      buf.writeByte(saSampleBits)
-      var m = 0
-      i = 1 // row 0 is the empty suffix (sa = n), never a locate target
-      while (i <= n) { if ((sa(i) & mask) == 0) m += 1; i += 1 }
-      buf.writeVarInt(m)
-      var prevRow = 0
-      i = 1
-      while (i <= n) {
-        if ((sa(i) & mask) == 0) {
-          buf.writeVarInt(i - prevRow) // ascending-row delta
-          buf.writeVarInt(sa(i))
-          prevRow = i
-        }
-        i += 1
+    i = 0
+    while (i <= n) { buf.writeVarInt(sa(i)); i += 1 }
+    buf.toArray
+  }
+
+  private def serializeCompressed(k: Int): Array[Byte] = {
+    val raw = new Bytes.Buf(n + 6) // the raw BWT form, body tag 2's candidate
+    raw.writeVarInt(bwt.sentinelPos + 1)
+    raw.writeBytes(bwt.data)
+    val body = Pipelines.bwtBody(bwt, raw.toArray)
+    val mask = (1 << k) - 1
+    var m = 0
+    var i = 1 // row 0 is the empty suffix (sa = n), never a locate target
+    while (i <= n) { if ((sa(i) & mask) == 0) m += 1; i += 1 }
+    val buf = new Bytes.Buf(body.length + m * 4 + 16)
+    buf.writeByte(3) // format version
+    buf.writeVarInt(n)
+    buf.writeByte(k)
+    buf.writeVarInt(m)
+    var prevRow = 0
+    i = 1
+    while (i <= n) {
+      if ((sa(i) & mask) == 0) {
+        buf.writeVarInt(i - prevRow) // ascending-row delta
+        buf.writeVarInt(sa(i) >> k)
+        prevRow = i
       }
+      i += 1
     }
+    buf.writeBytes(body)
     buf.toArray
   }
 }
 
 object FmIndex {
 
+  /** Occ checkpoint spacing, 2^8 positions: [[build]]'s default and what
+    * the v3 reader rebuilds (v1 and v2 store their own).
+    */
+  private final val DefaultBlockBits = 8
+
   /** Build from the original text. The reference builds the BWT matrix and
     * reconstructs the text from its own BWT to get the SA
     * (FMIndex.hs:143-147,169-173); we build SA once and derive everything
     * from it.
     */
-  def build(text: Array[Byte], blockBits: Int = 8): FmIndex = {
-    val n = text.length
+  def build(text: Array[Byte], blockBits: Int = DefaultBlockBits): FmIndex = {
     val sa = SuffixArrays.build(text)
-    val bwt = BwtCodec.fromSuffixArray(text, sa)
+    withTables(BwtCodec.fromSuffixArray(text, sa), blockBits, sa, 0,
+      Array.emptyIntArray, Array.emptyIntArray)
+  }
 
-    // alphabet + counts
+  /** The index over `bwt` with its alphabet, C table, symbol counts and Occ
+    * checkpoints (every 2^blockBits positions) computed from the BWT: one
+    * histogram pass, then one pass of running counts. [[build]] and the v3
+    * reader both get their tables here.
+    */
+  private def withTables(bwt: Bwt, blockBits: Int, sa: Array[Int], sampleBits: Int,
+      sampleRows: Array[Int], sampleVals: Array[Int]): FmIndex = {
+    val data = bwt.data
+    val n = data.length
     val byteCnt = new Array[Int](256)
     var i = 0
-    while (i < n) { byteCnt(text(i) & 0xFF) += 1; i += 1 }
+    while (i < n) { byteCnt(data(i) & 0xFF) += 1; i += 1 }
     var sigmaReal = 0
     i = 0
     while (i < 256) { if (byteCnt(i) > 0) sigmaReal += 1; i += 1 }
@@ -229,29 +277,31 @@ object FmIndex {
       i += 1
     }
 
-    // Occ checkpoints every 2^blockBits BWT positions. An empty text
+    // Occ checkpoint b = the counts of conceptual positions below
+    // b << blockBits, for every b up to (n+1) >> blockBits, so occ(d, n+1)
+    // has one even when n+1 is a multiple of the block size. An empty text
     // (n == 0) keeps the reference's empty BWT (no symbols, sentinelPos
     // -1), so no position is counted: its index has an empty alphabet and
     // count/locate are None for every pattern
-    val totalLen = n + 1
-    val numBlocks = (totalLen >> blockBits) + 1
+    val sent = bwt.sentinelPos
+    val numBlocks = ((n + 1) >> blockBits) + 1
     val ckpt = new Array[Int](numBlocks * math.max(sigmaReal, 1))
     val running = new Array[Int](math.max(sigmaReal, 1))
-    // note <=: when totalLen is an exact multiple of the block size the
-    // final checkpoint (used by occ(d, totalLen)) still gets written
-    i = 0
-    while (i <= totalLen) {
-      if ((i & ((1 << blockBits) - 1)) == 0) {
-        System.arraycopy(running, 0, ckpt, (i >> blockBits) * sigmaReal, sigmaReal)
+    var p = 0 // conceptual position; data(p) before the sentinel, data(p - 1) after
+    var b = 0
+    while (b < numBlocks) {
+      System.arraycopy(running, 0, ckpt, b * sigmaReal, sigmaReal)
+      val end = math.min((b + 1).toLong << blockBits, bwt.conceptualLength.toLong).toInt
+      while (p < end) {
+        if (p < sent) running(byteToDense(data(p) & 0xFF)) += 1
+        else if (p > sent) running(byteToDense(data(p - 1) & 0xFF)) += 1
+        p += 1
       }
-      if (i < bwt.conceptualLength && i != bwt.sentinelPos) {
-        running(byteToDense(bwt.symbolAt(i))) += 1
-      }
-      i += 1
+      b += 1
     }
 
     new FmIndex(bwt, alphabet, byteToDense, cTable, symCount, ckpt, blockBits,
-      sa, 0, Array.emptyIntArray, Array.emptyIntArray)
+      sa, sampleBits, sampleRows, sampleVals)
   }
 
   /** Strict deserialization: every length/structure field is validated
@@ -263,7 +313,8 @@ object FmIndex {
   def deserialize(payload: Array[Byte]): FmIndex = {
     val rd = new Bytes.Reader(payload)
     val version = rd.readByte()
-    require(version == 1 || version == 2, s"unknown fm-index format version $version")
+    require(version >= 1 && version <= 3, s"unknown fm-index format version $version")
+    if (version == 3) return deserializeCompressed(payload, rd)
     val n = rd.readVarSize()
     val sentinelPos = rd.readVarInt() - 1
     require(sentinelPos >= -1 && sentinelPos <= n, s"corrupt fm-index: sentinel $sentinelPos of $n")
@@ -301,26 +352,75 @@ object FmIndex {
       }
       new FmIndex(Bwt(data, sentinelPos), alphabet, byteToDense, cTable, symCount,
         ckpt, blockBits, sa, 0, Array.emptyIntArray, Array.emptyIntArray)
-    } else {
+    } else { // v2, written before v3 replaced it: v1's tables and SA samples
       val saSampleBits = rd.readByte()
       require(saSampleBits > 0 && saSampleBits < 31, s"corrupt fm-index: sampleBits $saSampleBits")
-      val m = rd.readVarSize(bytesPerElement = 2) // each sample is >= 2 bytes
-      val rows = new Array[Int](m)
-      val vals = new Array[Int](m)
-      var row = 0
-      i = 0
-      while (i < m) {
-        val delta = rd.readVarInt()
-        require(delta > 0, "corrupt fm-index: non-ascending sample rows")
-        row += delta
-        require(row <= n, s"corrupt fm-index: sample row $row of $n")
-        rows(i) = row
-        vals(i) = rd.readVarInt()
-        require(vals(i) >= 0 && vals(i) <= n, s"corrupt fm-index: sample SA value ${vals(i)}")
-        i += 1
-      }
+      val (rows, vals) = readSamples(rd, n, 0)
       new FmIndex(Bwt(data, sentinelPos), alphabet, byteToDense, cTable, symCount,
         ckpt, blockBits, Array.emptyIntArray, saSampleBits, rows, vals)
     }
+  }
+
+  /** Format v3 after its version byte (layout at [[FmIndex.serialize]]). */
+  private def deserializeCompressed(payload: Array[Byte], rd: Bytes.Reader): FmIndex = {
+    // the body is compressed, so n has no bound in the payload's size; it
+    // bounds every allocation the body's decode makes
+    val len = rd.readVarLong()
+    require(len >= 0 && len <= ColumnCodec.MaxDecodedValueBytes, s"corrupt fm-index: text length $len")
+    val n = len.toInt
+    val k = rd.readByte()
+    require(k > 0 && k < 31, s"corrupt fm-index: sampleBits $k")
+    val (rows, vals) = readSamples(rd, n, k)
+    withTables(bodyBwt(payload, rd.pos, n), DefaultBlockBits, Array.emptyIntArray, k, rows, vals)
+  }
+
+  /** v2's and v3's SA samples: `varint m`, then `m x (varint rowDelta,
+    * varint sa(row) >> shift)` (v2 stores the values unshifted), rows
+    * ascending in [1, n] and SA values at most n.
+    */
+  private def readSamples(rd: Bytes.Reader, n: Int, shift: Int): (Array[Int], Array[Int]) = {
+    val m = rd.readVarSize(bytesPerElement = 2) // each sample is >= 2 bytes
+    val rows = new Array[Int](m)
+    val vals = new Array[Int](m)
+    var row = 0L
+    var i = 0
+    while (i < m) {
+      val delta = rd.readVarLong()
+      require(delta > 0, "corrupt fm-index: non-ascending sample rows")
+      row += delta
+      require(row <= n, s"corrupt fm-index: sample row $row of $n")
+      val v = rd.readVarLong()
+      require(v >= 0 && v <= (n >> shift), s"corrupt fm-index: sample SA value $v << $shift of $n")
+      rows(i) = row.toInt
+      vals(i) = (v << shift).toInt
+      i += 1
+    }
+    (rows, vals)
+  }
+
+  /** The BWT a v3 body (`payload` from `from` on) holds for a text of `n`
+    * bytes; a body that is cut, holds another length or places the
+    * sentinel outside the BWT throws.
+    */
+  private def bodyBwt(payload: Array[Byte], from: Int, n: Int): Bwt = {
+    require(from < payload.length, "corrupt fm-index: no bwt body")
+    val tag = payload(from) & 0xFF
+    val bwt =
+      try {
+        if (tag == 2) { // the raw form
+          val rd = new Bytes.Reader(payload, from + 1)
+          val sentinelPos = rd.readVarInt() - 1
+          val data = rd.readBytes(n)
+          require(rd.remaining == 0, s"${rd.remaining} bytes after the raw bwt")
+          Bwt(data, sentinelPos)
+        } else Pipelines.bwtOfBody(tag, java.util.Arrays.copyOfRange(payload, from + 1, payload.length), n)
+      } catch {
+        case e @ (_: IndexOutOfBoundsException | _: IllegalArgumentException) =>
+          throw new IllegalArgumentException(s"corrupt fm-index: bwt body (tag $tag): ${e.getMessage}", e)
+      }
+    require(bwt.data.length == n, s"corrupt fm-index: bwt body of ${bwt.data.length} bytes for n=$n")
+    require(if (n == 0) bwt.sentinelPos == -1 else bwt.sentinelPos >= 0 && bwt.sentinelPos <= n,
+      s"corrupt fm-index: sentinel ${bwt.sentinelPos} of $n")
+    bwt
   }
 }

@@ -271,6 +271,8 @@ object Huffman {
         else ((acc << (8 - nbits)) & 0xFF).toInt
       val hit = peek(window)
       if (hit != 0) {
+        // a code longer than the bits left was read off the zero padding
+        if ((hit & 0xF) > nbits) throw new IllegalArgumentException("corrupt huffman payload: truncated")
         out(w) = (hit >>> 4).toByte
         nbits -= hit & 0xF
         w += 1

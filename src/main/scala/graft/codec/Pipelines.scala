@@ -168,12 +168,14 @@ object Pipelines {
     * either. Runs of index 0 — the bulk of the stream on BWT input — fill
     * the output with the current front symbol, no recency-list work.
     */
-  private[graft] def mtfRleDecodeFusedToBwt(payload: Array[Byte]): Bwt = {
+  private[graft] def mtfRleDecodeFusedToBwt(
+      payload: Array[Byte], maxBytes: Int = ColumnCodec.MaxBwtDocBytes + 1): Bwt = {
     val rd = new Bytes.Reader(payload)
     val totalLen = rd.readVarInt()
-    // BWT only ever runs under MaxBwtDocBytes, so a larger declared stream
-    // is corrupt — throw before the allocation, not OOM (FuzzDecodeSpec)
-    require(totalLen >= 0 && totalLen <= ColumnCodec.MaxBwtDocBytes + 2,
+    // the caller bounds the BWT (the text column by MaxBwtDocBytes, the FM
+    // index by its header), so a larger declared stream is corrupt — throw
+    // before the allocation, not OOM (FuzzDecodeSpec)
+    require(totalLen >= 0 && totalLen.toLong <= maxBytes + 1L,
       s"corrupt bwt+mtf+rle payload: declared length $totalLen")
     val alphaLen = rd.readVarInt()
     require(alphaLen >= 0 && alphaLen <= 257, s"corrupt payload: alphabet size $alphaLen")
@@ -197,6 +199,7 @@ object Pipelines {
       if (v == 0 && list(0) >= 0) {
         // front symbol repeated `run` times — no list movement at all
         val sym = list(0).toByte
+        require(run <= data.length - w, "corrupt mtf+rle payload: no sentinel")
         java.util.Arrays.fill(data, w, w + run, sym)
         w += run
         produced += run
@@ -207,8 +210,14 @@ object Pipelines {
           val sym = list(j) // out-of-range index throws, as the unfused did
           while (j > 0) { list(j) = list(j - 1); j -= 1 }
           list(0) = sym
-          if (sym < 0) sentinelPos = produced
-          else { data(w) = sym.toByte; w += 1 }
+          if (sym < 0) {
+            require(sentinelPos < 0, "corrupt mtf+rle payload: a second sentinel")
+            sentinelPos = produced
+          } else {
+            require(w < data.length, "corrupt mtf+rle payload: no sentinel")
+            data(w) = sym.toByte
+            w += 1
+          }
           produced += 1
           c += 1
         }
@@ -252,7 +261,8 @@ object Pipelines {
     out
   }
 
-  /** Per-value text encoding: tagged best of {BWT+MTF+RLE, BWT+RLE, raw}.
+  /** Per-value text encoding: tagged best of {BWT+MTF+RLE, BWT+RLE, raw},
+    * Huffman over the first where it is smaller ([[bwtBody]]).
     *
     * BWT+RLE with varint counts is byte-wise <= the reference's ASCII-count
     * stream pair-for-pair (a varint of any count <= its decimal digit
@@ -267,7 +277,16 @@ object Pipelines {
       // Order-0 Huffman is O(n), constant-memory, and still ~0.6x on text.
       return textEncodeFast(value)
     }
-    val bwt = BwtCodec.encode(value) // one SA build, all candidates reuse it
+    bwtBody(BwtCodec.encode(value), value)
+  }
+
+  /** The tagged body over a BWT: the shortest of tag 0 (MTF+RLE), 1 (RLE),
+    * 2 (`raw` verbatim) and 3 (Huffman over the MTF+RLE stream), the lower
+    * tag on ties. [[textEncode]] passes the text as `raw`; the FM index's
+    * v3 payload passes the BWT's raw form ([[FmIndex]]), so whenever the
+    * text column stores a BWT tag the index stores the same bytes.
+    */
+  private[graft] def bwtBody(bwt: Bwt, raw: Array[Byte]): Array[Byte] = {
     val a = mtfRleEncodeFused(bwt)
     val bCost = rleSerializedCost(bwt)
     // entropy stage over the MTF+RLE stream: exact-size precheck so the
@@ -280,7 +299,7 @@ object Pipelines {
     var bestTag = 0
     var bestLen = a.length.toLong
     if (bCost < bestLen) { bestTag = 1; bestLen = bCost }
-    if (value.length < bestLen) { bestTag = 2; bestLen = value.length }
+    if (raw.length < bestLen) { bestTag = 2; bestLen = raw.length }
     if (hSize < bestLen) { bestTag = 3; bestLen = hSize }
     val best: Array[Byte] = bestTag match {
       case 0 => a
@@ -288,13 +307,24 @@ object Pipelines {
         val rle = RleCodec.serialize(RleCodec.encode(bwt))
         require(rle.length == bCost, s"rle cost ${bCost} != serialized ${rle.length}")
         rle
-      case 2 => value
+      case 2 => raw
       case _ => Huffman.compressWithSized(a, lens, hSize.toInt)
     }
     val out = new Array[Byte](best.length + 1)
     out(0) = bestTag.toByte
     System.arraycopy(best, 0, out, 1, best.length)
     out
+  }
+
+  /** The BWT a tag 0, 1 or 3 body of [[bwtBody]] holds (`body` without its
+    * tag byte); a stream that declares more than `maxBytes` BWT bytes is
+    * corrupt and throws before it allocates.
+    */
+  private[graft] def bwtOfBody(tag: Int, body: Array[Byte], maxBytes: Int): Bwt = tag match {
+    case 0 => mtfRleDecodeFusedToBwt(body, maxBytes)
+    case 1 => RleCodec.decode(RleCodec.deserialize(body), maxBytes)
+    case 3 => mtfRleDecodeFusedToBwt(Huffman.decompress(body), maxBytes)
+    case _ => throw new IllegalArgumentException(s"corrupt payload: tag $tag holds no BWT")
   }
 
   /** Speed-biased per-value encoding: no BWT/SA work at all — order-0
@@ -366,9 +396,7 @@ object Pipelines {
     if (payload.isEmpty) return Array.emptyByteArray
     val body = java.util.Arrays.copyOfRange(payload, 1, payload.length)
     (payload(0): Int) match {
-      case 0 => bwtMtfRleDecode(body)
-      case 1 => BwtCodec.decode(RleCodec.decode(RleCodec.deserialize(body)))
-      case 3 => bwtMtfRleDecode(Huffman.decompress(body))
+      case tag @ (0 | 1 | 3) => BwtCodec.decode(bwtOfBody(tag, body, ColumnCodec.MaxBwtDocBytes))
       case 4 => Huffman.decompress(body) // huffman-over-raw (outlier gate)
       case TextSlotTag => throw new IllegalArgumentException(TextSlotNeedsText)
       case _ => body

@@ -49,7 +49,11 @@ object RleCodec {
     RleChunk(counts.toArray, syms.toArray, sentinelRun)
   }
 
-  def decode(r: RleChunk): Bwt = {
+  /** The BWT the runs spell; runs that spell more than `maxBytes` bytes
+    * are corrupt (the caller's bound: the text column's MaxBwtDocBytes, or
+    * an FM index's declared length).
+    */
+  def decode(r: RleChunk, maxBytes: Long = ColumnCodec.MaxBwtDocBytes + 2L): Bwt = {
     if (r.counts.isEmpty) return Bwt(Array.emptyByteArray, -1)
     var nL = 0L
     var i = 0
@@ -57,9 +61,8 @@ object RleCodec {
       if (i != r.sentinelRun) nL += math.max(r.counts(i), 0)
       i += 1
     }
-    // BWT-path RLE never legitimately expands past the BWT size cap; a
-    // corrupt count must throw, not allocate unboundedly (FuzzDecodeSpec)
-    require(nL <= ColumnCodec.MaxBwtDocBytes + 2L, s"corrupt RLE chunk: expands to $nL bytes")
+    // a corrupt count must throw, not allocate unboundedly (FuzzDecodeSpec)
+    require(nL <= maxBytes, s"corrupt RLE chunk: expands to $nL bytes")
     val n = nL.toInt
     val data = new Array[Byte](n)
     var sentinelPos = -1

@@ -20,10 +20,13 @@ object IndexJob {
 
   /** `saSampleBits = 0` persists the full SA (reference parity,
     * CHANGELOG.md:104-106: index ~2-5x text). `k > 0` persists ~1/2^k of
-    * the SA — at a 100 TB corpus a full-SA index table is a multiple of
-    * the corpus itself, so the sampled layout is the default; locate pays
-    * <= 2^k LF steps per occurrence. The per-doc `index_bytes` column is
-    * the lineage record of what the choice cost.
+    * the SA and the BWT compressed as the text column compresses it
+    * (format v3, [[FmIndex.serialize]]): about 0.56x the text on web pages
+    * at the default `k = 5`, where a full-SA index table would be a
+    * multiple of the corpus itself. Locate pays <= 2^k LF steps per
+    * occurrence, and each search decodes the BWT and rebuilds the Occ
+    * checkpoints. The per-doc `index_bytes` column is the lineage record
+    * of what the choice cost.
     */
   def build(
       spark: SparkSession,
@@ -60,11 +63,12 @@ object IndexJob {
       it.flatMap { row =>
         val fm = FmIndex.deserialize(row.index)
         pats.iterator.map { case (p, pb) =>
+          // one backward search: the count is the located rows' number
           val positions = fm.locate(pb, compat)
           SearchHit(
             row.doc_key,
             p,
-            fm.count(pb, compat).getOrElse(0).toLong,
+            positions.length.toLong,
             if (positions.isEmpty) None else Some(positions.min.toLong),
             positions.map(_.toLong).toSeq
           )

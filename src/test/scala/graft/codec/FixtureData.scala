@@ -66,6 +66,15 @@ object ShapedInputs {
     }
   }
 
+  /** A text [[Pipelines.textEncode]] stores as body tag 0: its MTF+RLE
+    * stream is shorter than its RLE, its raw bytes and its Huffman form,
+    * which is rare (a seeded search over random texts of a few short words
+    * found it). Web text takes tag 3, short and repetitive text tag 1.
+    */
+  val MtfRleText: String =
+    "abbabbabbaabbabbabbababbaaaabbaaaabaabbaaababbbaaabbaabbaaaaaabbbababbaaabbaabbabbbababb" +
+      "aabbabbaababbaaabbabbaabbaabaaabbaabbbaaaabbbaaabbaaabbabaaaaabbaaabbabba"
+
   /** `perShape` inputs of each shape, up to `maxLen` bytes each. */
   def all(seed: Long, perShape: Int, maxLen: Int): Seq[Array[Byte]] = {
     val rnd = new scala.util.Random(seed)

@@ -179,16 +179,113 @@ class FmIndexSpec extends AnyFunSuite {
     }
   }
 
+  /** Four pages' html (11,671 bytes). */
+  private lazy val pagesText: Array[Byte] = (0L until 4L)
+    .map(id => graft.spark.PagesGen.page(42L, id, 100, hostSkew = false).html).reduce(_ ++ _)
+
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+
+  /** Patterns over `t`: cuts of it at a few places and lengths, bytes that
+    * do and do not occur, and a pattern longer than the text.
+    */
+  private def patternsOf(t: Array[Byte]): Seq[Array[Byte]] = {
+    val cuts = for {
+      len <- Seq(1, 2, 3, 7, 20) if len <= t.length
+      at <- Seq(0, t.length / 3, t.length - len)
+    } yield java.util.Arrays.copyOfRange(t, at, at + len)
+    cuts ++ Seq(Array[Byte](0), Array[Byte](-1), bytes("e"), bytes("the"), bytes("é"), t :+ 'x'.toByte)
+  }
+
+  /** count and locate (row order included) of `got` equal the full-SA `want`'s. */
+  private def assertSameSearch(got: FmIndex, want: FmIndex, t: Array[Byte], what: String): Unit =
+    for (p <- patternsOf(t); compat <- Seq(false, true)) {
+      assert(got.count(p, compat) == want.count(p, compat), s"$what: count of ${p.take(20).toSeq}")
+      assert(got.locate(p, compat).toSeq == want.locate(p, compat).toSeq,
+        s"$what: locate of ${p.take(20).toSeq} (compat=$compat)")
+    }
+
+  /** A v3 payload's fields: n, k, the (row, sa >> k) samples and the body. */
+  private def v3Fields(payload: Array[Byte]): (Int, Int, Seq[(Int, Int)], Array[Byte]) = {
+    val rd = new Bytes.Reader(payload)
+    assert(rd.readByte() == 3, "format v3")
+    val n = rd.readVarInt()
+    val k = rd.readByte()
+    var row = 0
+    val samples = Seq.fill(rd.readVarInt()) { row += rd.readVarInt(); (row, rd.readVarInt()) }
+    (n, k, samples, java.util.Arrays.copyOfRange(payload, rd.pos, payload.length))
+  }
+
   test("serialized index bytes are pinned on a PagesGen text") {
-    // four pages' html (11,671 bytes); the digest pins build's BWT, C table,
-    // Occ checkpoints and SA samples together
-    val t = (0L until 4L)
-      .map(id => graft.spark.PagesGen.page(42L, id, 100, hostSkew = false).html).reduce(_ ++ _)
+    // the v3 digest pins build's BWT, its body and the SA samples together;
+    // the parent format's digest is pinned on its committed payload below
+    val fm = FmIndex.build(pagesText)
+    assert(pagesText.length == 11671)
+    assert(sha256(fm.serialize(5)) == "036bab3465bac9781f5b55428c45728671b10d447fa32a49fa466644679e99fb")
+    assert(fm.bwt == BwtCodec.encode(pagesText))
+  }
+
+  test("a v2 payload written before format v3 still deserializes and searches") {
+    // fm_index_v2_pagesgen.bin is FmIndex.build(pagesText).serialize(5) as
+    // written by the v2 writer, before v3 replaced it
+    val v2 = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(getClass.getResource("/fm_index_v2_pagesgen.bin").toURI))
+    assert(v2(0) == 2)
+    assert(sha256(v2) == "a13d626c473ce554e63e349b69fd06682d65cd0f731412d2c6f3f3558e1475aa")
+    val back = FmIndex.deserialize(v2)
+    assert(back.sampleBits == 5 && back.bwt == BwtCodec.encode(pagesText))
+    assertSameSearch(back, FmIndex.build(pagesText), pagesText, "v2")
+    assert(back.count(bytes("<html>")) == Some(4))
+  }
+
+  test("v3 round trip: count and locate equal the full-SA index, the body is the text column's") {
+    val rnd = new scala.util.Random(53)
+    val edges = Seq(
+      Array.emptyByteArray, bytes("x"), Array.fill(1000)('a'.toByte), Array.fill(300)(0.toByte),
+      Array.fill(300)(-1.toByte), Array[Byte](0, -1, 0, -1, 1, 0), bytes("naïve 中文 тест " * 20),
+      Array.fill(400)(rnd.nextInt(256).toByte), // high entropy: nothing compresses it
+      bytes(ShapedInputs.MtfRleText), bytes("abracadabra"), pagesText)
+    val random = ShapedInputs.all(seed = 53, perShape = 2, maxLen = 900)
+    val tags = scala.collection.mutable.Set.empty[Int]
+    (edges ++ random).zipWithIndex.foreach { case (t, i) =>
+      val fm = FmIndex.build(t)
+      val text = Pipelines.textEncode(t)
+      tags += text(0)
+      Seq(1, 5, 12).foreach { k =>
+        val payload = fm.serialize(k)
+        val (n, kk, samples, body) = v3Fields(payload)
+        assert(n == t.length && kk == k, s"input $i header")
+        // the samples are the SA values divisible by 2^k, rows ascending
+        assert(samples == (1 to n).filter(r => fm.sa(r) % (1 << k) == 0).map(r => (r, fm.sa(r) >> k)),
+          s"input $i k=$k samples")
+        if (Set(0, 1, 3)(text(0))) assert(body.sameElements(text), s"input $i: body is textEncode's")
+        else assert(Set(0, 1, 2, 3)(body(0)), s"input $i: body tag")
+        val back = FmIndex.deserialize(payload)
+        assert(back.sampleBits == k && back.bwt == fm.bwt, s"input $i k=$k")
+        assertSameSearch(back, fm, t, s"input $i k=$k")
+      }
+    }
+    assert(tags == Set(0, 1, 2, 3), s"the inputs cover every textEncode tag: $tags")
+  }
+
+  test("v3 round trip of a text above MaxBwtDocBytes") {
+    // textEncode takes its BWT-free path above the cap; the index's body is
+    // still a BWT body, bounded by the header's n
+    val rnd = new scala.util.Random(59)
+    val vocab = Array("alpha ", "beta ", "gamma ", "delta ", "omega ", "server ", "cloud\n", "ü ")
+    val buf = new java.io.ByteArrayOutputStream(ColumnCodec.MaxBwtDocBytes + 16)
+    while (buf.size < ColumnCodec.MaxBwtDocBytes + 1) buf.write(bytes(vocab(rnd.nextInt(vocab.length))))
+    val t = java.util.Arrays.copyOf(buf.toByteArray, ColumnCodec.MaxBwtDocBytes + 1)
+    assert(Pipelines.textEncode(t)(0) == 4)
     val fm = FmIndex.build(t)
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(fm.serialize(5)).map("%02x".format(_)).mkString
-    assert(digest == "a13d626c473ce554e63e349b69fd06682d65cd0f731412d2c6f3f3558e1475aa")
-    assert(fm.bwt == BwtCodec.encode(t))
+    val payload = fm.serialize(5)
+    assert(payload.length < t.length / 2)
+    val back = FmIndex.deserialize(payload)
+    assert(back.n == t.length && back.bwt == fm.bwt)
+    Seq("beta gamma", "cloud\nalpha", "ü ü", "zz", "omega server cloud").foreach { p =>
+      assert(back.count(bytes(p)) == fm.count(bytes(p)), p)
+      assert(back.locate(bytes(p)).toSeq == fm.locate(bytes(p)).toSeq, p)
+    }
   }
 
   test("FM inverse recovers the text (seqFromFMIndex + BWT decode path)") {

@@ -118,10 +118,19 @@ class FuzzDecodeSpec extends AnyFunSuite {
     corruptionsOf(column).foreach { c => bounded("decodeHtml")(ColumnCodec.decodeHtml(c, texts)) }
   }
 
+  /** Texts whose v3 index bodies take each body tag: 2 (raw BWT), 0
+    * (MTF+RLE), 3 (Huffman over it) and 1 (RLE).
+    */
+  private val indexTexts = Seq(
+    "abracadabra banana band stand data".getBytes(UTF_8),
+    ShapedInputs.MtfRleText.getBytes(UTF_8),
+    graft.spark.PagesGen.page(42L, 1L, 100, hostSkew = false).html,
+    ("a" * 500).getBytes(UTF_8))
+
   test("FmIndex.deserialize + search: corrupt index bytes never hang") {
-    val fm = FmIndex.build("abracadabra banana band stand data".getBytes(UTF_8))
-    Seq(0, 5).foreach { k =>
-      val ser = fm.serialize(k)
+    val payloads = FmIndex.build(indexTexts.head).serialize(0) +:
+      indexTexts.map(t => FmIndex.build(t).serialize(5))
+    payloads.foreach { ser =>
       corruptionsOf(ser).foreach { c =>
         bounded("FmIndex.deserialize/locate") {
           val idx = FmIndex.deserialize(c)
@@ -130,6 +139,64 @@ class FuzzDecodeSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  test("v3 index payloads: cut bodies, wrong lengths, sentinels, samples and k fail promptly with named errors") {
+    /** A v3 payload from its fields: samples are (row delta, sa >> k). */
+    def v3(n: Long, k: Int, samples: Seq[(Long, Long)], body: Array[Byte]): Array[Byte] = {
+      val buf = new Bytes.Buf()
+      buf.writeByte(3)
+      buf.writeVarLong(n)
+      buf.writeByte(k)
+      buf.writeVarInt(samples.length)
+      samples.foreach { case (d, v) => buf.writeVarLong(d); buf.writeVarLong(v) }
+      buf.writeBytes(body)
+      buf.toArray
+    }
+    def named(what: String, payload: Array[Byte]): Unit =
+      bounded(what) {
+        val e = intercept[IllegalArgumentException](FmIndex.deserialize(payload))
+        assert(e.getMessage.startsWith("corrupt fm-index"), s"$what: ${e.getMessage}")
+      }
+    val tags = indexTexts.map { t =>
+      val good = FmIndex.build(t).serialize(5)
+      val rd = new Bytes.Reader(good, 1)
+      val n = rd.readVarInt()
+      val k = rd.readByte()
+      val samples = Seq.fill(rd.readVarInt())((rd.readVarLong(), rd.readVarLong()))
+      val body = java.util.Arrays.copyOfRange(good, rd.pos, good.length)
+      val tag = body(0).toInt
+      // the fields rebuild the payload, and it reads
+      assert(v3(n, k, samples, body).sameElements(good))
+      FmIndex.deserialize(good)
+      Seq(0, 1, body.length / 2, body.length - 1).distinct.foreach { cut =>
+        named(s"tag $tag body cut to $cut bytes", v3(n, k, samples, body.take(cut)))
+      }
+      named(s"tag $tag: n one above the body's", v3(n + 1, k, samples, body))
+      named(s"tag $tag: n one below the body's", v3(n - 1, k, samples.init, body))
+      named(s"tag $tag: n above MaxDecodedValueBytes", v3(ColumnCodec.MaxDecodedValueBytes + 1L, k, samples, body))
+      named(s"tag $tag: a sample row repeated", v3(n, k, samples.head +: (0L, 0L) +: samples.tail, body))
+      named(s"tag $tag: sample rows past n", v3(n, k, samples :+ ((n.toLong, 0L)), body))
+      named(s"tag $tag: a sample value above n", v3(n, k, (samples.head._1, (n >> k) + 1L) +: samples.tail, body))
+      Seq(0, 31, 255).foreach(bad => named(s"tag $tag: k = $bad", v3(n, bad, samples, body)))
+      if (tag == 2) {
+        // the raw form: varint(sentinelPos + 1), then the BWT bytes
+        val bwt = java.util.Arrays.copyOfRange(body, 2, body.length)
+        def raw(sentinelField: Int): Array[Byte] = {
+          val buf = new Bytes.Buf()
+          buf.writeByte(2)
+          buf.writeVarInt(sentinelField)
+          buf.writeBytes(bwt)
+          buf.toArray
+        }
+        assert(raw(body(1).toInt).sameElements(body))
+        named("raw form: sentinel past n", v3(n, k, samples, raw(n + 2)))
+        named("raw form: no sentinel", v3(n, k, samples, raw(0)))
+        named("raw form: bytes after the BWT", v3(n, k, samples, raw(body(1).toInt) :+ 'x'.toByte))
+      }
+      tag
+    }
+    assert(tags.toSet == Set(0, 1, 2, 3), s"every body tag is exercised: $tags")
   }
 
   test("ColumnCodec binary/long decode: corrupt chunk payloads never hang") {

@@ -43,6 +43,16 @@ import java.nio.file.{Files, Path, Paths}
   * }}}
   * and copied without its `.crc` side files. It holds the same pages as
   * `legacy_speed_table`.
+  *
+  * `src/test/resources/legacy_fm_index_v2_table` is an [[IndexJob]] table
+  * in FM index format v2 (the raw BWT, its tables and SA samples), written
+  * before format v3 replaced it, at commit 85d3be9 with
+  * {{{
+  *   // local[4], spark.sql.shuffle.partitions = 4, session time zone UTC
+  *   IndexJob.build(spark, PagesGen.generate(spark, 40, partitions = 4)
+  *     .map(p => (p.url, p.text.take(600))), out)
+  * }}}
+  * and copied without its `.crc` and `_SUCCESS` side files.
   */
 object LegacyTableSpec {
   val cfg: EncodeConfig = EncodeConfig(numPartitions = 3, chunkRows = 16)
@@ -314,5 +324,30 @@ class LegacyTableSpec extends AnyFunSuite {
     EncodeJob.compact(spark, out, cfg)
     assert(decoded(out) == model.values.map(key).toSet)
     assert(bodiesByUrl(out) == beforeCompact, "compact reuses plain and text-slot bodies alike")
+  }
+
+  test("a v2 FM index table written before format v3: search equals a naive count and the full-SA locate") {
+    import spark.implicits._
+    val docs = (0L until 40L).map { id =>
+      val p = PagesGen.page(42L, id, 100, hostSkew = false)
+      p.url -> p.text.take(600).getBytes("UTF-8")
+    }.toMap
+    val table = getClass.getResource("/legacy_fm_index_v2_table").toURI.getPath
+    val stored = TableScan[IndexJob.IndexRow](spark, table).as[IndexJob.IndexRow].collect()
+    assert(stored.map(_.doc_key).toSet == docs.keySet && stored.forall(_.index(0) == 2))
+    val pair = PagesGen.page(42L, 0L, 100, hostSkew = false).text.split(' ').slice(3, 5).mkString(" ")
+    val patterns = Seq("the", pair, " ", "é", "zq-absent")
+    val hits = IndexJob.search(spark, table, patterns).collect()
+    assert(hits.length == docs.size * patterns.size)
+    hits.foreach { h =>
+      val t = docs(h.doc_key)
+      val p = h.pattern.getBytes("UTF-8")
+      val naive = (0 to t.length - p.length).count(i => java.util.Arrays.equals(t, i, i + p.length, p, 0, p.length))
+      assert(h.cnt == naive, s"${h.doc_key} ${h.pattern}")
+      val locate = graft.codec.FmIndex.build(t).locate(p)
+      assert(h.positions_unsorted == locate.map(_.toLong).toSeq, s"${h.doc_key} ${h.pattern}")
+      assert(h.first_pos == locate.minOption.map(_.toLong))
+    }
+    assert(hits.exists(h => h.pattern == patterns(1) && h.cnt > 0))
   }
 }
